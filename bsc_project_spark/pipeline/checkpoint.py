@@ -204,7 +204,7 @@ def run_extraction_job(
     run_id = manifest["run_id"] or run_id or uuid.uuid4().hex[:12]
     committed_pages = set(manifest["committed_page_buckets"])
     committed = set(manifest["committed_buckets"])
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = spark.sparkContext.defaultParallelism
 
     def commit() -> dict:
         state = {
@@ -367,7 +367,7 @@ def run_incremental_update(
         )
     committed_updates: list[int] = list(manifest.get("committed_updates", []))
     uid = (committed_updates[-1] + 1) if committed_updates else 1
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = spark.sparkContext.defaultParallelism
 
     # refs already extracted: base snapshot + prior update deltas
     known_ref_paths = [os.path.join(out_dir, "refs")] + [

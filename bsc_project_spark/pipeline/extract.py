@@ -383,10 +383,11 @@ def run_page_stage(
         # driver heap — the numeric contract lives on config.py) so
         # planning costs ONE collect job, reused by both the serpentine
         # and the giant-tile routing.  Opting out spends one skinny
-        # count() per stage build; ref sets over the ceiling then plan
-        # fully distributed — two-phase bins, shuffle-joined (no
-        # broadcast hint), giants filtered by semi/anti join — with zero
-        # driver-side ref materialization.
+        # count() per stage build, uncached (a persist would outlive the
+        # lazily returned plan and pin the cache for the session); ref
+        # sets over the ceiling then plan fully distributed — two-phase
+        # bins, shuffle-joined (no broadcast hint), giants filtered by
+        # semi/anti join — with zero driver-side ref materialization.
         bounded = cfg.assume_bounded_refs
         if not bounded:
             cap = (
@@ -394,7 +395,6 @@ def run_page_stage(
                 if cfg.driver_plan_max is not None
                 else _DRIVER_PLAN_MAX
             )
-            sizes = sizes.persist()
             bounded = sizes.count() <= cap
         # Giant-page tile split (pipeline/tiling.py): pages at or above
         # tile_threshold_px native pixels leave the atomic per-page path
@@ -410,11 +410,6 @@ def run_page_stage(
         if bounded and tiling:
             spark = media.sparkSession
             pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
-            if not cfg.assume_bounded_refs:
-                # the count-gate persisted sizes; the driver plan below
-                # works from the collected pairs, so release the cache
-                # instead of pinning it for the session (r5 advice)
-                sizes.unpersist()
             giant = [(ref, sz) for ref, sz in pairs if sz >= thr]
             if giant:
                 from .tiling import run_tiled_page_stage
@@ -475,10 +470,6 @@ def run_page_stage(
     else:
         sizes = None
     unique_pages = repartition_by_size(unique_pages, n_parts, sizes)
-    if sizes is not None and not cfg.assume_bounded_refs:
-        # repartition_by_size collected the bins at build time; release
-        # the count-gate's cache instead of pinning it (r5 advice)
-        sizes.unpersist()
     return unique_pages.mapInPandas(_make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA)
 
 
@@ -558,6 +549,10 @@ def run_extract_stage(
     ``persist=True`` caches the raw stage output (MEMORY_AND_DISK) so that
     consuming BOTH extracted and lineage runs the expensive image stage
     exactly once; the caller unpersists ``stage`` afterwards.
+    ``salt_partitions`` sets the page stage's width, i.e. its Python task
+    count; the default is the session's ``defaultParallelism``, one task
+    per core, because every Python task pays a fixed worker set-up cost
+    (see pipeline/session.py).
 
     The expensive image work runs once per UNIQUE page: distinct refs,
     semi-joined against media, byte-balanced over partitions.  Heavy
@@ -565,7 +560,7 @@ def run_extract_stage(
     one kernel invocation per page.
     """
     spark = documents.sparkSession
-    n_parts = salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = salt_partitions or spark.sparkContext.defaultParallelism
 
     refs = (
         explode_spans(documents)

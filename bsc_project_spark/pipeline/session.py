@@ -4,8 +4,19 @@
 - small Arrow batches for the image stage: media rows carry MB-scale page
   bytes, so records-per-batch is tuned down (the analogue of the
   reference's (B,C,H,W) tensor batch, reference scripts/imgs2csv.py:139-143)
-- shuffle partitions sized for the local[32] sandbox; a real cluster would
-  size these to executor count x cores (documented in BENCH/BASELINE.md).
+- ``spark.sql.shuffle.partitions`` defaults to 32 ($SPARK_GRAFT_SHUFFLE)
+  for the skinny relational shuffles.
+- ``spark.default.parallelism`` is deliberately NOT set: ``local[N]``
+  reports N and a cluster its total executor cores, and every Python
+  stage (the page stage's mapInPandas, the registry's pre-UDF
+  repartitions and ``REPARTITION(__P__)`` hints) takes its width from it.
+  Python tasks are expensive to have more of than cores: each one costs
+  about 0.3 s of worker CPU before the UDF runs (measured with a no-op
+  mapInPandas on local[4]), nearly all of it in pyspark's per-task
+  ``importlib.invalidate_caches()``, which re-reads the central directory
+  of ``pyspark.zip`` for every zipimporter on the path.  Pinning the
+  width to 32 on 4 cores ran the 48-page extraction pass as 32 tiny
+  tasks in 8 waves, about twice the wall of 4 tasks.
 """
 
 from __future__ import annotations
@@ -29,7 +40,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.default.parallelism", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python Data Source filter pushdown (sources/corpus_source.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")

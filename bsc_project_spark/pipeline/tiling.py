@@ -58,7 +58,6 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -340,15 +339,14 @@ def run_tiled_page_stage(
 ) -> DataFrame:
     """(media_ref, content) of GIANT pages -> EXTRACT_STAGE_SCHEMA rows
     (ocr cells + _lineage rows), max task time bounded per the module
-    docstring.  The bands frame is persisted (MEMORY_AND_DISK): both the
-    analysis branch and the cell-crop join consume it, and without the
-    cache each branch would re-decode every giant page."""
-    spark = giant_pages.sparkSession
+    docstring.  The analysis branch and the cell-crop join both read the
+    bands frame; within the one plan they share its exchange (Spark's
+    exchange reuse), so each giant page is decoded once without a cache
+    that would outlive the lazily returned plan."""
     bands = (
         giant_pages.select("media_ref", "content")
         .mapInPandas(_split_bands_udf(cfg), schema=BAND_SCHEMA)
         .repartition(n_parts, "media_ref", "band")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     analyzed = bands.mapInPandas(_analyze_band_udf(cfg), schema=ANALYSIS_SCHEMA)
 

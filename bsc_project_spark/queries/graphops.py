@@ -62,7 +62,10 @@ def _link_graph(spark: SparkSession, sf_dir: str):
     stats = (
         spark.table("documents")
         .agg(
-            F.count("doc_id").alias("n"),
+            # count(1), not count(doc_id): n must equal the ids frame's
+            # row count (global_row_number ranks NULL doc_ids too), or
+            # dst = hash % n falls outside the src idx space
+            F.count(F.lit(1)).alias("n"),
             F.countDistinct("doc_id").alias("nd"),
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),

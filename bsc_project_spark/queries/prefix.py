@@ -25,7 +25,7 @@ Reference analogue: the global row order of the merged matrix assembly,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _PID = "_pp_pid"
@@ -45,51 +45,76 @@ def global_cumsum(
     computed with the two-phase plan above — no single-task window.
 
     ``order_cols`` must form a total order (unique tuples).  The output
-    column is BIGINT.  The input is persisted so the subtotal job and
-    the final job see the SAME sampled range boundaries (each action
-    would otherwise re-plan the range exchange; the persisted frame is
-    skinny — order key + value — so the cache is cheap at any scale).
+    column is BIGINT.  NULLs sort last, the oracle engine's ORDER BY
+    default (Spark's ascending default is NULLS FIRST).
+
+    The subtotal job and the final plan must agree on the ranges, but a
+    second range exchange would re-sample its boundaries.  So the
+    subtotal job also returns each range's smallest key, and the final
+    plan routes every row to the last range whose smallest key it
+    reaches: the same ranges, with nothing cached (a persisted input
+    would stay pinned in the session, since the result is lazy).
     """
     spark = df.sparkSession
     if n_parts is None:
         n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    ranged = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn(_PID, F.spark_partition_id())
-        .persist()
+    keys = [F.col(c).asc_nulls_last() for c in order_cols]
+    # struct ordering is lexicographic with NULL fields first, so the
+    # (is NULL, value) pair per column orders exactly like ``keys``
+    fields = [(f"_n{i}", f"_v{i}", c) for i, c in enumerate(order_cols)]
+    skey = F.struct(
+        *[e for n, v, c in fields for e in (F.isnull(c).alias(n), F.col(c).alias(v))]
     )
-    local = ranged.withColumn(
-        _LOCAL,
-        F.sum(F.col(value_col).cast("long")).over(
-            Window.partitionBy(_PID)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    subtotals = sorted(
-        (r[_PID], r.s)
-        for r in ranged.groupBy(_PID)
-        .agg(F.sum(F.col(value_col).cast("long")).alias("s"))
+    # range partition ids follow key order, so sorting by id sorts ranges
+    ranges = sorted(
+        (r[_PID], r.lo, int(r.s or 0))
+        for r in df.repartitionByRange(n_parts, *keys)
+        .groupBy(F.spark_partition_id().alias(_PID))
+        .agg(
+            F.min(skey).alias("lo"),
+            F.sum(F.col(value_col).cast("long")).alias("s"),
+        )
         .collect()
     )
-    offsets, acc = [], 0
-    for pid, s in subtotals:
-        offsets.append((pid, acc))
-        acc += int(s or 0)
-    if not offsets:  # empty input: VALUES with no tuples is a parse error
-        return (
-            local.drop(_PID, _LOCAL)
-            .withColumn(out_col, F.lit(None).cast("long"))
-            .where(F.lit(False))
+    if not ranges:  # empty input: VALUES with no tuples is a parse error
+        return df.withColumn(out_col, F.lit(None).cast("long")).where(F.lit(False))
+    types = {c: df.schema[c].dataType for c in order_cols}
+
+    def lit_key(lo) -> Column:
+        return F.struct(
+            *[
+                e
+                for n, v, c in fields
+                for e in (F.lit(lo[n]).alias(n), F.lit(lo[v]).cast(types[c]).alias(v))
+            ]
         )
+
+    pid = sum(
+        (F.when(skey >= lit_key(lo), 1).otherwise(0) for _, lo, _ in ranges[1:]),
+        F.lit(0),
+    )
+    offsets, acc = [], 0
+    for i, (_, _, s) in enumerate(ranges):
+        offsets.append((i, acc))
+        acc += s
+    local = F.sum(F.col(value_col).cast("long")).over(
+        Window.partitionBy(_PID)
+        .orderBy(*keys)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     # inline VALUES, not createDataFrame: a Python-list createDataFrame
     # plans as a pickled-RDD scan (defaultParallelism tasks + Python
     # worker cold start for a P-row frame); a VALUES literal is a
     # LocalRelation Catalyst folds straight into the broadcast
-    values = ", ".join(f"({pid}, {off}L)" for pid, off in offsets)
+    values = ", ".join(f"({i}, {off}L)" for i, off in offsets)
     off_df = spark.sql(f"SELECT * FROM VALUES {values} AS t({_PID}, {_OFF})")
+    # range-partitioning the small-int range id gives each range its own
+    # task (a hash on it could collide) and already clusters the window
     return (
-        local.join(F.broadcast(off_df), _PID)
+        df.withColumn(_PID, pid)
+        .repartitionByRange(len(ranges), _PID)
+        .withColumn(_LOCAL, local)
+        .join(F.broadcast(off_df), _PID)
         .withColumn(out_col, (F.col(_OFF) + F.col(_LOCAL)).cast("long"))
         .drop(_PID, _LOCAL, _OFF)
     )

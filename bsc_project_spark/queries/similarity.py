@@ -227,11 +227,20 @@ _SPARK_DOT = (
 
 
 def _emb_dim(spark: SparkSession) -> int:
-    """Embedding dimensionality, probed with one tiny head job — feeds
-    the EXPANDED dot-product chains (``lloyd_dot_expr``) that replace
-    interpreted aggregate(zip_with) lambdas across the ANN family."""
-    row = spark.table("embeddings").selectExpr("size(embedding) AS d").head(1)
-    return int(row[0]["d"]) if row else 0
+    """Embedding dimensionality, probed with a single one-row aggregate —
+    feeds the EXPANDED dot-product chains (``lloyd_dot_expr``) that
+    replace interpreted aggregate(zip_with) lambdas across the ANN family.
+    Those chains read indices 0..d-1 only, so ragged embeddings raise
+    here instead of being silently truncated to a wrong cosine."""
+    lo, hi = (
+        spark.table("embeddings")
+        .where("embedding IS NOT NULL")
+        .selectExpr("min(size(embedding))", "max(size(embedding))")
+        .first()
+    )
+    if lo != hi:
+        raise ValueError(f"ragged embeddings: sizes range from {lo} to {hi}")
+    return int(hi or 0)
 
 _NEAR_DUP_CORPUS = """
         SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v FROM embeddings

@@ -43,7 +43,6 @@ spark = (SparkSession.builder.appName(f"tasklog-{{cores}}")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.shuffle.partitions", str(max(32, cores * 4)))
-    .config("spark.default.parallelism", str(max(32, cores * 4)))
     .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
     .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
+from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
 from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA, MEDIA_SCHEMA
 from bsc_project_spark.pipeline.extract import run_extract_stage
@@ -92,3 +95,21 @@ def test_duplicate_refs_in_one_doc_fan_out(spark, one_page):
     result.stage.unpersist()
     assert pages == 1
     assert len(per_offset) == 1 and per_offset[0]["count"] % 2 == 0
+
+
+def test_unbounded_route_leaves_no_cached_frames(spark, corpus):
+    """The fully-distributed planning route (count gate over the ceiling,
+    two-phase bins, giant semi/anti joins) returns a lazy plan: once the
+    caller releases ``stage``, nothing the route built may stay cached."""
+    cfg = dataclasses.replace(
+        FIXTURE_CONFIG, assume_bounded_refs=False, driver_plan_max=0
+    )
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
+    result = run_extract_stage(docs, media, cfg, persist=True)
+    assert result.extracted.count() > 0
+    assert result.lineage.count() > 0
+    result.stage.unpersist()
+    assert cached().size() == before

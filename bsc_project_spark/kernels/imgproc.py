@@ -61,29 +61,6 @@ def _pad(img: np.ndarray, ry: int, rx: int, mode: str) -> np.ndarray:
     raise ValueError(mode)
 
 
-def _sepconv(img: np.ndarray, kernel: np.ndarray, border: str) -> np.ndarray:
-    """Separable 2-D convolution with the same 1-D kernel on both axes.
-
-    float32 accumulation: kernel weights are normalized and inputs are
-    uint8, so the result lies in [0, 255] with error << 0.5 ULP of the
-    final uint8 rounding.
-    """
-    k = kernel.astype(np.float32)
-    r = len(k) // 2
-    padded = _pad(img.astype(np.float32), r, r, border)
-    # vertical pass
-    h = img.shape[0]
-    tmp = k[0] * padded[0:h, :]
-    for i in range(1, len(k)):
-        tmp += k[i] * padded[i : i + h, :]
-    # horizontal pass
-    w = img.shape[1]
-    out = k[0] * tmp[:, 0:w]
-    for i in range(1, len(k)):
-        out += k[i] * tmp[:, i : i + w]
-    return out
-
-
 def gaussian_blur3(img: np.ndarray) -> np.ndarray:
     """3x3 Gaussian blur, sigma auto (reference scripts/dataset.py:35).
 
@@ -347,32 +324,6 @@ def binarize_fused(img: np.ndarray, block_size: int = 13, c: float = 12.0) -> np
         # blurred image, scripts/dataset.py:35-43)
         out[y0:y1] = np.where(sub[r : r + n, r : r + w] > ha, np.uint8(255), np.uint8(0))
     return out
-
-
-def otsu_threshold(img: np.ndarray, maxval: int = 255) -> np.ndarray:
-    """Global Otsu binarization (robustness variant; not used in the
-    reference-parity path, which is pinned to adaptive Gaussian)."""
-    hist = np.bincount(img.ravel(), minlength=256).astype(np.float64)
-    total = hist.sum()
-    omega = np.cumsum(hist) / total
-    mu = np.cumsum(hist * np.arange(256)) / total
-    mu_t = mu[-1]
-    denom = omega * (1.0 - omega)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sigma_b = np.where(denom > 0, (mu_t * omega - mu) ** 2 / denom, 0.0)
-    t = int(np.argmax(sigma_b))
-    return np.where(img > t, maxval, 0).astype(np.uint8)
-
-
-def sauvola_threshold(img: np.ndarray, window: int = 25, k: float = 0.2, r: float = 128.0) -> np.ndarray:
-    """Sauvola local binarization (robustness variant)."""
-    f = img.astype(np.float64)
-    box = np.ones(window, dtype=np.float64) / window
-    mean = _sepconv(f, box, "replicate")
-    mean_sq = _sepconv(f * f, box, "replicate")
-    std = np.sqrt(np.maximum(mean_sq - mean * mean, 0.0))
-    thresh = mean * (1.0 + k * (std / r - 1.0))
-    return np.where(f > thresh, 255, 0).astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------

@@ -5,12 +5,20 @@ an optional DuckDB oracle SQL string over the same parquet tables.  Column
 names/aliases match exactly between the two sides (the driver sorts columns
 by name before value-hashing); double-valued outputs are rounded identically
 on both sides.
+
+A builder that reuses an intermediate frame ``materialize``s it and is
+registered through ``query_scope``: the cached frames live exactly as
+long as the returned result.  Builders pass frames to SQL text as
+``spark.sql(text, name=frame)``, whose views Spark drops once the query
+is analysed, so no query leaves a view behind either.
 """
 
 from __future__ import annotations
 
+import functools
 import weakref
 from collections.abc import Callable
+from contextvars import ContextVar
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +76,87 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     _REGISTERED_DIRS[spark] = sf_dir
 
 
+# The frames materialized by the running builder; None outside a scope.
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("query_scope", default=None)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now, cache it and hold the cache in the active query
+    scope, which unpersists it with the query's result.  Outside a scope
+    the cache stays until the session's cache is cleared.
+
+    The frame it returns is a leaf over the cached rows, so:
+
+    - a loop that reads each round's frame twice, as a self-join does,
+      plans against a leaf instead of a tree that doubles every round;
+    - the cache can be released, and a plan that still reads the frame
+      then recomputes it from lineage, which a local checkpoint cannot;
+    - a query reads the cache without looking it up, so
+      ``spark.sql(text, name=frame)`` may take the frame: dropping that
+      view after analysis uncaches only a plan equal to the view's, and
+      the lookup misses a cached plan holding a WITH when a WITH query
+      reads it.
+
+    The count is eager: one plan reading a lazily persisted frame several
+    times recomputes it in every reader racing to fill the cache."""
+    _, leaf = _leaf(df)
+    leaf.persist()
+    held = _SCOPE.get()
+    if held is not None:
+        held.append(leaf)
+    cached_rows, out = _leaf(leaf)
+    cached_rows.count()  # one job fills every partition
+    return out
+
+
+def _leaf(df: DataFrame):
+    """``df``'s rows, its plan run now up to the last stage (AQE sizes the
+    shuffles), and a leaf frame over them, built the way Spark builds a
+    local checkpoint: ``LogicalRDD.fromDataset`` keeps the statistics
+    and partitioning."""
+    spark, jdf = df.sparkSession, df._jdf
+    jvm = spark._jvm
+    rows = jdf.queryExecution().toRdd()
+    plan = _scala_object(jvm.org.apache.spark.sql.execution, "LogicalRDD").fromDataset(
+        rows, jdf, False
+    )
+    dataset = _scala_object(jvm.org.apache.spark.sql.classic, "Dataset")
+    return rows, DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
+
+
+def _scala_object(package, name: str):
+    return getattr(getattr(package, name + "$"), "MODULE$")
+
+
+def _release(held: list[DataFrame]) -> None:
+    for df in held:
+        df.unpersist()
+
+
+def query_scope(
+    builder: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Run ``builder`` with a fresh scope for ``materialize``.  The frames
+    are released at once if it raises, else when the caller drops the
+    returned frame."""
+
+    @functools.wraps(builder)
+    def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        held: list[DataFrame] = []
+        token = _SCOPE.set(held)
+        try:
+            out = builder(spark, sf_dir)
+        except BaseException:
+            _release(held)
+            raise
+        finally:
+            _SCOPE.reset(token)
+        weakref.finalize(out, _release, held).atexit = False
+        return out
+
+    return scoped
+
+
 def _sql_query_p(sql: str) -> Callable[[SparkSession, str], DataFrame]:
     """sql_query variant that resolves the ``__P__`` token at CALL time
     to the session's default parallelism (derived from the local master /
@@ -123,9 +212,9 @@ _CHECK_FIRST = [
     #     (phash_near_dup_pairs first-band rewrite), and the four
     #     _SHINGLES_SPARK consumers registered through helper views
     #     (q_minhash_sig / q_lsh_pairs / q_minhash_est / q_dup_clusters),
-    # (3) the stalest vintages for the remaining slots: all eleven
-    #     remaining r02-vintage queries plus the two oldest r03 rows —
-    #     after this round no query's freshest driver row predates r03.
+    # (3) the stalest vintages for the remaining slots.
+    # The query-scope change rotated in its six tail builders (q_bm25 ..
+    # q_cohort_retention) in place of six unchanged r02/r03 rows.
     "q_semantic_dedup",
     "q_containment",
     "q_prefix_join",
@@ -141,6 +230,12 @@ _CHECK_FIRST = [
     "q_cooccurrence",
     "q_dsir",
     "q_incremental_dedup",
+    "q_bm25",
+    "q_fuzzy_join",
+    "q_substring_dedup",
+    "q_quality_curriculum",
+    "q_char_lm_score",
+    "q_cohort_retention",
     "q_skew_profile",
     "q_ks_distance",
     "q_cosine_topk",
@@ -170,12 +265,6 @@ _CHECK_FIRST = [
     "q_clean_year",
     "q_union_pages",
     "q_pair_join",
-    "q_merge_lineage",
-    "q_crop_filter",
-    "q_box_counts",
-    "q_token_count",
-    "q_corpus_curation",
-    "q_length_quantiles",
     # ---- 50-row prefix boundary ----
 ]
 _CHECK_LAST = [
@@ -191,7 +280,6 @@ _CHECK_LAST = [
     "q_pixel_diff",
     "q_dedup_survivors",
     "q_contamination",
-    "q_char_lm_score",
     "q_domain_stats",
     "q_kmv_sketch",
     "q_training_mix",

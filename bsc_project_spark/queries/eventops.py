@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import QuerySpec, register_views, sql_query
+from . import QuerySpec, materialize, query_scope, register_views, sql_query
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -691,30 +691,10 @@ _COHORT_BODY = """
     FROM act JOIN n0 ON act.cohort_week = n0.cohort_week
 """
 
-# NOTE: the Spark-side tail avoids WITH-CTEs.  Spark 4.1 fails to
-# cache-substitute a cached temp view from inside a WITH query when the
-# view's own definition contains a CTE (cte-id renumbering breaks
-# sameResult — see the fuzzy-join note in textops.py); derived tables
-# substitute unconditionally, so the tail uses only those.  Verified:
-# this form's physical plan reads both cached frames
-# (InMemoryTableScans) and scans events exactly once overall.
-_COHORT_TAIL = """
-    SELECT act.cohort_week,
-           CAST(act.week_offset AS BIGINT) AS week_offset,
-           CAST(act.active_users AS BIGINT) AS active_users,
-           CAST(n0.cohort_size AS BIGINT) AS cohort_size,
-           CAST(act.active_users * 1000000 DIV n0.cohort_size AS BIGINT)
-             AS retention_ppm
-    FROM (
-      SELECT c.cohort_week, a.week - c.cohort_week AS week_offset,
-             count(*) AS active_users
-      FROM cohort_activity a JOIN cohort_first c ON a.user_id = c.user_id
-      GROUP BY c.cohort_week, a.week - c.cohort_week
-    ) act JOIN (
-      SELECT cohort_week, count(*) AS cohort_size FROM cohort_first
-      GROUP BY cohort_week
-    ) n0 ON act.cohort_week = n0.cohort_week
-"""
+# Spark side: the oracle's tail over the materialized a and c frames
+_COHORT_TAIL = "WITH a AS (SELECT * FROM {a}), c AS (SELECT * FROM {c}),\n" + (
+    _COHORT_BODY[_COHORT_BODY.index("    n0 AS"):].replace("{intdiv}", "DIV")
+)
 
 
 def _cohort_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,24 +704,23 @@ def _cohort_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort frame once (referenced by both the numerator and the cohort
     sizes).  Both are skinny int64 relations."""
     register_views(spark, sf_dir)
-    a = spark.sql(
+    a = materialize(spark.sql(
         f"""SELECT DISTINCT user_id,
                    CAST({_SPARK_EPOCH_US.format(c='ts')} DIV {_WEEK_US}
                         AS BIGINT) AS week
             FROM events"""
-    ).persist()
-    a.createOrReplaceTempView("cohort_activity")
-    c = spark.sql(
-        """SELECT user_id, min(week) AS cohort_week FROM cohort_activity
-           GROUP BY user_id"""
-    ).persist()
-    c.createOrReplaceTempView("cohort_first")
-    return spark.sql(_COHORT_TAIL)
+    ))
+    c = materialize(spark.sql(
+        """SELECT user_id, min(week) AS cohort_week FROM {a}
+           GROUP BY user_id""",
+        a=a,
+    ))
+    return spark.sql(_COHORT_TAIL, a=a, c=c)
 
 
 _q(
     "q_cohort_retention",
-    _cohort_spark,
+    query_scope(_cohort_spark),
     _COHORT_BODY.format(us="epoch_us(ts)", intdiv="//", week_us=_WEEK_US),
     "weekly cohort retention matrix (cohort = week of first event) with "
     "integer-ppm retention; exact int64 epoch-week ids both engines; "

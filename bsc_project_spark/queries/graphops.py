@@ -11,11 +11,12 @@ plain power iteration applies: r_{t+1}(v) = (1-d)/N + d * sum_{u->v}
 r_t(u) / deg(u), d = 0.85, 5 iterations from the uniform vector.
 
 The SPARK side is a genuine iterative job — a Python loop of
-join/groupBy rounds with localCheckpoint() lineage truncation per round,
-the exact shape of the distributed connected-components fixpoint in
-textops (q_dup_clusters) and of every Pregel-style computation Spark
-users run.  Edges and degrees are computed once and persisted; per-round
-state is one (v, rank) frame, shuffled only on the join/group keys.  The
+join/groupBy rounds that materializes each round's state, the exact
+shape of the distributed connected-components fixpoint in textops
+(q_dup_clusters) and of every Pregel-style computation Spark users run.
+Edges and degrees are computed once and materialized; per-round state is
+one (v, rank) frame, shuffled only on the join/group keys.  Every
+materialized frame is released with the query's result.  The
 ORACLE unrolls the same 5 iterations as nested CTEs — declarative,
 single-shot, and engine-checkable down to the value hash (ranks rounded
 to 7 decimals to absorb sum-order float drift).
@@ -23,8 +24,8 @@ to 7 decimals to absorb sum-order float drift).
 Scale notes: each round is one shuffle of (dst, contribution) pairs —
 map-side combinable — plus a dim-sized rank join; at 100 TB of edges the
 rank frame partitions by vertex id and rounds are embarrassingly
-parallel.  localCheckpoint per round keeps the plan O(1) deep instead of
-O(iterations).
+parallel.  Each round plans against the cached previous round, so a
+round's jobs read one (v, rank) frame, not the rounds before it.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import QuerySpec, register_views
+from . import QuerySpec, materialize, query_scope, register_views
 from .textops import _hex8_of
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -47,7 +48,7 @@ def _link_graph(spark: SparkSession, sf_dir: str):
     (ids, n, edges) where ids = (doc_id, idx) with contiguous idx from
     the two-phase global_row_number (never a single-task window), and
     edges = distinct (src, dst) from the md5 fanout.  ids and edges are
-    persisted — every caller reuses them across multiple jobs."""
+    materialized — every caller reuses them across multiple jobs."""
     register_views(spark, sf_dir)
     from .prefix import global_row_number
 
@@ -77,28 +78,25 @@ def _link_graph(spark: SparkSession, sf_dir: str):
         ids = spark.createDataFrame([], "doc_id long, idx long")
         return ids, 0, None
     if int(stats["nd"]) == n and int(stats["lo"]) == 0 and int(stats["hi"]) == n - 1:
-        ids = (
+        ids = materialize(
             spark.table("documents")
             .select("doc_id", F.col("doc_id").cast("long").alias("idx"))
-            .persist()
         )
     else:
-        ids = (
+        ids = materialize(
             global_row_number(
                 spark.table("documents").select("doc_id"), ["doc_id"], "rn"
             )
             .select("doc_id", (F.col("rn") - 1).cast("long").alias("idx"))
-            .persist()
         )
     hashed = _hex8_of("md5(concat(CAST(src AS STRING), ':', CAST(k AS STRING)))")
-    edges = (
+    edges = materialize(
         ids.select(F.col("idx").alias("src"))
         .select(
             "src", F.explode(F.expr(f"sequence(1, {_FANOUT})")).alias("k")
         )
         .select("src", F.expr(f"({hashed}) % {n}").alias("dst"))
         .distinct()
-        .persist()
     )
     return ids, n, edges
 
@@ -112,7 +110,7 @@ def _pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round's rank join reuses this exchange instead of reshuffling the
     # edge list five times.
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src").repartition("src").persist()
+    edges_deg = materialize(edges.join(deg, "src").repartition("src"))
     ranks = ids.select(F.col("idx").alias("v"), F.lit(1.0 / n).alias("rank"))
     base = (1.0 - _D) / n
     for _ in range(_ITERS):
@@ -121,7 +119,7 @@ def _pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst"), (F.col("rank") / F.col("deg")).alias("c"))
         )
         sums = contribs.groupBy(F.col("dst").alias("nv")).agg(F.sum("c").alias("s"))
-        ranks = (
+        ranks = materialize(
             ids.select(F.col("idx").alias("v"))
             .join(sums, F.col("v") == F.col("nv"), "left")
             .select(
@@ -130,7 +128,6 @@ def _pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "rank"
                 ),
             )
-            .localCheckpoint(eager=False)
         )
     in_deg = edges.groupBy(F.col("dst").alias("dv")).agg(
         F.count(F.lit(1)).cast("bigint").alias("in_degree")
@@ -189,12 +186,12 @@ def _pagerank_oracle() -> str:
 
 
 QUERIES["q_pagerank"] = QuerySpec(
-    spark=_pagerank_spark,
+    spark=query_scope(_pagerank_spark),
     oracle=_pagerank_oracle(),
     description=(
         "PageRank (d=0.85, 5 rounds) over a deterministic md5-derived "
-        "link graph: genuine iterative DataFrame loop with per-round "
-        "localCheckpoint vs a 5-level unrolled-CTE oracle"
+        "link graph: genuine iterative DataFrame loop materializing "
+        "each round vs a 5-level unrolled-CTE oracle"
     ),
 )
 
@@ -223,10 +220,9 @@ def _anchor_text_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .prefix import global_row_number
 
     docs = spark.table("documents").select("doc_id", "text")
-    ids = (
+    ids = materialize(
         global_row_number(docs.select("doc_id"), ["doc_id"], "rn")
         .select("doc_id", (F.col("rn") - 1).cast("long").alias("idx"))
-        .persist()
     )
     n = ids.count()
     if n == 0:
@@ -287,7 +283,7 @@ def _anchor_text_oracle() -> str:
 
 
 QUERIES["q_anchor_text"] = QuerySpec(
-    spark=_anchor_text_spark,
+    spark=query_scope(_anchor_text_spark),
     oracle=_anchor_text_oracle(),
     description=(
         "anchor-text aggregation over the deterministic link graph: "
@@ -343,13 +339,12 @@ def _triangles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "doc_id long, degree bigint, n_triangles bigint, clustering_ppm bigint"
         )
-    und = (
+    und = materialize(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .persist()
     )
     deg = (
         und.select(F.col("a").alias("v"))
@@ -357,7 +352,7 @@ def _triangles_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    o = _oriented_edges(und).persist()
+    o = materialize(_oriented_edges(und))
     e1 = o.select("u", F.col("w").alias("x"))
     e2 = o.select("u", F.col("w").alias("y"))
     closing = o.select(F.col("u").alias("x"), F.col("w").alias("y"))
@@ -436,7 +431,7 @@ def _triangles_oracle() -> str:
 
 
 QUERIES["q_triangle_count"] = QuerySpec(
-    spark=_triangles_spark,
+    spark=query_scope(_triangles_spark),
     oracle=_triangles_oracle(),
     description=(
         "triangle count + local clustering coefficient via degree-ordered "
@@ -457,8 +452,8 @@ QUERIES["q_triangle_count"] = QuerySpec(
 # O(frontier-adjacent edges), not O(all edges x rounds) — the invariant
 # that makes iterative BFS shippable when the reachable set is a small
 # slice of a 10^12-node graph.  Each round is one equi-join shuffle on
-# src plus one anti-join on the visited set; localCheckpoint truncates
-# lineage so the plan stays O(1) deep.  The ORACLE unrolls 4 relaxation
+# src plus one anti-join on the visited set, and each round's frontier
+# is materialized so the next round reads it from cache.  The ORACLE unrolls 4 relaxation
 # rounds (d_r = min(d_{r-1}, min over edges of d_{r-1}(u) + 1)) as
 # nested CTEs — relaxation over the full set and frontier-only expansion
 # provably agree (BFS layer monotonicity), so the gate checks the
@@ -476,11 +471,10 @@ def _bfs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # static edge list partitioned ONCE on the per-round join key: each
     # round then shuffles only the (small) frontier, not the 10^12-edge
     # frame again (same move as q_pagerank's edges_deg repartition)
-    edges_by_src = edges.repartition("src").persist()
-    dist = (
+    edges_by_src = materialize(edges.repartition("src"))
+    dist = materialize(
         ids.filter(F.col("idx") % _SEED_MOD == 0)
         .select(F.col("idx").alias("v"), F.lit(0).cast("bigint").alias("hops"))
-        .persist()
     )
     frontier = dist
     for r in range(1, _BFS_HOPS + 1):
@@ -489,10 +483,9 @@ def _bfs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("nv"))
             .distinct()
         )
-        newly = (
+        newly = materialize(
             reached.join(dist, reached.nv == dist.v, "left_anti")
             .select(F.col("nv").alias("v"), F.lit(r).cast("bigint").alias("hops"))
-            .localCheckpoint(eager=False)
         )
         dist = dist.unionAll(newly)
         frontier = newly
@@ -536,7 +529,7 @@ def _bfs_oracle() -> str:
 
 
 QUERIES["q_bfs_distance"] = QuerySpec(
-    spark=_bfs_spark,
+    spark=query_scope(_bfs_spark),
     oracle=_bfs_oracle(),
     description=(
         "multi-source layered BFS (4 rounds) over the deterministic link "
@@ -555,9 +548,9 @@ QUERIES["q_bfs_distance"] = QuerySpec(
 # gate hash-checks every visited position.
 #
 # The SPARK side ranks each node's neighbors once (row_number + count
-# windows PARTITIONED BY src — never global), persists the ranked edge
+# windows PARTITIONED BY src — never global), materializes the ranked edge
 # list, then advances all walks in lockstep: one equi-join per step on
-# (src = cur, rnk = coin), localCheckpoint truncating lineage.  Per-step
+# (src = cur, rnk = coin), each step's state materialized.  Per-step
 # work is O(|frontier|) joined rows — at 10^12 nodes with a seed sample
 # this is the standard embarrassingly-parallel walk batch.  The ORACLE
 # unrolls the same 4 steps as nested CTEs.
@@ -576,14 +569,13 @@ def _walk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "seed_doc long, step bigint, node_doc long"
         )
     w = Window.partitionBy("src").orderBy("dst")
-    ranked = (
+    ranked = materialize(
         edges.select(
             "src",
             "dst",
             (F.row_number().over(w) - 1).cast("bigint").alias("rnk"),
             F.count(F.lit(1)).over(Window.partitionBy("src")).cast("bigint").alias("deg"),
         )
-        .persist()
     )
     state = ids.filter(F.col("idx") % _WALK_SEED_MOD == 0).select(
         F.col("idx").alias("seed"), F.col("idx").alias("cur")
@@ -591,11 +583,10 @@ def _walk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions = [state.select("seed", F.lit(0).cast("bigint").alias("step"), F.col("cur").alias("node"))]
     for t in range(1, _WALK_STEPS + 1):
         coin = _hex8_of(f"md5(concat(CAST(cur AS STRING), '#', '{t}'))")
-        state = (
+        state = materialize(
             state.join(ranked, state.cur == ranked.src)
             .filter(F.col("rnk") == F.expr(f"({coin}) % deg"))
             .select("seed", F.col("dst").alias("cur"))
-            .localCheckpoint(eager=False)
         )
         positions.append(
             state.select("seed", F.lit(t).cast("bigint").alias("step"), F.col("cur").alias("node"))
@@ -656,7 +647,7 @@ def _walk_oracle() -> str:
 
 
 QUERIES["q_random_walks"] = QuerySpec(
-    spark=_walk_spark,
+    spark=query_scope(_walk_spark),
     oracle=_walk_oracle(),
     description=(
         "deterministic DeepWalk-style walk corpus (4 steps from every "
@@ -679,7 +670,7 @@ QUERIES["q_random_walks"] = QuerySpec(
 # ASC) make round t a pure function of round t-1, so Spark's loop and
 # the oracle's 3 unrolled CTE rounds agree exactly.  Scale notes: per
 # round one (v, label) count shuffle + one top-1 window PARTITIONED BY v
-# (never global); localCheckpoint truncates lineage per round.
+# (never global); each round's labels are materialized.
 # ---------------------------------------------------------------------------
 
 _LP_ROUNDS = 3
@@ -700,11 +691,10 @@ def _lp_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # static neighbor list partitioned ONCE on the per-round join key
     # (u): each vote round shuffles only the label frame, not the edges
-    nbrs = (
+    nbrs = materialize(
         und.select(F.col("a").alias("v"), F.col("b").alias("u"))
         .unionAll(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
         .repartition("u")
-        .persist()
     )
     labels = ids.select(F.col("idx").alias("v"), F.col("idx").alias("lbl"))
     top1 = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("lbl"))
@@ -719,11 +709,10 @@ def _lp_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("v", "lbl")
         )
-        labels = (
+        labels = materialize(
             ids.select(F.col("idx").alias("v"))
             .join(picked, "v", "left")
             .select("v", F.coalesce(F.col("lbl"), F.col("v")).alias("lbl"))
-            .localCheckpoint(eager=False)
         )
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("bigint").alias("community_size"))
     lbl_doc = ids.select(F.col("idx").alias("lbl"), F.col("doc_id").alias("community"))
@@ -791,7 +780,7 @@ def _lp_oracle() -> str:
 
 
 QUERIES["q_label_prop"] = QuerySpec(
-    spark=_lp_spark,
+    spark=query_scope(_lp_spark),
     oracle=_lp_oracle(),
     description=(
         "synchronous label propagation (3 rounds, argmax-count with "
@@ -880,7 +869,7 @@ def _hits_oracle() -> str:
 
 
 QUERIES["q_hits_scores"] = QuerySpec(
-    spark=_hits_spark,
+    spark=query_scope(_hits_spark),
     oracle=_hits_oracle(),
     description=(
         "HITS hubs & authorities, 2 unrolled rounds kept unnormalized so "
@@ -970,7 +959,7 @@ def _degree_hist_oracle() -> str:
 
 
 QUERIES["q_degree_histogram"] = QuerySpec(
-    spark=_degree_hist_spark,
+    spark=query_scope(_degree_hist_spark),
     oracle=_degree_hist_oracle(),
     description=(
         "log2-binned in-degree distribution of the link graph (0-degree "
@@ -990,8 +979,8 @@ QUERIES["q_degree_histogram"] = QuerySpec(
 # defined as an 8-ROUND peel (deterministic on both engines regardless
 # of convergence; on this graph family 8 rounds converges — pinned by
 # tests/test_round4_ops.py's fixpoint check).  Same engine split as
-# q_pagerank / lloyd_assign: the Spark side loops DataFrame rounds with
-# localCheckpoint (Spark inlines repeated CTE refs — a single unrolled
+# q_pagerank / lloyd_assign: the Spark side loops DataFrame rounds,
+# materializing each (Spark inlines repeated CTE refs — a single unrolled
 # SQL would re-evaluate round r inside every round > r), the DuckDB
 # oracle unrolls the rounds as a CTE chain (DuckDB materializes them).
 # Scale shape: each round is one self-join of the undirected edge list
@@ -1008,14 +997,13 @@ def _kcore_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = "doc_id string, in_core int, core_deg long"
     if n == 0:
         return spark.createDataFrame([], out_schema)
-    und = (
+    und = materialize(
         edges.filter("src <> dst")
         .select("src", "dst")
         .union(edges.filter("src <> dst").select(F.col("dst").alias("src"),
                                                  F.col("src").alias("dst")))
         .distinct()
         .repartition("src")
-        .persist()
     )
     surv = ids.select(F.col("idx").alias("v"))
 
@@ -1030,11 +1018,10 @@ def _kcore_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for _ in range(_KCORE_ROUNDS):
-        surv = (
+        surv = materialize(
             deg_within(surv)
             .filter(F.col("c") >= _KCORE_K)
             .select("v")
-            .localCheckpoint(eager=False)
         )
     final_deg = deg_within(surv)
     return (
@@ -1097,7 +1084,7 @@ def _kcore_oracle() -> str:
 
 
 QUERIES["q_kcore"] = QuerySpec(
-    spark=_kcore_spark,
+    spark=query_scope(_kcore_spark),
     oracle=_kcore_oracle(),
     description=(
         f"{_KCORE_K}-core membership + within-core degree by an "

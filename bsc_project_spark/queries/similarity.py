@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import QuerySpec, register_views
+from . import QuerySpec, materialize, query_scope, register_views
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -215,7 +215,7 @@ QUERIES["q_ann_lsh_buckets"] = QuerySpec(
 # Embedding-cosine near-duplicate detection: banded-LSH candidates + exact
 # verify over a corpus with planted duplicates — the embedding analogue of
 # q_lsh_pairs.  The per-vector features (bit string + norm) are computed
-# ONCE into a persisted skinny frame; both sides of the band self-join and
+# ONCE into a materialized skinny frame; both sides of the band self-join and
 # the final verify read that cache instead of recomputing the projection
 # (round 1 inlined the feature CTE into both join sides -> ~9 interpreted
 # passes and 27 s; at 100 TB the features frame is a materialized table).
@@ -257,12 +257,12 @@ def _near_dup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = spark.sql(_NEAR_DUP_CORPUS).repartition(
         max(spark.sparkContext.defaultParallelism, 1)
     )
-    feats = corpus.select(
+    feats = materialize(corpus.select(
         "vec_id",
         "v",
         _lsh_bits_udf("v").alias("bits"),
         F.expr(f"sqrt({_SPARK_DOT.format(a='v', b='v')})").alias("nrm"),
-    ).persist()
+    ))
     bands = feats.selectExpr("vec_id", f"{_band_stack_expr('bits')} AS (band, bsig)")
     cand = (
         bands.alias("x")
@@ -338,7 +338,7 @@ _NEAR_DUP_DUCK = f"""
 """
 
 QUERIES["q_embed_near_dup"] = QuerySpec(
-    spark=_near_dup_spark,
+    spark=query_scope(_near_dup_spark),
     oracle=_NEAR_DUP_DUCK,
     description="embedding-cosine near-dup pairs via banded-LSH candidates + exact verify",
 )
@@ -863,7 +863,7 @@ def _lloyd_assign_frames(
     — driver folds one subtotal per partition, never corpus rows); each
     iteration is the same crossJoin + map-side-combinable max(struct)
     argmax and groupBy(cid, pos) update as the driver path, with the
-    rebuilt centroid frame localCheckpointed to truncate lineage.  Same
+    rebuilt centroid frame materialized each iteration.  Same
     arithmetic op for op as the driver fold (floor(sx*1000.0/n) per
     component, greatest(sqrt(dot), eps) norms), so results are
     bit-identical — pinned by tests/test_lloyd_paths.py."""
@@ -873,10 +873,9 @@ def _lloyd_assign_frames(
     seeds = global_row_number(vq.select("vec_id"), ["vec_id"], "rn").where(
         F.col("rn") <= k
     )
-    cents = (
+    cents = materialize(
         seeds.join(vq, "vec_id")
         .selectExpr("CAST(rn - 1 AS INT) AS cid", "q AS cv", "vn AS cn")
-        .localCheckpoint()
     )
 
     def assignment(cdf: DataFrame) -> DataFrame:
@@ -923,7 +922,7 @@ def _lloyd_assign_frames(
             )
         )
         carried = cents.join(upd.select("cid"), "cid", "left_anti")
-        cents = upd.unionByName(carried).localCheckpoint()
+        cents = materialize(upd.unionByName(carried))
     return assignment(cents).select(
         "vec_id", F.col("cid").alias("centroid_id"), F.col("cos").alias("cosine")
     )
@@ -946,7 +945,7 @@ def lloyd_assign(
     Spark inlines repeated CTE references, so the declarative chain
     re-evaluates every earlier iteration inside every later one (~5x
     wall at 3 iterations, measured).  Each iteration is one assignment
-    job plus one groupBy(cid, pos) partial-sum job over the PERSISTED
+    job plus one groupBy(cid, pos) partial-sum job over the MATERIALIZED
     quantized corpus (repartitioned to the session's parallelism — the
     embeddings parquet is a single sub-split-size file, so without it
     every pass ran on 1-2 cores).  Three assignment strategies by k*d:
@@ -972,12 +971,12 @@ def lloyd_assign(
     )
     dot_qq = _SPARK_DOT.format(a="q", b="q")
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    vq = corpus.selectExpr(
+    vq = materialize(corpus.selectExpr(
         "vec_id",
         "transform(v, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS DOUBLE)) AS q",
     ).selectExpr(
         "vec_id", "q", f"greatest(sqrt({dot_qq}), {_LLOYD_EPS}) AS vn"
-    ).repartition(n_parts).persist()
+    ).repartition(n_parts))
 
     out_schema = "vec_id long, centroid_id int, cosine double"
     head = vq.select("q").head(1)
@@ -1120,7 +1119,7 @@ def _ivf_kmeans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["q_ivf_kmeans"] = QuerySpec(
-    spark=_ivf_kmeans_spark,
+    spark=query_scope(_ivf_kmeans_spark),
     oracle=_IVF_KMEANS_DUCK,
     description="IVF with trained centroids: 3 exact integer-quantized "
     "Lloyd iterations (broadcast centroids, map-side partial sums), "
@@ -1192,7 +1191,7 @@ def _semantic_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     register_views(spark, sf_dir)
-    corpus = spark.sql(_NEAR_DUP_CORPUS).persist()
+    corpus = materialize(spark.sql(_NEAR_DUP_CORPUS))
     n = corpus.count()
     k = max(8, math.ceil(n / _SEMDEDUP_TARGET_POP))
     assign = lloyd_assign(spark, corpus, _SEMDEDUP_ITERS, k)
@@ -1230,7 +1229,7 @@ def _semantic_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["q_semantic_dedup"] = QuerySpec(
-    spark=_semantic_dedup_spark,
+    spark=query_scope(_semantic_dedup_spark),
     oracle=_semdedup_duck_sql(),
     description="SemDeDup: size-derived K, trained (quantized-Lloyd) "
     "centroids bucket the pairwise cosine search; within-cluster "
@@ -1380,7 +1379,7 @@ QUERIES["q_embed_covariance"] = QuerySpec(
 # Both rankings use the identical scoring chain (round(dot/(nq*nc), 5),
 # ties on c_id) so the comparison is engine-exact; recall_ppm is exact
 # integer arithmetic.  Scale shape: features (bits + vector) computed
-# once into a persisted frame; candidates are (cfg, band, bucket)
+# once into a materialized frame; candidates are (cfg, band, bucket)
 # equi-joins; only the tiny query set is broadcast into scoring.
 # ---------------------------------------------------------------------------
 
@@ -1405,18 +1404,16 @@ def _ann_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    feat = emb.repartition(max(spark.sparkContext.defaultParallelism, 1)).select(
+    feat = materialize(emb.repartition(max(spark.sparkContext.defaultParallelism, 1)).select(
         "vec_id", "v", _lsh_bits_udf("v").alias("bits")
-    ).persist()
-    feat.count()
-    feat.createOrReplaceTempView("ar_feat")
+    ))
     d = _emb_dim(spark)
     dot = lloyd_dot_expr("q.v", "c.v", d)
     nrm_q = lloyd_dot_expr("q.v", "q.v", d)
     nrm_c = lloyd_dot_expr("c.v", "c.v", d)
     return spark.sql(
         f"""
-        WITH qf AS (SELECT * FROM ar_feat WHERE vec_id < {_N_QUERIES}),
+        WITH qf AS (SELECT * FROM {{feat}} WHERE vec_id < {_N_QUERIES}),
         exact AS (
           SELECT q_id, c_id FROM (
             SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -1425,11 +1422,11 @@ def _ann_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ORDER BY round({dot} / (sqrt({nrm_q}) * sqrt({nrm_c})), 5)
                        DESC, c.vec_id
                    ) AS rn
-            FROM ar_feat c CROSS JOIN qf q WHERE c.vec_id <> q.vec_id
+            FROM {{feat}} c CROSS JOIN qf q WHERE c.vec_id <> q.vec_id
           ) WHERE rn <= {_TOPK}
         ),
         qb AS (SELECT vec_id AS q_id, {_cfg_stack_expr('bits')} AS (cfg, band, bucket) FROM qf),
-        cb AS (SELECT vec_id AS c_id, {_cfg_stack_expr('bits')} AS (cfg, band, bucket) FROM ar_feat),
+        cb AS (SELECT vec_id AS c_id, {_cfg_stack_expr('bits')} AS (cfg, band, bucket) FROM {{feat}}),
         cand AS (
           SELECT DISTINCT qb.cfg, qb.q_id, cb.c_id
           FROM qb JOIN cb ON cb.cfg = qb.cfg AND cb.band = qb.band
@@ -1445,7 +1442,7 @@ def _ann_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                        DESC, x.c_id
                    ) AS rn
             FROM cand x
-            JOIN ar_feat c ON c.vec_id = x.c_id
+            JOIN {{feat}} c ON c.vec_id = x.c_id
             JOIN qf q ON q.vec_id = x.q_id
           ) WHERE rn <= {_TOPK}
         ),
@@ -1469,7 +1466,8 @@ def _ann_recall_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(coalesce(h.n_hits, 0) * 1000000 div {_TOPK} AS BIGINT)
                  AS recall_ppm
         FROM nc n LEFT JOIN hits h ON h.cfg = n.cfg AND h.q_id = n.q_id
-        """
+        """,
+        feat=feat,
     )
 
 
@@ -1552,7 +1550,7 @@ _ANN_RECALL_DUCK = f"""
 
 
 QUERIES["q_ann_recall"] = QuerySpec(
-    spark=_ann_recall_spark,
+    spark=query_scope(_ann_recall_spark),
     oracle=_ANN_RECALL_DUCK,
     description=(
         "LSH recall@5 / scan-cost trade-off curve vs exact top-5, swept "
@@ -1795,7 +1793,7 @@ def _pq_codes_oracle() -> str:
 
 
 QUERIES["q_pq_codes"] = QuerySpec(
-    spark=_pq_codes_spark,
+    spark=query_scope(_pq_codes_spark),
     oracle=_pq_codes_oracle(),
     description=(
         f"product quantization (IVF-PQ codebooks): {_PQ_M} subspaces x "

@@ -11,7 +11,7 @@ the value-hash comparison).
 
 from __future__ import annotations
 
-from . import QuerySpec, register_views, sql_query
+from . import QuerySpec, materialize, query_scope, register_views, sql_query
 
 QUERIES: dict[str, QuerySpec] = {}
 
@@ -159,15 +159,15 @@ def _minhash_wide(shingles: str) -> str:
 _SIG_STACK_SPARK = ", ".join(f"'m{seed}', m{seed}" for seed in range(_N_SEEDS))
 _SIG_UNPIVOT_DUCK = ", ".join(f"m{seed}" for seed in range(_N_SEEDS))
 
-# Spark side reads the persisted PLANTED signature frame (mh_wide,
-# shared with the LSH/estimator/cluster queries) filtered to original
+# Spark side reads the materialized PLANTED signature frame (shared
+# with the LSH/estimator/cluster queries) filtered to original
 # docs: per-doc signatures are independent of the rest of the corpus, so
 # the planted clones' rows (doc_id >= 1000000) are the only difference —
 # and a real dedup pipeline serves signature lookups from exactly this
 # materialized table.  The oracle computes the same signatures from
 # documents directly.
 _MINHASH_SIG_SPARK = f"""
-    WITH wide AS (SELECT * FROM mh_wide WHERE doc_id < 1000000)
+    WITH wide AS (SELECT * FROM {{wide}} WHERE doc_id < 1000000)
     SELECT doc_id, CAST(substring(nm, 2) AS BIGINT) AS seed, minh
     FROM (SELECT doc_id, stack({_N_SEEDS}, {_SIG_STACK_SPARK}) AS (nm, minh) FROM wide)
 """
@@ -180,12 +180,12 @@ _MINHASH_SIG_DUCK = f"""
 
 
 def _minhash_sig_spark(spark, sf_dir: str):
-    _planted_minhash_views(spark, sf_dir)
-    return spark.sql(_MINHASH_SIG_SPARK)
+    _, wide = _planted_minhash(spark, sf_dir)
+    return spark.sql(_MINHASH_SIG_SPARK, wide=wide)
 
 
 QUERIES["q_minhash_sig"] = QuerySpec(
-    spark=_minhash_sig_spark,
+    spark=query_scope(_minhash_sig_spark),
     oracle=_MINHASH_SIG_DUCK,
     description="k=8 MinHash signatures over char shingles (one grouped "
     "pass, 8 min-aggs, served from the materialized signature table)",
@@ -228,36 +228,36 @@ _LSH_JOIN = """
     GROUP BY 1, 2
 """
 
-def _planted_minhash_views(spark, sf_dir: str) -> None:
-    """Materialize the planted-corpus shingle table and wide MinHash
-    signatures ONCE as persisted temp views (``mh_shingles`` / ``mh_wide``).
+def _planted_minhash(spark, sf_dir: str):
+    """The planted-corpus shingle frame and its wide MinHash signatures,
+    as (shingles, wide); the signatures are materialized ONCE.
 
     The band self-join and the estimator query reference these relations
     two and five times respectively; as inlined CTEs Spark replans the
     scan+explode+md5+groupBy subtree per reference (~30 parquet scans in
-    q_minhash_est's round-2 plan).  Persisting turns every reference into
-    an InMemoryRelation read — the 100 TB analogue is a materialized
+    q_minhash_est's round-2 plan).  Materializing turns every reference
+    into a cached-frame read — the 100 TB analogue is a materialized
     signature table, which a real dedup pipeline keeps anyway because
     signatures feed banding, estimator tuning AND incremental re-dedup."""
     register_views(spark, sf_dir)
-    # the shingle view stays UNPERSISTED: materializing ~10^5 8-char rows
+    # the shingle frame stays UNCACHED: materializing ~10^5 8-char rows
     # costs more than the explode recompute it saves (measured at sf0.1);
     # only the skinny per-doc signature frame is worth caching
     d = spark.sql(_p_sub(spark, _SHINGLES_SPARK.format(src=_PLANTED)))
-    d.createOrReplaceTempView("mh_shingles")
-    wide = spark.sql(
+    wide = materialize(spark.sql(
         f"""
         SELECT doc_id, {_MINHASH_WIDE_AGGS}
         FROM (SELECT doc_id, CAST({_HEX8_FROM_H} AS BIGINT) AS v
-              FROM (SELECT doc_id, md5(s) AS h FROM mh_shingles))
+              FROM (SELECT doc_id, md5(s) AS h FROM {{d}}))
         GROUP BY doc_id
-        """
-    ).persist()
-    wide.createOrReplaceTempView("mh_wide")
+        """,
+        d=d,
+    ))
+    return d, wide
 
 
 _LSH_PAIRS_SPARK_BODY = f"""
-    WITH wide AS (SELECT * FROM mh_wide),
+    WITH wide AS (SELECT * FROM {{wide}}),
     bands AS (
       SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
     )
@@ -266,8 +266,8 @@ _LSH_PAIRS_SPARK_BODY = f"""
 
 
 def _lsh_pairs_spark(spark, sf_dir: str):
-    _planted_minhash_views(spark, sf_dir)
-    return spark.sql(_LSH_PAIRS_SPARK_BODY)
+    _, wide = _planted_minhash(spark, sf_dir)
+    return spark.sql(_LSH_PAIRS_SPARK_BODY, wide=wide)
 
 
 _LSH_PAIRS_DUCK = f"""
@@ -278,7 +278,7 @@ _LSH_PAIRS_DUCK = f"""
 """
 
 QUERIES["q_lsh_pairs"] = QuerySpec(
-    spark=_lsh_pairs_spark,
+    spark=query_scope(_lsh_pairs_spark),
     oracle=_LSH_PAIRS_DUCK,
     description="MinHash-LSH band-bucket join surfacing planted near-dup pairs",
 )
@@ -328,8 +328,8 @@ _MINHASH_EST_BODY = f"""
 """
 
 _MINHASH_EST_SPARK_BODY = f"""
-    WITH d AS (SELECT * FROM mh_shingles),
-    wide AS (SELECT * FROM mh_wide),
+    WITH d AS (SELECT * FROM {{d}}),
+    wide AS (SELECT * FROM {{wide}}),
     bands AS (
       SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
     ),
@@ -338,8 +338,8 @@ _MINHASH_EST_SPARK_BODY = f"""
 
 
 def _minhash_est_spark(spark, sf_dir: str):
-    _planted_minhash_views(spark, sf_dir)
-    return spark.sql(_MINHASH_EST_SPARK_BODY)
+    d, wide = _planted_minhash(spark, sf_dir)
+    return spark.sql(_MINHASH_EST_SPARK_BODY, d=d, wide=wide)
 
 
 _MINHASH_EST_DUCK = f"""
@@ -350,7 +350,7 @@ _MINHASH_EST_DUCK = f"""
 """
 
 QUERIES["q_minhash_est"] = QuerySpec(
-    spark=_minhash_est_spark,
+    spark=query_scope(_minhash_est_spark),
     oracle=_MINHASH_EST_DUCK,
     description="MinHash estimator quality: signature-estimated vs exact "
     "Jaccard per LSH candidate pair",
@@ -372,7 +372,7 @@ QUERIES["q_minhash_est"] = QuerySpec(
 _CC_MAX_ROUNDS = 20
 
 _CC_CAND_SPARK = f"""
-    WITH wide AS (SELECT * FROM mh_wide),
+    WITH wide AS (SELECT * FROM {{wide}}),
     bands AS (
       SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
     )
@@ -461,7 +461,7 @@ def connected_components(
       orders of magnitude smaller than the corpus; when it fits the
       budget, a bounded toPandas + O(E α(E)) scan beats any multi-round
       shuffle plan by ~10x (the collect is provably bounded — the count
-      that gates it is computed first from a checkpointed frame).
+      that gates it is computed first from a materialized frame).
     - larger graphs: distributed min-label propagation PLUS pointer
       jumping to a fixpoint.  Each round: (1) neighbor min (edges ⋈
       labels, groupBy(min)) and (2) label ← label(label) (labels
@@ -471,19 +471,17 @@ def connected_components(
       with step (1) alone and take 5 with both.  Same round structure as
       large-star/small-star, which is the fully-general scale path.
 
-    localCheckpoint (NOT persist) each round: the frame must TRUNCATE
-    lineage, or round k's logical plan nests all k-1 predecessors and
-    Catalyst re-optimizes an exponentially growing tree — measured 4 s/
-    round growing to 20 s by round 3 on a 140-node graph.  With eager
-    checkpoints each round plans against a leaf, so round cost tracks
-    DATA size, which is what an iterative engine needs at scale.
+    Each round's frames are materialized, so round k plans against a
+    leaf instead of nesting all k-1 predecessors — Catalyst re-optimizing
+    that exponentially growing tree measured 4 s/round growing to 20 s
+    by round 3 on a 140-node graph.
     """
     from pyspark.sql import functions as F
 
-    # checkpoint the candidate edges ONCE: the count below plus both
+    # materialize the candidate edges ONCE: the count below plus both
     # branches of the undirected union would otherwise re-run the
     # upstream band self-join three times
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs)
     n_pairs = pairs.count()
     if n_pairs <= driver_edge_budget:
         spark = pairs.sparkSession
@@ -498,11 +496,10 @@ def connected_components(
     # scale.  edges is hash-partitioned on the join key u once, so every
     # round's neighbor-min join only shuffles the (small) labels side.
     n_parts = max(8, (2 * n_pairs) // 2_000_000 + 1)
-    edges = (
+    edges = materialize(
         pairs.selectExpr("a_id AS u", "b_id AS v")
         .union(pairs.selectExpr("b_id AS u", "a_id AS v"))
         .repartition(n_parts, "u")
-        .localCheckpoint()
     )
     labels = edges.selectExpr("u AS node").distinct().selectExpr("node", "node AS label")
     for _ in range(max_rounds):
@@ -512,22 +509,21 @@ def connected_components(
             .agg(F.min("label").alias("in_label"))
             .withColumnRenamed("v", "node")
         )
-        # checkpoint BEFORE the jump: the jump self-joins stepped, and an
+        # materialize BEFORE the jump: the jump self-joins stepped, and an
         # unmaterialized stepped would execute its join+groupBy pipeline
         # twice inside one job (once per self-join side)
-        stepped = (
+        stepped = materialize(
             labels.join(incoming, "node", "left")
             .selectExpr(
                 "node",
                 "label AS old_label",
                 "least(label, coalesce(in_label, label)) AS label",
             )
-            .localCheckpoint()
         )
         # pointer jump: label <- label(label).  Labels are always node ids
         # (mins of node ids), and label(x) <= x, so the lookup never grows
         # a label; the left join covers a label whose own row changed name.
-        merged = (
+        merged = materialize(
             stepped.join(
                 stepped.selectExpr("node AS lnode", "label AS llabel"),
                 F.col("label") == F.col("lnode"),
@@ -536,7 +532,6 @@ def connected_components(
             .selectExpr(
                 "node", "old_label", "least(label, coalesce(llabel, label)) AS new_label"
             )
-            .localCheckpoint()
         )
         changed = merged.where("new_label <> old_label").count()
         labels = merged.selectExpr("node", "new_label AS label")
@@ -570,18 +565,16 @@ def connected_components_star(pairs, max_rounds: int = 50):
     # node set from the RAW pairs (before the self-loop filter): a node
     # whose only edge is a self-loop is still a (singleton) component and
     # must appear in the output, matching the other strategies' contract
-    nodes = (
+    nodes = materialize(
         pairs.selectExpr("a_id AS node")
         .union(pairs.selectExpr("b_id AS node"))
         .distinct()
-        .localCheckpoint()
     )
-    edges = (
+    edges = materialize(
         pairs.selectExpr("a_id AS u", "b_id AS v")
         .where("u <> v")
         .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
         .distinct()
-        .localCheckpoint()
     )
 
     def _star(e, keep_larger: bool):
@@ -596,11 +589,10 @@ def connected_components_star(pairs, max_rounds: int = 50):
             out = joined.where("v <= u").selectExpr("v AS a", "m AS b").union(
                 joined.selectExpr("u AS a", "m AS b")
             )
-        return (
+        return materialize(
             out.where("a <> b")
             .selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
             .distinct()
-            .localCheckpoint()
         )
 
     def _sig(e):
@@ -644,8 +636,8 @@ def connected_components_star(pairs, max_rounds: int = 50):
 
 
 def _dup_clusters_spark(spark, sf_dir: str):
-    _planted_minhash_views(spark, sf_dir)
-    pairs = spark.sql(_CC_CAND_SPARK)
+    _, wide = _planted_minhash(spark, sf_dir)
+    pairs = spark.sql(_CC_CAND_SPARK, wide=wide)
     return connected_components(pairs).selectExpr(
         "node AS doc_id", "label AS cluster_id"
     )
@@ -679,7 +671,7 @@ _CC_DUCK = (
 )
 
 QUERIES["q_dup_clusters"] = QuerySpec(
-    spark=_dup_clusters_spark,
+    spark=query_scope(_dup_clusters_spark),
     oracle=_CC_DUCK,
     description="transitive dedup clusters: connected components over LSH "
     "pairs (min-label propagation vs recursive-CTE oracle)",
@@ -1159,21 +1151,20 @@ def _char_lm_spark(spark, sf_dir: str):
       (at 100 TB the scan is already wide and this repartition is a
       no-op knob);
     - ``dg`` is referenced twice (corpus counts + the per-doc join), so
-      it is checkpointed once instead of re-running the explode per
+      it is materialized once instead of re-running the explode per
       reference.
     """
     register_views(spark, sf_dir)
     n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("char_lm_docs")
-    dg = spark.sql(
-        _CHAR_LM_DG.format(src="char_lm_docs", gen=_CHAR_LM_GEN_SPARK)
-    ).localCheckpoint()
-    dg.createOrReplaceTempView("char_lm_dg")
-    return spark.sql(_CHAR_LM_FINAL.format(dg="SELECT * FROM char_lm_dg"))
+    dg = materialize(spark.sql(
+        _CHAR_LM_DG.format(src="{docs}", gen=_CHAR_LM_GEN_SPARK),
+        docs=spark.table("documents").repartition(n),
+    ))
+    return spark.sql(_CHAR_LM_FINAL.format(dg="SELECT * FROM {dg}"), dg=dg)
 
 
 QUERIES["q_char_lm_score"] = QuerySpec(
-    spark=_char_lm_spark,
+    spark=query_scope(_char_lm_spark),
     oracle=_CHAR_LM_FINAL.format(
         dg=_CHAR_LM_DG.format(src="documents", gen=_CHAR_LM_GEN_DUCK)
     ),
@@ -1741,8 +1732,9 @@ def _substring_dedup_spark(spark, sf_dir: str):
     already wide and this is a no-op knob)."""
     register_views(spark, sf_dir)
     n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n).createOrReplaceTempView("substr_docs")
-    return spark.sql(_substr_spark_sql("substr_docs"))
+    return spark.sql(
+        _substr_spark_sql("{docs}"), docs=spark.table("documents").repartition(n)
+    )
 
 
 QUERIES["q_substring_dedup"] = QuerySpec(
@@ -1873,12 +1865,12 @@ def _quality_curriculum_spark(spark, sf_dir: str):
             "decile int, n_docs long, min_points int, max_points int, sum_chars long",
         )
     ranked = global_row_number(scored, ["points", "n_chars", "doc_id"], "rn")
-    ranked.createOrReplaceTempView("_curriculum_ranked")
     return spark.sql(
         "WITH bucketed AS ("
         f"  SELECT *, CAST((rn - 1) * 10 DIV {n} + 1 AS INT) AS decile"
-        "   FROM _curriculum_ranked"
-        f") {_CURRICULUM_ROLLUP}"
+        "   FROM {ranked}"
+        f") {_CURRICULUM_ROLLUP}",
+        ranked=ranked,
     )
 
 
@@ -2155,16 +2147,16 @@ _BM25_TAIL = """
 """
 
 _BM25_TF_SPARK = _BM25_TF_BODY.format(
-    src="bm25_docs",
+    src="{docs}",
     split="split(lower(trim(text)), '\\\\s+')",
     gen="LATERAL VIEW explode(a) g AS t",
 )
 
 
 def _bm25_spark(spark, sf_dir: str):
-    """Materialize the tf table ONCE (persisted temp view) — dl, df,
-    qterms and the score join are four references that would otherwise
-    each replan the scan+explode+groupBy subtree.
+    """Materialize the tf table ONCE — dl, df, qterms and the score join
+    are four references that would otherwise each replan the
+    scan+explode+groupBy subtree.
 
     The repartition is KEYED on doc_id: HashPartitioning(doc_id) is a
     subset of every downstream per-doc grouping key, so the tf groupBy
@@ -2174,18 +2166,12 @@ def _bm25_spark(spark, sf_dir: str):
     Measured 2x warm / 5x cold vs the unkeyed round-robin repartition."""
     register_views(spark, sf_dir)
     n = spark.sparkContext.defaultParallelism
-    spark.table("documents").repartition(n, "doc_id").createOrReplaceTempView(
-        "bm25_docs"
+    tf = materialize(spark.sql(
+        _BM25_TF_SPARK, docs=spark.table("documents").repartition(n, "doc_id")
+    ))
+    return spark.sql(
+        "WITH " + _BM25_TAIL.format(tf="{tf}", topk=_BM25_TOPK), tf=tf
     )
-    tf = spark.sql(_BM25_TF_SPARK).persist()
-    tf.createOrReplaceTempView("bm25_tf")
-    out = spark.sql("WITH " + _BM25_TAIL.format(tf="bm25_tf", topk=_BM25_TOPK))
-    # The 16-row result is tiny: materialize it off the cached tf now so
-    # the persisted frame can be released instead of leaking across the
-    # session (bench runs 89 queries back-to-back in one JVM).
-    out = out.localCheckpoint(eager=True)
-    tf.unpersist()
-    return out
 
 
 _BM25_DUCK = (
@@ -2200,7 +2186,7 @@ _BM25_DUCK = (
 )
 
 QUERIES["q_bm25"] = QuerySpec(
-    spark=_bm25_spark,
+    spark=query_scope(_bm25_spark),
     oracle=_BM25_DUCK,
     description=(
         f"BM25 top-{_BM25_TOPK} retrieval (k1=1.2, b=0.75) for a corpus-"
@@ -2310,59 +2296,28 @@ _FUZZY_TAIL = """
     WHERE levenshtein(c.qtok, c.token) <= 1
 """
 
-# Spark-side tail: same algebra as _FUZZY_TAIL but with the CTEs
-# unrolled into derived tables.  Spark 4.1 cache-substitution gotcha
-# (bisected empirically): a cached temp view whose DEFINITION itself
-# contains a WITH-CTE (here: `WITH toks`) is NOT replaced by its
-# InMemoryRelation when referenced from inside another WITH query —
-# the outer/inner CTE merge renumbers cte ids so sameResult fails and
-# the dict is re-derived from 3 parquet scans.  References through
-# plain derived tables always substitute (verified: 3 InMemoryTableScans,
-# 0 fresh document scans in this form's physical plan).
-_FUZZY_TAIL_SPARK = f"""
-    SELECT c.qtok AS query_token, c.token AS dict_token,
-           CAST(levenshtein(c.qtok, c.token) AS BIGINT) AS dist,
-           CAST(dd.df AS BIGINT) AS dict_df
-    FROM (
-      SELECT DISTINCT q.qtok, d.token
-      FROM (
-        SELECT qtok,
-               CASE WHEN i = 0 THEN qtok
-                    ELSE concat(substring(qtok, 1, i - 1),
-                                substring(qtok, i + 1)) END AS v
-        FROM (
-          SELECT DISTINCT concat(substring(token, 1, p - 1),
-                                 substring(token, p + 1)) AS qtok
-          FROM (SELECT token, {_FUZZY_TYPO_POS} AS p FROM fuzzy_dict) tp
-        ) queries LATERAL VIEW explode(sequence(0, length(qtok))) g2 AS i
-      ) q JOIN (
-        SELECT token,
-               CASE WHEN i = 0 THEN token
-                    ELSE concat(substring(token, 1, i - 1),
-                                substring(token, i + 1)) END AS v
-        FROM fuzzy_dict
-        LATERAL VIEW explode(sequence(0, length(token))) g3 AS i
-      ) d ON q.v = d.v
-    ) c JOIN fuzzy_dict dd ON dd.token = c.token
-    WHERE levenshtein(c.qtok, c.token) <= 1
-"""
+# Spark side of the tail: the dict is the materialized frame
+_FUZZY_TAIL_SPARK = "WITH dict AS (SELECT * FROM {dict}), " + _FUZZY_TAIL.format(
+    typo_pos=_FUZZY_TYPO_POS,
+    gen_q="LATERAL VIEW explode(sequence(0, length(qtok))) g2 AS i",
+    gen_d="LATERAL VIEW explode(sequence(0, length(token))) g3 AS i",
+).replace("WITH queries AS", "queries AS", 1)
 
 
 def _fuzzy_join_spark(spark, sf_dir: str):
-    """Materialize the dictionary ONCE (persisted temp view): the
+    """Materialize the dictionary ONCE: the
     inlined-CTE form re-derives the scan+explode+df-groupBy dict
     subtree for queries, dvars AND the df join — 6 document scans in
     the physical plan; this shape tokenizes once and every reference
     reads the cached skinny (token, df) frame."""
     register_views(spark, sf_dir)
-    d = spark.sql(
+    d = materialize(spark.sql(
         _FUZZY_DICT_BODY.format(
             split="split(lower(trim(text)), '\\\\s+')",
             gen="LATERAL VIEW explode(a) g AS t",
         )
-    ).persist()
-    d.createOrReplaceTempView("fuzzy_dict")
-    return spark.sql(_FUZZY_TAIL_SPARK)
+    ))
+    return spark.sql(_FUZZY_TAIL_SPARK, dict=d)
 
 
 _FUZZY_DUCK = (
@@ -2380,7 +2335,7 @@ _FUZZY_DUCK = (
 )
 
 QUERIES["q_fuzzy_join"] = QuerySpec(
-    spark=_fuzzy_join_spark,
+    spark=query_scope(_fuzzy_join_spark),
     oracle=_FUZZY_DUCK,
     description=(
         "SymSpell deletion-neighborhood fuzzy join: md5-planted typo "
@@ -2471,7 +2426,7 @@ _ENTROPY_VERIFY_SPARK = """
                1e6 * (c * 1e0 / n) * ln(n * 1e0 / c)
              ) AS BIGINT) AS e_ppm
       FROM (SELECT doc_id, c, sum(c) OVER (PARTITION BY doc_id) AS n
-            FROM ce_cnt) t
+            FROM {cnt}) t
     )
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_unique_chars,
@@ -2494,8 +2449,7 @@ def _char_entropy_spark(spark, sf_dir: str):
         .repartition(p)
         .mapInPandas(_char_counts_fn, "doc_id long, ch string, c long")
     )
-    cnt.createOrReplaceTempView("ce_cnt")
-    return spark.sql(_ENTROPY_VERIFY_SPARK)
+    return spark.sql(_ENTROPY_VERIFY_SPARK, cnt=cnt)
 
 
 QUERIES["q_char_entropy"] = QuerySpec(
@@ -2871,28 +2825,28 @@ _PREFIX_JOIN_BODY = """
 """
 
 # engine-side verify: exact intersections via size(array_intersect) over
-# per-doc shingle ARRAYS attached by broadcast hash joins — the oracle's
+# per-doc shingle ARRAYS joined to each candidate pair — the oracle's
 # cand JOIN tok JOIN tok form materializes |cand| x shingles-per-doc
 # join rows (~23M at sf1.0, the q_containment lesson); the array form is
 # |cand| rows with the set intersection in codegen.  The doc->array
-# table is one skinny row per DOCUMENT (the dims-table pattern); at
-# fleet scale it becomes a shuffle join on doc_id, same plan shape.
+# table is one skinny row per DOCUMENT; AQE broadcasts it while it is
+# under the broadcast threshold and shuffle-joins it on doc_id above.
 # Pairs with zero overlap cannot reach the output either way (the
 # Jaccard >= 0.9 gate needs 10*i >= 9*union > 0).
 _PREFIX_JOIN_VERIFY = """
     WITH sets AS (
       SELECT doc_id, collect_list(s) AS ss, CAST(count(*) AS BIGINT) AS n
-      FROM pj_tok GROUP BY doc_id
+      FROM {tok} GROUP BY doc_id
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-      FROM pj_pref a JOIN pj_pref b ON b.s = a.s AND b.doc_id > a.doc_id
+      FROM {pref} a JOIN {pref} b ON b.s = a.s AND b.doc_id > a.doc_id
        AND 10 * least(a.n, b.n) >= 9 * greatest(a.n, b.n)
        AND least(a.n - a.rn, b.n - b.rn) + 1
-           >= (9 * (a.n + b.n) + 18) {idiv} 19
+           >= (9 * (a.n + b.n) + 18) div 19
     ),
     inter AS (
-      SELECT /*+ BROADCAST(sa), BROADCAST(sb) */ c.a, c.b,
+      SELECT c.a, c.b,
              CAST(size(array_intersect(sa.ss, sb.ss)) AS BIGINT) AS i,
              sa.n AS na, sb.n AS nb
       FROM cand c
@@ -2902,7 +2856,7 @@ _PREFIX_JOIN_VERIFY = """
     SELECT a AS doc_a, b AS doc_b,
            CAST(i AS BIGINT) AS n_common,
            CAST(na + nb - i AS BIGINT) AS n_union,
-           CAST((i * 1000000) {idiv} (na + nb - i) AS BIGINT)
+           CAST((i * 1000000) div (na + nb - i) AS BIGINT)
              AS jaccard_ppm
     FROM inter
     WHERE 10 * i >= 9 * (na + nb - i)
@@ -2913,36 +2867,34 @@ def _prefix_join_spark(spark, sf_dir: str):
     """Materialize the shingle-set frame ONCE (the body references it six
     times: df, sz x2, rank, and twice in the verify join) and the ranked
     prefix frame once (referenced on both sides of the candidate join).
-    Both are persisted AND eagerly materialized: persist() alone does not
-    help when one plan hits the cache six times before any task has
-    populated it — every subtree raced to recompute the explode+distinct
-    (measured: 15.8 s -> ~5 s at sf0.1).  Same discipline as mh_wide."""
+    ``materialize`` computes each before the next plan reads it: a lazy
+    persist does not help when one plan hits the cache six times before
+    any task has populated it — every subtree raced to recompute the
+    explode+distinct (measured: 15.8 s -> ~5 s at sf0.1)."""
     register_views(spark, sf_dir)
-    tok = spark.sql(_p_sub(spark, _SHINGLES_SPARK.format(src="documents"))).persist()
-    tok.count()
-    tok.createOrReplaceTempView("pj_tok")
-    pref = spark.sql(
+    tok = materialize(spark.sql(_p_sub(spark, _SHINGLES_SPARK.format(src="documents"))))
+    pref = materialize(spark.sql(
         """
-        WITH sz AS (SELECT doc_id, count(*) AS n FROM pj_tok GROUP BY doc_id),
+        WITH sz AS (SELECT doc_id, count(*) AS n FROM {tok} GROUP BY doc_id),
         r AS (
           SELECT t.doc_id, t.s,
                  row_number() OVER (
                    PARTITION BY t.doc_id ORDER BY d.df, t.s
                  ) AS rn, z.n
-          FROM pj_tok t
-          JOIN (SELECT s, count(*) AS df FROM pj_tok GROUP BY s) d ON d.s = t.s
+          FROM {tok} t
+          JOIN (SELECT s, count(*) AS df FROM {tok} GROUP BY s) d ON d.s = t.s
           JOIN sz z ON z.doc_id = t.doc_id
         )
         SELECT doc_id, s, rn, n FROM r
         WHERE rn <= n - ((9 * n + 9) div 10) + 1
-        """
-    ).persist()
-    pref.createOrReplaceTempView("pj_pref")
-    return spark.sql(_PREFIX_JOIN_VERIFY.format(idiv="div"))
+        """,
+        tok=tok,
+    ))
+    return spark.sql(_PREFIX_JOIN_VERIFY, tok=tok, pref=pref)
 
 
 QUERIES["q_prefix_join"] = QuerySpec(
-    spark=_prefix_join_spark,
+    spark=query_scope(_prefix_join_spark),
     oracle=_PREFIX_JOIN_BODY.format(
         shingles=_SHINGLES_DUCK.format(src="documents"), idiv="//"
     ),
@@ -4002,24 +3954,24 @@ _CONTAIN_SH_SPARK = f"""
     FROM base
 """
 
-# Engine-side verify over the MATERIALIZED shingle-set view (the body
+# Engine-side verify over the MATERIALIZED shingle-set frame (the body
 # references sh six times and Spark inlines repeated CTEs, so the
 # SQL-text form re-ran the explode + DISTINCT per reference), with two
 # structural fixes over the oracle's formulation (r6 bench, sf1.0):
 #   - the intersection is size(array_intersect) over per-doc shingle
-#     ARRAYS attached by broadcast hash joins — the oracle's
+#     ARRAYS joined to each candidate pair — the oracle's
 #     cand JOIN sh JOIN sh materialized |cand| x shingles-per-doc rows
 #     (3.9M pairs x ~50 = ~200M join rows, 49 s of the 57 s wall; the
 #     array form is |cand| rows, set intersection in codegen).  The
-#     doc->array table is one skinny row per DOCUMENT (not per pair), so
-#     broadcast is the dims-table pattern; at fleet scale it becomes a
-#     shuffle join on doc_id, same plan shape minus the hint.
+#     doc->array table is one skinny row per DOCUMENT (not per pair);
+#     AQE broadcasts it while it is under the broadcast threshold and
+#     shuffle-joins it on doc_id above.
 #   - both directions come from ONE explode over inter instead of a
 #     UNION ALL that re-evaluated the whole inter subtree twice.
 _CONTAIN_VERIFY_SPARK = f"""
     WITH sets AS (
       SELECT doc_id, collect_list(g) AS gs, CAST(count(*) AS BIGINT) AS n_sh
-      FROM ct_sh GROUP BY doc_id
+      FROM {{sh}} GROUP BY doc_id
     ),
     cand AS (
       -- candidate pairs straight off the RARE posting lists: a rare
@@ -4033,12 +3985,12 @@ _CONTAIN_VERIFY_SPARK = f"""
                              s -> s.d1 < s.d2)))) AS pr
         FROM (
           SELECT collect_list(doc_id) AS ds
-          FROM ct_sh GROUP BY g HAVING count(*) BETWEEN 2 AND 10
+          FROM {{sh}} GROUP BY g HAVING count(*) BETWEEN 2 AND 10
         )
       )
     ),
     inter AS (
-      SELECT /*+ BROADCAST(s1), BROADCAST(s2) */ c.d1, c.d2,
+      SELECT c.d1, c.d2,
              CAST(size(array_intersect(s1.gs, s2.gs)) AS BIGINT) AS i,
              s1.n_sh AS n1, s2.n_sh AS n2
       FROM cand c
@@ -4059,10 +4011,8 @@ _CONTAIN_VERIFY_SPARK = f"""
 def _containment_spark(spark, sf_dir: str):
     register_views(spark, sf_dir)
     p = max(spark.sparkContext.defaultParallelism, 1)
-    sh = spark.sql(_CONTAIN_SH_SPARK.format(p=p)).persist()
-    sh.count()  # materialize BEFORE the consumers race the cache
-    sh.createOrReplaceTempView("ct_sh")
-    return spark.sql(_CONTAIN_VERIFY_SPARK)
+    sh = materialize(spark.sql(_CONTAIN_SH_SPARK.format(p=p)))
+    return spark.sql(_CONTAIN_VERIFY_SPARK, sh=sh)
 
 _CONTAIN_DUCK = rf"""
     WITH base AS (
@@ -4079,7 +4029,7 @@ _CONTAIN_DUCK = rf"""
 """
 
 QUERIES["q_containment"] = QuerySpec(
-    spark=_containment_spark,
+    spark=query_scope(_containment_spark),
     oracle=_CONTAIN_DUCK,
     description=f"Broder containment (word {_CONTAIN_K}-gram shingles, tau="
     f"{_CONTAIN_TAU}): asymmetric quote/subset detection; rare-shingle "
@@ -4390,21 +4340,20 @@ def _dsir_spark(spark, sf_dir: str):
     target bucket totals, the per-doc score join); inlined as a CTE Spark
     replans the scan + token explode + md5 subtree per reference (10
     parquet scans in the naive plan).  Materializing the SKINNY db frame
-    (<= n_docs x B rows) makes every reference an InMemoryRelation read —
+    (<= n_docs x B rows) makes every reference a cached-frame read —
     ONE pass over the corpus text, which is the shape that matters when
     the scan is 100 TB."""
     register_views(spark, sf_dir)
-    db = spark.sql(
+    db = materialize(spark.sql(
         _p_sub(spark, _DSIR_DB.format(tokens=_DSIR_TOKENS_SPARK))
-    ).localCheckpoint()
-    db.createOrReplaceTempView("dsir_db")
+    ))
     return spark.sql(
-        _DSIR_FINAL.format(db="SELECT * FROM dsir_db", idiv="DIV")
+        _DSIR_FINAL.format(db="SELECT * FROM {db}", idiv="DIV"), db=db
     )
 
 
 QUERIES["q_dsir"] = QuerySpec(
-    spark=_dsir_spark,
+    spark=query_scope(_dsir_spark),
     oracle=_DSIR_FINAL.format(
         db=_DSIR_DB.format(tokens=_DSIR_TOKENS_DUCK), idiv="//"
     ),
@@ -4475,11 +4424,11 @@ def _incremental_dedup_spark(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     register_views(spark, sf_dir)
-    spark.sql(f"SELECT * FROM ({_INC_BATCH})").createOrReplaceTempView("batch")
-    spark.sql(f"SELECT * FROM ({_INC_CORPUS})").createOrReplaceTempView("corpus")
+    frames = {"batch": spark.sql(_INC_BATCH), "corpus": spark.sql(_INC_CORPUS)}
     for side in ("batch", "corpus"):
         wide = spark.sql(
-            _p_sub(spark, _INC_WIDE.format(shingles=_SHINGLES_SPARK.format(src=side)))
+            _p_sub(spark, _INC_WIDE.format(shingles=_SHINGLES_SPARK.format(src="{src}"))),
+            src=frames[side],
         )
         bands = wide.selectExpr(
             "doc_id", f"stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig)"
@@ -4489,8 +4438,10 @@ def _incremental_dedup_spark(spark, sf_dir: str):
         # never shuffles (checked by tests/test_round5_ops.py plan pin)
         if side == "batch":
             bands = F.broadcast(bands)
-        bands.createOrReplaceTempView(f"{side}_bands")
-    return spark.sql(f"WITH {_INC_FINAL}")
+        frames[f"{side}_bands"] = bands
+    # _INC_FINAL reads the four relations by name: bind each to its frame
+    named = ", ".join(f"{n} AS (SELECT * FROM {{{n}}})" for n in frames)
+    return spark.sql(f"WITH {named}, {_INC_FINAL}", **frames)
 
 
 _INC_DUCK = f"""

@@ -20,7 +20,7 @@ time bucket), so the plans carry to a 1000-executor cluster unchanged.
 
 from __future__ import annotations
 
-from . import QuerySpec, sql_query
+from . import QuerySpec, materialize, query_scope, register_views, sql_query
 from .textops import _PLANTED
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -313,30 +313,26 @@ _SIMHASH_PAIRS_SPARK_BODY = """
 
 
 def _simhash_pairs_spark(spark, sf_dir: str):
-    """Materialize the per-doc SimHash frame ONCE (localCheckpoint), then
-    band + self-join against the skinny (doc_id, simhash) leaf.
+    """Materialize the per-doc SimHash frame ONCE, then band + self-join
+    against the skinny (doc_id, simhash) leaf.
 
     Inlined as a CTE, ``sim`` is referenced 4x in the final plan (two band
     branches x two self-join sides) and Spark re-runs the shingle explode
     + md5 + 16-bit-vote groupBy for each — the whole expensive subtree
-    times four.  The checkpoint turns every reference into a scan of ~1
+    times four.  Materializing turns every reference into a scan of ~1
     row/doc; this is the signature-table materialization a production
     SimHash dedup keeps anyway."""
-    from . import register_views
-
     register_views(spark, sf_dir)
-    sim = spark.sql(
+    sim = materialize(spark.sql(
         _p_sub(spark, _SIMHASH_BODY.format(shingles=_SHINGLES_SPARK.format(src=_PLANTED)))
-    ).localCheckpoint()
-    sim.createOrReplaceTempView("simhash_sim")
+    ))
     return spark.sql(
-        "WITH sim AS (SELECT * FROM simhash_sim), "
-        + _SIMHASH_PAIRS_SPARK_BODY
+        "WITH sim AS (SELECT * FROM {sim}), " + _SIMHASH_PAIRS_SPARK_BODY, sim=sim
     )
 
 
 QUERIES["q_simhash_pairs"] = QuerySpec(
-    spark=_simhash_pairs_spark,
+    spark=query_scope(_simhash_pairs_spark),
     oracle=_simhash_pairs_sql(
         _SHINGLES_DUCK.format(src=_PLANTED), "bit_count(xor(sa, sb))"
     ),

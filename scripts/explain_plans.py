@@ -232,12 +232,12 @@ applies to join selection:
   distributed fixpoint's labels exactly).  O(E α(E)) and free of per-round
   scheduler overhead — at bench scale this is ~10× faster than any
   multi-round shuffle plan.  The collect is provably bounded: the gating
-  count is computed first from a localCheckpointed frame, and the result
+  count is computed first from a materialized frame, and the result
   returns via the Arrow `createDataFrame` path (LocalRelation, zero
   Python-worker tasks).
 - **larger graphs**: distributed min-label propagation + pointer jumping
-  (label ← label(label)), O(log diameter) rounds, each round localCheck-
-  pointed so round k plans against a leaf instead of k-1 nested
+  (label ← label(label)), O(log diameter) rounds, each round
+  materialized so round k plans against a leaf instead of k-1 nested
   predecessors.  The edge frame hash-partitions once on the join key with
   a partition count sized from the edge count (~2M rows/task, floor 8);
   every round then shuffles only the skinny labels side.  At 10^9 docs a

@@ -7,8 +7,8 @@ partials to the driver every iteration — driver state linear in the corpus
 at 10^9+ vectors.  Round 6 adds the ceiling (``_LLOYD_DRIVER_STATE_MAX`` /
 ``driver_state_max``): above it the centroid state stays a DataFrame end to
 end (``_lloyd_assign_frames`` — two-phase-rank seeds, groupBy(cid, pos)
-updates written back to a centroid frame, localCheckpoint lineage
-truncation), and below it the round-6 numpy matmul path replaces the old
+updates written back to a centroid frame, materialized each
+iteration), and below it the round-6 numpy matmul path replaces the old
 N*k crossJoin.  These tests pin:
 
   1. all three paths (inlined literals, numpy matmul, distributed frames)

@@ -13,7 +13,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from bsc_project_spark.queries import _REGISTERED_DIRS, TABLES, all_queries, register_views
+from bsc_project_spark.queries import (
+    _REGISTERED_DIRS,
+    TABLES,
+    all_queries,
+    materialize,
+    query_scope,
+    register_views,
+)
 from bsc_project_spark.queries.similarity import _emb_dim
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -43,14 +50,25 @@ def _canon(cols, rows):
     return sorted("\x01".join(_canon_cell(r[i]) for i in order) for r in rows)
 
 
+def _session_state(spark):
+    """Persisted RDDs and temp views: what a query could leave behind."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return spark.sparkContext._jsc.getPersistentRDDs().size(), views
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
+    """...and, once the caller drops the result, leaves the session's
+    cache and temp views as it found them."""
     spec = QUERIES[name]
+    register_views(spark, SF_DIR)
+    before = _session_state(spark)
     sdf = spec.spark(spark, SF_DIR)
     s_cols = [c.lower() for c in sdf.columns]
     s_rows = [tuple(r) for r in sdf.collect()]
+    del sdf
+    assert _session_state(spark) == before
     if spec.oracle is None:
-        assert len(s_rows) >= 0
         return
     res = duck.execute(spec.oracle)
     d_cols = [d[0].lower() for d in res.description]
@@ -58,6 +76,87 @@ def test_query_matches_oracle(name, spark, duck):
     assert sorted(s_cols) == sorted(d_cols)
     assert len(s_rows) == len(d_rows)
     assert _canon(s_cols, s_rows) == _canon(d_cols, d_rows)
+
+
+def _oracle_canon(duck, name):
+    res = duck.execute(QUERIES[name].oracle)
+    return _canon([d[0].lower() for d in res.description], res.fetchall())
+
+
+def test_query_scope_releases_on_error_and_keeps_views(spark, duck):
+    """A builder that raises releases what it materialized; a caller may
+    chain on a result it drops at once (the released frames recompute);
+    and no query touches a caller's own temp view of the same name as
+    one of its intermediates."""
+
+    def failing(spark, sf_dir):
+        materialize(spark.range(10))
+        raise RuntimeError("builder failed")
+
+    register_views(spark, SF_DIR)
+    before = _session_state(spark)
+    with pytest.raises(RuntimeError, match="builder failed"):
+        query_scope(failing)(spark, SF_DIR)
+    assert _session_state(spark) == before
+
+    rows = QUERIES["q_pagerank"].spark(spark, SF_DIR).orderBy("doc_id").collect()
+    cols = ["doc_id", "in_degree", "pagerank"]
+    assert _canon(cols, [tuple(r[c] for c in cols) for r in rows]) == _oracle_canon(
+        duck, "q_pagerank"
+    )
+    assert _session_state(spark) == before
+
+    spark.range(3).createOrReplaceTempView("corpus")
+    try:
+        QUERIES["q_incremental_dedup"].spark(spark, SF_DIR).collect()
+        assert [r.id for r in spark.table("corpus").collect()] == [0, 1, 2]
+    finally:
+        spark.catalog.dropTempView("corpus")
+
+
+def test_materialized_frame_survives_scoped_sql_argument(spark):
+    """spark.sql(text, name=frame) drops its view after analysis, and
+    dropping a view uncaches a plan equal to the view's: a materialized
+    frame passed that way must stay cached, and be read from the cache,
+    until the query's result is dropped."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    n0 = persisted().size()
+
+    def builder(spark, sf_dir):
+        m = materialize(spark.range(100).selectExpr("id % 7 AS k"))
+        return spark.sql("SELECT k, count(*) AS c FROM {m} GROUP BY k", m=m)
+
+    df = query_scope(builder)(spark, SF_DIR)
+    assert persisted().size() == n0 + 1
+    assert sorted(r.c for r in df.collect()) == [14, 14, 14, 14, 14, 15, 15]
+    assert "CachedPartitions" in df._jdf.queryExecution().toRdd().toDebugString()
+    del df
+    assert persisted().size() == n0
+
+
+@pytest.mark.parametrize("name", ["q_prefix_join", "q_containment"])
+def test_shingle_set_join_is_sized_by_aqe(spark, duck, name):
+    """The per-doc shingle-set join carries no broadcast hint: it
+    broadcasts the small sf0.001 sets under the default threshold and
+    shuffle-joins, still matching the oracle, when broadcasts are off."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def run():
+        sdf = QUERIES[name].spark(spark, SF_DIR)
+        rows = [tuple(r) for r in sdf.collect()]
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        return _canon([c.lower() for c in sdf.columns], rows), plan
+
+    got, plan = run()
+    assert "BroadcastHashJoin" in plan
+    spark.conf.set(key, "-1")
+    try:
+        got_off, plan_off = run()
+    finally:
+        spark.conf.unset(key)
+    assert "BroadcastHashJoin" not in plan_off
+    assert "SortMergeJoin" in plan_off
+    assert got_off == got == _oracle_canon(duck, name)
 
 
 def _altered_sf(tmp_path, table, alter):

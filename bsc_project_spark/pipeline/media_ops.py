@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 from ..io.png import decode_gray, encode_gray
 from ..kernels.imgproc import resize_area
+from .banding import banded_pairs
 
 IMAGE_DIMS_SCHEMA = "media_ref string, width int, height int, mean_intensity double"
 THUMBNAIL_SCHEMA = "media_ref string, thumb binary, thumb_width int, thumb_height int"
@@ -186,10 +187,10 @@ def image_phash(media: DataFrame, hash_size: int = 8, highfreq_factor: int = 4) 
 
 def phash_near_dup_pairs(phashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Visual near-dup pairs from pHashes, all native SQL: band the 64-bit
-    hash into 4 x 16-bit values, equi-join on (band, bval) — never an
-    all-pairs product — then verify candidates exactly with
-    bit_count(xor).  The same banded shape as the text SimHash path, so
-    the plan carries to any corpus size.
+    hash into 4 x 16-bit values, take candidates from ``banded_pairs``
+    (a (band, bval) equi-join — never an all-pairs product), then verify
+    them exactly with bit_count(xor).  The same banded shape as the text
+    SimHash path, so the plan carries to any corpus size.
 
     ``max_hamming`` defaults to 3, the banding's GUARANTEED recall radius
     (pigeonhole: <=3 flipped bits cannot touch all 4 bands).  A larger
@@ -197,64 +198,14 @@ def phash_near_dup_pairs(phashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     flips hit every band never collides — so raising it should come with
     more/narrower bands (e.g. 8 x 8-bit for radius 7).
 
-    Dedup by construction, not by shuffle: a pair matching in m bands
-    used to be emitted m times and collapsed with DISTINCT — at corpus
-    scale identical images match in ALL 4 bands, so the candidate
-    exchange carried 4x the pair volume (r5 bench: 4x ~20M rows at the
-    10x sf) just to throw 3/4 away.  The join now emits each pair from
-    its FIRST matching band only (the residual predicate checks every
-    earlier band differs — both full hashes are on the join row), which
-    makes pairs unique by construction and removes the DISTINCT's
-    shuffle + hash-aggregate entirely.  Requires one row per media_ref
-    in ``phashes`` (the contract callers already rely on)."""
-    from pyspark.sql import functions as F
-
-    bands = phashes.selectExpr(
-        "media_ref",
-        "phash",
-        "stack(4, "
-        "0, shiftright(phash, 48) & 65535, "
-        "1, shiftright(phash, 32) & 65535, "
-        "2, shiftright(phash, 16) & 65535, "
-        "3, phash & 65535) AS (band, bval)",
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-
-    def _bandval(side: str, i: int) -> str:
-        shift = 48 - 16 * i
-        if shift:
-            return f"shiftright({side}.phash, {shift}) & 65535"
-        return f"{side}.phash & 65535"
-
-    no_earlier_match = F.expr(
-        "CASE a.band WHEN 0 THEN true "
-        + " ".join(
-            f"WHEN {k} THEN "
-            + " AND ".join(
-                f"({_bandval('a', j)}) != ({_bandval('b', j)})"
-                for j in range(k)
-            )
-            for k in range(1, 4)
-        )
-        + " END"
-    )
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bval") == F.col("b.bval"))
-        & (F.col("a.media_ref") < F.col("b.media_ref"))
-        & no_earlier_match,
-    ).select(
-        F.col("a.media_ref").alias("ref_a"),
-        F.col("b.media_ref").alias("ref_b"),
-        F.col("a.phash").alias("ha"),
-        F.col("b.phash").alias("hb"),
-    )
-    return cand.select(
-        "ref_a",
-        "ref_b",
-        F.expr("CAST(bit_count(ha ^ hb) AS INT)").alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)
+    Requires one row per media_ref in ``phashes`` (the contract callers
+    already rely on)."""
+    bands = [f"shiftright(phash, {48 - 16 * i}) & 65535" for i in range(4)]
+    return banded_pairs(phashes, "media_ref", bands).selectExpr(
+        "a.media_ref AS ref_a",
+        "b.media_ref AS ref_b",
+        "CAST(bit_count(a.phash ^ b.phash) AS INT) AS hamming",
+    ).where(f"hamming <= {max_hamming}")
 
 
 def _fake_signal(ref: str, content: bytes, n: int) -> np.ndarray:

@@ -215,6 +215,11 @@ _CHECK_FIRST = [
     # (3) the stalest vintages for the remaining slots.
     # The query-scope change rotated in its six tail builders (q_bm25 ..
     # q_cohort_retention) in place of six unchanged r02/r03 rows.
+    # Shared-helper users of pipeline.banding.banded_pairs (the one band
+    # self-join, each pair from its first matching band): q_phash_pairs
+    # (through phash_near_dup_pairs), q_simhash_pairs, q_lsh_pairs,
+    # q_minhash_est, q_dup_clusters and q_embed_near_dup — all already in
+    # the prefix below.
     "q_semantic_dedup",
     "q_containment",
     "q_prefix_join",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..pipeline.banding import banded_pairs
 from . import QuerySpec, materialize, query_scope, register_views
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -160,13 +161,18 @@ def _lsh_bits_udf(col):
     return pandas_udf(_lsh_bits_fn, StringType())(col)
 
 
-def _band_stack_expr(bits_col: str, sig_fmt: str = "substring({c}, {start}, {n})") -> str:
+def _band_sigs(bits_col: str) -> list[str]:
+    """One bucket expression per band: the band's slice of the bit string."""
+    return [
+        f"substring({bits_col}, {b * _BAND_BITS + 1}, {_BAND_BITS})"
+        for b in range(_N_BANDS)
+    ]
+
+
+def _band_stack_expr(bits_col: str) -> str:
     """Spark stack() expr emitting one (band, bucket) row per band."""
-    parts = []
-    for b in range(_N_BANDS):
-        sig = sig_fmt.format(c=bits_col, start=b * _BAND_BITS + 1, n=_BAND_BITS)
-        parts.append(f"{b}, {sig}")
-    return f"stack({_N_BANDS}, {', '.join(parts)})"
+    parts = ", ".join(f"{b}, {sig}" for b, sig in enumerate(_band_sigs(bits_col)))
+    return f"stack({_N_BANDS}, {parts})"
 
 
 def _ann_lsh_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,11 +220,13 @@ QUERIES["q_ann_lsh_buckets"] = QuerySpec(
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-duplicate detection: banded-LSH candidates + exact
 # verify over a corpus with planted duplicates — the embedding analogue of
-# q_lsh_pairs.  The per-vector features (bit string + norm) are computed
-# ONCE into a materialized skinny frame; both sides of the band self-join and
-# the final verify read that cache instead of recomputing the projection
-# (round 1 inlined the feature CTE into both join sides -> ~9 interpreted
-# passes and 27 s; at 100 TB the features frame is a materialized table).
+# q_lsh_pairs.  The per-vector features (vector, bit string, norm) are
+# computed ONCE into a materialized frame; ``banded_pairs`` self-joins it on
+# the bit-string bands and carries both full rows onto each pair, so the
+# cosine verify runs on the pair row — no DISTINCT over the candidates and
+# no re-join of the features (the oracle spells out both).  Round 1
+# inlined the feature CTE into both join sides -> ~9 interpreted passes and
+# 27 s; at 100 TB the features frame is a materialized table.
 # ---------------------------------------------------------------------------
 
 _SPARK_DOT = (
@@ -263,39 +271,13 @@ def _near_dup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lsh_bits_udf("v").alias("bits"),
         F.expr(f"sqrt({_SPARK_DOT.format(a='v', b='v')})").alias("nrm"),
     ))
-    bands = feats.selectExpr("vec_id", f"{_band_stack_expr('bits')} AS (band, bsig)")
-    cand = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bsig") == F.col("y.bsig"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("a_id"), F.col("y.vec_id").alias("b_id"))
-        .distinct()
-    )
-    pairs = cand.join(
-        feats.select(
-            F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("nrm").alias("anrm")
-        ),
-        on="a_id",
-    ).join(
-        feats.select(
-            F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), F.col("nrm").alias("bnrm")
-        ),
-        on="b_id",
-    )
     # ONE evaluation of the pair dot: round(x, 5) of the raw quotient IS
-    # round(dot / (anrm * bnrm), 5), so the filter and the output column
+    # round(dot / (a.nrm * b.nrm), 5), so the filter and the output column
     # share the same _raw instead of evaluating the aggregate twice
-    dot = _SPARK_DOT.format(a="av", b="bv")
+    dot = _SPARK_DOT.format(a="a.v", b="b.v")
     return (
-        pairs.select(
-            "a_id",
-            "b_id",
-            F.expr(f"{dot} / (anrm * bnrm)").alias("_raw"),
-        )
+        banded_pairs(feats, "vec_id", _band_sigs("bits"))
+        .selectExpr("a.vec_id AS a_id", "b.vec_id AS b_id", f"{dot} / (a.nrm * b.nrm) AS _raw")
         .filter(F.col("_raw") > 0.999)
         .select("a_id", "b_id", F.round("_raw", 5).alias("cosine"))
     )

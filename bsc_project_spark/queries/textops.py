@@ -11,6 +11,7 @@ the value-hash comparison).
 
 from __future__ import annotations
 
+from ..pipeline.banding import banded_pairs
 from . import QuerySpec, materialize, query_scope, register_views, sql_query
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -256,18 +257,27 @@ def _planted_minhash(spark, sf_dir: str):
     return d, wide
 
 
-_LSH_PAIRS_SPARK_BODY = f"""
-    WITH wide AS (SELECT * FROM {{wide}}),
-    bands AS (
-      SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
-    )
-    {_LSH_JOIN}
-"""
+def _lsh_pairs(wide):
+    """The LSH band self-join over the materialized signatures: each
+    candidate pair once, as ``banded_pairs`` rows whose ``a``/``b`` sides
+    carry doc_id and the band signatures s0..s3.  The oracles spell the
+    same join out and dedup it with GROUP BY or DISTINCT."""
+    sigs = wide.selectExpr("doc_id", *(f"{_band_sig(b)} AS s{b}" for b in range(_N_BANDS)))
+    return banded_pairs(sigs, "doc_id", [f"s{b}" for b in range(_N_BANDS)])
+
+
+# the oracle's count(*) per pair: the bands both sides share (a NULL
+# signature never joined, so it never counts)
+_SHARED_BANDS = " + ".join(
+    f"CAST(coalesce(a.s{b} = b.s{b}, false) AS BIGINT)" for b in range(_N_BANDS)
+)
 
 
 def _lsh_pairs_spark(spark, sf_dir: str):
     _, wide = _planted_minhash(spark, sf_dir)
-    return spark.sql(_LSH_PAIRS_SPARK_BODY, wide=wide)
+    return _lsh_pairs(wide).selectExpr(
+        "a.doc_id AS a_id", "b.doc_id AS b_id", f"{_SHARED_BANDS} AS shared_bands"
+    )
 
 
 _LSH_PAIRS_DUCK = f"""
@@ -297,12 +307,14 @@ _EST_AGREE = " + ".join(
     f"(CASE WHEN wa.m{s} = wb.m{s} THEN 1 ELSE 0 END)" for s in range(_N_SEEDS)
 )
 
-_MINHASH_EST_BODY = f"""
+_MINHASH_EST_CAND_DUCK = """
     cand AS (
       SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-    ),
+    ),"""
+
+_MINHASH_EST_BODY = f"""
     est AS (
       SELECT c.a_id, c.b_id, ({_EST_AGREE}) * 1e0 / {_N_SEEDS} AS est_j
       FROM cand c
@@ -330,23 +342,28 @@ _MINHASH_EST_BODY = f"""
 _MINHASH_EST_SPARK_BODY = f"""
     WITH d AS (SELECT * FROM {{d}}),
     wide AS (SELECT * FROM {{wide}}),
-    bands AS (
-      SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
-    ),
-    {_MINHASH_EST_BODY}
+    cand AS (SELECT * FROM {{cand}}),{_MINHASH_EST_BODY}
 """
 
 
 def _minhash_est_spark(spark, sf_dir: str):
     d, wide = _planted_minhash(spark, sf_dir)
-    return spark.sql(_MINHASH_EST_SPARK_BODY, d=d, wide=wide)
+    # hash-partition the candidates once on the pair key: the estimate and
+    # the intersection both read them, and the intersection's GROUP BY and
+    # the final LEFT JOIN on (a_id, b_id) then need no exchange of their own
+    cand = (
+        _lsh_pairs(wide)
+        .selectExpr("a.doc_id AS a_id", "b.doc_id AS b_id")
+        .repartition("a_id", "b_id")
+    )
+    return spark.sql(_MINHASH_EST_SPARK_BODY, d=d, wide=wide, cand=cand)
 
 
 _MINHASH_EST_DUCK = f"""
     {_minhash_wide(_SHINGLES_DUCK.format(src=_PLANTED))},
     wideb AS (SELECT doc_id, {_BANDS_WIDE_DUCK} FROM wide),
     bands AS (UNPIVOT wideb ON {_BANDS_UNPIVOT_DUCK} INTO NAME band VALUE bsig),
-    {_MINHASH_EST_BODY}
+    {_MINHASH_EST_CAND_DUCK}{_MINHASH_EST_BODY}
 """
 
 QUERIES["q_minhash_est"] = QuerySpec(
@@ -370,17 +387,6 @@ QUERIES["q_minhash_est"] = QuerySpec(
 # ---------------------------------------------------------------------------
 
 _CC_MAX_ROUNDS = 20
-
-_CC_CAND_SPARK = f"""
-    WITH wide AS (SELECT * FROM {{wide}}),
-    bands AS (
-      SELECT doc_id, stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig) FROM wide
-    )
-    SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-"""
-
 
 _CC_DRIVER_EDGE_BUDGET = 2_000_000
 
@@ -637,7 +643,7 @@ def connected_components_star(pairs, max_rounds: int = 50):
 
 def _dup_clusters_spark(spark, sf_dir: str):
     _, wide = _planted_minhash(spark, sf_dir)
-    pairs = spark.sql(_CC_CAND_SPARK, wide=wide)
+    pairs = _lsh_pairs(wide).selectExpr("a.doc_id AS a_id", "b.doc_id AS b_id")
     return connected_components(pairs).selectExpr(
         "node AS doc_id", "label AS cluster_id"
     )

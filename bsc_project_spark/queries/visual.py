@@ -4,16 +4,18 @@
 the driver's correctness gate: synthesize a deterministic page image per
 document (a pure function of ``doc_id % 64`` and a variant flag, so the
 distinct-image set is finite), compute 64-bit pHashes through the actual
-``image_phash`` mapInPandas kernel, and find near-dup pairs with the
-native banded-Hamming join (``phash_near_dup_pairs`` — 4 x 16-bit bands,
-``bit_count(xor)`` verify, mirroring ``q_simhash_pairs``).
+``image_phash`` mapInPandas kernel, and find near-dup pairs with
+``phash_near_dup_pairs``: 4 x 16-bit bands through the shared
+``banded_pairs`` self-join (each pair once, from its first matching
+band), then a ``bit_count(xor)`` verify — the same operator behind
+``q_simhash_pairs``.
 
 The DuckDB oracle cannot run the numpy DCT, but it does not need to: the
 distinct-image set is 128 patterns, so the oracle embeds a
 ``(pattern_id, variant) -> phash`` lookup table computed ONCE at
 registration time by the SAME kernel code running locally (render ->
-``_phash_of_image``), then replays the identical banded join + Hamming
-verify in pure SQL.  What the gate therefore checks is exactly what can
+``_phash_of_image``), then replays the banded join (deduplicated with
+DISTINCT) + Hamming verify in pure SQL.  What the gate therefore checks is exactly what can
 go wrong distributed: that the Arrow-batched kernel over Spark produces
 the same hashes as the local kernel, and that the banded join/verify
 logic is correct — on every document of the sf dir.

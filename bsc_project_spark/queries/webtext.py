@@ -20,6 +20,7 @@ time bucket), so the plans carry to a 1000-executor cluster unchanged.
 
 from __future__ import annotations
 
+from ..pipeline.banding import banded_pairs
 from . import QuerySpec, materialize, query_scope, register_views, sql_query
 from .textops import _PLANTED
 
@@ -252,8 +253,10 @@ _q(
 # body as q_simhash, over the planted corpus), banded into 2 x 8-bit band
 # values (a Hamming-<=1 pair ALWAYS shares a band; Hamming-2 pairs are
 # caught unless both flips land in one band — the standard LSH recall
-# tradeoff), candidate pairs via band equi-join, exact Hamming verify via
-# bit_count(xor).  The production config is 64-bit SimHash with 4 x 16-bit
+# tradeoff), candidate pairs from the band equi-join, exact Hamming verify
+# via bit_count(xor).  The oracle spells the join out and dedups it with
+# DISTINCT; the Spark side takes it from ``banded_pairs``, which emits each
+# pair once.  The production config is 64-bit SimHash with 4 x 16-bit
 # bands — identical plan, 65536-ary buckets; 16/8 keeps the oracle's
 # integer widths comfortable in both engines.
 # ---------------------------------------------------------------------------
@@ -284,51 +287,27 @@ def _simhash_pairs_sql(shingles: str, ham: str) -> str:
     return "WITH sim AS (" + sim_inner + "), " + _SIMHASH_PAIRS_BODY.format(ham=ham)
 
 
-# engine-side pair generation: each pair emitted from its FIRST matching
-# band only (band 1 requires the band-0 values to differ — both full
-# hashes ride the join row), so pairs are unique BY CONSTRUCTION and the
-# oracle's DISTINCT (a 2x candidate shuffle + hash-aggregate: identical
-# docs match in both bands) is not needed; the Hamming verify then runs
-# in the join stage instead of after the dedup exchange.
-_SIMHASH_PAIRS_SPARK_BODY = """
-    bands AS (
-      SELECT doc_id, simhash, 0 AS band,
-             CAST(floor(simhash / 256) AS BIGINT) AS bval FROM sim
-      UNION ALL
-      SELECT doc_id, simhash, 1 AS band, simhash % 256 AS bval FROM sim
-    ),
-    cand AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             a.simhash AS sa, b.simhash AS sb
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bval = b.bval
-                  AND a.doc_id < b.doc_id
-                  AND (a.band = 0 OR
-                       CAST(floor(a.simhash / 256) AS BIGINT)
-                         != CAST(floor(b.simhash / 256) AS BIGINT))
-    )
-    SELECT a_id, b_id, CAST(bit_count(sa ^ sb) AS INT) AS hamming
-    FROM cand WHERE bit_count(sa ^ sb) <= 2
-"""
-
-
 def _simhash_pairs_spark(spark, sf_dir: str):
-    """Materialize the per-doc SimHash frame ONCE, then band + self-join
-    against the skinny (doc_id, simhash) leaf.
+    """Materialize the per-doc SimHash frame ONCE, then take its 2 x 8-bit
+    band candidates from ``banded_pairs`` — each pair once, so the
+    oracle's DISTINCT (identical docs match in both bands) has no Spark
+    twin — and verify Hamming on the pair row.
 
-    Inlined as a CTE, ``sim`` is referenced 4x in the final plan (two band
-    branches x two self-join sides) and Spark re-runs the shingle explode
-    + md5 + 16-bit-vote groupBy for each — the whole expensive subtree
-    times four.  Materializing turns every reference into a scan of ~1
+    Inlined as a CTE, ``sim`` would be referenced once per self-join side
+    and Spark would re-run the shingle explode + md5 + 16-bit-vote groupBy
+    for each.  Materializing turns every reference into a scan of ~1
     row/doc; this is the signature-table materialization a production
     SimHash dedup keeps anyway."""
     register_views(spark, sf_dir)
     sim = materialize(spark.sql(
         _p_sub(spark, _SIMHASH_BODY.format(shingles=_SHINGLES_SPARK.format(src=_PLANTED)))
     ))
-    return spark.sql(
-        "WITH sim AS (SELECT * FROM {sim}), " + _SIMHASH_PAIRS_SPARK_BODY, sim=sim
-    )
+    bands = ["shiftright(simhash, 8)", "simhash & 255"]
+    return banded_pairs(sim, "doc_id", bands).selectExpr(
+        "a.doc_id AS a_id",
+        "b.doc_id AS b_id",
+        "CAST(bit_count(a.simhash ^ b.simhash) AS INT) AS hamming",
+    ).where("hamming <= 2")
 
 
 QUERIES["q_simhash_pairs"] = QuerySpec(

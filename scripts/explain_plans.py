@@ -84,7 +84,8 @@ def main() -> None:
          "q_corpus_curation / q_length_quantiles)"),
         ("q_phash_pairs", "visual near-dup: ONE MapInPandas over the distinct "
          "(pattern, variant) pages (kernel cost O(unique pages)), broadcast "
-         "hash-frame fan-out, banded Hamming equi-join — no nested loop"),
+         "hash-frame fan-out, banded Hamming equi-join (banded_pairs, no "
+         "DISTINCT) — no nested loop"),
         ("q_semantic_dedup", "SemDeDup: broadcast centroid assignment, then the "
          "pairwise cosine self-join shuffles on centroid_id only — the "
          "cluster buckets bound the quadratic term"),
@@ -183,10 +184,11 @@ the matmul).  Skewed corpora (clustered embeddings — the testdata's
 label-correlated vectors show this) inflate hot buckets; the mitigation at
 scale is the same as any skewed join: AQE skew-split on the (band, bsig)
 shuffle key plus a bucket-population cap that reroutes over-full buckets to
-a higher-r re-hash (sub-bucketing).  Features (bit string + norm) are
-computed once into a persisted/materialized frame, so the band self-join
-and the exact verify reread cached columns instead of recomputing
-projections (round 1 recomputed them ~9×).
+a higher-r re-hash (sub-bucketing).  Features (vector, bit string, norm)
+are computed once into a materialized frame; the band self-join
+(`banded_pairs`) carries both rows onto each pair, once, so the exact
+verify needs no DISTINCT and no re-join (round 1 recomputed the
+projections ~9×).
 
 Measured at sf0.1 (2,020 vectors, local[32]): q_embed_near_dup 27.2 s →
 ~3.2 s warm; q_ann_lsh_buckets 3.0 s → ~0.6 s.
@@ -256,9 +258,12 @@ random graphs by `tests/test_new_ops.py`.
 
 The oracle-checked demo runs 16-bit SimHash with 2 x 8-bit bands (keeps
 integer widths comfortable in both engines); the production config is
-**64-bit SimHash, 4 x 16-bit bands** — the identical plan shape, which
-`phash_near_dup_pairs` already runs natively for the visual path.  The
-knob arithmetic:
+**64-bit SimHash, 4 x 16-bit bands**.  Both are one call to
+`pipeline.banding.banded_pairs` with a different band list, the same
+operator `phash_near_dup_pairs` already runs with 4 x 16-bit bands for the
+visual path: band values stacked into (band, bval) rows, one equi-join,
+each pair kept only on its first matching band, so no DISTINCT follows
+the join.  The knob arithmetic:
 
 - **Guaranteed recall radius = bands - 1** (pigeonhole): with 4 bands,
   a pair at Hamming distance d <= 3 cannot flip a bit in every band, so

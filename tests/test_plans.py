@@ -209,3 +209,34 @@ def test_new_graph_and_stream_ops_avoid_global_windows(spark):
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "SinglePartition" not in plan, f"{name} funnels through one task"
+
+
+def test_near_dup_self_joins_route_through_banded_pairs(spark, monkeypatch):
+    """Every pair-emitting band self-join builds its candidates with
+    ``banded_pairs`` (each pair once, no dedup shuffle) and plans as an
+    equi-join — never CartesianProduct / BroadcastNestedLoopJoin."""
+    from bsc_project_spark.pipeline import banding, media_ops
+    from bsc_project_spark.queries import all_queries, similarity, textops, webtext
+
+    calls = []
+
+    def spy(frame, key, bands):
+        calls.append(key)
+        return banding.banded_pairs(frame, key, bands)
+
+    for mod in (media_ops, similarity, textops, webtext):
+        monkeypatch.setattr(mod, "banded_pairs", spy)
+    qs = all_queries()
+    for name in (
+        "q_phash_pairs",
+        "q_simhash_pairs",
+        "q_lsh_pairs",
+        "q_minhash_est",
+        "q_dup_clusters",
+        "q_embed_near_dup",
+    ):
+        calls.clear()
+        plan = qs[name].spark(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert calls, f"{name} does not build its pairs with banded_pairs"
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name

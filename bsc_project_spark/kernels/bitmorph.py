@@ -6,9 +6,9 @@ Memory bandwidth (not cores) is the contended resource when 32 executor
 workers run the kernels concurrently, so the hot morphology ops
 (preprocess OPEN, vertical-line CLOSE, per-class region erode) run packed.
 
-Semantics are bit-identical to the uint8 filters in imgproc (same window
-anchoring r_lo=(k-1)//2, same border policy via the fill bit); tests fuzz
-both paths against each other.
+Semantics are those of uint8 {0,255} min/max filters with cv2 rect
+kernels: window anchoring r_lo=(k-1)//2, and the border policy set by the
+fill bit.
 """
 
 from __future__ import annotations
@@ -70,8 +70,9 @@ def _shift_rows(p: np.ndarray, s: int, fill: bool) -> np.ndarray:
 
 
 def _window_reduce(p: np.ndarray, size: int, axis: int, fill: bool, is_and: bool) -> np.ndarray:
-    """AND/OR over the window [i - r_lo, i + r_hi] along ``axis``
-    (r_lo=(size-1)//2, matching imgproc._minmax_filter_1d anchoring)."""
+    """AND/OR over the window [i - r_lo, i + r_hi] along ``axis``, with
+    r_lo = (size-1)//2: the anchor of a cv2 rect kernel, so an even size
+    reaches one pixel further forward than back."""
     if size <= 1:
         return p
     r_lo = (size - 1) // 2

@@ -37,106 +37,104 @@ class Region:
         return self._labels[self._slices] == self.label
 
 
-def _all_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized run extraction over the whole image.
+def _run_roots(
+    rows: list[int], s_col: list[int], e_col: list[int], vals: list[int]
+) -> list[int]:
+    """Union-find over raster-ordered runs: runs of equal value on adjacent
+    rows whose column spans 8-touch are one component.  Returns each run's
+    root, which is the lowest run index of its component (union links the
+    larger root under the smaller), so roots do not depend on union order.
 
-    Returns (rows, col_starts, col_ends) of every horizontal True-run in
-    raster order (a guard column of False separates rows in the flattened
-    view, so no run crosses a row boundary).
-    """
-    h, w = mask.shape
-    g = np.zeros((h, w + 1), dtype=bool)
-    g[:, :w] = mask
-    flat = g.ravel()
-    d = np.diff(flat.view(np.int8))
-    starts = np.where(d == 1)[0] + 1
-    ends = np.where(d == -1)[0] + 1
-    if flat[0]:
-        starts = np.concatenate(([0], starts))
-    # guard column guarantees every run closes before the row ends
-    rows = starts // (w + 1)
-    return rows, starts - rows * (w + 1), ends - rows * (w + 1)
+    Adjacent rows are swept with two pointers (runs within a row are sorted
+    and disjoint), so the pass is linear in runs plus touching pairs."""
+    n_runs = len(rows)
+    parent = list(range(n_runs))
 
-
-class _UnionFind:
-    __slots__ = ("parent",)
-
-    def __init__(self) -> None:
-        self.parent: list[int] = []
-
-    def make(self) -> int:
-        self.parent.append(len(self.parent))
-        return len(self.parent) - 1
-
-    def find(self, x: int) -> int:
+    def find(x: int) -> int:
         root = x
-        while self.parent[root] != root:
-            root = self.parent[root]
-        while self.parent[x] != root:
-            self.parent[x], x = root, self.parent[x]
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
         return root
 
-    def union(self, a: int, b: int) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            if ra < rb:
-                self.parent[rb] = ra
-            else:
-                self.parent[ra] = rb
+    prev_lo = prev_hi = 0  # runs of the previous row
+    lo = 0
+    while lo < n_runs:
+        y = rows[lo]
+        hi = lo + 1
+        while hi < n_runs and rows[hi] == y:
+            hi += 1
+        if prev_hi > prev_lo and rows[prev_lo] == y - 1:
+            j = prev_lo
+            for i in range(lo, hi):
+                s, e, v = s_col[i], e_col[i], vals[i]
+                # previous-row runs ending left of this run's 8-reach can
+                # reach no later run of this row either
+                while j < prev_hi and e_col[j] + 1 <= s:
+                    j += 1
+                k = j
+                while k < prev_hi and s_col[k] - 1 < e:
+                    if vals[k] == v:
+                        ra, rb = find(i), find(k)
+                        if ra != rb:
+                            if ra < rb:
+                                parent[rb] = ra
+                            else:
+                                parent[ra] = rb
+                    k += 1
+        prev_lo, prev_hi = lo, hi
+        lo = hi
+    return [find(i) for i in range(n_runs)]
+
+
+def class_runs(
+    mask: np.ndarray, class_lo: int, class_hi: int
+) -> tuple[list[int], list[int], list[int], list[int], list[int]]:
+    """Per-class 8-connected components of ``mask`` as labelled runs:
+    (rows, col_starts, col_ends, values, roots) over every maximal
+    constant-value horizontal run with value in [class_lo, class_hi), in
+    raster order (col_ends half-open).  Runs sharing a root form one
+    component; a root is its component's first run in raster order.
+
+    Run extraction is linear in pixels: one neighbour compare over the
+    flattened mask, plus a strided write that marks every row start as a
+    run boundary, so no run crosses a row wrap."""
+    w = mask.shape[1]
+    flat = mask.ravel()
+    if flat.size == 0:
+        return [], [], [], [], []
+    d = flat[1:] != flat[:-1]
+    d[w - 1 :: w] = True  # flat[k*w] starts a row: always a new run
+    change = np.flatnonzero(d) + 1
+    starts = np.concatenate(([0], change))
+    ends = np.concatenate((change, [flat.size]))
+    vals = flat[starts]
+    keep = (vals >= class_lo) & (vals < class_hi)
+    starts, ends, vals = starts[keep], ends[keep], vals[keep]
+    row_arr = starts // w
+    rows = row_arr.tolist()
+    s_col = (starts - row_arr * w).tolist()
+    e_col = (ends - row_arr * w).tolist()
+    vals_l = vals.tolist()
+    return rows, s_col, e_col, vals_l, _run_roots(rows, s_col, e_col, vals_l)
 
 
 def label(mask: np.ndarray) -> tuple[np.ndarray, int]:
     """Label 8-connected components of a boolean mask.
 
     Returns (labels int32 HxW with 0 = background, num_components).
-    Component ids are 1..n in raster order of first pixel.  Run-based
-    union-find: vectorized run extraction, Python only over runs.
+    Component ids are 1..n in raster order of first pixel (the True runs
+    of ``class_runs``, numbered by root in order of first appearance).
     """
     mask = np.asarray(mask, dtype=bool)
-    h, w = mask.shape
-    labels = np.zeros((h, w), dtype=np.int32)
-    rows, starts, ends = _all_runs(mask)
-    n_runs = len(rows)
-    if n_runs == 0:
-        return labels, 0
-
-    uf = _UnionFind()
-    run_sets = [uf.make() for _ in range(n_runs)]
-    rows_l = rows.tolist()
-    starts_l = starts.tolist()
-    ends_l = ends.tolist()
-
-    # group runs into per-row blocks (runs are in raster order)
-    blocks: list[tuple[int, int, int]] = []  # (y, lo, hi)
-    lo = 0
-    for i in range(1, n_runs + 1):
-        if i == n_runs or rows_l[i] != rows_l[lo]:
-            blocks.append((rows_l[lo], lo, i))
-            lo = i
-
-    prev_y, prev_lo, prev_hi = -2, 0, 0
-    for y, blo, bhi in blocks:
-        if prev_y == y - 1:
-            for i in range(blo, bhi):
-                s, e = starts_l[i], ends_l[i]
-                # 8-connectivity: previous-row runs extended by 1 column
-                for j in range(prev_lo, prev_hi):
-                    if starts_l[j] - 1 < e and ends_l[j] + 1 > s:
-                        uf.union(run_sets[i], run_sets[j])
-        prev_y, prev_lo, prev_hi = y, blo, bhi
-
-    # resolve roots -> compact labels in raster order of first appearance
+    labels = np.zeros(mask.shape, dtype=np.int32)
+    rows, s_col, e_col, _vals, roots = class_runs(mask.view(np.uint8), 1, 2)
     root_to_label: dict[int, int] = {}
-    next_label = 1
-    for i in range(n_runs):
-        root = uf.find(run_sets[i])
-        lbl = root_to_label.get(root)
-        if lbl is None:
-            lbl = next_label
-            root_to_label[root] = lbl
-            next_label += 1
-        labels[rows_l[i], starts_l[i] : ends_l[i]] = lbl
-    return labels, next_label - 1
+    for y, s, e, r in zip(rows, s_col, e_col, roots):
+        lbl = root_to_label.setdefault(r, len(root_to_label) + 1)
+        labels[y, s:e] = lbl
+    return labels, len(root_to_label)
 
 
 def multiclass_regions(
@@ -146,60 +144,19 @@ def multiclass_regions(
 
     Returns {class_id: [(y0, x0, y1, x1, area), ...]} for classes in
     [class_lo, class_hi) — bbox in regionprops convention (half-open).
-    Component ORDER within a class is unspecified (raster order of root
-    runs in practice); use only where downstream is order-independent
-    (bbox fills of a single value, or an explicit sort).  Replaces
-    per-class `mask == c` + label() + regionprops() sweeps — one run
-    extraction over the whole mask instead of one full-image pass per
-    class."""
-    h, w = mask.shape
-    flat = mask.ravel()
+    Within a class, components come in raster order of their first pixel.
+    Replaces per-class `mask == c` + label() + regionprops() sweeps: the
+    runs come from ``class_runs`` (one linear run extraction over the
+    whole mask), and bbox and area are folded per root run."""
     out: dict[int, list[tuple[int, int, int, int, int]]] = {
         c: [] for c in range(class_lo, class_hi)
     }
-    if flat.size == 0:
-        return out
-    pos = np.arange(1, flat.size)
-    change = np.nonzero((flat[1:] != flat[:-1]) | (pos % w == 0))[0] + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [flat.size]))
-    vals = flat[starts]
-    keep = (vals >= class_lo) & (vals < class_hi)
-    starts, ends, vals = starts[keep], ends[keep], vals[keep]
-    n_runs = len(starts)
-    if n_runs == 0:
-        return out
-    rows = (starts // w).tolist()
-    s_col = (starts - np.asarray(rows) * w).tolist()
-    e_col = (ends - np.asarray(rows) * w).tolist()
-    vals_l = vals.tolist()
-
-    uf = _UnionFind()
-    run_sets = [uf.make() for _ in range(n_runs)]
-    blocks: list[tuple[int, int, int]] = []
-    lo = 0
-    for i in range(1, n_runs + 1):
-        if i == n_runs or rows[i] != rows[lo]:
-            blocks.append((rows[lo], lo, i))
-            lo = i
-    prev_y, prev_lo, prev_hi = -2, 0, 0
-    for y, blo, bhi in blocks:
-        if prev_y == y - 1:
-            for i in range(blo, bhi):
-                s, e, v = s_col[i], e_col[i], vals_l[i]
-                for j in range(prev_lo, prev_hi):
-                    if vals_l[j] == v and s_col[j] - 1 < e and e_col[j] + 1 > s:
-                        uf.union(run_sets[i], run_sets[j])
-        prev_y, prev_lo, prev_hi = y, blo, bhi
-
-    # aggregate bbox + area per root
+    rows, s_col, e_col, vals, roots = class_runs(mask, class_lo, class_hi)
     agg: dict[int, list[int]] = {}  # root -> [y0, x0, y1, x1, area, class]
-    for i in range(n_runs):
-        r = uf.find(run_sets[i])
-        y, s, e = rows[i], s_col[i], e_col[i]
+    for y, s, e, v, r in zip(rows, s_col, e_col, vals, roots):
         a = agg.get(r)
         if a is None:
-            agg[r] = [y, s, y + 1, e, e - s, vals_l[i]]
+            agg[r] = [y, s, y + 1, e, e - s, v]
         else:
             if s < a[1]:
                 a[1] = s

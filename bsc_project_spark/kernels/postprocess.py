@@ -37,62 +37,23 @@ def remove_small_regions(mask: np.ndarray, cfg: ExtractConfig) -> np.ndarray:
     1..4 (reference quirk: class 0 never cleaned,
     scripts/post_process.py:101-102).
 
-    Single multi-class pass: maximal constant-VALUE horizontal runs are
-    extracted once for the whole mask, unioned across rows when same-class
-    runs 8-overlap, and small components are painted background run-by-run
-    — one image sweep instead of four per-class (compare + label + gather
-    + masked-assign) sweeps.  Removal is order-independent, so this is
-    exactly equivalent to per-class labeling."""
+    Single multi-class pass: ``cc.class_runs`` labels the maximal
+    constant-value runs of classes 1..4 for the whole mask (class 0 and
+    background pass through), and small components are painted
+    background run-by-run — one image sweep instead of four per-class
+    (compare + label + gather + masked-assign) sweeps.  Removal is
+    order-independent, so this is exactly equivalent to per-class
+    labeling."""
     out = mask.copy()
-    h, w = mask.shape
-    flat = mask.ravel()
-    if flat.size == 0:
-        return out
-    pos = np.arange(1, flat.size)
-    change = np.nonzero((flat[1:] != flat[:-1]) | (pos % w == 0))[0] + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [flat.size]))
-    vals = flat[starts]
-    # keep only cleanable classes (1..4); class 0 and background pass through
-    keep = (vals >= 1) & (vals < cfg.n_content_classes)
-    starts, ends, vals = starts[keep], ends[keep], vals[keep]
-    if len(starts) == 0:
-        return out
-    rows = starts // w
-    s_col = (starts - rows * w).tolist()
-    e_col = (ends - rows * w).tolist()
-    rows_l = rows.tolist()
-    vals_l = vals.tolist()
-    n_runs = len(rows_l)
-
-    uf = cc._UnionFind()
-    run_sets = [uf.make() for _ in range(n_runs)]
-    # per-row blocks (runs are in raster order)
-    blocks: list[tuple[int, int, int]] = []
-    lo = 0
-    for i in range(1, n_runs + 1):
-        if i == n_runs or rows_l[i] != rows_l[lo]:
-            blocks.append((rows_l[lo], lo, i))
-            lo = i
-    prev_y, prev_lo, prev_hi = -2, 0, 0
-    for y, blo, bhi in blocks:
-        if prev_y == y - 1:
-            for i in range(blo, bhi):
-                s, e, v = s_col[i], e_col[i], vals_l[i]
-                for j in range(prev_lo, prev_hi):
-                    if vals_l[j] == v and s_col[j] - 1 < e and e_col[j] + 1 > s:
-                        uf.union(run_sets[i], run_sets[j])
-        prev_y, prev_lo, prev_hi = y, blo, bhi
-
+    rows, s_col, e_col, _vals, roots = cc.class_runs(mask, 1, cfg.n_content_classes)
     areas: dict[int, int] = {}
-    roots = [uf.find(run_sets[i]) for i in range(n_runs)]
-    for i, r in enumerate(roots):
-        areas[r] = areas.get(r, 0) + e_col[i] - s_col[i]
+    for s, e, r in zip(s_col, e_col, roots):
+        areas[r] = areas.get(r, 0) + e - s
     bg = np.uint8(cfg.background_class)
     min_size = cfg.min_region_size
-    for i, r in enumerate(roots):
+    for y, s, e, r in zip(rows, s_col, e_col, roots):
         if areas[r] < min_size:
-            out[rows_l[i], s_col[i] : e_col[i]] = bg
+            out[y, s:e] = bg
     return out
 
 

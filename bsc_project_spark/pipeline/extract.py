@@ -3,7 +3,9 @@
 Spark lifecycle of the reference computation (SURVEY.md §3.1):
 
     documents --explode--> spans
-    spans[kind=media].media_ref --distinct--> unique pages --join media-->
+    spans[kind=media].media_ref --distinct--> unique refs
+      --sizes collect (driver, build time)--> bins(media_ref, bin)
+    media --join broadcast bins--> unique pages
       --size-aware bin-packing repartition-->                  # skew defuse
       --ONE mapInPandas stage (K1..K21 numpy kernels)-->       # zero per-row Python
         cells(media_ref, row, col, text) + per-partition lineage rows
@@ -25,6 +27,13 @@ distinct + hash(media_ref) repartition also dedups shared pages across
 documents, so the kernel cost is O(unique pages), not O(spans).  The final
 window restores global span order — the north rule's "explode/salted
 repartition + window over (doc_id, offset)" design.
+
+The refs are derived once, at build time, for the bins collect; the
+bounded route's action joins media to the bins alone.  Only the unbounded
+and no-metadata routes (see run_page_stage) semi-join media against the
+broadcast refs in the action's plan: on the no-metadata route that join
+is what restricts the pages, on the unbounded one it filters page bytes
+map-side before the bins join, which is not broadcast.
 """
 
 from __future__ import annotations
@@ -340,11 +349,25 @@ def run_page_stage(
     media: DataFrame, refs: DataFrame, cfg: ExtractConfig, n_parts: int
 ) -> DataFrame:
     """The expensive image stage over the UNIQUE pages named by ``refs``
-    (a (media_ref) frame): semi-join media, size-aware repartition, ONE
-    mapInPandas running K1-K21.  Returns the raw stage output (cells +
-    in-band lineage rows; split with ``split_stage_output``).
+    (a (media_ref) frame): restrict media to the refs, size-aware
+    repartition, ONE mapInPandas running K1-K21.  Returns the raw stage
+    output (cells + in-band lineage rows; split with
+    ``split_stage_output``).
 
-    Byte economics: the refs side (strings) is broadcast, so the big
+    How media is restricted depends on the route.  On the bounded route
+    (width/height metadata, ref count under the driver contract) the sizes
+    are collected to the driver at build time and media joins the
+    broadcast bins frame and the giant list directly: the bins hold
+    exactly the refs' non-giant pages, so the plan the action runs never
+    re-derives the refs (for run_extract_stage, an explode + distinct of
+    the documents).  The other two routes semi-join media against the
+    broadcast refs first.  On the no-metadata route the bins are planned
+    from all of media, so that join is what restricts the pages.  On the
+    unbounded route the bins already hold only the refs' pages, but they
+    are not broadcast, so the semi-join keeps unreferenced page bytes out
+    of the (possibly shuffled) bins join.
+
+    Byte economics: the refs/bins side (strings) is broadcast, so the big
     image bytes are shuffled at most ONCE — by the explicit repartition
     that also fixes the task count for the CPU-bound stage (AQE would
     otherwise coalesce byte-sized partitions and starve the stage of
@@ -352,9 +375,8 @@ def run_page_stage(
     bucket: the refs of one bucket are bounded, and media would be a
     bucketed table co-partitioned by media_ref.
     """
-    unique_pages = media.select("media_ref", "content").join(
-        F.broadcast(refs), on="media_ref", how="left_semi"
-    )
+    pages = media.select("media_ref", "content")
+    udf = _make_extract_udf(cfg)
     # ALWAYS shuffle the pages once, with SIZE-AWARE bin-packing
     # (serpentine over size order, exact bin->partition routing):
     # byte-balanced partitions, so one giant page doesn't drag a full
@@ -369,108 +391,80 @@ def run_page_stage(
     # comes from metadata columns (width*height) when available so the
     # planning branch never re-reads image bytes; uniform sizes degrade to
     # exact round-robin striping.
-    if {"width", "height"} <= set(media.columns):
-        sizes = media.join(F.broadcast(refs), on="media_ref", how="left_semi").select(
-            "media_ref",
-            # NULL width/height -> sz 0 (smallest bin, never tiled) so the
-            # driver-side giant filter and serpentine sort stay total
-            F.coalesce(
-                F.col("width").cast("long") * F.col("height"), F.lit(0)
-            ).alias("sz"),
+    if not {"width", "height"} <= set(media.columns):
+        unique_pages = pages.join(F.broadcast(refs), on="media_ref", how="left_semi")
+        return repartition_by_size(unique_pages, n_parts).mapInPandas(
+            udf, schema=EXTRACT_STAGE_SCHEMA
         )
-        # Driver contract gate (config.assume_bounded_refs): the default
-        # asserts |unique refs| <= driver_plan_max (~2M rows ≈ 200 MB
-        # driver heap — the numeric contract lives on config.py) so
-        # planning costs ONE collect job, reused by both the serpentine
-        # and the giant-tile routing.  Opting out spends one skinny
-        # count() per stage build, uncached (a persist would outlive the
-        # lazily returned plan and pin the cache for the session); ref
-        # sets over the ceiling then plan fully distributed — two-phase
-        # bins, shuffle-joined (no broadcast hint), giants filtered by
-        # semi/anti join — with zero driver-side ref materialization.
-        bounded = cfg.assume_bounded_refs
-        if not bounded:
-            cap = (
-                cfg.driver_plan_max
-                if cfg.driver_plan_max is not None
-                else _DRIVER_PLAN_MAX
-            )
-            bounded = sizes.count() <= cap
-        # Giant-page tile split (pipeline/tiling.py): pages at or above
-        # tile_threshold_px native pixels leave the atomic per-page path
-        # for the banded one, so one 100x page cannot pin a task for 100x
-        # the median task time.  On the bounded path the routing decision
-        # reuses the SAME driver-side sizes collect the serpentine
-        # planner needs (bins is broadcast -> driver-sized by contract),
-        # so no extra job.  Deskew is a global-rotation op that cannot
-        # band — deskewing corpora keep the single-task path for giants
-        # too.
-        thr = cfg.tile_threshold_px
-        tiling = thr is not None and not cfg.deskew_enabled
-        if bounded and tiling:
-            spark = media.sparkSession
-            pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
-            giant = [(ref, sz) for ref, sz in pairs if sz >= thr]
-            if giant:
-                from .tiling import run_tiled_page_stage
+    sizes = media.join(F.broadcast(refs), on="media_ref", how="left_semi").select(
+        "media_ref",
+        # NULL width/height -> sz 0 (smallest bin, never tiled) so the
+        # driver-side giant filter and serpentine sort stay total
+        F.coalesce(F.col("width").cast("long") * F.col("height"), F.lit(0)).alias("sz"),
+    )
+    # Driver contract gate (config.assume_bounded_refs): the default
+    # asserts |unique refs| <= driver_plan_max (~2M rows ≈ 200 MB driver
+    # heap — the numeric contract lives on config.py) so planning costs
+    # ONE collect job, reused by both the serpentine and the giant-tile
+    # routing.  Opting out spends one skinny count() per stage build,
+    # uncached (a persist would outlive the lazily returned plan and pin
+    # the cache for the session); ref sets over the ceiling then plan
+    # fully distributed — two-phase bins, shuffle-joined (no broadcast
+    # hint), giants filtered by semi/anti join — with zero driver-side ref
+    # materialization.
+    bounded = cfg.assume_bounded_refs
+    if not bounded:
+        cap = cfg.driver_plan_max if cfg.driver_plan_max is not None else _DRIVER_PLAN_MAX
+        bounded = sizes.count() <= cap
+    # Giant-page tile split (pipeline/tiling.py): pages at or above
+    # tile_threshold_px native pixels leave the atomic per-page path for
+    # the banded one, so one 100x page cannot pin a task for 100x the
+    # median task time.  Deskew is a global-rotation op that cannot band —
+    # deskewing corpora keep the single-task path for giants too.
+    thr = cfg.tile_threshold_px
+    tiling = thr is not None and not cfg.deskew_enabled
+    if bounded:
+        # The routing decision reuses the SAME driver-side sizes collect
+        # the serpentine planner needs (bins is broadcast -> driver-sized
+        # by contract), so no extra job.
+        spark = media.sparkSession
+        pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
+        giant = [ref for ref, sz in pairs if tiling and sz >= thr]
+        bins = _bins_local_df(
+            spark,
+            serpentine_bins(
+                [p for p in pairs if not (tiling and p[1] >= thr)], n_parts
+            ),
+        )
+        # the inner join with bins keeps exactly the non-giant refs' pages
+        out = repartition_by_size(pages, n_parts, bins=bins).mapInPandas(
+            udf, schema=EXTRACT_STAGE_SCHEMA
+        )
+        if not giant:
+            return out
+        from .tiling import run_tiled_page_stage
 
-                giant_df = _bins_local_df(spark, [(ref, 0) for ref, _ in giant]).select(
-                    "media_ref"
-                )
-                normal_pages = unique_pages.join(
-                    F.broadcast(giant_df), on="media_ref", how="left_anti"
-                )
-                giant_pages = unique_pages.join(
-                    F.broadcast(giant_df), on="media_ref", how="left_semi"
-                )
-                bins = _bins_local_df(
-                    spark,
-                    serpentine_bins([p for p in pairs if p[1] < thr], n_parts),
-                )
-                normal_out = repartition_by_size(
-                    normal_pages, n_parts, bins=bins
-                ).mapInPandas(_make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA)
-                return normal_out.unionByName(
-                    run_tiled_page_stage(giant_pages, cfg, n_parts)
-                )
-            bins = _bins_local_df(spark, serpentine_bins(pairs, n_parts))
-            unique_pages = repartition_by_size(unique_pages, n_parts, bins=bins)
-            return unique_pages.mapInPandas(
-                _make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA
-            )
-        if not bounded:
-            if tiling:
-                from .tiling import run_tiled_page_stage
+        giant_df = _bins_local_df(spark, [(ref, 0) for ref in giant]).select("media_ref")
+        giant_pages = pages.join(F.broadcast(giant_df), on="media_ref", how="left_semi")
+        return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
+    unique_pages = pages.join(F.broadcast(refs), on="media_ref", how="left_semi")
+    if not tiling:
+        # driver_max=0: the count above already proved the frame is over
+        # the ceiling — go straight to the two-phase rank.
+        bins = assign_size_bins(sizes, n_parts, driver_max=0)
+        return repartition_by_size(
+            unique_pages, n_parts, bins=bins, broadcast_bins=False
+        ).mapInPandas(udf, schema=EXTRACT_STAGE_SCHEMA)
+    from .tiling import run_tiled_page_stage
 
-                giant_refs = sizes.filter(F.col("sz") >= thr).select("media_ref")
-                normal_pages = unique_pages.join(
-                    giant_refs, on="media_ref", how="left_anti"
-                )
-                giant_pages = unique_pages.join(
-                    giant_refs, on="media_ref", how="left_semi"
-                )
-                bins = assign_size_bins(
-                    sizes.filter(F.col("sz") < thr), n_parts, driver_max=0
-                )
-                normal_out = repartition_by_size(
-                    normal_pages, n_parts, bins=bins, broadcast_bins=False
-                ).mapInPandas(_make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA)
-                return normal_out.unionByName(
-                    run_tiled_page_stage(giant_pages, cfg, n_parts)
-                )
-            # driver_max=0: the count above already proved the frame is
-            # over the ceiling — go straight to the two-phase rank.
-            bins = assign_size_bins(sizes, n_parts, driver_max=0)
-            unique_pages = repartition_by_size(
-                unique_pages, n_parts, bins=bins, broadcast_bins=False
-            )
-            return unique_pages.mapInPandas(
-                _make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA
-            )
-    else:
-        sizes = None
-    unique_pages = repartition_by_size(unique_pages, n_parts, sizes)
-    return unique_pages.mapInPandas(_make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA)
+    giant_refs = sizes.filter(F.col("sz") >= thr).select("media_ref")
+    normal_pages = unique_pages.join(giant_refs, on="media_ref", how="left_anti")
+    giant_pages = unique_pages.join(giant_refs, on="media_ref", how="left_semi")
+    bins = assign_size_bins(sizes.filter(F.col("sz") < thr), n_parts, driver_max=0)
+    normal_out = repartition_by_size(
+        normal_pages, n_parts, bins=bins, broadcast_bins=False
+    ).mapInPandas(udf, schema=EXTRACT_STAGE_SCHEMA)
+    return normal_out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
 
 
 def split_stage_output(stage_out: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -554,8 +548,9 @@ def run_extract_stage(
     per core, because every Python task pays a fixed worker set-up cost
     (see pipeline/session.py).
 
-    The expensive image work runs once per UNIQUE page: distinct refs,
-    semi-joined against media, byte-balanced over partitions.  Heavy
+    The expensive image work runs once per UNIQUE page: distinct refs
+    restrict media (through the bins join, see run_page_stage), and the
+    pages are byte-balanced over partitions.  Heavy
     documents (many spans) and popular pages (many docs) both collapse to
     one kernel invocation per page.
     """

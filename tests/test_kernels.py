@@ -6,14 +6,14 @@ import pytest
 
 from bsc_project_spark.config import ExtractConfig
 from bsc_project_spark.kernels import cc
+from bsc_project_spark.kernels.bitmorph import open_u8
 from bsc_project_spark.kernels.imgproc import (
     adaptive_threshold_gaussian,
     binary_erode_mask,
     find_vertical_line_bounds,
     gaussian_blur3,
-    morph_close,
-    morph_open,
     resize_area,
+    vline_black_mask,
 )
 from bsc_project_spark.kernels.ocr import decode_cell, pad_for_ocr
 from bsc_project_spark.kernels.postprocess import (
@@ -69,6 +69,38 @@ def test_binarize_fused_equals_two_step():
     )
 
 
+def test_binarize_fused_tiles_equal_two_step():
+    # page-wide images: blank 512-column tiles skip the Gaussian mean,
+    # inked ones run it; both must equal the two-step path for any C
+    from bsc_project_spark.kernels.imgproc import binarize_fused
+
+    rng = np.random.default_rng(29)
+    for h, w in [(97, 1300), (40, 1024), (70, 513)]:
+        img = np.full((h, w), 250, dtype=np.uint8)
+        img += rng.integers(0, 6, (h, w), dtype=np.uint8)
+        ink = rng.random((h, w)) < 0.01
+        ink[:, 520:1000] = False  # whole tiles of background
+        img[ink] = rng.integers(0, 160, int(ink.sum()), dtype=np.uint8)
+        img[h // 2 : h // 2 + 8, w - 40 :] = 30  # a stroke at the right edge
+        # near-flat paper with sparse shallow dips: many pixels sit exactly
+        # floor(C) below a window max that rint(mean) reaches
+        paper = np.full((h, w), 250, dtype=np.uint8)
+        dips = rng.random((h, w)) < 0.05
+        paper[dips] -= rng.integers(1, 9, int(dips.sum()), dtype=np.uint8)
+        # black pages with white on one side of the first tile edge, kept
+        # one column clear of it so that the blur leaves the other tile
+        # flat: that tile sees the white only through its column halo
+        left, right = np.zeros((2, h, w), dtype=np.uint8)
+        left[:, :511] = 255
+        right[:, 513:] = 255
+        for page in (img, paper, left, right):
+            for c in (12.0, 4.0, 3.0, 2.0, 1.0, 0.0, -5.0, 7.5):
+                assert np.array_equal(
+                    binarize_fused(page, 13, c),
+                    adaptive_threshold_gaussian(gaussian_blur3(page), 13, c),
+                ), (h, w, c)
+
+
 def test_morph_open_white_foreground_semantics():
     # OPEN on a white-background page (cv2 semantics: white is foreground)
     # fills small WHITE pinholes inside ink and preserves black features —
@@ -77,7 +109,7 @@ def test_morph_open_white_foreground_semantics():
     img[5:7, 5:7] = 0       # black speck: preserved by open
     img[15:25, 15:25] = 0   # black block with a white pinhole inside
     img[19:21, 19:21] = 255
-    out = morph_open(img, 3, 3, iterations=2)
+    out = open_u8(img, 5, 5)  # == 3x3 OPEN with iterations=2
     assert (out[5:7, 5:7] == 0).all()
     assert (out[19:21, 19:21] == 0).all()   # pinhole filled
     assert (out[15:25, 15:25] == 0).all()
@@ -85,12 +117,14 @@ def test_morph_open_white_foreground_semantics():
 
 
 def test_morph_close_vertical_keeps_tall_lines_only():
-    img = np.full((200, 60), 255, dtype=np.uint8)
+    # vline_black_mask: the 1x50 vertical CLOSE of the left half
+    img = np.full((200, 80), 255, dtype=np.uint8)
     img[10:190, 5:8] = 0   # tall line: survives 1x50 vertical close
     img[90:110, 30:33] = 0  # short blob (20 tall): wiped
-    out = morph_close(img, 50, 1)
-    assert (out[50:150, 5:8] == 0).all()
-    assert (out[90:110, 30:33] == 255).all()
+    black = vline_black_mask(img, ExtractConfig(vline_kernel_h=50))
+    assert black.shape == (200, 40)
+    assert black[50:150, 5:8].all()
+    assert not black[90:110, 30:33].any()
 
 
 def test_find_vertical_line_bounds_blank_fallback():
@@ -435,6 +469,50 @@ def test_remove_small_fuzz_vs_per_class_reference():
         got = remove_small_regions(mask.copy(), cfg)
         want = reference_impl(mask.copy(), cfg)
         assert np.array_equal(got, want)
+
+
+def test_multiclass_regions_fuzz_vs_per_class_label():
+    """multiclass_regions == per-class cc.label + regionprops bboxes and
+    areas on seeded random multiclass masks, including same-class runs that
+    wrap from column w-1 to column 0 of the next row (not 8-connected),
+    1-row and 1-column masks, and an all-background mask."""
+    def reference(mask, lo, hi):
+        out = {}
+        for c in range(lo, hi):
+            labels, _ = cc.label(mask == c)
+            out[c] = sorted((*r.bbox, r.area) for r in cc.regionprops(labels))
+        return out
+
+    rng = np.random.default_rng(31)
+    masks = []
+    for i in range(60):
+        h, w = (int(v) for v in rng.integers(1, 36, 2))
+        if i % 3 == 0:  # 1-row / 1-column masks
+            h, w = (1, w) if i % 2 else (h, 1)
+        blocky = rng.integers(0, 6, (h // 3 + 1, w // 3 + 1)).astype(np.uint8)
+        mask = np.repeat(np.repeat(blocky, 3, axis=0), 3, axis=1)[:h, :w]
+        salt = rng.random(mask.shape) < 0.15
+        mask[salt] = rng.integers(0, 6, int(salt.sum()))
+        if h > 1 and w > 2:
+            # every row starts with the class the previous row ends with
+            mask[1:, 0] = mask[:-1, -1]
+            mask[1:, 1] = 5
+        masks.append(mask)
+    wrap = np.full((3, 10), 5, dtype=np.uint8)
+    wrap[0, 6:] = 2   # run ends at column w-1 ...
+    wrap[1, :3] = 2   # ... and the next row's run starts at column 0
+    masks.append(wrap)
+    masks.append(np.full((7, 9), 5, dtype=np.uint8))  # all background
+
+    for mask in masks:
+        for lo, hi in ((0, 5), (1, 5)):
+            got = cc.multiclass_regions(mask, lo, hi)
+            assert {c: sorted(v) for c, v in got.items()} == reference(mask, lo, hi)
+    assert sorted(cc.multiclass_regions(wrap, 2, 3)[2]) == [
+        (0, 6, 1, 10, 4),
+        (1, 0, 2, 3, 3),
+    ]
+    assert cc.multiclass_regions(masks[-1], 0, 5) == {c: [] for c in range(5)}
 
 
 def test_decode_vectorized_matches_sequential_reference():

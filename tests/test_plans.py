@@ -1,6 +1,7 @@
 """Physical-plan hygiene: pushdown, pruning, broadcast, no row-Python."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -95,12 +96,38 @@ def test_extraction_broadcasts_refs_side(spark, corpus):
 
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)
-    plan = (
-        extract_spans(docs, media, FIXTURE_CONFIG)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # unique-refs semi-join must be broadcast (page bytes never shuffle for it)
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+
+    def plan_of(media_frame):
+        return (
+            extract_spans(docs, media_frame, FIXTURE_CONFIG)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+
+    # the refs side that restricts media must be broadcast (page bytes
+    # never shuffle for it): the bins join on the bounded route (width/
+    # height metadata), the unique-refs semi-join on the no-metadata route
+    join = r"BroadcastHashJoin \[media_ref#\d+\], \[media_ref#\d+\], {}"
+    assert re.search(join.format("Inner"), plan_of(media))
+    assert re.search(join.format("LeftSemi"), plan_of(media.drop("width", "height")))
+
+
+def test_bounded_page_stage_does_not_recompute_refs(spark, corpus):
+    """With width/height metadata the refs are derived once, at build time,
+    for the driver-side sizes collect; the page stage the action runs joins
+    media to the broadcast bins alone, so it neither re-explodes the
+    documents (Generate) nor semi-joins the refs."""
+    from bsc_project_spark.fixtures import spark_io
+    from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
+    from bsc_project_spark.pipeline.extract import run_extract_stage
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    assert {"width", "height"} <= set(media.columns)
+    stage = run_extract_stage(docs, media, FIXTURE_CONFIG).stage
+    plan = stage._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "BroadcastHashJoin" in plan
+    assert "Generate" not in plan
+    assert "LeftSemi" not in plan
 
 
 def test_no_single_partition_window_in_prefix_queries(spark):

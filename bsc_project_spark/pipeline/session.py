@@ -10,13 +10,29 @@
   reports N and a cluster its total executor cores, and every Python
   stage (the page stage's mapInPandas, the registry's pre-UDF
   repartitions and ``REPARTITION(__P__)`` hints) takes its width from it.
-  Python tasks are expensive to have more of than cores: each one costs
-  about 0.3 s of worker CPU before the UDF runs (measured with a no-op
-  mapInPandas on local[4]), nearly all of it in pyspark's per-task
-  ``importlib.invalidate_caches()``, which re-reads the central directory
-  of ``pyspark.zip`` for every zipimporter on the path.  Pinning the
+  Python tasks are expensive to have more of than cores: pinning the
   width to 32 on 4 cores ran the 48-page extraction pass as 32 tiny
   tasks in 8 waves, about twice the wall of 4 tasks.
+- Python workers import the installed pyspark and py4j.  Spark puts
+  ``$SPARK_HOME/python/lib/pyspark.zip``, the py4j zip and the
+  spark-core jar on every worker's path.  The zips hold no bytecode, so
+  each daemon compiled pyspark from source, and each task's
+  ``importlib.invalidate_caches()`` (pyspark's per-task
+  ``setup_spark_files``) re-read the central directory of all three
+  archives: 0.16-0.73 s per task, measured in a worker of a local[4]
+  session.  ``spark.python.daemon.module`` is set to
+  ``pipeline/pydaemon.py``, which drops those archives from the path
+  before it runs ``pyspark.daemon``; the call then takes 0.03-0.13 ms,
+  and a warm no-op mapInPandas of 4 tasks takes 0.3-0.4 s, not 0.8-1.0 s.
+  Two guards keep Spark's path where this is not safe: the daemon drops
+  the archives only when the installed pyspark and py4j have the zips'
+  versions, and the module is set only for ``local`` masters, whose
+  workers are children of this driver's JVM and share its interpreter.
+  ``spark.executorEnv.PYTHONPATH`` carries the package root, so the
+  daemon imports whatever the working directory.
+  ``scripts/run_job.py`` builds its own session for
+  ``spark-submit --py-files``, where the daemon could not import this
+  package; it keeps Spark's daemon.
 """
 
 from __future__ import annotations
@@ -24,6 +40,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding the bsc_project_spark package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def get_spark(
@@ -51,4 +70,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.python.daemon.module", "bsc_project_spark.pipeline.pydaemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     return builder.getOrCreate()

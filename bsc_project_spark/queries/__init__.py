@@ -58,6 +58,13 @@ _REGISTERED_DIRS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
 )
 
 
+def temp_views(spark: SparkSession) -> set[str]:
+    """Names of the session's temp views.  ``SHOW VIEWS`` answers from the
+    session catalog without a Spark job; ``catalog.listTables()`` lists
+    the same views but launches several jobs per call."""
+    return {r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.isTemporary}
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the testdata parquet files as temp views (idempotent per
     session while ``sf_dir`` is unchanged).  The cache is only trusted
@@ -65,12 +72,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     their own frame and dropTempView it afterwards (several tests do)
     would otherwise leave the cache claiming a registration the catalog
     no longer has, and the next query dies with TABLE_OR_VIEW_NOT_FOUND.
-    One listTables RPC per call is the price of making the cache
-    self-healing."""
-    if _REGISTERED_DIRS.get(spark) == sf_dir:
-        names = {t.name for t in spark.catalog.listTables()}
-        if all(t in names for t in TABLES):
-            return
+    A cache hit costs one ``temp_views`` lookup and runs no Spark job."""
+    if _REGISTERED_DIRS.get(spark) == sf_dir and temp_views(spark).issuperset(TABLES):
+        return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
     _REGISTERED_DIRS[spark] = sf_dir

@@ -43,8 +43,10 @@ def test_text_only_documents(spark, one_page):
 
 def test_unreferenced_media_not_processed(spark, corpus, one_page):
     """Pages in the media table that no document references must never hit
-    the kernel stage (the semi-join prunes them) — at warehouse scale the
-    media table is far larger than any one run's reference set."""
+    the kernel stage — at warehouse scale the media table is far larger
+    than any one run's reference set.  With width/height metadata the
+    bounded route joins media to the broadcast bins, which hold only
+    referenced pages, so that join prunes them."""
     ref, content, w, h, lid = one_page
     docs = _docs(spark, [
         ("d0", [("media", None, ref, 0)]),

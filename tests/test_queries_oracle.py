@@ -20,6 +20,7 @@ from bsc_project_spark.queries import (
     materialize,
     query_scope,
     register_views,
+    temp_views,
 )
 from bsc_project_spark.queries.similarity import _emb_dim
 
@@ -52,8 +53,21 @@ def _canon(cols, rows):
 
 def _session_state(spark):
     """Persisted RDDs and temp views: what a query could leave behind."""
-    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
-    return spark.sparkContext._jsc.getPersistentRDDs().size(), views
+    return spark.sparkContext._jsc.getPersistentRDDs().size(), temp_views(spark)
+
+
+def test_temp_views_match_catalog_listing(spark):
+    """``temp_views`` (SHOW VIEWS, no Spark job) lists the same temp views
+    as ``catalog.listTables()``, on a session holding the ten table views
+    and one more view."""
+    register_views(spark, SF_DIR)
+    spark.range(1).createOrReplaceTempView("extra_view")
+    try:
+        listed = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        assert temp_views(spark) == listed
+        assert listed >= set(TABLES) | {"extra_view"}
+    finally:
+        spark.catalog.dropTempView("extra_view")
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

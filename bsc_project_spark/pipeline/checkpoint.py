@@ -1,28 +1,52 @@
 """Snapshot-commit extraction job with per-bucket lineage + resume.
 
 The north rule requires the job to be resumable from the last committed
-snapshot with per-partition lineage rows.  pyspark 4.1.2 in this sandbox
-ships no Iceberg runtime, so commits are emulated with identical semantics
-(documented fallback, SURVEY.md §7 step 5): a bucket becomes *committed*
-only when the manifest JSON is atomically replaced (write-temp + rename,
-the same atomicity primitive an Iceberg snapshot commit relies on), and
-readers see only committed buckets.
+snapshot with per-partition lineage rows.  pyspark 4.1.2 ships no Iceberg
+runtime, so commits are emulated with identical semantics (documented
+fallback, SURVEY.md §7 step 5): a unit of output becomes *committed* only
+when the manifest JSON is atomically replaced (write-temp + rename, the
+same atomicity primitive an Iceberg snapshot commit relies on), and
+readers see only committed units.
 
 Two independently-resumable stages, because the unit of expensive work
 (a unique page) and the unit of output (a document) have different keys:
 
 1. **Page stage** — the distinct media_refs of the whole input are
    snapshotted once (``refs/``), hash-bucketed by media_ref, and each
-   bucket runs the image-kernel stage exactly once, committing
-   ``cells/pbucket=K`` + ``lineage/pbucket=K``.  A page referenced by
-   documents in ten different doc-buckets is still extracted ONCE
-   globally (the single-stage design re-extracted shared pages per
-   doc-bucket).
+   page bucket ``pbucket=K`` runs the image-kernel stage exactly once.  A
+   page referenced by documents in ten different doc buckets is still
+   extracted ONCE globally.
 2. **Doc stage** — documents are hash-bucketed by doc_id
-   (pmod(xxhash64(doc_id), n)); each bucket joins the committed cells,
-   restores span order with the per-doc window, and commits
-   ``data/bucket=K`` + ``errors/bucket=K`` (quarantined unresolved refs)
-   + ``doc_lineage/bucket=K`` (doc/span counts + wall time).
+   (pmod(xxhash64(doc_id), n)); each bucket ``bucket=K`` joins the
+   committed cells and restores span order with the per-doc window.
+
+An incremental update ``update=U`` runs both stages once over its new
+documents: the page stage over only the refs no earlier commit extracted,
+the doc stage against every committed cell.  Every unit, base bucket or
+update, is written by the same two commits: ``_commit_pages`` (cells +
+lineage) and ``_commit_docs`` (data, errors, doc-id ledger, doc lineage).
+
+On-disk layout under ``out_dir``::
+
+    _manifest.json                  current snapshot (the atomic pointer)
+    snapshots/vN.json               every snapshot, immutable
+    refs/                           distinct media_refs of the base input
+    refs_updates/update=U           refs update U extracted (new pages only)
+    cells/pbucket=K, cells/update=U         OCR cells of the unit's pages
+    lineage/pbucket=K, lineage/update=U     page lineage rows, bucket K or -U
+    data/bucket=K, data/update=U            extracted spans
+    data/compacted=C                        ``compact``'s fold of the above
+    errors/bucket=K, errors/update=U        quarantined unresolved media refs
+    doc_ids/bucket=K                        committed doc ids, flat
+    doc_ids/update=U/dbucket=K              ... partitioned by doc bucket
+    doc_ids/compacted=C/dbucket=K           ... folded by ``compact``
+    doc_lineage/bucket=K, doc_lineage/update=U   doc/span/unresolved counts
+                                                 + wall time, bucket K or -U
+
+A base run writes ``refs/`` and the ``pbucket=K`` / ``bucket=K`` units, one
+snapshot per unit; an update writes ``refs_updates/update=U`` and the
+``update=U`` dir of cells, lineage, data, errors, doc_ids and doc_lineage,
+all made visible by one snapshot.
 
 Resume = re-running the job: committed buckets of BOTH stages are skipped
 (the anti-join-against-committed-lineage idea of SURVEY.md Q12; with hash
@@ -43,18 +67,20 @@ scripts/ocr_generate_more_crops.py:11-18,69-76).
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from .extract import (
+    LINEAGE_SCHEMA,
     assemble_spans,
-    explode_spans,
+    media_refs,
     run_page_stage,
     split_stage_output,
 )
@@ -68,6 +94,20 @@ DOC_LINEAGE_SCHEMA = (
 # stream engine replays at most its last unacknowledged batches)
 _MAX_UPDATE_TAGS = 1024
 
+# The table state every snapshot records, each key with its empty-table
+# value.  A commit copies all of it from a source manifest and applies only
+# its own changes, so no commit can drop state it does not own.
+_TABLE_STATE = {
+    "run_id": None,
+    "committed_buckets": [],
+    "committed_page_buckets": [],
+    "n_buckets": None,
+    "n_page_buckets": None,
+    "committed_updates": [],
+    "update_tags": {},
+    "compaction": None,
+}
+
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest.json")
@@ -80,43 +120,37 @@ def _snapshots_dir(out_dir: str) -> str:
 def read_manifest(out_dir: str, as_of: int | None = None) -> dict:
     """Current manifest, or (time travel) the immutable state at snapshot
     ``as_of`` — the manifest every commit froze under ``snapshots/vN.json``
-    before flipping the current pointer."""
+    before flipping the current pointer.  Table keys a manifest does not
+    store read as their empty-table value."""
+    path = _manifest_path(out_dir)
     if as_of is not None:
         path = os.path.join(_snapshots_dir(out_dir), f"v{as_of}.json")
         if not os.path.exists(path):
             raise ValueError(f"no snapshot v{as_of} under {out_dir}")
+    stored = {}
+    if os.path.exists(path):
         with open(path) as f:
-            return json.load(f)
-    path = _manifest_path(out_dir)
-    if not os.path.exists(path):
-        return {
-            "run_id": None,
-            "committed_buckets": [],
-            "committed_page_buckets": [],
-            "n_buckets": None,
-            "n_page_buckets": None,
-        }
-    with open(path) as f:
-        m = json.load(f)
-    m.setdefault("committed_page_buckets", [])
-    m.setdefault("n_page_buckets", None)
-    m.setdefault("committed_updates", [])
-    return m
+            stored = json.load(f)
+    return {**copy.deepcopy(_TABLE_STATE), **stored}
 
 
-def _commit_manifest(out_dir: str, manifest: dict) -> dict:
+def _commit_manifest(out_dir: str, changes: dict, source: dict | None = None) -> dict:
     """Atomic snapshot commit, Iceberg-style: write the new state as an
     IMMUTABLE numbered snapshot file first, then flip the current pointer
     with an atomic rename.  A reader holding snapshot N is never affected
     by later commits; a crash between the two writes leaves the pointer on
-    the previous fully-written snapshot."""
+    the previous fully-written snapshot.
+
+    The new state is ``source``'s table state (default: the current
+    manifest's) with ``changes`` applied; keys left at None are not
+    written."""
     prev = read_manifest(out_dir)
-    sid = int(prev.get("snapshot_id") or 0) + 1
-    manifest = {
-        **manifest,
-        "snapshot_id": sid,
-        "committed_at_ms": int(time.time() * 1000),
-    }
+    source = prev if source is None else source
+    state = {k: source[k] for k in _TABLE_STATE} | changes
+    manifest = {k: v for k, v in state.items() if v is not None}
+    manifest["snapshot_id"] = int(prev.get("snapshot_id") or 0) + 1
+    manifest["committed_at_ms"] = int(time.time() * 1000)
+    sid = manifest["snapshot_id"]
     snaps = _snapshots_dir(out_dir)
     os.makedirs(snaps, exist_ok=True)
     spath = os.path.join(snaps, f"v{sid}.json")
@@ -151,23 +185,123 @@ def rollback(out_dir: str, snapshot_id: int) -> dict:
     buckets the rollback un-committed — their stale data files are
     invisible until then (readers go through the manifest) and are
     overwritten when recommitted."""
-    old = read_manifest(out_dir, as_of=snapshot_id)
-    state = {
-        k: old.get(k)
-        for k in (
-            "run_id",
-            "committed_buckets",
-            "committed_page_buckets",
-            "n_buckets",
-            "n_page_buckets",
+    return _commit_manifest(
+        out_dir,
+        {
+            "rolled_back_from": read_manifest(out_dir).get("snapshot_id"),
+            "rolled_back_to": snapshot_id,
+        },
+        source=read_manifest(out_dir, as_of=snapshot_id),
+    )
+
+
+def _doc_bucket(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+
+
+def _unit_paths(
+    out_dir: str, sub: str, key: str, buckets: list[int], updates: list[int]
+) -> list[str]:
+    """The ``sub/`` directories of the given units: base buckets
+    (``key=K``), then updates (``update=U``)."""
+    return [os.path.join(out_dir, sub, f"{key}={b}") for b in buckets] + [
+        os.path.join(out_dir, sub, f"update={u}") for u in updates
+    ]
+
+
+def _commit_pages(
+    media: DataFrame,
+    refs: DataFrame,
+    cfg: ExtractConfig,
+    out_dir: str,
+    part: str,
+    bucket: int,
+    run_id: str,
+) -> None:
+    """Extract the pages ``refs`` names and write unit ``part``'s
+    ``cells/`` and ``lineage/`` (rows stamped with ``run_id``, ``bucket``
+    and the commit time).  The caller's manifest commit makes them
+    visible."""
+    spark = refs.sparkSession
+    n_parts = spark.sparkContext.defaultParallelism
+    # persist the raw stage so cells AND lineage consume one kernel run
+    # (deriving lineage from a second pass would re-run kernels)
+    stage = run_page_stage(media, refs, cfg, n_parts).persist()
+    try:
+        cells, lineage = split_stage_output(stage)
+        cells.write.mode("overwrite").parquet(os.path.join(out_dir, "cells", part))
+        if lineage.limit(1).count() == 0:
+            # empty unit (no refs hashed here, or Spark skipped empty
+            # partitions): still commit an explicit zero row so the
+            # lineage table covers every committed unit
+            lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
+        (
+            lineage.withColumn("run_id", F.lit(run_id))
+            .withColumn("bucket", F.lit(bucket))
+            .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, "lineage", part))
         )
-    }
-    state["committed_updates"] = old.get("committed_updates", [])
-    if old.get("compaction"):
-        state["compaction"] = old["compaction"]
-    state["rolled_back_from"] = read_manifest(out_dir).get("snapshot_id")
-    state["rolled_back_to"] = snapshot_id
-    return _commit_manifest(out_dir, state)
+    finally:
+        stage.unpersist()
+
+
+def _write_doc_ids(frame: DataFrame, path: str, n_dbuckets: int | None) -> None:
+    """Committed-ids ledger: the distinct doc_ids of ``frame`` in one
+    skinny file set, so ingest idempotency anti-joins read O(touched
+    buckets) of doc ids instead of scanning the data table (see
+    committed_doc_ids).  With ``n_dbuckets`` the ledger is partitioned by
+    the base run's doc bucket, so a later batch's anti-join prunes it to
+    its touched ``dbucket=K`` directories."""
+    ids = frame.select("doc_id").distinct()
+    if n_dbuckets is None:
+        ids.write.mode("overwrite").parquet(path)
+        return
+    (
+        ids.withColumn("dbucket", _doc_bucket(n_dbuckets))
+        .write.mode("overwrite")
+        .partitionBy("dbucket")
+        .parquet(path)
+    )
+
+
+def _commit_docs(
+    documents: DataFrame,
+    cells: DataFrame,
+    media: DataFrame,
+    out_dir: str,
+    part: str,
+    bucket: int,
+    run_id: str,
+    n_dbuckets: int | None = None,
+) -> None:
+    """Assemble ``documents`` against the committed ``cells`` and write
+    unit ``part``'s ``data/``, ``errors/``, ``doc_ids/`` ledger and
+    ``doc_lineage/`` row.  A base bucket's ledger is flat; an update's is
+    partitioned into ``n_dbuckets`` doc buckets."""
+    spark = documents.sparkSession
+    t0 = time.monotonic()
+    data_dir = os.path.join(out_dir, "data", part)
+    errors_dir = os.path.join(out_dir, "errors", part)
+    extracted, unresolved = assemble_spans(documents, cells, media)
+    extracted.write.mode("overwrite").parquet(data_dir)
+    unresolved.write.mode("overwrite").parquet(errors_dir)
+    _write_doc_ids(documents, os.path.join(out_dir, "doc_ids", part), n_dbuckets)
+    stats = spark.read.parquet(data_dir).agg(
+        F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
+    ).collect()[0]
+    n_unresolved = spark.read.parquet(errors_dir).count()
+    doc_lineage = spark.createDataFrame(
+        [(bucket, int(stats.docs), int(stats.spans), int(n_unresolved),
+          int((time.monotonic() - t0) * 1000))],
+        DOC_LINEAGE_SCHEMA,
+    )
+    (
+        doc_lineage.withColumn("run_id", F.lit(run_id))
+        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, "doc_lineage", part))
+    )
 
 
 def run_extraction_job(
@@ -204,25 +338,21 @@ def run_extraction_job(
     run_id = manifest["run_id"] or run_id or uuid.uuid4().hex[:12]
     committed_pages = set(manifest["committed_page_buckets"])
     committed = set(manifest["committed_buckets"])
-    n_parts = spark.sparkContext.defaultParallelism
 
     def commit() -> dict:
-        state = {
-            "run_id": run_id,
-            "committed_buckets": sorted(committed),
-            "committed_page_buckets": sorted(committed_pages),
-            "n_buckets": n_buckets,
-            "n_page_buckets": n_page_buckets,
-        }
-        # carry forward table-level state this job does not own (updates
-        # committed earlier, an active compaction) — a resumed bucket
-        # commit must not un-commit them
-        current = read_manifest(out_dir)
-        if current.get("committed_updates"):
-            state["committed_updates"] = current["committed_updates"]
-        if current.get("compaction"):
-            state["compaction"] = current["compaction"]
-        return _commit_manifest(out_dir, state)
+        # the current manifest supplies the table state this job does not
+        # own (updates committed earlier, an active compaction): a resumed
+        # bucket commit must not un-commit them
+        return _commit_manifest(
+            out_dir,
+            {
+                "run_id": run_id,
+                "committed_buckets": sorted(committed),
+                "committed_page_buckets": sorted(committed_pages),
+                "n_buckets": n_buckets,
+                "n_page_buckets": n_page_buckets,
+            },
+        )
 
     # ---- stage 1: pages (skipped entirely on a doc-stage-only resume) ----
     refs_dir = os.path.join(out_dir, "refs")
@@ -230,42 +360,16 @@ def run_extraction_job(
         if not os.path.exists(os.path.join(refs_dir, "_SUCCESS")):
             # snapshot the distinct refs once: page buckets of a resumed run
             # see the same ref set even if `documents` changed underneath
-            (
-                explode_spans(documents)
-                .filter(F.col("kind") == "media")
-                .select("media_ref")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(refs_dir)
-            )
+            media_refs(documents).write.mode("overwrite").parquet(refs_dir)
         refs_all = spark.read.parquet(refs_dir)
         pbucket_col = F.pmod(F.xxhash64("media_ref"), F.lit(n_page_buckets))
         for pb in range(n_page_buckets):
             if pb in committed_pages:
                 continue
-            refs_b = refs_all.filter(pbucket_col == pb)
-            # persist the raw stage so cells AND lineage consume one kernel
-            # run (deriving lineage from a second pass would re-run kernels)
-            stage = run_page_stage(media, refs_b, cfg, n_parts).persist()
-            cells, lineage = split_stage_output(stage)
-            cells.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"cells/pbucket={pb}")
+            _commit_pages(
+                media, refs_all.filter(pbucket_col == pb), cfg, out_dir,
+                f"pbucket={pb}", pb, run_id,
             )
-            if lineage.limit(1).count() == 0:
-                # empty page bucket (no refs hashed here, or Spark skipped
-                # empty partitions): still commit an explicit zero row so
-                # the lineage table covers every committed bucket
-                from .extract import LINEAGE_SCHEMA
-
-                lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
-            (
-                lineage.withColumn("run_id", F.lit(run_id))
-                .withColumn("bucket", F.lit(pb))
-                .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, f"lineage/pbucket={pb}"))
-            )
-            stage.unpersist()
             committed_pages.add(pb)
             manifest = commit()
             if fail_after_page_bucket is not None and pb >= fail_after_page_bucket:
@@ -273,44 +377,15 @@ def run_extraction_job(
 
     # ---- stage 2: documents (joins committed cells; no kernel ever reruns) ----
     cells_all = spark.read.parquet(
-        *[os.path.join(out_dir, f"cells/pbucket={pb}") for pb in sorted(committed_pages)]
+        *_unit_paths(out_dir, "cells", "pbucket", sorted(committed_pages), [])
     )
-    bucket_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+    bucket_col = _doc_bucket(n_buckets)
     for bucket in range(n_buckets):
         if bucket in committed:
             continue
-        t0 = time.monotonic()
-        docs_b = documents.filter(bucket_col == bucket)
-        extracted, unresolved = assemble_spans(docs_b, cells_all, media)
-        extracted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"data/bucket={bucket}")
-        )
-        unresolved.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"errors/bucket={bucket}")
-        )
-        # committed-ids ledger: one skinny (doc_id) file per bucket, so
-        # ingest idempotency anti-joins read O(touched buckets) of doc ids
-        # instead of scanning the full data table (see committed_doc_ids)
-        docs_b.select("doc_id").distinct().write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"doc_ids/bucket={bucket}")
-        )
-        written = spark.read.parquet(os.path.join(out_dir, f"data/bucket={bucket}"))
-        stats = written.agg(
-            F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
-        ).collect()[0]
-        n_unresolved = spark.read.parquet(
-            os.path.join(out_dir, f"errors/bucket={bucket}")
-        ).count()
-        doc_lineage = spark.createDataFrame(
-            [(bucket, int(stats.docs), int(stats.spans), int(n_unresolved),
-              int((time.monotonic() - t0) * 1000))],
-            DOC_LINEAGE_SCHEMA,
-        )
-        (
-            doc_lineage.withColumn("run_id", F.lit(run_id))
-            .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"doc_lineage/bucket={bucket}"))
+        _commit_docs(
+            documents.filter(bucket_col == bucket), cells_all, media, out_dir,
+            f"bucket={bucket}", bucket, run_id,
         )
         committed.add(bucket)
         manifest = commit()
@@ -337,10 +412,10 @@ def run_incremental_update(
     its committed cells — no image kernel reruns, at any corpus size the
     kernel cost of an update is proportional to its genuinely-new pages.
 
-    One update = one snapshot commit: all delta files (cells, lineage,
-    data, errors, doc lineage under ``*/update=U``) are written first and
-    become visible only when the manifest commit appends U to
-    ``committed_updates``.  A crash mid-update leaves the table at the
+    One update = one snapshot commit: all delta files (refs, cells,
+    lineage, data, errors, doc ids, doc lineage under ``*/update=U``) are
+    written first and become visible only when the manifest commit appends
+    U to ``committed_updates``.  A crash mid-update leaves the table at the
     previous snapshot; rerunning the same delta recomputes U's files
     idempotently (same id, overwrite mode) and commits once.
 
@@ -356,7 +431,7 @@ def run_incremental_update(
     """
     spark = new_documents.sparkSession
     manifest = read_manifest(out_dir)
-    update_tags: dict[str, int] = dict(manifest.get("update_tags", {}))
+    update_tags: dict[str, int] = dict(manifest["update_tags"])
     if idempotency_key is not None and idempotency_key in update_tags:
         return manifest
     if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
@@ -365,92 +440,36 @@ def run_incremental_update(
         raise ValueError(
             f"{out_dir} has no fully-committed base run; run run_extraction_job first"
         )
-    committed_updates: list[int] = list(manifest.get("committed_updates", []))
+    committed_updates: list[int] = list(manifest["committed_updates"])
     uid = (committed_updates[-1] + 1) if committed_updates else 1
-    n_parts = spark.sparkContext.defaultParallelism
+    part = f"update={uid}"
 
     # refs already extracted: base snapshot + prior update deltas
-    known_ref_paths = [os.path.join(out_dir, "refs")] + [
-        os.path.join(out_dir, f"refs_updates/update={u}") for u in committed_updates
-    ]
-    known_refs = spark.read.parquet(*known_ref_paths)
-    delta_refs = (
-        explode_spans(new_documents)
-        .filter(F.col("kind") == "media")
-        .select("media_ref")
-        .distinct()
-        .join(known_refs, on="media_ref", how="left_anti")
+    known_refs = spark.read.parquet(
+        os.path.join(out_dir, "refs"),
+        *[os.path.join(out_dir, f"refs_updates/update={u}") for u in committed_updates],
     )
-    delta_refs.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"refs_updates/update={uid}")
-    )
-    delta_refs = spark.read.parquet(os.path.join(out_dir, f"refs_updates/update={uid}"))
+    delta_dir = os.path.join(out_dir, "refs_updates", part)
+    media_refs(new_documents).join(
+        known_refs, on="media_ref", how="left_anti"
+    ).write.mode("overwrite").parquet(delta_dir)
 
-    # page stage over ONLY the genuinely-new pages
-    stage = run_page_stage(media, delta_refs, cfg, n_parts).persist()
-    cells, lineage = split_stage_output(stage)
-    cells.write.mode("overwrite").parquet(os.path.join(out_dir, f"cells/update={uid}"))
-    if lineage.limit(1).count() == 0:
-        from .extract import LINEAGE_SCHEMA
-
-        lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
-    (
-        lineage.withColumn("run_id", F.lit(manifest["run_id"]))
-        .withColumn("bucket", F.lit(-uid))  # negative id marks update deltas
-        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"lineage/update={uid}"))
+    # page stage over ONLY the genuinely-new pages; the negative lineage
+    # bucket id marks update deltas
+    _commit_pages(
+        media, spark.read.parquet(delta_dir), cfg, out_dir, part, -uid,
+        manifest["run_id"],
     )
-    stage.unpersist()
 
     # doc stage: join ALL committed cells (base + every update incl. this
     # one) so shared pages resolve without recompute
-    t0 = time.monotonic()
-    cell_paths = [
-        os.path.join(out_dir, f"cells/pbucket={pb}")
-        for pb in manifest["committed_page_buckets"]
-    ] + [
-        os.path.join(out_dir, f"cells/update={u}")
-        for u in [*committed_updates, uid]
-    ]
-    cells_all = spark.read.parquet(*cell_paths)
-    extracted, unresolved = assemble_spans(new_documents, cells_all, media)
-    extracted.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"data/update={uid}")
-    )
-    unresolved.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"errors/update={uid}")
-    )
-    # committed-ids ledger delta, partitioned by the SAME doc-id bucket
-    # function as the base run: a later batch's anti-join prunes every
-    # update delta to its touched dbucket=K directories
-    (
-        new_documents.select("doc_id")
-        .distinct()
-        .withColumn(
-            "dbucket", F.pmod(F.xxhash64("doc_id"), F.lit(manifest["n_buckets"]))
-        )
-        .write.mode("overwrite")
-        .partitionBy("dbucket")
-        .parquet(os.path.join(out_dir, f"doc_ids/update={uid}"))
-    )
-    written = spark.read.parquet(os.path.join(out_dir, f"data/update={uid}"))
-    stats = written.agg(
-        F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
-    ).collect()[0]
-    n_unresolved = spark.read.parquet(
-        os.path.join(out_dir, f"errors/update={uid}")
-    ).count()
-    doc_lineage = spark.createDataFrame(
-        [(-uid, int(stats.docs), int(stats.spans), int(n_unresolved),
-          int((time.monotonic() - t0) * 1000))],
-        DOC_LINEAGE_SCHEMA,
-    )
-    (
-        doc_lineage.withColumn("run_id", F.lit(manifest["run_id"]))
-        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"doc_lineage/update={uid}"))
+    cells_all = spark.read.parquet(*_unit_paths(
+        out_dir, "cells", "pbucket", manifest["committed_page_buckets"],
+        [*committed_updates, uid],
+    ))
+    _commit_docs(
+        new_documents, cells_all, media, out_dir, part, -uid, manifest["run_id"],
+        n_dbuckets=manifest["n_buckets"],
     )
 
     # single atomic commit makes the whole update visible
@@ -463,39 +482,31 @@ def run_incremental_update(
             keep = sorted(update_tags.values())[-_MAX_UPDATE_TAGS:]
             floor = keep[0]
             update_tags = {k: v for k, v in update_tags.items() if v >= floor}
-    state = {
-        "run_id": manifest["run_id"],
-        "committed_buckets": manifest["committed_buckets"],
-        "committed_page_buckets": manifest["committed_page_buckets"],
-        "n_buckets": manifest["n_buckets"],
-        "n_page_buckets": manifest["n_page_buckets"],
-        "committed_updates": [*committed_updates, uid],
-        "update_tags": update_tags,
-    }
-    if manifest.get("compaction"):
-        state["compaction"] = manifest["compaction"]
-    return _commit_manifest(out_dir, state)
+    return _commit_manifest(
+        out_dir,
+        {"committed_updates": [*committed_updates, uid], "update_tags": update_tags},
+    )
+
+
+def _uncovered_units(manifest: dict) -> tuple[list[int], list[int]]:
+    """Committed base buckets and updates the manifest's compaction (if
+    any) does not cover."""
+    comp = manifest.get("compaction") or {}
+    return (
+        [b for b in manifest["committed_buckets"] if b not in comp.get("buckets", [])],
+        [
+            u for u in manifest.get("committed_updates", [])
+            if u not in comp.get("updates", [])
+        ],
+    )
 
 
 def _data_paths(out_dir: str, manifest: dict) -> list[str]:
     """Doc-output dirs a manifest's state reads: the compacted dir (if the
     state has one) plus every bucket/update NOT covered by it."""
-    comp = manifest.get("compaction") or {}
-    covered_b = set(comp.get("buckets", []))
-    covered_u = set(comp.get("updates", []))
-    paths = []
-    if comp:
-        paths.append(os.path.join(out_dir, f"data/compacted={comp['id']}"))
-    paths += [
-        os.path.join(out_dir, f"data/bucket={b}")
-        for b in manifest["committed_buckets"]
-        if b not in covered_b
-    ] + [
-        os.path.join(out_dir, f"data/update={u}")
-        for u in manifest.get("committed_updates", [])
-        if u not in covered_u
-    ]
-    return paths
+    comp = manifest.get("compaction")
+    paths = [os.path.join(out_dir, f"data/compacted={comp['id']}")] if comp else []
+    return paths + _unit_paths(out_dir, "data", "bucket", *_uncovered_units(manifest))
 
 
 def committed_doc_ids(
@@ -513,27 +524,21 @@ def committed_doc_ids(
     every micro-batch.  Falls back to the data files for tables written
     before the ledger existed."""
     manifest = read_manifest(out_dir)
-    comp = manifest.get("compaction") or {}
-    covered_b = set(comp.get("buckets", []))
-    covered_u = set(comp.get("updates", []))
-    base = [b for b in manifest["committed_buckets"] if b not in covered_b]
-    updates = [
-        u for u in manifest.get("committed_updates", []) if u not in covered_u
-    ]
+    comp = manifest["compaction"]
+    base, updates = _uncovered_units(manifest)
     comp_path = (
         os.path.join(out_dir, f"doc_ids/compacted={comp['id']}") if comp else None
     )
     if comp_path is not None and not os.path.exists(comp_path):
         # compaction predates the ledger fold: its covered dirs still
         # exist, read them directly
-        base = manifest["committed_buckets"]
-        updates = manifest.get("committed_updates", [])
+        base, updates = manifest["committed_buckets"], manifest["committed_updates"]
         comp_path = None
     if buckets is not None:
         wanted = set(buckets)
         base = [b for b in base if b in wanted]
-    base_paths = [os.path.join(out_dir, f"doc_ids/bucket={b}") for b in base]
-    upd_paths = [os.path.join(out_dir, f"doc_ids/update={u}") for u in updates]
+    base_paths = _unit_paths(out_dir, "doc_ids", "bucket", base, [])
+    upd_paths = _unit_paths(out_dir, "doc_ids", "bucket", [], updates)
     if any(not os.path.exists(p) for p in base_paths + upd_paths):
         # pre-ledger table: the old (full-scan) behavior
         return read_extracted(spark, out_dir).select("doc_id").distinct()
@@ -591,47 +596,30 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
     deleted — older snapshots still reference them; reclaim space with
     ``expire_snapshots``."""
     manifest = read_manifest(out_dir)
-    cid = int((manifest.get("compaction") or {}).get("id", 0)) + 1
+    cid = int((manifest["compaction"] or {}).get("id", 0)) + 1
     df = read_extracted(spark, out_dir)
     dest = os.path.join(out_dir, f"data/compacted={cid}")
     df.repartition(target_partitions).write.mode("overwrite").parquet(dest)
-    if manifest.get("n_buckets"):
+    if manifest["n_buckets"]:
         # fold the committed-ids ledger too: without this a long-lived
         # continuous-ingest table accretes one doc_ids/update=U dir per
         # batch forever, and the ingest anti-join's touched-bucket scan
         # grows with update count instead of staying one dir per bucket
-        (
-            df.select("doc_id")
-            .distinct()
-            .withColumn(
-                "dbucket",
-                F.pmod(F.xxhash64("doc_id"), F.lit(manifest["n_buckets"])),
-            )
-            .write.mode("overwrite")
-            .partitionBy("dbucket")
-            .parquet(os.path.join(out_dir, f"doc_ids/compacted={cid}"))
+        _write_doc_ids(
+            df, os.path.join(out_dir, f"doc_ids/compacted={cid}"), manifest["n_buckets"]
         )
-    state = {
-        k: manifest.get(k)
-        for k in (
-            "run_id",
-            "committed_buckets",
-            "committed_page_buckets",
-            "n_buckets",
-            "n_page_buckets",
-            "committed_updates",
-        )
-    }
-    # the idempotency ledger must survive compaction, or a stream batch
-    # replayed after a compact would re-commit its delta
-    if manifest.get("update_tags"):
-        state["update_tags"] = manifest["update_tags"]
-    state["compaction"] = {
-        "id": cid,
-        "buckets": manifest["committed_buckets"],
-        "updates": manifest.get("committed_updates", []),
-    }
-    return _commit_manifest(out_dir, state)
+    # the rest of the table state carries over, the idempotency ledger
+    # among it: a stream batch replayed after a compact stays a no-op
+    return _commit_manifest(
+        out_dir,
+        {
+            "compaction": {
+                "id": cid,
+                "buckets": manifest["committed_buckets"],
+                "updates": manifest["committed_updates"],
+            }
+        },
+    )
 
 
 def expire_snapshots(out_dir: str, keep_from: int) -> list[str]:
@@ -669,15 +657,12 @@ def read_lineage(
     spark: SparkSession, out_dir: str, as_of: int | None = None
 ) -> DataFrame:
     """Page-stage lineage rows (per shuffle partition: page/cell/char
-    counts + wall time) of committed page buckets."""
+    counts + wall time) of committed page buckets and updates."""
     manifest = read_manifest(out_dir, as_of=as_of)
-    paths = [
-        os.path.join(out_dir, f"lineage/pbucket={b}")
-        for b in manifest["committed_page_buckets"]
-    ] + [
-        os.path.join(out_dir, f"lineage/update={u}")
-        for u in manifest.get("committed_updates", [])
-    ]
+    paths = _unit_paths(
+        out_dir, "lineage", "pbucket",
+        manifest["committed_page_buckets"], manifest["committed_updates"],
+    )
     if not paths:
         raise ValueError(f"no committed lineage under {out_dir}")
     return spark.read.parquet(*paths)
@@ -690,13 +675,10 @@ def read_doc_lineage(
     wall time) of committed doc buckets; incremental updates appear with
     negative bucket ids (-update_id)."""
     manifest = read_manifest(out_dir, as_of=as_of)
-    paths = [
-        os.path.join(out_dir, f"doc_lineage/bucket={b}")
-        for b in manifest["committed_buckets"]
-    ] + [
-        os.path.join(out_dir, f"doc_lineage/update={u}")
-        for u in manifest.get("committed_updates", [])
-    ]
+    paths = _unit_paths(
+        out_dir, "doc_lineage", "bucket",
+        manifest["committed_buckets"], manifest["committed_updates"],
+    )
     if not paths:
         raise ValueError(f"no committed doc lineage under {out_dir}")
     return spark.read.parquet(*paths)

@@ -82,6 +82,17 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     )
 
 
+def media_refs(documents: DataFrame) -> DataFrame:
+    """documents -> the distinct media_refs their media spans cite (one
+    ``media_ref`` column): the page set the image stage extracts."""
+    return (
+        explode_spans(documents)
+        .filter(F.col("kind") == "media")
+        .select("media_ref")
+        .distinct()
+    )
+
+
 def _make_extract_udf(
     cfg: ExtractConfig,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
@@ -557,13 +568,7 @@ def run_extract_stage(
     spark = documents.sparkSession
     n_parts = salt_partitions or spark.sparkContext.defaultParallelism
 
-    refs = (
-        explode_spans(documents)
-        .filter(F.col("kind") == "media")
-        .select("media_ref")
-        .distinct()
-    )
-    stage_out = run_page_stage(media, refs, cfg, n_parts)
+    stage_out = run_page_stage(media, media_refs(documents), cfg, n_parts)
     if persist:
         stage_out = stage_out.persist(StorageLevel.MEMORY_AND_DISK)
     cells, lineage = split_stage_output(stage_out)

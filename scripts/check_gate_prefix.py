@@ -21,7 +21,8 @@ shared helpers it calls (e.g. ``queries/prefix.py``); when editing a
 shared helper, rotate its consumers into the prefix by hand (the prefix
 comments in ``queries/__init__.py`` track this).
 
-Usage: python scripts/check_gate_prefix.py   (exit 0 = ok, 1 = violation)
+Usage: python scripts/check_gate_prefix.py
+(exit 0 = ok, 1 = violation, 2 = no git history to compare against)
 """
 
 from __future__ import annotations
@@ -85,9 +86,17 @@ def _dump_fingerprints(tree: Path) -> dict[str, str]:
 
 
 def main() -> int:
-    base_commit = _git(
-        "log", "-1", "--format=%H", "--", "CORRECTNESS_r*.json"
-    )
+    try:
+        base_commit = _git(
+            "log", "-1", "--format=%H", "--", "CORRECTNESS_r*.json"
+        )
+    except (OSError, subprocess.CalledProcessError) as e:
+        detail = getattr(e, "stderr", None) or str(e)
+        print(
+            "ERROR: the gate-prefix check needs git history (a git checkout "
+            f"of this repository) to find its base round: {detail.strip()}"
+        )
+        return 2
     if not base_commit:
         print("no CORRECTNESS_r*.json in history; nothing to guard against")
         return 0

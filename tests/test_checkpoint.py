@@ -310,3 +310,139 @@ def test_compaction_and_snapshot_expiry(spark, corpus, tmp_path):
     # time travel older than the horizon is now (correctly) impossible
     with pytest.raises(ValueError, match="no snapshot"):
         read_manifest(out_dir, as_of=1)
+
+
+def _layout(root):
+    """(directories, top-level files, snapshot files) under a table root,
+    with the update ledger's ``dbucket=K`` partitions written as ``dbucket=*``."""
+    import re
+
+    dirs = set()
+    for dirpath, dirnames, _ in os.walk(root):
+        for d in dirnames:
+            rel = os.path.relpath(os.path.join(dirpath, d), root)
+            dirs.add(re.sub(r"dbucket=\d+", "dbucket=*", rel))
+    top = {f for f in os.listdir(root) if os.path.isfile(os.path.join(root, f))}
+    snaps = set(os.listdir(os.path.join(root, "snapshots")))
+    return dirs, top, snaps
+
+
+def test_table_layout_is_pinned(spark, corpus, tmp_path):
+    """The on-disk layout, manifest keys and lineage bucket ids of a base
+    run plus one update: the contract read_extracted, committed_doc_ids
+    and the benchmark's checkpoint probe read."""
+    from pyspark.sql import functions as F
+
+    from bsc_project_spark.pipeline.checkpoint import (
+        read_doc_lineage,
+        run_incremental_update,
+    )
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    base_ids = set(ids[: len(ids) // 2])
+    out_dir = str(tmp_path / "layout")
+    run_extraction_job(
+        docs.filter(F.col("doc_id").isin(base_ids)), media, FIXTURE_CONFIG,
+        out_dir, n_buckets=2, n_page_buckets=2,
+    )
+    m = run_incremental_update(
+        docs.filter(~F.col("doc_id").isin(base_ids)), media, FIXTURE_CONFIG, out_dir
+    )
+
+    dirs, top, snaps = _layout(out_dir)
+    parts = ["bucket=0", "bucket=1", "update=1"]
+    page_parts = ["pbucket=0", "pbucket=1", "update=1"]
+    expected = {"refs", "refs_updates", "refs_updates/update=1", "snapshots"}
+    for sub, subparts in [
+        ("cells", page_parts), ("lineage", page_parts), ("data", parts),
+        ("errors", parts), ("doc_ids", parts), ("doc_lineage", parts),
+    ]:
+        expected |= {sub} | {f"{sub}/{p}" for p in subparts}
+    expected.add("doc_ids/update=1/dbucket=*")
+    assert dirs == expected
+    assert top == {"_manifest.json"}
+    # 2 page-bucket + 2 doc-bucket + 1 update commits
+    assert snaps == {f"v{i}.json" for i in range(1, 6)}
+
+    assert set(m) == {
+        "run_id", "committed_buckets", "committed_page_buckets", "n_buckets",
+        "n_page_buckets", "committed_updates", "update_tags", "snapshot_id",
+        "committed_at_ms",
+    }
+    assert m["committed_updates"] == [1]
+    assert {r.bucket for r in read_lineage(spark, out_dir).collect()} == {0, 1, -1}
+    assert {r.bucket for r in read_doc_lineage(spark, out_dir).collect()} == {0, 1, -1}
+
+
+def _doc_citing(spark, doc_id, media_ref):
+    from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA
+
+    return spark.createDataFrame(
+        [(doc_id, [("text", doc_id, None, 0), ("media", None, media_ref, 1)])],
+        DOCUMENTS_SCHEMA,
+    )
+
+
+def test_rollback_keeps_idempotency_ledger(spark, corpus, tmp_path):
+    """Rolling back to the snapshot after update k1 restores that
+    snapshot's idempotency ledger: a re-delivered k1 stays a no-op, while
+    k2 (rolled back) commits again."""
+    from bsc_project_spark.pipeline.checkpoint import rollback, run_incremental_update
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    out_dir = str(tmp_path / "rollback_tags")
+    run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
+    old_ref = corpus.media.media_ref.iloc[0]
+    k1 = _doc_citing(spark, "doc-k1", old_ref)
+    k2 = _doc_citing(spark, "doc-k2", old_ref)
+
+    m1 = run_incremental_update(k1, media, FIXTURE_CONFIG, out_dir, idempotency_key="k1")
+    run_incremental_update(k2, media, FIXTURE_CONFIG, out_dir, idempotency_key="k2")
+    rb = rollback(out_dir, m1["snapshot_id"])
+    assert rb["committed_updates"] == [1]
+    rows = sorted(map(tuple, read_extracted(spark, out_dir).collect()))
+
+    again = run_incremental_update(
+        k1, media, FIXTURE_CONFIG, out_dir, idempotency_key="k1"
+    )
+    assert again["snapshot_id"] == rb["snapshot_id"]
+    assert sorted(map(tuple, read_extracted(spark, out_dir).collect())) == rows
+
+    m3 = run_incremental_update(k2, media, FIXTURE_CONFIG, out_dir, idempotency_key="k2")
+    assert m3["snapshot_id"] == rb["snapshot_id"] + 1
+    assert m3["committed_updates"] == [1, 2]
+    assert m3["update_tags"] == {"k1": 1, "k2": 2}
+    assert read_extracted(spark, out_dir).filter("doc_id = 'doc-k2'").count() > 0
+
+
+def test_failed_page_commit_leaves_no_cached_blocks(spark, corpus, tmp_path, monkeypatch):
+    """A write that fails after the persisted page stage has been computed
+    releases the stage's cached blocks and commits nothing."""
+    from bsc_project_spark.pipeline import checkpoint
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    out_dir = str(tmp_path / "failed_commit")
+    run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=1)
+    before = read_manifest(out_dir)
+
+    real_split = checkpoint.split_stage_output
+
+    def failing_split(stage):
+        out = real_split(stage)
+        stage.count()  # the cached stage is materialized, as the cells write would
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(checkpoint, "split_stage_output", failing_split)
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs())
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        checkpoint.run_incremental_update(
+            _doc_citing(spark, "doc-fail", corpus.media.media_ref.iloc[0]),
+            media, FIXTURE_CONFIG, out_dir,
+        )
+    assert set(jsc.getPersistentRDDs()) - persisted == set()
+    assert read_manifest(out_dir) == before

@@ -4,6 +4,7 @@ edit can't silently dodge the hard signal (VERDICT r03, next-round #1/#9).
 """
 
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -42,3 +43,19 @@ def test_changed_queries_inside_prefix():
         cwd=REPO,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
+def test_gate_prefix_check_needs_git_history(tmp_path):
+    """Outside a git checkout (an export, a `git archive` copy) the check
+    cannot find its base round: it says so and fails, without a traceback."""
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "check_gate_prefix.py")],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env={**os.environ, "GIT_DIR": str(tmp_path)},
+    )
+    out = proc.stdout + proc.stderr
+    assert proc.returncode != 0, out
+    assert "needs git history" in out
+    assert "Traceback" not in out

@@ -97,21 +97,16 @@ class ExtractConfig:
     tile_band_px: int = 8_000_000
 
     # Bins-planner driver contract (pipeline/extract.py run_page_stage).
-    # The serpentine planner collects one skinny (media_ref, sz) row per
-    # UNIQUE page — ≈40-100 B each pickled, so the default ceiling of
-    # 2,000,000 refs (extract._DRIVER_PLAN_MAX) costs ≤~200 MB driver
-    # heap, well inside a multi-GB driver and no bigger than the bins
-    # broadcast the page join ships anyway.  assume_bounded_refs=True
-    # (default) asserts the per-stage unique-ref count stays under that
-    # ceiling — true by construction when extraction runs per checkpoint
-    # bucket (pipeline/checkpoint.py bounds bucket size).  Set False to
-    # spend one skinny count() job per stage build: ref sets over the
-    # ceiling then route through the fully-distributed planner
-    # (assign_size_bins' two-phase range-rank + a shuffle-joined bins
-    # frame, giants filtered by a distributed semi/anti join) with zero
-    # driver-side collects.  driver_plan_max overrides the ceiling
-    # (None -> extract._DRIVER_PLAN_MAX).
-    assume_bounded_refs: bool = True
+    # The planner collects one skinny (media_ref, sz) row per UNIQUE page
+    # to deal the bins on the driver — ≈40-100 B each pickled, so ~2M
+    # refs cost ≤~200 MB driver heap, no more than the bins broadcast the
+    # page join ships anyway.  None (default) trusts that contract and
+    # spends no job on it: true by construction when extraction runs per
+    # checkpoint bucket (pipeline/checkpoint.py bounds bucket size).  An
+    # int N spends one skinny count() job per stage build; ref sets above
+    # N plan fully distributed (two-phase rank, shuffle-joined bins,
+    # giants filtered by a distributed semi-join) with no driver-side
+    # collect.  2_000_000 is the ceiling matching the heap figure above.
     driver_plan_max: Optional[int] = None
 
 

@@ -1,13 +1,12 @@
 """Minimal pure-Python RIFF/WAV codec for PCM audio.
 
-The sandbox ships no audio codec libraries, but PCM WAV needs none: the
+This package depends on no audio codec library, and PCM WAV needs none: the
 container is a flat RIFF chunk list and the samples are raw integers
 (or IEEE floats), so stdlib ``struct`` + numpy decode it exactly — the
-same precedent as this repo's own PNG codec (``io/png.py``).  This
-upgrades ``pipeline/media_ops.audio_features`` from "plumbing tested
-with a seeded fake" to a real decode for the one container format that
-is genuinely environment-free; compressed formats (MP3/AAC/video) stay
-stubbed because their codecs are not in this container.
+same precedent as this repo's own PNG codec (``io/png.py``).  It is
+``pipeline/media_ops.audio_features``' decoder, for the one container
+format that needs no codec library; compressed formats (MP3/AAC) raise
+NotImplementedError there.
 
 Decoder scope (everything a synthesized or archival PCM WAV uses):
   - audio formats 1 (integer PCM: 8/16/24/32-bit) and 3 (float32/64),

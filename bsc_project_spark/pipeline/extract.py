@@ -28,12 +28,14 @@ documents, so the kernel cost is O(unique pages), not O(spans).  The final
 window restores global span order — the north rule's "explode/salted
 repartition + window over (doc_id, offset)" design.
 
-The refs are derived once, at build time, for the bins collect; the
-bounded route's action joins media to the bins alone.  Only the unbounded
-and no-metadata routes (see run_page_stage) semi-join media against the
-broadcast refs in the action's plan: on the no-metadata route that join
-is what restricts the pages, on the unbounded one it filters page bytes
-map-side before the bins join, which is not broadcast.
+One planner (run_page_stage) sizes the refs' pages once and deals them
+into bins, on the driver (one build-time collect, broadcast bins) unless
+``ExtractConfig.driver_plan_max`` sends a larger ref set to the fully
+distributed route (two-phase rank, shuffle-joined bins).  On the driver
+route the action joins media to the bins alone and never re-derives the
+refs; only the distributed route semi-joins media to the broadcast refs
+in the action's plan, to keep unreferenced page bytes out of its
+non-broadcast bins join.
 """
 
 from __future__ import annotations
@@ -176,25 +178,13 @@ def _partition_tokens(spark: SparkSession, n: int) -> list[int]:
     return [tokens.get(b, b) for b in range(n)]
 
 
-# Above this many refs the planner stops collecting to the driver and
-# two-phases the rank instead.  The driver path is NOT a new bottleneck
-# below the bound: the bins frame is broadcast into the page join (see
-# repartition_by_size), so it already flows through the driver — the
-# planner just does the serpentine while it is there, in ONE job, instead
-# of spending three (range sampling + subtotal collect + offset join).
-_DRIVER_PLAN_MAX = 2_000_000
-
-
 def serpentine_bins(
     pairs: list[tuple[str, int]], n_bins: int
 ) -> list[tuple[str, int]]:
     """Driver-side serpentine: (media_ref, sz) pairs -> (media_ref, bin),
-    size-descending boustrophedon deal (the semantics assign_size_bins
-    documents), as a pure function so callers that already hold the
-    collected sizes (run_page_stage's tile split) don't re-run the job."""
-    # NULL metadata sizes arrive as None after a collect; treat them as 0
-    # (smallest bin) rather than TypeError-ing the whole driver plan.
-    order = sorted(pairs, key=lambda p: (-(p[1] or 0), p[0]))
+    size-descending boustrophedon deal — the same assignment
+    assign_size_bins computes distributed."""
+    order = sorted(pairs, key=lambda p: (-p[1], p[0]))
     out = []
     for rn0, (ref, _sz) in enumerate(order):
         pos = rn0 % n_bins
@@ -229,13 +219,9 @@ def _bins_local_df(spark: SparkSession, data: list[tuple[str, int]]) -> DataFram
     return spark.createDataFrame(data, "media_ref string, bin int")
 
 
-def assign_size_bins(
-    sizes: DataFrame,
-    n_bins: int,
-    driver_max: int = _DRIVER_PLAN_MAX,
-    assume_bounded: bool = False,
-) -> DataFrame:
-    """(media_ref, sz) -> (media_ref, bin) with near-LPT total-size balance.
+def assign_size_bins(sizes: DataFrame, n_bins: int) -> DataFrame:
+    """(media_ref, sz) -> (media_ref, bin), fully distributed: the
+    serpentine_bins assignment without a driver-side collect.
 
     Serpentine striping over the size-descending order: pass 0 deals bins
     0..P-1, pass 1 deals P-1..0, ... — each bin gets one page per pass and
@@ -244,46 +230,13 @@ def assign_size_bins(
     greedy optimum for realistic size distributions (and degenerates to
     exact round-robin when sizes are uniform).
 
-    Never a single-task global window (the scale wall the round-3 review
-    flagged).  Two paths, same serpentine semantics:
-
-    - driver path (``assume_bounded=True`` — what repartition_by_size
-      passes, because its bins join is a BROADCAST, so the bins rows are
-      driver-sized by contract and flow through the driver regardless):
-      collect the skinny (media_ref, sz) rows and serpentine locally.
-      ONE Spark job, zero shuffles, zero-task VALUES relation out.
-      Without ``assume_bounded`` a parallel count() gates the same path
-      at ``driver_max`` rows — NOT limit(n).collect(), which plans as
-      CollectLimit and scans partitions SERIALLY in scale-up batches
-      (measured 2x the whole stage wall at bench scale).
-    - larger: two-phase rank (queries/prefix.py) — range-partition on
-      (-sz, media_ref), rank within ranges in parallel, broadcast
-      per-partition offsets back.  Three skinny jobs, fully distributed;
-      the path a non-broadcast consumer at 10^12 refs would need.
+    The rank is two-phase (queries/prefix.py), never a single-task global
+    window: range-partition on (-sz, media_ref), rank within ranges in
+    parallel, broadcast per-partition offsets back.  ``sz`` must be
+    non-NULL (run_page_stage coalesces it).
     """
-    spark = sizes.sparkSession
-    # NULL sizes (missing width/height metadata, NULL content) sort as 0:
-    # both the driver serpentine and the two-phase rank need a total order.
-    skinny = sizes.select(
-        "media_ref", F.coalesce(F.col("sz").cast("long"), F.lit(0)).alias("sz")
-    )
-    head: list | None = None
-    if assume_bounded:
-        head = skinny.collect()
-    elif driver_max > 0:
-        cached = skinny.persist()
-        if cached.count() <= driver_max:
-            head = cached.collect()
-        cached.unpersist()
-    # driver_max <= 0 means the caller already proved the frame is over
-    # the ceiling (run_page_stage's unbounded route): go straight to the
-    # two-phase rank — no persist, no count job
-    if head is not None:
-        return _bins_local_df(
-            spark, serpentine_bins([(r["media_ref"], r["sz"]) for r in head], n_bins)
-        )
     ranked = global_row_number(
-        skinny.withColumn("_neg_sz", -F.col("sz").cast("long")),
+        sizes.select("media_ref", (-F.col("sz").cast("long")).alias("_neg_sz")),
         ["_neg_sz", "media_ref"],
         "_rn",
     )
@@ -296,52 +249,17 @@ def assign_size_bins(
     )
 
 
-def repartition_by_size(
-    pages: DataFrame,
-    n_parts: int,
-    sizes: DataFrame | None = None,
-    bins: DataFrame | None = None,
-    broadcast_bins: bool = True,
-    assume_bounded: bool = True,
-) -> DataFrame:
-    """Spread (media_ref, content) rows over n_parts shuffle partitions
-    balancing total BYTES per partition, not row counts.  One byte-shuffle,
-    same as a plain repartition; the planning side-channel (sizes window +
-    bin join) touches only skinny columns.  Replaces round-robin for
-    corpora with variable page sizes (open risk in SURVEY.md §7: one giant
-    page can't be split, but it no longer drags a full round-robin share
-    of other pages with it).
-
-    ``sizes``: optional (media_ref, sz) frame.  Pass one derived from
-    METADATA columns (e.g. width*height) so the sizing branch's scan is
-    column-pruned to skinny columns — the default F.length(content) is
-    convenient but re-reads the byte column in the planning branch, which
-    a 100 TB media table cannot afford.  ``bins``: optional prebuilt
-    (media_ref, bin) frame (callers that already collected the sizes,
-    like run_page_stage's tile split, pass serpentine_bins output and no
-    planning job runs here at all).  ``broadcast_bins=False`` drops the
-    explicit broadcast hint for callers whose bins frame may exceed the
-    driver contract (run_page_stage's unbounded route) — AQE still
-    broadcasts small frames on its own; a genuinely huge bins frame joins
-    by shuffle on media_ref.  ``assume_bounded=False`` forwards the
-    count() gate to assign_size_bins when this function plans the bins
-    itself."""
-    spark = pages.sparkSession
-    if bins is None:
-        if sizes is None:
-            sizes = pages.select("media_ref", F.length("content").alias("sz"))
-        # assume_bounded (default): bins is broadcast into the page join
-        # below, so the planner's input is driver-sized by the same
-        # contract — take the one-job driver serpentine instead of
-        # spending a count() gate.  The numeric ceiling that makes the
-        # contract safe is extract._DRIVER_PLAN_MAX (see config.py's
-        # assume_bounded_refs note).
-        bins = assign_size_bins(sizes, n_parts, assume_bounded=assume_bounded)
-        broadcast_bins = broadcast_bins and assume_bounded
-    tokens = _partition_tokens(spark, n_parts)
+def repartition_by_size(pages: DataFrame, bins: DataFrame, n_parts: int) -> DataFrame:
+    """Route (media_ref, content) rows to the shuffle partition their
+    (media_ref, bin) row names: an inner join with ``bins`` (pages without
+    a bin drop out; the caller decides whether ``bins`` is broadcast),
+    then one byte-shuffle that sends bin b to EXACTLY partition b (see
+    _partition_tokens).  Balanced bins give byte-balanced partitions, so
+    one giant page no longer drags a full round-robin share of other
+    pages with it (SURVEY.md §7)."""
+    tokens = _partition_tokens(pages.sparkSession, n_parts)
     token_arr = F.array(*[F.lit(t) for t in tokens])
-    bins_side = F.broadcast(bins) if broadcast_bins else bins
-    routed = pages.join(bins_side, on="media_ref", how="inner").select(
+    routed = pages.join(bins, on="media_ref", how="inner").select(
         "media_ref",
         "content",
         F.element_at(token_arr, F.col("bin") + 1).alias("_route"),
@@ -360,122 +278,82 @@ def run_page_stage(
     media: DataFrame, refs: DataFrame, cfg: ExtractConfig, n_parts: int
 ) -> DataFrame:
     """The expensive image stage over the UNIQUE pages named by ``refs``
-    (a (media_ref) frame): restrict media to the refs, size-aware
-    repartition, ONE mapInPandas running K1-K21.  Returns the raw stage
-    output (cells + in-band lineage rows; split with
-    ``split_stage_output``).
+    (a (media_ref) frame): size the pages, deal them into ``n_parts``
+    byte-balanced bins, ONE mapInPandas running K1-K21 over the
+    repartitioned pages.  Returns the raw stage output (cells + in-band
+    lineage rows; split with ``split_stage_output``).
 
-    How media is restricted depends on the route.  On the bounded route
-    (width/height metadata, ref count under the driver contract) the sizes
-    are collected to the driver at build time and media joins the
-    broadcast bins frame and the giant list directly: the bins hold
-    exactly the refs' non-giant pages, so the plan the action runs never
-    re-derives the refs (for run_extract_stage, an explode + distinct of
-    the documents).  The other two routes semi-join media against the
-    broadcast refs first.  On the no-metadata route the bins are planned
-    from all of media, so that join is what restricts the pages.  On the
-    unbounded route the bins already hold only the refs' pages, but they
-    are not broadcast, so the semi-join keeps unreferenced page bytes out
-    of the (possibly shuffled) bins join.
+    One planner.  ``sizes`` is (media_ref, sz) for the refs' pages: sz is
+    width*height when media carries that metadata — so the planning scan
+    never re-reads image bytes — else length(content); NULL sizes count
+    as 0.  ``cfg.driver_plan_max`` picks one of two routes that differ
+    only in where the bins are dealt:
 
-    Byte economics: the refs/bins side (strings) is broadcast, so the big
-    image bytes are shuffled at most ONCE — by the explicit repartition
-    that also fixes the task count for the CPU-bound stage (AQE would
-    otherwise coalesce byte-sized partitions and starve the stage of
-    parallelism).  At 10^12-doc scale the same shape holds per checkpoint
-    bucket: the refs of one bucket are bounded, and media would be a
-    bucketed table co-partitioned by media_ref.
+    - driver route (None, or at most that many refs): ONE build-time
+      collect of the sizes, serpentine_bins on the driver, a zero-task
+      VALUES bins relation broadcast into the page join.  The bins hold
+      exactly the refs' non-giant pages, so the plan the action runs
+      never re-derives the refs (for run_extract_stage, an explode +
+      distinct of the documents).
+    - distributed route (above the ceiling): media is semi-joined to the
+      broadcast refs, the bins are ranked two-phase and shuffle-joined
+      (no broadcast hint), giants come from a filter on ``sizes``; no ref
+      list is materialized on the driver.
+
+    Both then repartition by bin (repartition_by_size) — unconditionally:
+    it pins the task count of the CPU-bound stage (AQE would otherwise
+    coalesce byte-sized partitions) and balances bytes per task — and run
+    the one UDF stage.  With metadata and deskew off, pages of at least
+    ``cfg.tile_threshold_px`` native pixels leave the per-page path for
+    the banded one (pipeline/tiling.py), so one 100x page cannot pin a
+    task for 100x the median task time; deskew is a global-rotation op
+    that cannot band.
+
+    Byte economics: the refs/bins side (strings) is broadcast on the
+    driver route, so the big image bytes are shuffled at most ONCE.  At
+    10^12-doc scale the same shape holds per checkpoint bucket: the refs
+    of one bucket are bounded, and media would be a bucketed table
+    co-partitioned by media_ref.
     """
-    pages = media.select("media_ref", "content")
-    udf = _make_extract_udf(cfg)
-    # ALWAYS shuffle the pages once, with SIZE-AWARE bin-packing
-    # (serpentine over size order, exact bin->partition routing):
-    # byte-balanced partitions, so one giant page doesn't drag a full
-    # round-robin share of ordinary pages into its task, and the task count
-    # of the CPU-bound kernel stage is pinned regardless of how the scan
-    # happened to split.  Unconditional by design: the earlier "skip if the
-    # scan is already wide" probe read unique_pages.rdd.getNumPartitions(),
-    # and touching .rdd forces a full plan-to-RDD conversion of the media
-    # scan on the driver per job — a planning cost (and a byte-column
-    # deserialization hazard) a 100 TB table cannot afford, for a shuffle
-    # the stage wants anyway (balance + fixed parallelism).  Page size
-    # comes from metadata columns (width*height) when available so the
-    # planning branch never re-reads image bytes; uniform sizes degrade to
-    # exact round-robin striping.
-    if not {"width", "height"} <= set(media.columns):
-        unique_pages = pages.join(F.broadcast(refs), on="media_ref", how="left_semi")
-        return repartition_by_size(unique_pages, n_parts).mapInPandas(
-            udf, schema=EXTRACT_STAGE_SCHEMA
-        )
-    sizes = media.join(F.broadcast(refs), on="media_ref", how="left_semi").select(
-        "media_ref",
-        # NULL width/height -> sz 0 (smallest bin, never tiled) so the
-        # driver-side giant filter and serpentine sort stay total
-        F.coalesce(F.col("width").cast("long") * F.col("height"), F.lit(0)).alias("sz"),
-    )
-    # Driver contract gate (config.assume_bounded_refs): the default
-    # asserts |unique refs| <= driver_plan_max (~2M rows ≈ 200 MB driver
-    # heap — the numeric contract lives on config.py) so planning costs
-    # ONE collect job, reused by both the serpentine and the giant-tile
-    # routing.  Opting out spends one skinny count() per stage build,
-    # uncached (a persist would outlive the lazily returned plan and pin
-    # the cache for the session); ref sets over the ceiling then plan
-    # fully distributed — two-phase bins, shuffle-joined (no broadcast
-    # hint), giants filtered by semi/anti join — with zero driver-side ref
-    # materialization.
-    bounded = cfg.assume_bounded_refs
-    if not bounded:
-        cap = cfg.driver_plan_max if cfg.driver_plan_max is not None else _DRIVER_PLAN_MAX
-        bounded = sizes.count() <= cap
-    # Giant-page tile split (pipeline/tiling.py): pages at or above
-    # tile_threshold_px native pixels leave the atomic per-page path for
-    # the banded one, so one 100x page cannot pin a task for 100x the
-    # median task time.  Deskew is a global-rotation op that cannot band —
-    # deskewing corpora keep the single-task path for giants too.
+    spark = media.sparkSession
+    metadata = {"width", "height"} <= set(media.columns)
     thr = cfg.tile_threshold_px
-    tiling = thr is not None and not cfg.deskew_enabled
-    if bounded:
-        # The routing decision reuses the SAME driver-side sizes collect
-        # the serpentine planner needs (bins is broadcast -> driver-sized
-        # by contract), so no extra job.
-        spark = media.sparkSession
+    tiling = metadata and thr is not None and not cfg.deskew_enabled
+    scoped = media.join(F.broadcast(refs), on="media_ref", how="left_semi")
+    sz = F.col("width").cast("long") * F.col("height") if metadata else F.length("content")
+    sizes = scoped.select("media_ref", F.coalesce(sz.cast("long"), F.lit(0)).alias("sz"))
+    giant_refs = None
+    # The driver contract gate: None trusts it (no job); a ceiling costs
+    # one parallel count() — not limit(n).collect(), which scans
+    # partitions serially — left uncached, since a persist would outlive
+    # the lazily returned plan.
+    cap = cfg.driver_plan_max
+    if cap is None or sizes.count() <= cap:
+        pages = media.select("media_ref", "content")
         pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
-        giant = [ref for ref, sz in pairs if tiling and sz >= thr]
-        bins = _bins_local_df(
-            spark,
-            serpentine_bins(
-                [p for p in pairs if not (tiling and p[1] >= thr)], n_parts
-            ),
+        giants = [(ref, 0) for ref, s in pairs if tiling and s >= thr]
+        bins = F.broadcast(
+            _bins_local_df(
+                spark,
+                serpentine_bins([p for p in pairs if not (tiling and p[1] >= thr)], n_parts),
+            )
         )
-        # the inner join with bins keeps exactly the non-giant refs' pages
-        out = repartition_by_size(pages, n_parts, bins=bins).mapInPandas(
-            udf, schema=EXTRACT_STAGE_SCHEMA
-        )
-        if not giant:
-            return out
-        from .tiling import run_tiled_page_stage
-
-        giant_df = _bins_local_df(spark, [(ref, 0) for ref in giant]).select("media_ref")
-        giant_pages = pages.join(F.broadcast(giant_df), on="media_ref", how="left_semi")
-        return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
-    unique_pages = pages.join(F.broadcast(refs), on="media_ref", how="left_semi")
-    if not tiling:
-        # driver_max=0: the count above already proved the frame is over
-        # the ceiling — go straight to the two-phase rank.
-        bins = assign_size_bins(sizes, n_parts, driver_max=0)
-        return repartition_by_size(
-            unique_pages, n_parts, bins=bins, broadcast_bins=False
-        ).mapInPandas(udf, schema=EXTRACT_STAGE_SCHEMA)
+        if giants:
+            giant_refs = F.broadcast(_bins_local_df(spark, giants).select("media_ref"))
+    else:
+        pages = scoped.select("media_ref", "content")
+        bins = assign_size_bins(sizes.filter(F.col("sz") < thr) if tiling else sizes, n_parts)
+        if tiling:
+            giant_refs = sizes.filter(F.col("sz") >= thr).select("media_ref")
+    out = repartition_by_size(pages, bins, n_parts).mapInPandas(
+        _make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA
+    )
+    if giant_refs is None:
+        return out
     from .tiling import run_tiled_page_stage
 
-    giant_refs = sizes.filter(F.col("sz") >= thr).select("media_ref")
-    normal_pages = unique_pages.join(giant_refs, on="media_ref", how="left_anti")
-    giant_pages = unique_pages.join(giant_refs, on="media_ref", how="left_semi")
-    bins = assign_size_bins(sizes.filter(F.col("sz") < thr), n_parts, driver_max=0)
-    normal_out = repartition_by_size(
-        normal_pages, n_parts, bins=bins, broadcast_bins=False
-    ).mapInPandas(udf, schema=EXTRACT_STAGE_SCHEMA)
-    return normal_out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
+    giant_pages = pages.join(giant_refs, on="media_ref", how="left_semi")
+    return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
 
 
 def split_stage_output(stage_out: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -3,17 +3,13 @@
 Media are opaque ``binary`` columns with typed metadata; every operator is
 an Arrow-batched ``mapInPandas`` stage (no per-row Python).  Image ops are
 REAL (this repo ships its own PNG codec + resize kernels), and so is PCM
-WAV audio (own RIFF codec, ``io/wav.py``).  Compressed audio and video
-decode is STUBBED — those codec libraries are not in this container — but
-the Spark-side plumbing (schemas, batch shapes, partitioning, UDF
-signatures) is real and tested; set ``deterministic_fake=True`` to replace
-the compressed decoder with a seeded fake so downstream stages can be
-exercised end-to-end.
+WAV audio (own RIFF codec, ``io/wav.py``).  Compressed audio raises
+NotImplementedError: its codec libraries are not available, and there is
+no video operator for the same reason.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -36,7 +32,6 @@ AUDIO_FEATURES_SCHEMA = (
     "duration_s double, rms double, zcr double, spectral_centroid_hz double, "
     "mfcc array<double>"
 )
-VIDEO_FRAMES_SCHEMA = "media_ref string, frame_index int, frame binary"
 
 
 def image_dims(media: DataFrame) -> DataFrame:
@@ -208,45 +203,32 @@ def phash_near_dup_pairs(phashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     ).where(f"hamming <= {max_hamming}")
 
 
-def _fake_signal(ref: str, content: bytes, n: int) -> np.ndarray:
-    """Deterministic pseudo-signal derived from the media bytes (stub body
-    for environments without audio/video codecs)."""
-    seed = int.from_bytes(hashlib.md5(ref.encode() + content[:64]).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(n)
-
-
-def audio_features(media: DataFrame, deterministic_fake: bool = False) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """Audio decode + signal features (duration, RMS, zero-crossing rate,
     spectral centroid, MFCC-ish log band energies).
 
     PCM WAV content (RIFF magic) is decoded for REAL by this repo's own
     stdlib/numpy codec (``io/wav.py`` — the PNG-codec precedent applied
     to the one audio container that needs no codec library).  Compressed
-    formats (MP3/AAC/...) remain environmental: with
-    ``deterministic_fake`` they decode as a seeded fake signal so the
-    plumbing can be exercised, otherwise they raise NotImplementedError.
+    formats (MP3/AAC/...) raise NotImplementedError.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..io.wav import decode_wav
 
-        def _decode(ref: str, content: bytes) -> tuple[np.ndarray, int]:
+        def _decode(content: bytes) -> tuple[np.ndarray, int]:
             # (n_frames, n_channels) float64 in [-1, 1], sample rate
             if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
                 return decode_wav(content)
-            if not deterministic_fake:
-                raise NotImplementedError(
-                    "compressed audio decoding requires a codec library not "
-                    "present in this container (PCM WAV decodes natively); "
-                    "pass deterministic_fake=True to exercise the plumbing"
-                )
-            return _fake_signal(ref, content, 16000)[:, None], 16000
+            raise NotImplementedError(
+                "compressed audio decoding requires a codec library this "
+                "package does not ship (PCM WAV decodes natively)"
+            )
 
         for pdf in batches:
             rows = []
             for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                frames, sr = _decode(ref, bytes(content))
+                frames, sr = _decode(bytes(content))
                 n_frames, n_ch = frames.shape
                 mono = frames.mean(axis=1) if n_ch > 1 else frames[:, 0]
                 rms = float(np.sqrt(np.mean(mono**2))) if n_frames else 0.0
@@ -279,34 +261,3 @@ def audio_features(media: DataFrame, deterministic_fake: bool = False) -> DataFr
             )
 
     return media.select("media_ref", "content").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
-def video_frame_sample(
-    media: DataFrame, every_n: int = 10, deterministic_fake: bool = False
-) -> DataFrame:
-    """Frame sampling (1 row in -> N frame rows out, UDTF-shaped).
-
-    STUB decode, same policy as audio_features; fake mode emits PNG frames
-    derived deterministically from the media bytes.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def _frames(ref: str, content: bytes) -> list[np.ndarray]:
-            if not deterministic_fake:
-                raise NotImplementedError(
-                    "video decoding requires a codec library not present in "
-                    "this container; pass deterministic_fake=True to exercise "
-                    "the pipeline plumbing"
-                )
-            sig = _fake_signal(ref, content, 3 * 16 * 16)
-            arr = ((sig - sig.min()) / (sig.ptp() + 1e-9) * 255).astype(np.uint8)
-            return [arr[i * 256 : (i + 1) * 256].reshape(16, 16) for i in range(3)]
-
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                for i, frame in enumerate(_frames(ref, bytes(content))):
-                    rows.append((ref, i * every_n, encode_gray(frame)))
-            yield pd.DataFrame(rows, columns=["media_ref", "frame_index", "frame"])
-
-    return media.select("media_ref", "content").mapInPandas(run, VIDEO_FRAMES_SCHEMA)

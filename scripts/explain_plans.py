@@ -48,10 +48,11 @@ def main() -> None:
         """What to check in this plan:
 - exactly ONE exchange carries image bytes (the size-aware repartition
   feeding `MapInPandas`); every other exchange moves skinny text rows
-- the sizing branch scans parquet with `ReadSchema` pruned to
-  `media_ref,width,height` — image bytes are never read twice
-- the distinct-refs side reaches the media scan as a broadcast
-  (`BroadcastExchange` + `BroadcastHashJoin ... LeftSemi`)
+- no sizing branch: the page sizes (`width*height` metadata) are
+  collected once at build time and dealt into bins on the driver, so the
+  media scan meets them as a broadcast local relation
+  (`BroadcastExchange` over `LocalTableScan` + `BroadcastHashJoin ...
+  Inner`) and the plan neither re-reads image bytes nor re-derives the refs
 - `MapInPandas` appears ONCE (the whole K1-K21 kernel chain); there is no
   `BatchEvalPython` (row-at-a-time Python) anywhere
 - the order restore is a single `Window` over (doc_id, offset, row, col)

@@ -14,7 +14,15 @@ from bsc_project_spark.pipeline.extract import (
     _partition_tokens,
     assign_size_bins,
     repartition_by_size,
+    serpentine_bins,
 )
+
+
+def _length_bins(pages, n):
+    """Two-phase bins over the pages' byte lengths."""
+    return assign_size_bins(
+        pages.select("media_ref", F.length("content").alias("sz")), n
+    )
 
 
 def test_partition_tokens_route_exactly(spark):
@@ -64,7 +72,7 @@ def test_repartition_by_size_byte_balance(spark):
         for i in range(32)
     ]
     pages = spark.createDataFrame(rows, "media_ref string, content binary")
-    routed = repartition_by_size(pages, 4)
+    routed = repartition_by_size(pages, _length_bins(pages, 4), 4)
     per_part = (
         routed.select(
             F.spark_partition_id().alias("pid"), F.length("content").alias("sz")
@@ -86,7 +94,7 @@ def test_repartition_by_size_handles_fewer_pages_than_bins(spark):
     pages = spark.createDataFrame(
         [("a", b"xx"), ("b", b"yyyy")], "media_ref string, content binary"
     )
-    routed = repartition_by_size(pages, 8)
+    routed = repartition_by_size(pages, _length_bins(pages, 8), 8)
     assert routed.count() == 2
     assert routed.rdd.getNumPartitions() == 8
 
@@ -141,19 +149,17 @@ def test_flagship_job_has_no_single_partition_exchange(spark):
 
 
 def test_assign_size_bins_fallback_is_two_phase_and_agrees(spark):
-    """Forcing the distributed fallback (driver_max=0): its plan is a
-    range exchange + partitioned window + broadcast offsets — never a
-    global-order (unpartitioned) window — and its serpentine assignment
-    is row-identical to the driver path's."""
+    """The distributed planner: its plan is a range exchange + partitioned
+    window + broadcast offsets — never a global-order (unpartitioned)
+    window — and its serpentine assignment is row-identical to the driver
+    route's serpentine_bins on the collected rows."""
     df = spark.range(0, 500).selectExpr(
         "concat('p', id) AS media_ref", "(id * 7919) % 4096 + 1 AS sz"
     )
-    fallback = assign_size_bins(df, 8, driver_max=0)
+    fallback = assign_size_bins(df, 8)
     plan = fallback._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     assert "rangepartitioning" in plan
 
-    driver = assign_size_bins(df, 8)
-    assert sorted(map(tuple, fallback.collect())) == sorted(
-        map(tuple, driver.collect())
-    )
+    driver = serpentine_bins([(r.media_ref, r.sz) for r in df.collect()], 8)
+    assert sorted(map(tuple, fallback.collect())) == sorted(driver)

@@ -101,11 +101,9 @@ def test_duplicate_refs_in_one_doc_fan_out(spark, one_page):
 
 def test_unbounded_route_leaves_no_cached_frames(spark, corpus):
     """The fully-distributed planning route (count gate over the ceiling,
-    two-phase bins, giant semi/anti joins) returns a lazy plan: once the
+    two-phase bins, giant semi-join) returns a lazy plan: once the
     caller releases ``stage``, nothing the route built may stay cached."""
-    cfg = dataclasses.replace(
-        FIXTURE_CONFIG, assume_bounded_refs=False, driver_plan_max=0
-    )
+    cfg = dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)
     cached = spark.sparkContext._jsc.getPersistentRDDs

@@ -104,11 +104,11 @@ def test_extraction_broadcasts_refs_side(spark, corpus):
         )
 
     # the refs side that restricts media must be broadcast (page bytes
-    # never shuffle for it): the bins join on the bounded route (width/
-    # height metadata), the unique-refs semi-join on the no-metadata route
-    join = r"BroadcastHashJoin \[media_ref#\d+\], \[media_ref#\d+\], {}"
-    assert re.search(join.format("Inner"), plan_of(media))
-    assert re.search(join.format("LeftSemi"), plan_of(media.drop("width", "height")))
+    # never shuffle for it): with or without width/height metadata, media
+    # joins the broadcast bins, which hold exactly the refs' pages
+    join = r"BroadcastHashJoin \[media_ref#\d+\], \[media_ref#\d+\], Inner"
+    assert re.search(join, plan_of(media))
+    assert re.search(join, plan_of(media.drop("width", "height")))
 
 
 def test_bounded_page_stage_does_not_recompute_refs(spark, corpus):

@@ -13,8 +13,11 @@
    (Spark's SQL parser processes backslash escapes in string literals —
    unescaped they corrupt the ref and silently drop pages from the
    inner/semi bins joins).
-4. NULL page sizes (missing width/height metadata) must sort as 0 in
-   the serpentine planner, not TypeError the driver.
+4. NULL page sizes (missing width/height metadata) count as 0 where
+   run_page_stage builds its sizes, so both planner routes still match
+   the golden spans.
+5. The driver_plan_max gate is a numeric switch for media with and
+   without width/height metadata alike.
 """
 
 from __future__ import annotations
@@ -199,39 +202,45 @@ def test_bins_local_df_roundtrips_backslash_refs(spark):
     assert got == sorted(refs)
 
 
-def test_serpentine_and_assign_bins_tolerate_null_sizes(spark):
-    from bsc_project_spark.pipeline.extract import (
-        assign_size_bins,
-        serpentine_bins,
-    )
+def test_null_page_size_matches_golden_on_both_routes(spark, corpus):
+    """A page with NULL width counts as size 0 on both planner routes (the
+    driver serpentine and the two-phase rank both need a total order) and
+    is still extracted: spans equal the golden on each route."""
+    import dataclasses
 
-    # driver-side pure function: None sorts as 0 (smallest), no TypeError
-    out = dict(serpentine_bins([("a", 100), ("b", None), ("c", 50)], 2))
-    assert set(out) == {"a", "b", "c"} and set(out.values()) <= {0, 1}
+    from pyspark.sql import functions as F
 
-    sizes = spark.createDataFrame(
-        [("a", 100), ("b", None), ("c", 50)], "media_ref string, sz long"
+    from bsc_project_spark.fixtures import spark_io
+    from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
+    from bsc_project_spark.pipeline import extract as ex
+
+    docs = spark_io.documents_df(spark, corpus)
+    ref = next(
+        s["media_ref"]
+        for r in corpus.documents.itertuples()
+        for s in r.spans
+        if s["kind"] == "media"
     )
-    for bounded in (True, False):
-        bins = assign_size_bins(sizes, 2, assume_bounded=bounded)
-        rows = {r.media_ref: r.bin for r in bins.collect()}
-        assert set(rows) == {"a", "b", "c"}
-        assert all(b in (0, 1) for b in rows.values())
-    # the fully-distributed two-phase path (driver_max=0 forces it)
-    bins = assign_size_bins(sizes, 2, driver_max=0)
-    rows = {r.media_ref: r.bin for r in bins.collect()}
-    assert set(rows) == {"a", "b", "c"}
+    media = spark_io.media_df(spark, corpus).withColumn(
+        "width",
+        F.when(F.col("media_ref") == ref, F.lit(None)).otherwise(F.col("width")),
+    )
+    golden = sorted(map(tuple, spark_io.golden_df(spark, corpus).collect()))
+    for cfg in (FIXTURE_CONFIG, dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)):
+        out = ex.run_extract_stage(docs, media, cfg).extracted
+        assert sorted(map(tuple, out.collect())) == golden, cfg.driver_plan_max
 
 
 def test_unbounded_refs_route_plans_fully_distributed(spark, monkeypatch):
     """Verdict-r4 item 6: the bins-planner driver contract must be a
-    numeric SWITCH, not just a comment.  With assume_bounded_refs=False
-    and the ceiling forced to 0, run_extract_stage must take the
-    fully-distributed planning route — two-phase bins (shuffle-joined),
-    giants filtered by semi/anti join — and produce span-for-span the
-    same output as the default driver-serpentine route.  The driver-side
-    planners (serpentine_bins / _bins_local_df) are monkeypatched into
-    bombs to PROVE no ref list is materialized on the driver."""
+    numeric SWITCH, not just a comment.  With the ceiling
+    driver_plan_max=0, run_extract_stage must take the fully-distributed
+    planning route — two-phase bins (shuffle-joined), giants filtered by
+    semi-join — and produce span-for-span the same output as the default
+    driver-serpentine route, for media with width/height metadata and for
+    media sized by byte length alike.  The driver-side planners
+    (serpentine_bins / _bins_local_df) are monkeypatched into bombs to
+    PROVE no ref list is materialized on the driver."""
     import dataclasses
 
     from bsc_project_spark.fixtures import spark_io
@@ -241,24 +250,25 @@ def test_unbounded_refs_route_plans_fully_distributed(spark, monkeypatch):
     corpus = build_corpus(n_docs=3)
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)
+    frames = {"metadata": media, "no metadata": media.drop("width", "height")}
 
-    base = ex.run_extract_stage(docs, media, FIXTURE_CONFIG).extracted
-    base_rows = sorted(map(tuple, base.collect()))
-    assert base_rows, "fixture corpus extracted nothing"
+    def spans(m, cfg):
+        return sorted(map(tuple, ex.run_extract_stage(docs, m, cfg).extracted.collect()))
 
-    cfg = dataclasses.replace(
-        FIXTURE_CONFIG, assume_bounded_refs=False, driver_plan_max=0
-    )
+    base = {k: spans(m, FIXTURE_CONFIG) for k, m in frames.items()}
+    assert all(base.values()), "fixture corpus extracted nothing"
+
+    cfg = dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)
     # tiling stays enabled (tile_threshold_px is the default 12M px) so
-    # the distributed giant semi/anti-join branch runs too (empty giants)
+    # the distributed giant semi-join branch runs too (empty giants)
 
     def bomb(*a, **k):  # pragma: no cover - firing IS the failure
         raise AssertionError("driver-side planner ran on the distributed route")
 
     monkeypatch.setattr(ex, "serpentine_bins", bomb)
     monkeypatch.setattr(ex, "_bins_local_df", bomb)
-    out = ex.run_extract_stage(docs, media, cfg).extracted
-    assert sorted(map(tuple, out.collect())) == base_rows
+    for k, m in frames.items():
+        assert spans(m, cfg) == base[k], k
 
 
 def test_register_views_cache_self_heals_after_drop(spark):

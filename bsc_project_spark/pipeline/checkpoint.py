@@ -4,9 +4,8 @@ The north rule requires the job to be resumable from the last committed
 snapshot with per-partition lineage rows.  pyspark 4.1.2 ships no Iceberg
 runtime, so commits are emulated with identical semantics (documented
 fallback, SURVEY.md §7 step 5): a unit of output becomes *committed* only
-when the manifest JSON is atomically replaced (write-temp + rename, the
-same atomicity primitive an Iceberg snapshot commit relies on), and
-readers see only committed units.
+when a snapshot naming it is claimed, and readers see only committed
+units.
 
 Two independently-resumable stages, because the unit of expensive work
 (a unique page) and the unit of output (a document) have different keys:
@@ -28,8 +27,8 @@ lineage) and ``_commit_docs`` (data, errors, doc-id ledger, doc lineage).
 
 On-disk layout under ``out_dir``::
 
-    _manifest.json                  current snapshot (the atomic pointer)
-    snapshots/vN.json               every snapshot, immutable
+    snapshots/vN.json               every snapshot, immutable; the newest
+                                    is the current table state
     refs/                           distinct media_refs of the base input
     refs_updates/update=U           refs update U extracted (new pages only)
     cells/pbucket=K, cells/update=U         OCR cells of the unit's pages
@@ -54,11 +53,31 @@ buckets the anti-join reduces to skipping bucket ids, zero recompute).
 A crash mid-page-stage resumes page extraction; a crash mid-doc-stage
 never re-runs any image kernel at all.
 
-Snapshot history is append-only: every commit freezes its manifest under
-``snapshots/vN.json`` before atomically flipping the current pointer, so
+Commit rule: ``_commit_manifest`` is the only writer of table state.  It
+reads the newest snapshot vM, applies its changes, writes the whole new
+state to a temp file unique to the committer (``.commit-*.tmp`` beside
+``snapshots/``) and claims ``snapshots/vN.json``, N = M + 1, with a hard
+link — an exclusive create that fails if vN exists.  The loser of a race
+for vN raises ``CommitConflict`` and changes no snapshot; it is not
+retried (a resumed job or a replayed stream batch recommits it).  A
+committer that dies before the claim leaves only its temp file, which no
+reader lists; one that dies after the claim has committed.  Either way,
+re-running the job resumes with no cleanup.  History is append-only, so
 ``read_extracted(..., as_of=N)`` time-travels to any past commit and
 ``rollback(out_dir, N)`` re-points the table at an older state as a NEW
 snapshot (Iceberg snapshot/rollback semantics on plain parquet + JSON).
+
+Concurrency contract: ONE writer of units — a base run, or the update
+stream — plus maintenance commits from anywhere.  No commit is lost: of
+two commits built on the same snapshot, one lands and the other raises.
+``compact`` (one at a time: two would write the same ``compacted=C``
+dir) and ``expire_snapshots`` are safe while units are being written.
+``rollback`` is safe between unit writes: a unit writer's commit
+re-states the unit keys it owns (committed buckets; committed updates
+and their tags) from the view it read at its start, so it would
+re-commit what a rollback landing mid-write un-committed.  Two
+concurrent unit writers are NOT supported: both would pick the same
+``update=U`` / ``bucket=K`` directories before either commits.
 
 The reference's analogue is ``ocr_generate_more_crops`` resuming crop
 numbering from files already on disk (reference
@@ -70,6 +89,7 @@ from __future__ import annotations
 import copy
 import json
 import os
+import re
 import time
 import uuid
 
@@ -109,72 +129,86 @@ _TABLE_STATE = {
 }
 
 
-def _manifest_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_manifest.json")
+class CommitConflict(RuntimeError):
+    """Another committer claimed the snapshot id this commit was about to
+    claim; nothing of this commit became visible."""
 
 
 def _snapshots_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "snapshots")
 
 
+def _snapshot_path(out_dir: str, snapshot_id: int) -> str:
+    return os.path.join(_snapshots_dir(out_dir), f"v{snapshot_id}.json")
+
+
+def _snapshot_ids(out_dir: str) -> list[int]:
+    """Ids of the committed snapshots, ascending."""
+    snaps = _snapshots_dir(out_dir)
+    if not os.path.isdir(snaps):
+        return []
+    return sorted(
+        int(m.group(1)) for name in os.listdir(snaps)
+        if (m := re.fullmatch(r"v(\d+)\.json", name))
+    )
+
+
 def read_manifest(out_dir: str, as_of: int | None = None) -> dict:
-    """Current manifest, or (time travel) the immutable state at snapshot
-    ``as_of`` — the manifest every commit froze under ``snapshots/vN.json``
-    before flipping the current pointer.  Table keys a manifest does not
-    store read as their empty-table value."""
-    path = _manifest_path(out_dir)
-    if as_of is not None:
-        path = os.path.join(_snapshots_dir(out_dir), f"v{as_of}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"no snapshot v{as_of} under {out_dir}")
-    stored = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            stored = json.load(f)
+    """The current table state — the newest snapshot — or (time travel)
+    the state at snapshot ``as_of``.  Table keys a snapshot does not store
+    read as their empty-table value; a table with no snapshot reads as
+    empty."""
+    if as_of is None:
+        ids = _snapshot_ids(out_dir)
+        if not ids:
+            return copy.deepcopy(_TABLE_STATE)
+        as_of = ids[-1]
+    path = _snapshot_path(out_dir, as_of)
+    if not os.path.exists(path):
+        raise ValueError(f"no snapshot v{as_of} under {out_dir}")
+    with open(path) as f:
+        stored = json.load(f)
     return {**copy.deepcopy(_TABLE_STATE), **stored}
 
 
 def _commit_manifest(out_dir: str, changes: dict, source: dict | None = None) -> dict:
-    """Atomic snapshot commit, Iceberg-style: write the new state as an
-    IMMUTABLE numbered snapshot file first, then flip the current pointer
-    with an atomic rename.  A reader holding snapshot N is never affected
-    by later commits; a crash between the two writes leaves the pointer on
-    the previous fully-written snapshot.
+    """Commit one snapshot: the only writer of table state.
 
-    The new state is ``source``'s table state (default: the current
-    manifest's) with ``changes`` applied; keys left at None are not
-    written."""
+    The new state is ``source``'s table state (default: the newest
+    snapshot's) with ``changes`` applied; keys left at None are not
+    written.  It is written whole to a temp file unique to this committer,
+    outside ``snapshots/``, then hard-linked to ``snapshots/vN.json`` with
+    N = newest + 1.  The link is an exclusive create: if another committer
+    claimed vN first, this commit raises ``CommitConflict`` and no file
+    under ``snapshots/`` changes."""
     prev = read_manifest(out_dir)
     source = prev if source is None else source
     state = {k: source[k] for k in _TABLE_STATE} | changes
     manifest = {k: v for k, v in state.items() if v is not None}
-    manifest["snapshot_id"] = int(prev.get("snapshot_id") or 0) + 1
+    sid = manifest["snapshot_id"] = int(prev.get("snapshot_id") or 0) + 1
     manifest["committed_at_ms"] = int(time.time() * 1000)
-    sid = manifest["snapshot_id"]
-    snaps = _snapshots_dir(out_dir)
-    os.makedirs(snaps, exist_ok=True)
-    spath = os.path.join(snaps, f"v{sid}.json")
-    with open(spath + ".tmp", "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(spath + ".tmp", spath)
-    tmp = _manifest_path(out_dir) + ".tmp"
+    os.makedirs(_snapshots_dir(out_dir), exist_ok=True)
+    tmp = os.path.join(out_dir, f".commit-{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir))  # atomic pointer flip
+    try:
+        os.link(tmp, _snapshot_path(out_dir, sid))
+    except FileExistsError:
+        raise CommitConflict(
+            f"snapshot v{sid} of {out_dir} was committed by another writer"
+        ) from None
+    finally:
+        os.remove(tmp)
     return manifest
 
 
 def list_snapshots(out_dir: str) -> list[dict]:
     """Snapshot history, oldest first (id, commit time, bucket progress)."""
-    snaps = _snapshots_dir(out_dir)
-    if not os.path.isdir(snaps):
-        return []
     out = []
-    for name in os.listdir(snaps):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(snaps, name)) as f:
-                out.append(json.load(f))
-    return sorted(out, key=lambda m: m["snapshot_id"])
+    for sid in _snapshot_ids(out_dir):
+        with open(_snapshot_path(out_dir, sid)) as f:
+            out.append(json.load(f))
+    return out
 
 
 def rollback(out_dir: str, snapshot_id: int) -> dict:
@@ -623,31 +657,30 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
 
 
 def expire_snapshots(out_dir: str, keep_from: int) -> list[str]:
-    """Drop snapshots older than ``keep_from`` and garbage-collect doc-output
-    dirs no RETAINED snapshot references (Iceberg expire_snapshots +
-    remove_orphan_files in one).  Returns the deleted paths.  Cells and
-    lineage are never collected — incremental updates anti-join against
-    them regardless of snapshot retention."""
+    """Drop snapshots older than ``keep_from`` and garbage-collect the
+    doc-output dirs only the dropped snapshots reference (Iceberg
+    expire_snapshots).  Returns the deleted paths.  A dir no snapshot has
+    referenced yet — a unit still being written — is left alone.  Cells
+    and lineage are never collected — incremental updates anti-join
+    against them regardless of snapshot retention."""
     import shutil
 
-    kept = [m for m in list_snapshots(out_dir) if m["snapshot_id"] >= keep_from]
+    snaps = list_snapshots(out_dir)
+    kept = [m for m in snaps if m["snapshot_id"] >= keep_from]
     if not kept:
         raise ValueError(f"keep_from={keep_from} would drop every snapshot")
-    referenced: set[str] = set()
-    for m in kept:
-        referenced.update(os.path.abspath(p) for p in _data_paths(out_dir, m))
+
+    def referenced(manifests: list[dict]) -> set[str]:
+        return {os.path.abspath(p) for m in manifests for p in _data_paths(out_dir, m)}
+
     deleted = []
-    data_root = os.path.join(out_dir, "data")
-    if os.path.isdir(data_root):
-        for name in sorted(os.listdir(data_root)):
-            p = os.path.abspath(os.path.join(data_root, name))
-            if p not in referenced:
-                shutil.rmtree(p)
-                deleted.append(p)
-    snaps = _snapshots_dir(out_dir)
-    for m in list_snapshots(out_dir):
+    for p in sorted(referenced(snaps) - referenced(kept)):
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+            deleted.append(p)
+    for m in snaps:
         if m["snapshot_id"] < keep_from:
-            p = os.path.join(snaps, f"v{m['snapshot_id']}.json")
+            p = _snapshot_path(out_dir, m["snapshot_id"])
             os.remove(p)
             deleted.append(p)
     return deleted

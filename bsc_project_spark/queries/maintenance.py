@@ -180,7 +180,7 @@ _KS_DISTANCE = """
 # Grid note (r5 verdict): the grid is the EXACT distinct value set, not
 # quantile buckets — distinct document lengths are bounded by the max
 # document size (a few thousand values however large the corpus), so
-# the lang x grid frame stays small at any scale and no bucketing knob
+# the lang x grid frame stays small at any scale and no bucket-count knob
 # is needed; a value domain that were genuinely unbounded (e.g. float
 # scores) would need a quantile grid here.
 #

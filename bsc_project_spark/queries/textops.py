@@ -378,10 +378,10 @@ QUERIES["q_minhash_est"] = QuerySpec(
 # graph.  LSH pairs are only EDGES; a dedup pipeline must group A~B, B~C
 # into one cluster {A,B,C} with one survivor, which is graph connectivity —
 # not expressible as a fixed-depth join.  Spark side: iterative min-label
-# propagation (each round: edges ⋈ labels, groupBy(min), converge when no
-# label changes — O(component diameter) rounds, and dedup components are
-# near-cliques so the diameter is tiny; the general-graph scale path is
-# the large-star/small-star algorithm, same per-round plan).  Oracle:
+# propagation with pointer jumping (each round: edges ⋈ labels,
+# groupBy(min), label <- label(label); converge when no label changes —
+# O(log component diameter) rounds, and dedup components are near-cliques
+# so the diameter is tiny), or driver union-find under an edge budget.  Oracle:
 # DuckDB WITH RECURSIVE reachability — the declarative spec of the same
 # fixpoint.
 # ---------------------------------------------------------------------------
@@ -474,8 +474,8 @@ def connected_components(
       self-join) — the jump doubles the propagation radius per round, so
       convergence is O(log diameter) rounds instead of O(diameter): the
       sf0.1 near-dup graph has diameter-16 chains that took 16 rounds
-      with step (1) alone and take 5 with both.  Same round structure as
-      large-star/small-star, which is the fully-general scale path.
+      with step (1) alone and take 5 with both.  Exhausting
+      ``max_rounds`` before a round changes no label raises.
 
     Each round's frames are materialized, so round k plans against a
     leaf instead of nesting all k-1 predecessors — Catalyst re-optimizing
@@ -542,102 +542,12 @@ def connected_components(
         changed = merged.where("new_label <> old_label").count()
         labels = merged.selectExpr("node", "new_label AS label")
         if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(pairs, max_rounds: int = 50):
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    fully-general distributed path the pointer-jump fixpoint's docstring
-    points at.  Unlike min-label propagation, each round REWIRES the edge
-    set itself toward star graphs, so high-degree skew self-heals: a hub
-    node's neighborhood shrinks every round instead of funneling its whole
-    component through one reducer key.
-
-    Per round (2 shuffle ops each for large + small):
-      large-star: per node u with neighborhood mins m = min(N(u) ∪ {u}),
-        re-point every LARGER neighbor v > u at m;
-      small-star: re-point every neighbor v <= u (and u itself) at m.
-    Fixpoint = the edge set stops changing (order-insensitive checksum);
-    converged edges are stars whose centers are the component minima.
-
-    Returns (node, label) with label = component min — identical contract
-    to ``connected_components`` (property-pinned in tests against a
-    union-find oracle on random graphs).
-    """
-    from pyspark.sql import functions as F
-
-    # node set from the RAW pairs (before the self-loop filter): a node
-    # whose only edge is a self-loop is still a (singleton) component and
-    # must appear in the output, matching the other strategies' contract
-    nodes = materialize(
-        pairs.selectExpr("a_id AS node")
-        .union(pairs.selectExpr("b_id AS node"))
-        .distinct()
-    )
-    edges = materialize(
-        pairs.selectExpr("a_id AS u", "b_id AS v")
-        .where("u <> v")
-        .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
-        .distinct()
-    )
-
-    def _star(e, keep_larger: bool):
-        sym = e.union(e.selectExpr("v AS u", "u AS v"))
-        nm = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        joined = sym.join(nm, "u").selectExpr(
-            "u", "v", "least(mv, u) AS m"
-        )
-        if keep_larger:  # large-star: re-point strictly larger neighbors
-            out = joined.where("v > u").selectExpr("v AS a", "m AS b")
-        else:  # small-star: re-point <= neighbors and u itself
-            out = joined.where("v <= u").selectExpr("v AS a", "m AS b").union(
-                joined.selectExpr("u AS a", "m AS b")
-            )
-        return materialize(
-            out.where("a <> b")
-            .selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-            .distinct()
-        )
-
-    def _sig(e):
-        # order-insensitive edge-set checksum; bit_xor cannot overflow
-        # (ANSI mode makes a sum of raw hashes throw on long overflow)
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    prev = _sig(edges)
-    converged = False
-    for _ in range(max_rounds):
-        edges = _star(_star(edges, keep_larger=True), keep_larger=False)
-        sig = _sig(edges)
-        if sig == prev:
-            converged = True
-            break
-        prev = sig
-    if not converged:
-        # the center extraction below assumes converged stars; silently
-        # returning labels from a non-converged graph would be WRONG
-        # labels with no signal.  Alternating large/small-star converges
-        # in O(log^2 n) rounds (Kiveris et al. Thm 2), so hitting this
-        # means max_rounds was set far too low for the graph, not a
-        # semantic failure — raise and let the caller raise the budget.
-        raise RuntimeError(
-            f"connected_components_star: edge set still changing after "
-            f"{max_rounds} rounds; raise max_rounds (O(log^2 n) suffices)"
-        )
-    # converged stars: every non-center node has its center as min
-    # neighbor; centers (and isolated-after-dedup nodes) label themselves
-    centers = edges.groupBy(F.col("v").alias("node")).agg(
-        F.min("u").alias("label")
-    )
-    return (
-        nodes.join(centers, "node", "left")
-        .selectExpr("node", "coalesce(label, node) AS label")
+            return labels
+    # labels that still changed in the last round are not component
+    # minima: returning them would be wrong labels with no signal
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_rounds} "
+        "rounds; raise max_rounds (O(log diameter) rounds suffice)"
     )
 
 
@@ -1815,7 +1725,7 @@ _q(
 )
 
 # ---------------------------------------------------------------------------
-# Quality-curriculum bucketing: exact global deciles over an
+# Quality-curriculum deciles: exact global deciles over an
 # INTEGER-EXACT quality score, without a single-task sort.
 #
 # Curriculum learning orders pretraining data from "easiest/cleanest" to

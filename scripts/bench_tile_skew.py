@@ -22,13 +22,13 @@ Usage: python scripts/bench_tile_skew.py   (env: SPARK_GRAFT_TILE_CPUS)
 
 from __future__ import annotations
 
-import glob
-import hashlib
 import json
 import os
 import subprocess
 import sys
 import tempfile
+
+from scaling_tasklog import event_log_env, task_end_events  # same dir
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -37,26 +37,16 @@ import hashlib, json, os, sys, time
 sys.path.insert(0, {repo!r})
 import dataclasses
 import numpy as np
-from pyspark.sql import SparkSession, functions as F
 from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG, build_corpus, page_spec
 from bsc_project_spark.fixtures.render import render_page
 from bsc_project_spark.io.png import encode_gray
 from bsc_project_spark.pipeline.extract import run_extract_stage
+from bsc_project_spark.pipeline.session import get_spark
 
-cores = int(sys.argv[1]); tile_on = sys.argv[2] == "on"; log_dir = sys.argv[3]
-spark = (SparkSession.builder.appName(f"tileskew-{{'on' if tile_on else 'off'}}")
-    .master(f"local[{{cores}}]")
-    .config("spark.sql.shuffle.partitions", str(cores * 2))
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-    .config("spark.ui.enabled", "false")
-    .config("spark.eventLog.enabled", "true")
-    .config("spark.eventLog.dir", log_dir)
-    .config("spark.eventLog.rolling.enabled", "false")
-    .config("spark.eventLog.compress", "false")
-    .getOrCreate())
+cores = int(sys.argv[1]); tile_on = sys.argv[2] == "on"
+spark = get_spark(f"tileskew-{{'on' if tile_on else 'off'}}",
+                  master=f"local[{{cores}}]", shuffle_partitions=cores * 2)
 spark.range(1000).selectExpr("sum(id)").collect()
 def _warm(it):
     import numpy as _np  # noqa
@@ -92,25 +82,6 @@ spark.stop()
 """
 
 
-def task_durations(log_dir: str) -> list[float]:
-    out = []
-    for path in glob.glob(os.path.join(log_dir, "**"), recursive=True):
-        if os.path.isdir(path) or os.path.basename(path).startswith((".", "appstatus")):
-            continue
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if ev.get("Event") != "SparkListenerTaskEnd":
-                    continue
-                ti = ev.get("Task Info") or {}
-                if "Launch Time" in ti and "Finish Time" in ti:
-                    out.append((ti["Finish Time"] - ti["Launch Time"]) / 1000.0)
-    return out
-
-
 def run_mode(mode: str, cores: int) -> dict:
     with tempfile.TemporaryDirectory() as log_dir:
         script = WORKER.format(repo=REPO)
@@ -118,9 +89,12 @@ def run_mode(mode: str, cores: int) -> dict:
             f.write(script)
             worker = f.name
         try:
+            env = event_log_env(log_dir)
+            # the 315M-px page needs more than get_spark's 8g default
+            env.setdefault("SPARK_DRIVER_MEM", "16g")
             p = subprocess.run(
-                [sys.executable, worker, str(cores), mode, log_dir],
-                capture_output=True, text=True, timeout=1800,
+                [sys.executable, worker, str(cores), mode],
+                capture_output=True, text=True, timeout=1800, env=env,
             )
             res = None
             for line in p.stdout.splitlines():
@@ -128,7 +102,10 @@ def run_mode(mode: str, cores: int) -> dict:
                     res = json.loads(line[len("TILESKEW "):])
             if res is None:
                 raise RuntimeError(f"worker failed:\n{p.stdout[-3000:]}\n{p.stderr[-3000:]}")
-            durs = sorted(task_durations(log_dir))
+            durs = sorted(
+                (ev["Task Info"]["Finish Time"] - ev["Task Info"]["Launch Time"]) / 1000.0
+                for ev in task_end_events(log_dir)
+            )
             res["max_task_sec"] = round(durs[-1], 2) if durs else None
             res["p50_task_sec"] = round(durs[len(durs) // 2], 3) if durs else None
             res["n_tasks"] = len(durs)

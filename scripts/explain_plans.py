@@ -212,7 +212,7 @@ one (~5x wall measured at 3 iterations).
 `pipeline/checkpoint.py` runs the doc stage as a driver loop over
 checkpoint buckets: each iteration filters `documents` to one
 `pmod(xxhash64(doc_id), n_buckets)` bucket, assembles spans, writes, and
-commits the manifest.  This serialization is the DELIBERATE checkpoint
+commits one snapshot.  This serialization is the DELIBERATE checkpoint
 granularity: one bucket = one atomically-committed unit of resumable work,
 and each pass's scan is pruned to skinny columns.  The scaling envelope:
 the loop body is O(1) driver work plus one Spark job, so the driver cost
@@ -244,16 +244,14 @@ applies to join selection:
   predecessors.  The edge frame hash-partitions once on the join key with
   a partition count sized from the edge count (~2M rows/task, floor 8);
   every round then shuffles only the skinny labels side.  At 10^9 docs a
-  post-LSH candidate graph of 10^8-10^9 edges stays fully distributed; for
-  high-degree skew `connected_components_star` implements the fully
-  general large-star/small-star algorithm (each round REWIRES the edge
-  set toward stars, so a hub's neighborhood shrinks every round instead
-  of funneling its component through one reducer key; fixpoint detected
-  by an order-insensitive bit_xor edge checksum).
+  post-LSH candidate graph of 10^8-10^9 edges stays fully distributed.
+  The fixpoint stops at the first round that changes no label; exhausting
+  `max_rounds` before that raises instead of returning labels that are
+  not component minima.
 
-All three strategies (driver union-find, pointer-jump fixpoint,
-large-star/small-star) are pinned equal against a union-find oracle on
-random graphs by `tests/test_new_ops.py`.
+Both strategies (driver union-find, pointer-jump fixpoint) are pinned
+equal against a union-find oracle on random graphs by
+`tests/test_new_ops.py`.
 
 ## SimHash production config (`q_simhash_pairs` / `phash_near_dup_pairs`) — band math
 

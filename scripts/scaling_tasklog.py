@@ -33,27 +33,13 @@ WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
-from pyspark.sql import SparkSession
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
 from bsc_project_spark.pipeline.extract import run_extract_stage
+from bsc_project_spark.pipeline.session import get_spark
 
-cores = int(sys.argv[1]); corpus_dir = sys.argv[2]; log_dir = sys.argv[3]
-spark = (SparkSession.builder.appName(f"tasklog-{{cores}}")
-    .master(f"local[{{cores}}]")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.shuffle.partitions", str(max(32, cores * 4)))
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
-    .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-    .config("spark.ui.enabled", "false")
-    .config("spark.eventLog.enabled", "true")
-    .config("spark.eventLog.dir", log_dir)
-    .config("spark.eventLog.rolling.enabled", "false")
-    .config("spark.eventLog.compress", "false")
-    .getOrCreate())
+cores = int(sys.argv[1]); corpus_dir = sys.argv[2]
+spark = get_spark(f"tasklog-{{cores}}", master=f"local[{{cores}}]",
+                  shuffle_partitions=max(32, cores * 4))
 spark.range(1000).selectExpr("sum(id)").collect()
 def _warm(it):
     import numpy as _np  # noqa
@@ -76,6 +62,37 @@ print("RESULT " + json.dumps({{"cores": cores, "wall": wall, "udf_ms": udf_ms,
 """
 
 
+def event_log_env(log_dir: str) -> dict:
+    """The environment for a worker process whose session writes an
+    uncompressed, unrolled Spark event log to ``log_dir``: the settings go
+    through ``PYSPARK_SUBMIT_ARGS`` to the JVM the launcher starts, so the
+    worker builds its session with ``get_spark`` unchanged."""
+    confs = {"spark.eventLog.enabled": "true",
+             "spark.eventLog.compress": "false",
+             "spark.eventLog.rolling.enabled": "false",
+             "spark.eventLog.dir": "file://" + log_dir}
+    args = " ".join(f"--conf {k}={v}" for k, v in confs.items())
+    env = dict(os.environ)
+    env["PYSPARK_SUBMIT_ARGS"] = f"{args} {env.get('PYSPARK_SUBMIT_ARGS', 'pyspark-shell')}"
+    return env
+
+
+def task_end_events(log_dir: str):
+    """Yield every SparkListenerTaskEnd event of the event logs under
+    ``log_dir``."""
+    for path in glob.glob(os.path.join(log_dir, "**"), recursive=True):
+        if os.path.isdir(path) or os.path.basename(path).startswith((".", "appstatus")):
+            continue
+        with open(path) as f:
+            for line in f:
+                try:
+                    ev = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                if ev.get("Event") == "SparkListenerTaskEnd":
+                    yield ev
+
+
 def parse_event_log(log_dir: str) -> dict:
     """Sum task-time components over every SparkListenerTaskEnd event."""
     keys = {
@@ -89,29 +106,19 @@ def parse_event_log(log_dir: str) -> dict:
     out["fetch_wait_ms"] = 0
     out["shuffle_write_ms"] = 0
     out["n_tasks"] = 0
-    for path in glob.glob(os.path.join(log_dir, "*")):
-        if os.path.isdir(path):
+    for ev in task_end_events(log_dir):
+        m = ev.get("Task Metrics") or {}
+        if not m:
             continue
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if ev.get("Event") != "SparkListenerTaskEnd":
-                    continue
-                m = ev.get("Task Metrics") or {}
-                if not m:
-                    continue
-                out["n_tasks"] += 1
-                for k, field in keys.items():
-                    out[k] += int(m.get(field, 0))
-                out["cpu_ms"] += int(m.get("Executor CPU Time", 0)) // 1_000_000
-                srm = m.get("Shuffle Read Metrics") or {}
-                out["fetch_wait_ms"] += int(srm.get("Fetch Wait Time", 0))
-                swm = m.get("Shuffle Write Metrics") or {}
-                # write time is in ns in the event log
-                out["shuffle_write_ms"] += int(swm.get("Shuffle Write Time", 0)) // 1_000_000
+        out["n_tasks"] += 1
+        for k, field in keys.items():
+            out[k] += int(m.get(field, 0))
+        out["cpu_ms"] += int(m.get("Executor CPU Time", 0)) // 1_000_000
+        srm = m.get("Shuffle Read Metrics") or {}
+        out["fetch_wait_ms"] += int(srm.get("Fetch Wait Time", 0))
+        swm = m.get("Shuffle Write Metrics") or {}
+        # write time is in ns in the event log
+        out["shuffle_write_ms"] += int(swm.get("Shuffle Write Time", 0)) // 1_000_000
     return out
 
 
@@ -119,8 +126,9 @@ def run_level(cores: int, corpus_dir: str) -> dict:
     log_dir = tempfile.mkdtemp(prefix=f"evlog_{cores}_")
     script = WORKER.format(repo=REPO)
     out = subprocess.run(
-        [sys.executable, "-c", script, str(cores), corpus_dir, log_dir],
+        [sys.executable, "-c", script, str(cores), corpus_dir],
         capture_output=True, text=True, cwd=REPO, timeout=1800,
+        env=event_log_env(log_dir),
     )
     res = None
     for line in out.stdout.splitlines():

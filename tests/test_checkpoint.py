@@ -362,7 +362,7 @@ def test_table_layout_is_pinned(spark, corpus, tmp_path):
         expected |= {sub} | {f"{sub}/{p}" for p in subparts}
     expected.add("doc_ids/update=1/dbucket=*")
     assert dirs == expected
-    assert top == {"_manifest.json"}
+    assert top == set()
     # 2 page-bucket + 2 doc-bucket + 1 update commits
     assert snaps == {f"v{i}.json" for i in range(1, 6)}
 
@@ -446,3 +446,204 @@ def test_failed_page_commit_leaves_no_cached_blocks(spark, corpus, tmp_path, mon
         )
     assert set(jsc.getPersistentRDDs()) - persisted == set()
     assert read_manifest(out_dir) == before
+
+
+def _file_texts(directory):
+    texts = {}
+    for name in os.listdir(directory):
+        with open(os.path.join(directory, name)) as f:
+            texts[name] = f.read()
+    return texts
+
+
+@pytest.mark.parametrize("first", ["update", "compact"])
+def test_racing_commits_on_one_base_land_exactly_one(tmp_path, monkeypatch, first):
+    """An update-shaped commit and a compaction-shaped commit both read
+    the same base snapshot (a barrier in ``read_manifest`` holds each
+    until both have read it), then claim in the order ``first`` names.
+    The first claim lands and is the current state; the second raises
+    the named conflict and leaves every snapshot file as it was."""
+    import json
+    import threading
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "race")
+    os.makedirs(out_dir)
+    checkpoint._commit_manifest(
+        out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
+    )
+    snaps_dir = os.path.join(out_dir, "snapshots")
+    base_files = _file_texts(snaps_dir)
+
+    changes = {
+        "update": {"committed_updates": [1], "update_tags": {"batch-1": 1}},
+        "compact": {"compaction": {"id": 1, "buckets": [0, 1], "updates": []}},
+    }
+    real_read = checkpoint.read_manifest
+    both_read = threading.Barrier(2)
+    turn = {name: threading.Event() for name in changes}
+    racer = threading.local()
+
+    def read_then_wait(path, as_of=None):
+        m = real_read(path, as_of)
+        if as_of is None and getattr(racer, "name", None):
+            both_read.wait(timeout=30)
+            turn[racer.name].wait(timeout=30)
+        return m
+
+    monkeypatch.setattr(checkpoint, "read_manifest", read_then_wait)
+    result = {}
+
+    def commit(name):
+        racer.name = name
+        try:
+            result[name] = checkpoint._commit_manifest(out_dir, changes[name])
+        except Exception as e:  # noqa: BLE001 - asserted below
+            result[name] = e
+        finally:
+            for ev in turn.values():
+                ev.set()
+
+    threads = [threading.Thread(target=commit, args=(n,)) for n in changes]
+    for t in threads:
+        t.start()
+    turn[first].set()
+    for t in threads:
+        t.join(timeout=60)
+    monkeypatch.undo()
+    assert not any(t.is_alive() for t in threads)
+
+    second = next(n for n in changes if n != first)
+    won, lost = result[first], result[second]
+    assert isinstance(won, dict), won
+    assert isinstance(lost, Exception), f"both commits returned, one was lost: {result}"
+    assert isinstance(lost, checkpoint.CommitConflict), lost
+    assert "v2" in str(lost) and out_dir in str(lost)
+
+    current = checkpoint.read_manifest(out_dir)
+    assert current["snapshot_id"] == won["snapshot_id"] == 2
+    for key, value in changes[first].items():
+        assert current[key] == value
+    for key in changes[second]:
+        assert current[key] == checkpoint._TABLE_STATE[key]
+
+    # snapshots/ gained exactly the winner's file; nothing was overwritten
+    after = _file_texts(snaps_dir)
+    assert set(after) == set(base_files) | {"v2.json"}
+    assert {n: after[n] for n in base_files} == base_files
+    assert json.loads(after["v2.json"]) == won
+    assert _layout(out_dir)[1] == set()
+
+
+
+def test_concurrent_committers_lose_no_commit(tmp_path):
+    """Stress: more committer threads than cores, a tiny switch interval,
+    every thread committing repeatedly.  Each attempt either lands as the
+    snapshot whose file equals what it returned, or raises the conflict;
+    snapshots/ holds exactly one file per landed commit."""
+    import json
+    import sys
+    import threading
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "stress")
+    os.makedirs(out_dir)
+    checkpoint._commit_manifest(out_dir, {"run_id": "r"})
+    n_threads, attempts = 2 * (os.cpu_count() or 2), 20
+    start = threading.Barrier(n_threads)
+    landed, errors = [], []
+
+    def committer(i):
+        start.wait(timeout=30)
+        for k in range(attempts):
+            try:
+                landed.append(
+                    checkpoint._commit_manifest(out_dir, {"update_tags": {f"t{i}": k}})
+                )
+            except checkpoint.CommitConflict:
+                pass
+            except Exception as e:  # noqa: BLE001 - asserted below
+                errors.append(e)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=committer, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    ids = sorted(m["snapshot_id"] for m in landed)
+    assert ids == list(range(2, len(landed) + 2))
+    snaps_dir = os.path.join(out_dir, "snapshots")
+    assert len(os.listdir(snaps_dir)) == 1 + len(landed)
+    for m in landed:
+        with open(os.path.join(snaps_dir, f"v{m['snapshot_id']}.json")) as f:
+            assert json.load(f) == m
+    assert _layout(out_dir)[1] == set()
+
+def test_failed_claim_commits_nothing_and_rerun_resumes(spark, corpus, tmp_path, monkeypatch):
+    """A claim that raises (the process dying at the snapshot link) leaves
+    the snapshot history as it was and no temp file behind; re-running
+    the job completes it, and it reads back what an uninterrupted run
+    does."""
+    from bsc_project_spark.pipeline.checkpoint import list_snapshots
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    out_dir = str(tmp_path / "claim_fails")
+    real_link = os.link
+    claims = []
+    at_failure = []
+
+    def link_failing_third_claim(src, dst):
+        claims.append(dst)
+        if len(claims) == 3:
+            at_failure.append(list_snapshots(out_dir))
+            raise OSError("injected failure at the snapshot claim")
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", link_failing_third_claim)
+    with pytest.raises(OSError, match="injected failure at the snapshot claim"):
+        run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
+    assert list_snapshots(out_dir) == at_failure[0]
+    assert [s["snapshot_id"] for s in at_failure[0]] == [1, 2]
+    assert read_manifest(out_dir)["committed_buckets"] == []
+    assert _layout(out_dir)[1] == set()
+
+    m = run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
+    monkeypatch.undo()
+    assert m["committed_buckets"] == [0, 1]
+    clean_dir = str(tmp_path / "uninterrupted")
+    run_extraction_job(docs, media, FIXTURE_CONFIG, clean_dir, n_buckets=2)
+    assert sorted(map(tuple, read_extracted(spark, out_dir).collect())) == sorted(
+        map(tuple, read_extracted(spark, clean_dir).collect())
+    )
+
+
+def test_expiry_leaves_a_unit_being_written_alone(tmp_path):
+    """expire_snapshots collects the doc-output dirs only the dropped
+    snapshots reference; an ``update=U`` dir no snapshot names yet (a unit
+    writer's output before its commit) survives it."""
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "expire_in_flight")
+    for sub in ("bucket=0", "bucket=1", "compacted=1", "update=1"):
+        os.makedirs(os.path.join(out_dir, "data", sub))
+    checkpoint._commit_manifest(
+        out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
+    )
+    checkpoint._commit_manifest(
+        out_dir, {"compaction": {"id": 1, "buckets": [0, 1], "updates": []}}
+    )
+    deleted = checkpoint.expire_snapshots(out_dir, keep_from=2)
+    assert {os.path.relpath(p, out_dir) for p in deleted} == {
+        "data/bucket=0", "data/bucket=1", "snapshots/v1.json",
+    }
+    assert sorted(os.listdir(os.path.join(out_dir, "data"))) == ["compacted=1", "update=1"]

@@ -71,25 +71,14 @@ def test_connected_components_distributed_path_agrees(spark):
     assert labels == _CC_EXPECTED
 
 
-def test_connected_components_star_agrees(spark):
-    from bsc_project_spark.queries.textops import connected_components_star
-
-    out = connected_components_star(_cc_pairs(spark)).toPandas()
-    labels = dict(zip(out["node"], out["label"]))
-    assert labels == _CC_EXPECTED
-
-
 def test_connected_components_self_loop_only_node_kept(spark):
     """A node whose only edge is a self-loop is a singleton component and
     must appear in every strategy's output."""
-    from bsc_project_spark.queries.textops import connected_components_star
-
     pairs = spark.createDataFrame([(5, 5), (1, 2)], "a_id long, b_id long")
     expected = {5: 5, 1: 1, 2: 1}
     for got_df in (
         connected_components(pairs),
         connected_components(pairs, driver_edge_budget=0),
-        connected_components_star(pairs),
     ):
         out = got_df.toPandas()
         assert dict(zip(out["node"].astype(int), out["label"].astype(int))) == expected
@@ -117,11 +106,9 @@ def _uf_oracle(edge_list):
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_all_cc_strategies_match_union_find_on_random_graphs(spark, seed):
     """Random graphs (chains, hubs, isolated pairs arise naturally):
-    driver union-find, pointer-jump fixpoint, and large-star/small-star
-    must produce identical (node -> component-min) labelings."""
+    driver union-find and the pointer-jump fixpoint must produce the
+    union-find oracle's (node -> component-min) labelings."""
     import random
-
-    from bsc_project_spark.queries.textops import connected_components_star
 
     rng = random.Random(seed)
     n_nodes = rng.randint(8, 30)
@@ -136,7 +123,6 @@ def test_all_cc_strategies_match_union_find_on_random_graphs(spark, seed):
     for got_df in (
         connected_components(pairs),
         connected_components(pairs, driver_edge_budget=0),
-        connected_components_star(pairs),
     ):
         out = got_df.toPandas()
         got = dict(zip(out["node"].astype(int), out["label"].astype(int)))
@@ -168,19 +154,18 @@ def test_two_phase_rank_is_dense_and_ordered(spark, tmp_path):
 
 
 def test_connected_components_star_raises_on_round_exhaustion(spark):
-    """Exhausting max_rounds before the edge-set checksum fixpoint must
-    raise, not silently return labels from non-converged stars."""
+    """Exhausting max_rounds before a round that changes no label must
+    raise on the distributed fixpoint, not silently return labels that
+    are not component minima."""
     import pytest
 
-    from bsc_project_spark.queries.textops import connected_components_star
-
-    # a path graph needs >1 round; max_rounds=1 cannot converge AND
-    # observe the fixpoint (the checksum must repeat once)
+    # a 21-node path needs several pointer-jump rounds; one round cannot
+    # reach the fixpoint
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "a_id long, b_id long"
     )
     with pytest.raises(RuntimeError, match="still changing"):
-        connected_components_star(pairs, max_rounds=1)
+        connected_components(pairs, max_rounds=1, driver_edge_budget=0).collect()
 
 
 def test_cms_estimate_never_undercounts(spark):

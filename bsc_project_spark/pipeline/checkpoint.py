@@ -72,12 +72,12 @@ stream — plus maintenance commits from anywhere.  No commit is lost: of
 two commits built on the same snapshot, one lands and the other raises.
 ``compact`` (one at a time: two would write the same ``compacted=C``
 dir) and ``expire_snapshots`` are safe while units are being written.
-``rollback`` is safe between unit writes: a unit writer's commit
-re-states the unit keys it owns (committed buckets; committed updates
-and their tags) from the view it read at its start, so it would
-re-commit what a rollback landing mid-write un-committed.  Two
-concurrent unit writers are NOT supported: both would pick the same
-``update=U`` / ``bucket=K`` directories before either commits.
+``rollback`` is safe at any time: a unit writer's commit ADDS its unit
+(its bucket, or its update id and tag) to the newest snapshot instead of
+re-stating the unit lists it read at its start, so a rollback that lands
+while a unit is being written stays in force and the unit commits on top
+of it.  Two concurrent unit writers are NOT supported: both would pick
+the same ``update=U`` / ``bucket=K`` directories before either commits.
 
 The reference's analogue is ``ocr_generate_more_crops`` resuming crop
 numbering from files already on disk (reference
@@ -116,7 +116,9 @@ _MAX_UPDATE_TAGS = 1024
 
 # The table state every snapshot records, each key with its empty-table
 # value.  A commit copies all of it from a source manifest and applies only
-# its own changes, so no commit can drop state it does not own.
+# its own changes, so no commit can drop state it does not own.  The unit
+# keys (_UNIT_KEYS) are only ever added to; rollback alone removes units,
+# by committing an older snapshot's state.
 _TABLE_STATE = {
     "run_id": None,
     "committed_buckets": [],
@@ -127,6 +129,28 @@ _TABLE_STATE = {
     "update_tags": {},
     "compaction": None,
 }
+
+
+_UNIT_KEYS = (
+    "committed_buckets", "committed_page_buckets", "committed_updates", "update_tags",
+)
+
+
+def _add_units(key: str, have, new):
+    """``have`` with the units ``new`` added: bucket sets are unioned,
+    update ids appended, tags merged (the ledger capped at
+    ``_MAX_UPDATE_TAGS`` — the stream engine only ever replays its most
+    recent unacknowledged batches, so a long-lived continuous ingest must
+    not grow and rewrite one tag per batch forever)."""
+    if key == "update_tags":
+        tags = {**have, **new}
+        if len(tags) > _MAX_UPDATE_TAGS:
+            floor = sorted(tags.values())[-_MAX_UPDATE_TAGS]
+            tags = {k: v for k, v in tags.items() if v >= floor}
+        return tags
+    if key == "committed_updates":
+        return [*have, *(u for u in new if u not in have)]
+    return sorted(set(have) | set(new))
 
 
 class CommitConflict(RuntimeError):
@@ -175,15 +199,18 @@ def _commit_manifest(out_dir: str, changes: dict, source: dict | None = None) ->
     """Commit one snapshot: the only writer of table state.
 
     The new state is ``source``'s table state (default: the newest
-    snapshot's) with ``changes`` applied; keys left at None are not
-    written.  It is written whole to a temp file unique to this committer,
-    outside ``snapshots/``, then hard-linked to ``snapshots/vN.json`` with
-    N = newest + 1.  The link is an exclusive create: if another committer
-    claimed vN first, this commit raises ``CommitConflict`` and no file
-    under ``snapshots/`` changes."""
+    snapshot's) with ``changes`` applied: a unit key's value is ADDED to
+    the source's (``_add_units``), any other key's value replaces it; keys
+    left at None are not written.  It is written whole to a temp file
+    unique to this committer, outside ``snapshots/``, then hard-linked to
+    ``snapshots/vN.json`` with N = newest + 1.  The link is an exclusive
+    create: if another committer claimed vN first, this commit raises
+    ``CommitConflict`` and no file under ``snapshots/`` changes."""
     prev = read_manifest(out_dir)
     source = prev if source is None else source
-    state = {k: source[k] for k in _TABLE_STATE} | changes
+    state = {k: source[k] for k in _TABLE_STATE}
+    for key, value in changes.items():
+        state[key] = _add_units(key, state[key], value) if key in _UNIT_KEYS else value
     manifest = {k: v for k, v in state.items() if v is not None}
     sid = manifest["snapshot_id"] = int(prev.get("snapshot_id") or 0) + 1
     manifest["committed_at_ms"] = int(time.time() * 1000)
@@ -373,16 +400,15 @@ def run_extraction_job(
     committed_pages = set(manifest["committed_page_buckets"])
     committed = set(manifest["committed_buckets"])
 
-    def commit() -> dict:
-        # the current manifest supplies the table state this job does not
-        # own (updates committed earlier, an active compaction): a resumed
-        # bucket commit must not un-commit them
+    def commit(key: str, bucket: int) -> dict:
+        # adds the one bucket to the newest snapshot, whose other state
+        # (updates, an active compaction, a rollback landed meanwhile)
+        # this job does not own
         return _commit_manifest(
             out_dir,
             {
                 "run_id": run_id,
-                "committed_buckets": sorted(committed),
-                "committed_page_buckets": sorted(committed_pages),
+                key: [bucket],
                 "n_buckets": n_buckets,
                 "n_page_buckets": n_page_buckets,
             },
@@ -405,7 +431,7 @@ def run_extraction_job(
                 f"pbucket={pb}", pb, run_id,
             )
             committed_pages.add(pb)
-            manifest = commit()
+            manifest = commit("committed_page_buckets", pb)
             if fail_after_page_bucket is not None and pb >= fail_after_page_bucket:
                 raise RuntimeError(f"injected failure after page bucket {pb}")
 
@@ -421,8 +447,7 @@ def run_extraction_job(
             documents.filter(bucket_col == bucket), cells_all, media, out_dir,
             f"bucket={bucket}", bucket, run_id,
         )
-        committed.add(bucket)
-        manifest = commit()
+        manifest = commit("committed_buckets", bucket)
         if fail_after_bucket is not None and bucket >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {bucket}")
     return manifest
@@ -465,8 +490,7 @@ def run_incremental_update(
     """
     spark = new_documents.sparkSession
     manifest = read_manifest(out_dir)
-    update_tags: dict[str, int] = dict(manifest["update_tags"])
-    if idempotency_key is not None and idempotency_key in update_tags:
+    if idempotency_key is not None and idempotency_key in manifest["update_tags"]:
         return manifest
     if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
         manifest["n_buckets"] or 0
@@ -506,19 +530,11 @@ def run_incremental_update(
         n_dbuckets=manifest["n_buckets"],
     )
 
-    # single atomic commit makes the whole update visible
-    if idempotency_key is not None:
-        update_tags[idempotency_key] = uid
-        # bound the ledger: the stream engine only ever replays its most
-        # recent unacknowledged batches, so a long-lived continuous ingest
-        # must not grow (and rewrite) one tag per batch forever
-        if len(update_tags) > _MAX_UPDATE_TAGS:
-            keep = sorted(update_tags.values())[-_MAX_UPDATE_TAGS:]
-            floor = keep[0]
-            update_tags = {k: v for k, v in update_tags.items() if v >= floor}
+    # single atomic commit makes the whole update visible; it adds U and
+    # its tag to the newest snapshot, so a rollback landed meanwhile holds
+    tags = {} if idempotency_key is None else {idempotency_key: uid}
     return _commit_manifest(
-        out_dir,
-        {"committed_updates": [*committed_updates, uid], "update_tags": update_tags},
+        out_dir, {"committed_updates": [uid], "update_tags": tags}
     )
 
 

@@ -490,104 +490,14 @@ QUERIES["q_ivf_search"] = QuerySpec(
 
 
 # ---------------------------------------------------------------------------
-# IVF with TRAINED centroids: k-means (Lloyd) refinement of the coarse
-# quantizer — the engine's iterative-algorithm surface.  Per iteration:
-# ONE mapInPandas pass computes assignments AND per-centroid partial sums
-# (map-side combine; each task emits k rows), the driver folds the
-# n_partitions x k partials into new centroids (k x d floats — trivially
-# driver-sized at any corpus scale), and the next iteration broadcasts
-# them via closure capture.  No oracle entry: 3-deep iterative float
-# averaging is not SQL-expressible with cross-engine bit parity, so the
-# driver records the weaker rows-only check; exactness vs a pure-numpy
-# reference implementation is pinned by tests/test_kmeans.py.
+# IVF with TRAINED centroids: q_ivf_kmeans trains the coarse quantizer with
+# _KMEANS_ITERS iterations of the exact quantized Lloyd below
+# (``lloyd_assign``), seeded with the _KMEANS_K smallest vec_ids; the
+# oracle replays the same arithmetic (``lloyd_duck_ctes``).
 # ---------------------------------------------------------------------------
 
 _KMEANS_K = 8
 _KMEANS_ITERS = 3
-_KMEANS_SCHEMA = "centroid_id int, n long, s array<double>"
-_ASSIGN_SCHEMA = "vec_id long, centroid_id int, cosine double"
-
-
-def _unit_rows(m: np.ndarray) -> np.ndarray:
-    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-
-def _kmeans_partials_fn(cents: np.ndarray):
-    c_norm = _unit_rows(cents)
-
-    def run(batches):
-        k, d = cents.shape
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            cid = np.argmax(_unit_rows(E) @ c_norm.T, axis=1)
-            for j in range(k):
-                mask = cid == j
-                counts[j] += int(mask.sum())
-                if mask.any():
-                    sums[j] += E[mask].sum(axis=0)
-        yield pd.DataFrame(
-            {"centroid_id": np.arange(k, dtype=np.int32), "n": counts,
-             "s": [sums[j].tolist() for j in range(k)]}
-        )
-
-    return run
-
-
-def _kmeans_assign_fn(cents: np.ndarray):
-    c_norm = _unit_rows(cents)
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            sims = _unit_rows(E) @ c_norm.T
-            cid = np.argmax(sims, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(),
-                 "centroid_id": cid.astype(np.int32),
-                 "cosine": np.round(sims[np.arange(len(cid)), cid], 5)}
-            )
-
-    return run
-
-
-def kmeans_refine(emb: DataFrame, k: int = _KMEANS_K, iters: int = _KMEANS_ITERS):
-    """Lloyd refinement over an (vec_id, v: array<double>) frame.
-
-    Returns (centroids ndarray, assignment DataFrame).  Init = the k
-    lowest vec_ids (deterministic; orderBy+limit, NOT ``vec_id < k`` —
-    sparse or offset id spaces would otherwise seed fewer than k
-    centroids).  Empty clusters keep their previous centroid (standard
-    Lloyd degenerate-case handling).
-    """
-    init = emb.orderBy("vec_id").limit(k).collect()
-    if not init:
-        # empty input: no centroids to refine; the assignment is the
-        # empty frame with the declared schema (np.stack would throw)
-        empty = emb.sparkSession.createDataFrame([], _ASSIGN_SCHEMA)
-        return np.zeros((0, 0)), empty
-    cents = np.stack([np.asarray(r.v, dtype=np.float64) for r in init])
-    for _ in range(iters):
-        partials = emb.select("vec_id", "v").mapInPandas(
-            _kmeans_partials_fn(cents), _KMEANS_SCHEMA
-        ).collect()
-        sums = np.zeros_like(cents)
-        counts = np.zeros(cents.shape[0], dtype=np.int64)
-        for r in partials:
-            sums[r.centroid_id] += np.asarray(r.s)
-            counts[r.centroid_id] += r.n
-        nonempty = counts > 0
-        cents = cents.copy()
-        cents[nonempty] = sums[nonempty] / counts[nonempty, None]
-    assigned = emb.select("vec_id", "v").mapInPandas(
-        _kmeans_assign_fn(cents), _ASSIGN_SCHEMA
-    )
-    return cents, assigned
 
 
 # ---------------------------------------------------------------------------
@@ -604,12 +514,12 @@ def kmeans_refine(emb: DataFrame, k: int = _KMEANS_K, iters: int = _KMEANS_ITERS
 #     single correctly-rounded IEEE-754 ops — bit-identical in Spark and
 #     DuckDB.
 # Ties at the rounded-cosine argmax break on centroid_id; empty clusters
-# keep their previous centroid (standard Lloyd).  The distributed shape is
-# unchanged: centroids broadcast (k rows), assignment is a map-only
-# stage, the update is one groupBy(cid, pos) with automatic map-side
-# partial aggregation — exactly the partials/fold structure of
-# ``kmeans_refine`` above, expressed so Catalyst (and DuckDB) can replay
-# it.  Reference analogue: the reference has no clustering at all; this
+# keep their previous centroid (standard Lloyd).  The distributed shape:
+# assignment and per-partition partial sums are one map-only stage, the
+# update is one groupBy(cid, pos) with automatic map-side partial
+# aggregation, and only k x d centroid state crosses back (or, above the
+# driver-state ceiling, stays a DataFrame).  Reference analogue: the
+# reference has no clustering at all; this
 # is the engine's iterative-algorithm surface made oracle-checkable.
 # ---------------------------------------------------------------------------
 
@@ -731,7 +641,7 @@ corpus) the centroid state stays a DataFrame end to end
 updates are the same groupBy(cid, pos) aggregate written back to a
 centroid frame, and NOTHING corpus-proportional is ever collected or
 broadcast.  Same precedent as the bins planner's driver_plan_max
-(config.py).  Override per call via ``driver_state_max``."""
+(config.py)."""
 
 _LLOYD_Q5 = decimal.Decimal("0.00001")
 
@@ -843,8 +753,8 @@ def _lloyd_assign_frames(
     centroid state is a DataFrame for the whole run.  Seeds = the k
     smallest vec_ids by two-phase global rank (prefix.global_row_number
     — driver folds one subtotal per partition, never corpus rows); each
-    iteration is the same crossJoin + map-side-combinable max(struct)
-    argmax and groupBy(cid, pos) update as the driver path, with the
+    iteration is a crossJoin + map-side-combinable max(struct) argmax
+    and the same groupBy(cid, pos) update as the numpy route, with the
     rebuilt centroid frame materialized each iteration.  Same
     arithmetic op for op as the driver fold (floor(sx*1000.0/n) per
     component, greatest(sqrt(dot), eps) norms), so results are
@@ -911,11 +821,7 @@ def _lloyd_assign_frames(
 
 
 def lloyd_assign(
-    spark: SparkSession,
-    corpus: DataFrame,
-    iters: int,
-    k: int,
-    driver_state_max: int | None = None,
+    spark: SparkSession, corpus: DataFrame, iters: int, k: int
 ) -> DataFrame:
     """Exact quantized Lloyd on the engine side: (vec_id, v array<double>)
     -> (vec_id, centroid_id int, cosine double) under trained centroids.
@@ -930,27 +836,23 @@ def lloyd_assign(
     job plus one groupBy(cid, pos) partial-sum job over the MATERIALIZED
     quantized corpus (repartitioned to the session's parallelism — the
     embeddings parquet is a single sub-split-size file, so without it
-    every pass ran on 1-2 cores).  Three assignment strategies by k*d:
+    every pass ran on 1-2 cores).  Two routes, picked by k*d:
 
-      - k*d <= 1024: centroids inlined as literals, one map-only
-        codegen projection (the q_ivf_kmeans / q_pq_codes shape);
-      - k*d <= driver_state_max: centroids driver-held, assignment is
-        ONE numpy matmul per partition inside mapInPandas emitting
+      - k*d <= _LLOYD_DRIVER_STATE_MAX: centroids driver-held, assignment
+        is ONE numpy matmul per partition inside mapInPandas emitting
         per-partition partial sums (``_lloyd_np_fn`` — exact integer
-        arithmetic, rounded-argmax tie rule preserved; replaces the
-        round-5 N*k crossJoin that dominated q_semantic_dedup's wall);
+        arithmetic, rounded-argmax tie rule preserved);
       - above: the fully distributed ``_lloyd_assign_frames`` — centroid
         state never touches the driver (the 100-TB contract for
         corpus-derived K).
 
-    Seeds (driver paths): the k smallest vec_ids via a two-phase bounded
+    The vector length d comes from one min/max(size(q)) probe; ragged
+    vectors raise instead of being truncated to their first d components.
+    Seeds (driver route): the k smallest vec_ids via a two-phase bounded
     top-K (64-way bucketed sorted-slice, then a driver fold of 64 arrays
     of <=k ids) — no global-order window anywhere."""
     import math
 
-    limit = (
-        driver_state_max if driver_state_max is not None else _LLOYD_DRIVER_STATE_MAX
-    )
     dot_qq = _SPARK_DOT.format(a="q", b="q")
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
     vq = materialize(corpus.selectExpr(
@@ -961,11 +863,13 @@ def lloyd_assign(
     ).repartition(n_parts))
 
     out_schema = "vec_id long, centroid_id int, cosine double"
-    head = vq.select("q").head(1)
-    if not head:
+    lo, hi = vq.selectExpr("min(size(q))", "max(size(q))").first()
+    if lo != hi:
+        raise ValueError(f"ragged vectors: sizes range from {lo} to {hi}")
+    if hi is None:
         return spark.createDataFrame([], out_schema)
-    d = len(head[0]["q"])
-    if k * d > limit:
+    d = int(hi)
+    if k * d > _LLOYD_DRIVER_STATE_MAX:
         return _lloyd_assign_frames(spark, vq, iters, k, d)
     # ONE job for the seeds: each bucket ships its k smallest vec_ids
     # WITH their (q, vn) payloads (k structs x 64 buckets, driver-tiny),
@@ -990,75 +894,19 @@ def lloyd_assign(
         cid: (list(r["q"]), float(r["vn"])) for cid, r in enumerate(seeds)
     }
 
-    def _lit_d(x: float) -> str:
-        # exact double literal: quantized components are exact integers
-        # in double, so a plain numeric literal suffices (smaller AST =
-        # faster per-iteration analysis); anything else goes through a
-        # correctly-rounded string parse (shortest-roundtrip repr -> the
-        # same IEEE double both sides)
-        if float(x).is_integer() and abs(x) < 2 ** 53:
-            return f"{int(x)}.0D"
-        return f"CAST('{x!r}' AS DOUBLE)"
-
-    # 1024, not 2048: at k*d = 2048 the inlined expression's analysis
-    # + codegen cost ~3.5 s PER ITERATION on 2020 x 64 vectors
-    # (measured — the whole data pass is milliseconds), i.e. the
-    # literal tree stops paying for itself well before codegen's
-    # 64 KB method limit is hit
-    inlined = d * k <= 1024
-
-    def assignment():
-        """(vec_id, q, cid, cos) under the CURRENT driver-held centroids
-        — inlined-literal path (k*d small, the q_ivf_kmeans / q_pq_codes
-        shape): the centroids are already k x d integers ON THE DRIVER,
-        so inline them as literals and compute all k cosines in ONE
-        map-only projection — argmax = array_position(arr,
-        array_max(arr)), whose first-occurrence rule IS the (cos DESC,
-        cid ASC) tie-break.  No crossJoin row blow-up, no broadcast
-        build, no window shuffle+sort of N*k rows per iteration: each
-        Lloyd step is scan -> project -> tiny k*d partial-sum.  Values
-        are bit-identical to the numpy path: same exact integer dots,
-        same round(x, 5), same literal doubles (shortest-roundtrip
-        parse)."""
-        ordered = sorted(cents.items())
-        dots = []
-        for _cid, (cv, cn) in ordered:
-            dot = " + ".join(f"(q[{i}] * {_lit_d(cv[i])})" for i in range(d))
-            dots.append(f"round(({dot}) / (vn * {_lit_d(cn)}), 5)")
-        arr = "array(" + ", ".join(dots) + ")"
-        return (
-            vq.selectExpr("vec_id", "q", f"{arr} AS cos_arr")
-            .selectExpr(
-                "vec_id",
-                "q",
-                "CAST(array_position(cos_arr, array_max(cos_arr)) - 1 AS INT)"
-                " AS cid",
-                "array_max(cos_arr) AS cos",
-            )
-        )
-
     for _ in range(iters):
-        if inlined:
-            sums = (
-                assignment()
-                .select("cid", F.posexplode("q").alias("pos", "x"))
-                .groupBy("cid", "pos")
-                .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
-                .collect()
+        # assignment AND the (cid, pos) partial sums in one mapInPandas
+        # pass (one BLAS matmul per partition); the groupBy folds
+        # exact-integer per-partition partials
+        sums = (
+            vq.mapInPandas(
+                _lloyd_np_fn(sorted(cents.items()), d, "sums"),
+                "cid int, pos int, sx double, n long",
             )
-        else:
-            # numpy path: assignment AND the (cid, pos) partial sums in
-            # one mapInPandas pass (one BLAS matmul per partition);
-            # the groupBy folds exact-integer per-partition partials
-            sums = (
-                vq.mapInPandas(
-                    _lloyd_np_fn(sorted(cents.items()), d, "sums"),
-                    "cid int, pos int, sx double, n long",
-                )
-                .groupBy("cid", "pos")
-                .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
-                .collect()
-            )
+            .groupBy("cid", "pos")
+            .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
+            .collect()
+        )
         by_cid: dict[int, list] = {}
         for r in sums:
             by_cid.setdefault(int(r["cid"]), []).append(r)
@@ -1071,10 +919,6 @@ def lloyd_assign(
             cn = max(math.sqrt(sum(x * x for x in cv)), 1e-9)
             cents[cid] = (cv, cn)
         # clusters absent from by_cid keep their previous centroid
-    if inlined:
-        return assignment().select(
-            "vec_id", F.col("cid").alias("centroid_id"), F.col("cos").alias("cosine")
-        )
     return vq.mapInPandas(
         _lloyd_np_fn(sorted(cents.items()), d, "final"),
         "vec_id long, cid int, cos double",
@@ -1104,8 +948,8 @@ QUERIES["q_ivf_kmeans"] = QuerySpec(
     spark=query_scope(_ivf_kmeans_spark),
     oracle=_IVF_KMEANS_DUCK,
     description="IVF with trained centroids: 3 exact integer-quantized "
-    "Lloyd iterations (broadcast centroids, map-side partial sums), "
-    "cross-engine hash-checkable; float-mean variant in kmeans_refine",
+    "Lloyd iterations (one numpy matmul per partition, map-side partial "
+    "sums), cross-engine hash-checkable",
 )
 
 

@@ -197,13 +197,25 @@ Measured at sf0.1 (2,020 vectors, local[32]): q_embed_near_dup 27.2 s →
 ## Trained IVF (`q_ivf_kmeans`) — iterative-algorithm shape
 
 Per Lloyd iteration (`lloyd_assign`, exact integer-quantized arithmetic so
-DuckDB can replay it): a broadcast of the k-row centroid frame feeds a
-cross-join cosine argmax (window PARTITIONed BY vec_id), then ONE
-groupBy(cid, pos) with automatic map-side partial aggregation folds the
-k × d integer sums; only that k × d state reaches the driver (trivially
-driver-sized at any corpus scale), and the next iteration broadcasts the
-re-quantized centroids.  The quantized corpus is persisted once; iteration
-state is NOT expressed as one SQL CTE chain — Spark inlines repeated CTE
+DuckDB can replay it), on one of two routes picked by k × d against
+`_LLOYD_DRIVER_STATE_MAX` (4M cells):
+
+- **k × d at or below the ceiling** (every fixed-K user): the k × d
+  integer centroids are driver-held and ride the task closure.  ONE
+  `mapInPandas` pass per partition computes all N × k cosines in one numpy
+  matmul, picks the rounded-cosine argmax (ties on the smaller cid) and
+  emits per-partition (cid, pos) partial sums; one groupBy(cid, pos) folds
+  them and only the k × d sums reach the driver, which re-quantizes the
+  centroids for the next iteration.
+- **above the ceiling** (corpus-derived K at 10^9+ vectors): the centroid
+  state is a DataFrame for the whole run.  A cross join with a
+  map-side-combinable max(struct) argmax assigns, the same groupBy(cid, pos)
+  update rebuilds the centroid frame, and it is materialized each
+  iteration; nothing corpus-proportional reaches the driver.
+
+The quantized corpus is persisted once, and its vector length comes from
+one min/max(size) probe that refuses ragged vectors.  Iteration state is
+NOT expressed as one SQL CTE chain — Spark inlines repeated CTE
 references, which re-evaluates every earlier iteration inside every later
 one (~5x wall measured at 3 iterations).
 

@@ -647,3 +647,54 @@ def test_expiry_leaves_a_unit_being_written_alone(tmp_path):
         "data/bucket=0", "data/bucket=1", "snapshots/v1.json",
     }
     assert sorted(os.listdir(os.path.join(out_dir, "data"))) == ["compacted=1", "update=1"]
+
+
+def test_rollback_during_an_update_write_stays_in_force(tmp_path, monkeypatch):
+    """Spark-free replay of a rollback landing while an update is being
+    written: update 2 reads the table (updates [1], tag k1), the unit
+    writes are stubbed and roll the table back to v1 in the middle, then
+    the update commits.  The commit adds update 2 to the rolled-back state
+    instead of re-stating what it read at its start, so update 1 and its
+    tag stay rolled back."""
+    from unittest import mock
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "rollback_mid_update")
+    os.makedirs(out_dir)
+    checkpoint._commit_manifest(
+        out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
+    )
+    checkpoint._commit_manifest(
+        out_dir, {"committed_updates": [1], "update_tags": {"k1": 1}}
+    )
+    monkeypatch.setattr(checkpoint, "media_refs", mock.MagicMock())
+    monkeypatch.setattr(checkpoint, "_commit_pages", lambda *a, **k: None)
+    monkeypatch.setattr(
+        checkpoint, "_commit_docs", lambda *a, **k: checkpoint.rollback(out_dir, 1)
+    )
+    m = checkpoint.run_incremental_update(
+        mock.MagicMock(), None, FIXTURE_CONFIG, out_dir, idempotency_key="k2"
+    )
+    assert m["committed_updates"] == [2]
+    assert m["update_tags"] == {"k2": 2}
+    assert read_manifest(out_dir)["snapshot_id"] == m["snapshot_id"] == 4
+    assert [s["committed_updates"] for s in checkpoint.list_snapshots(out_dir)] == [
+        [], [1], [], [2],
+    ]
+
+
+def test_idempotency_ledger_keeps_the_newest_tags(tmp_path, monkeypatch):
+    """A commit adding a tag past the ledger cap drops the oldest tags,
+    keeping the cap's newest update ids."""
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "ledger_cap")
+    os.makedirs(out_dir)
+    monkeypatch.setattr(checkpoint, "_MAX_UPDATE_TAGS", 2)
+    for uid in (1, 2, 3):
+        m = checkpoint._commit_manifest(
+            out_dir, {"committed_updates": [uid], "update_tags": {f"k{uid}": uid}}
+        )
+    assert m["committed_updates"] == [1, 2, 3]
+    assert m["update_tags"] == {"k2": 2, "k3": 3}

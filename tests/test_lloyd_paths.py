@@ -1,24 +1,23 @@
-"""Equivalence + driver-contract pins for the three lloyd_assign paths
-(queries/similarity.py).
+"""Equivalence + driver-contract pins for the two lloyd_assign routes
+(queries/similarity.py), picked by k*d against ``_LLOYD_DRIVER_STATE_MAX``.
 
-Round-5 verdict flagged the ONE scale-killer of the round: q_semantic_dedup
-derives K from corpus size while lloyd_assign collected k x d centroid
-partials to the driver every iteration — driver state linear in the corpus
-at 10^9+ vectors.  Round 6 adds the ceiling (``_LLOYD_DRIVER_STATE_MAX`` /
-``driver_state_max``): above it the centroid state stays a DataFrame end to
-end (``_lloyd_assign_frames`` — two-phase-rank seeds, groupBy(cid, pos)
-updates written back to a centroid frame, materialized each
-iteration), and below it the round-6 numpy matmul path replaces the old
-N*k crossJoin.  These tests pin:
+q_semantic_dedup derives K from corpus size, so a driver-held k x d
+centroid state would grow linearly with the corpus at 10^9+ vectors.
+Above the ceiling the centroid state stays a DataFrame end to end
+(``_lloyd_assign_frames`` — two-phase-rank seeds, groupBy(cid, pos)
+updates written back to a centroid frame, materialized each iteration);
+below it the numpy route (``_lloyd_np_fn``) does one matmul per
+partition.  These tests pin:
 
-  1. all three paths (inlined literals, numpy matmul, distributed frames)
-     produce IDENTICAL assignments on the same corpus — including under
-     planted duplicate seed vectors, which force rounded-cosine ties that
-     must break on the smaller centroid_id;
-  2. above the ceiling the distributed path really is taken and the
+  1. both routes (numpy matmul, distributed frames) produce IDENTICAL
+     assignments on the same corpus at two k — including under planted
+     duplicate seed vectors, which force rounded-cosine ties that must
+     break on the smaller centroid_id;
+  2. above the ceiling the distributed route really is taken and the
      driver-held numpy machinery is never touched (bombed);
-  3. the exact HALF_UP shortest-repr rounding helper matches Spark's
-     round(x, 5) on adversarial values (the numpy path's only
+  3. ragged vectors raise on either route instead of being truncated;
+  4. the exact HALF_UP shortest-repr rounding helper matches Spark's
+     round(x, 5) on adversarial values (the numpy route's only
      re-implemented scalar op).
 """
 
@@ -57,29 +56,26 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_numpy_and_inlined_paths_agree(spark, corpus):
-    # k=20, d=16 -> k*d=320: inlined.  k=80 -> 1280: numpy.  Equality is
-    # checked against the frames path at BOTH k, which transitively pins
-    # inlined == frames == numpy.
-    inlined = sim.lloyd_assign(spark, corpus, iters=2, k=20)
-    frames_small = sim.lloyd_assign(
-        spark, corpus, iters=2, k=20, driver_state_max=1
-    )
-    assert _rows(inlined) == _rows(frames_small)
+def _frames_route(monkeypatch):
+    monkeypatch.setattr(sim, "_LLOYD_DRIVER_STATE_MAX", 1)
 
-    numpy_path = sim.lloyd_assign(spark, corpus, iters=2, k=80)
-    frames_big = sim.lloyd_assign(
-        spark, corpus, iters=2, k=80, driver_state_max=1
-    )
-    assert _rows(numpy_path) == _rows(frames_big)
+
+def test_numpy_and_frames_routes_agree(spark, corpus, monkeypatch):
+    # k*d = 320 and 1280, both far below the ceiling: the numpy route
+    ks = (20, 80)
+    numpy_route = [_rows(sim.lloyd_assign(spark, corpus, iters=2, k=k)) for k in ks]
+    _frames_route(monkeypatch)
+    frames = [_rows(sim.lloyd_assign(spark, corpus, iters=2, k=k)) for k in ks]
+    assert numpy_route == frames
 
 
 def test_above_ceiling_routes_distributed_zero_driver_state(
     spark, corpus, monkeypatch
 ):
-    """driver_state_max=1 must route through _lloyd_assign_frames with the
-    driver-held machinery bombed: no seed collect, no numpy centroid
-    closure, no per-iteration partials collect ever runs."""
+    """Above the ceiling lloyd_assign must route through
+    _lloyd_assign_frames with the driver-held machinery bombed: no seed
+    collect, no numpy centroid closure, no per-iteration partials collect
+    ever runs."""
     called = {}
     orig = sim._lloyd_assign_frames
 
@@ -90,17 +86,36 @@ def test_above_ceiling_routes_distributed_zero_driver_state(
     def bomb(*a, **k):  # pragma: no cover - firing IS the failure
         raise AssertionError("driver-held centroid state materialized")
 
+    _frames_route(monkeypatch)
     monkeypatch.setattr(sim, "_lloyd_assign_frames", spy)
     monkeypatch.setattr(sim, "_lloyd_np_fn", bomb)
-    got = sim.lloyd_assign(spark, corpus, iters=1, k=8, driver_state_max=1)
+    got = sim.lloyd_assign(spark, corpus, iters=1, k=8)
     n = got.count()
     assert called.get("frames") and n == N
 
 
-def test_frames_plan_has_no_single_partition(spark, corpus):
-    got = sim.lloyd_assign(spark, corpus, iters=1, k=8, driver_state_max=1)
+def test_frames_plan_has_no_single_partition(spark, corpus, monkeypatch):
+    _frames_route(monkeypatch)
+    got = sim.lloyd_assign(spark, corpus, iters=1, k=8)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+@pytest.mark.parametrize("extra", [1, -1], ids=["longer", "shorter"])
+@pytest.mark.parametrize("route", ["numpy", "frames"])
+def test_ragged_vectors_raise(spark, monkeypatch, route, extra):
+    """One vector of a 200 x 16 corpus is one component longer (its first
+    16 unchanged) or shorter: both routes must refuse the corpus, not
+    truncate the odd vector to the first d components."""
+    rng = np.random.RandomState(5)
+    rows = [(i, rng.randn(D).tolist()) for i in range(200)]
+    v = rows[37][1]
+    rows[37] = (37, v + [0.5] if extra > 0 else v[:-1])
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    if route == "frames":
+        _frames_route(monkeypatch)
+    with pytest.raises(ValueError, match="ragged"):
+        sim.lloyd_assign(spark, df, iters=1, k=8).collect()
 
 
 def test_round5_matches_spark_round(spark):

@@ -499,7 +499,13 @@ def run_incremental_update(
             f"{out_dir} has no fully-committed base run; run run_extraction_job first"
         )
     committed_updates: list[int] = list(manifest["committed_updates"])
-    uid = (committed_updates[-1] + 1) if committed_updates else 1
+    # past the highest id ANY snapshot names, not just the current one: a
+    # rollback un-commits updates whose files the abandoned snapshots
+    # still read through ``as_of``, so their ids are never reused
+    uid = 1 + max(
+        (u for m in list_snapshots(out_dir) for u in m.get("committed_updates", [])),
+        default=0,
+    )
     part = f"update={uid}"
 
     # refs already extracted: base snapshot + prior update deltas

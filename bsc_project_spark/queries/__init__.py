@@ -21,7 +21,9 @@ from collections.abc import Callable
 from contextvars import ContextVar
 from dataclasses import dataclass
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLES = (
     "region",
@@ -72,11 +74,24 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     their own frame and dropTempView it afterwards (several tests do)
     would otherwise leave the cache claiming a registration the catalog
     no longer has, and the next query dies with TABLE_OR_VIEW_NOT_FOUND.
-    A cache hit costs one ``temp_views`` lookup and runs no Spark job."""
+    A cache hit costs one ``temp_views`` lookup and runs no Spark job.
+
+    A fresh registration runs none either.  ``spark.read.parquet`` infers
+    a table's schema with one schema-merge job per table; instead each
+    schema is read from the parquet footers on the driver with
+    ``pyarrow.dataset`` (which, unlike ``pq.read_schema``, also reads a
+    Spark-written directory, skipping its ``_SUCCESS`` and hidden files)
+    and handed to the reader.  ``prefer_timestamp_ntz`` maps timestamps
+    written without a time zone to TIMESTAMP_NTZ, as Spark's inference
+    does."""
     if _REGISTERED_DIRS.get(spark) == sf_dir and temp_views(spark).issuperset(TABLES):
         return
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        path = f"{sf_dir}/{t}.parquet"
+        schema = from_arrow_schema(
+            pads.dataset(path, format="parquet").schema, prefer_timestamp_ntz=True
+        )
+        spark.read.schema(schema).parquet(path).createOrReplaceTempView(t)
     _REGISTERED_DIRS[spark] = sf_dir
 
 

@@ -81,6 +81,61 @@ def canon_rows(cols, rows):
     return out
 
 
+def check_query(name, spec, spark, sf_dir, con) -> bool:
+    """Run one query on Spark and its oracle on DuckDB and print the
+    verdict.  The Spark frame, and the cached intermediates it holds,
+    are released when this returns."""
+    try:
+        sdf = spec.spark(spark, sf_dir)
+        s_cols = [c.lower() for c in sdf.columns]
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:
+        print(f"{name}: SPARK ERROR: {str(e).splitlines()[0][:200]}")
+        return False
+    if spec.oracle is None:
+        print(f"{name}: rows-only ({len(s_rows)} rows, no oracle)")
+        return True
+    try:
+        res = con.execute(spec.oracle)
+        d_cols = [d[0].lower() for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as e:
+        print(f"{name}: DUCK ERROR: {str(e).splitlines()[0][:200]}")
+        return False
+    problems = []
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if not problems:
+        cs = canon_rows(s_cols, s_rows)
+        cd = canon_rows(d_cols, d_rows)
+        if cs != cd:
+            diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
+            problems.append(f"values differ, first diffs: {diff}")
+    if not problems:
+        # Typed leg: materialize both sides to pandas the way the
+        # driver does and compare dtype kind+size per column.  An
+        # uncast DuckDB HUGEINT shows up here as object/float vs
+        # Spark's int64 even when every canonical string matches.
+        try:
+            pdf_s = sdf.toPandas()
+            pdf_s.columns = [c.lower() for c in pdf_s.columns]
+            pdf_d = con.execute(spec.oracle).df()
+            pdf_d.columns = [c.lower() for c in pdf_d.columns]
+            for c in sorted(set(pdf_s.columns) & set(pdf_d.columns)):
+                ks, kd = pdf_s[c].dtype, pdf_d[c].dtype
+                if dtype_key(ks, pdf_s[c]) != dtype_key(kd, pdf_d[c]):
+                    problems.append(f"dtype[{c}] spark={ks} duck={kd}")
+        except Exception as e:  # pragma: no cover - diagnostic only
+            problems.append(f"dtype check errored: {str(e).splitlines()[0][:200]}")
+    if problems:
+        print(f"{name}: FAIL — " + "; ".join(problems))
+        return False
+    print(f"{name}: OK ({len(s_rows)} rows)")
+    return True
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -98,57 +153,8 @@ def main() -> int:
     for name, spec in sorted(queries.items()):
         if only and name not in only:
             continue
-        try:
-            sdf = spec.spark(spark, sf_dir)
-            s_cols = [c.lower() for c in sdf.columns]
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"{name}: SPARK ERROR: {str(e).splitlines()[0][:200]}")
+        if not check_query(name, spec, spark, sf_dir, con):
             failures.append(name)
-            continue
-        if spec.oracle is None:
-            print(f"{name}: rows-only ({len(s_rows)} rows, no oracle)")
-            continue
-        try:
-            res = con.execute(spec.oracle)
-            d_cols = [d[0].lower() for d in res.description]
-            d_rows = res.fetchall()
-        except Exception as e:
-            print(f"{name}: DUCK ERROR: {str(e).splitlines()[0][:200]}")
-            failures.append(name)
-            continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
-        if not problems:
-            cs = canon_rows(s_cols, s_rows)
-            cd = canon_rows(d_cols, d_rows)
-            if cs != cd:
-                diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
-                problems.append(f"values differ, first diffs: {diff}")
-        if not problems:
-            # Typed leg: materialize both sides to pandas the way the
-            # driver does and compare dtype kind+size per column.  An
-            # uncast DuckDB HUGEINT shows up here as object/float vs
-            # Spark's int64 even when every canonical string matches.
-            try:
-                pdf_s = sdf.toPandas()
-                pdf_s.columns = [c.lower() for c in pdf_s.columns]
-                pdf_d = con.execute(spec.oracle).df()
-                pdf_d.columns = [c.lower() for c in pdf_d.columns]
-                for c in sorted(set(pdf_s.columns) & set(pdf_d.columns)):
-                    ks, kd = pdf_s[c].dtype, pdf_d[c].dtype
-                    if dtype_key(ks, pdf_s[c]) != dtype_key(kd, pdf_d[c]):
-                        problems.append(f"dtype[{c}] spark={ks} duck={kd}")
-            except Exception as e:  # pragma: no cover - diagnostic only
-                problems.append(f"dtype check errored: {str(e).splitlines()[0][:200]}")
-        if problems:
-            print(f"{name}: FAIL — " + "; ".join(problems))
-            failures.append(name)
-        else:
-            print(f"{name}: OK ({len(s_rows)} rows)")
     spark.stop()
     print()
     if failures:

@@ -388,7 +388,8 @@ def _doc_citing(spark, doc_id, media_ref):
 def test_rollback_keeps_idempotency_ledger(spark, corpus, tmp_path):
     """Rolling back to the snapshot after update k1 restores that
     snapshot's idempotency ledger: a re-delivered k1 stays a no-op, while
-    k2 (rolled back) commits again."""
+    k2 (rolled back) commits again, under a fresh update id: the abandoned
+    snapshot still reads update 2."""
     from bsc_project_spark.pipeline.checkpoint import rollback, run_incremental_update
 
     docs = spark_io.documents_df(spark, corpus)
@@ -413,8 +414,8 @@ def test_rollback_keeps_idempotency_ledger(spark, corpus, tmp_path):
 
     m3 = run_incremental_update(k2, media, FIXTURE_CONFIG, out_dir, idempotency_key="k2")
     assert m3["snapshot_id"] == rb["snapshot_id"] + 1
-    assert m3["committed_updates"] == [1, 2]
-    assert m3["update_tags"] == {"k1": 1, "k2": 2}
+    assert m3["committed_updates"] == [1, 3]
+    assert m3["update_tags"] == {"k1": 1, "k2": 3}
     assert read_extracted(spark, out_dir).filter("doc_id = 'doc-k2'").count() > 0
 
 
@@ -682,6 +683,45 @@ def test_rollback_during_an_update_write_stays_in_force(tmp_path, monkeypatch):
     assert [s["committed_updates"] for s in checkpoint.list_snapshots(out_dir)] == [
         [], [1], [], [2],
     ]
+
+
+def test_update_after_rollback_takes_a_fresh_id(tmp_path, monkeypatch):
+    """Spark-free replay with stubbed unit writers: v1 base, v2 update 1,
+    v3 update 2, rollback to v2, then one more update.  That update takes
+    id 3, not 2: the abandoned v3 still reads ``update=2`` through
+    ``as_of``, so rewriting it would change what v3 returns."""
+    from unittest import mock
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "update_after_rollback")
+    os.makedirs(out_dir)
+    written = []
+    monkeypatch.setattr(checkpoint, "media_refs", mock.MagicMock())
+    monkeypatch.setattr(
+        checkpoint, "_commit_pages",
+        lambda media, refs, cfg, out, part, *a: written.append(part),
+    )
+    monkeypatch.setattr(checkpoint, "_commit_docs", lambda *a, **k: None)
+    checkpoint._commit_manifest(
+        out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
+    )
+
+    def update():
+        return checkpoint.run_incremental_update(
+            mock.MagicMock(), None, FIXTURE_CONFIG, out_dir
+        )
+
+    update()
+    update()
+    checkpoint.rollback(out_dir, 2)
+    m = update()
+    assert written == ["update=1", "update=2", "update=3"]
+    assert m["committed_updates"] == [1, 3]
+    assert [s["committed_updates"] for s in checkpoint.list_snapshots(out_dir)] == [
+        [], [1], [1, 2], [1], [1, 3],
+    ]
+    assert read_manifest(out_dir, as_of=3)["committed_updates"] == [1, 2]
 
 
 def test_idempotency_ledger_keeps_the_newest_tags(tmp_path, monkeypatch):

@@ -188,6 +188,13 @@ def _with_null_doc_id(tb: pa.Table) -> pa.Table:
     return pa.concat_tables([tb, pa.table(extra, schema=tb.schema)])
 
 
+def _oracle_on(sf, name):
+    with duckdb.connect() as con:
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        return _oracle_canon(con, name)
+
+
 @pytest.mark.parametrize("name", ["q_pagerank", "q_anchor_text"])
 def test_null_doc_id_matches_oracle(spark, tmp_path, name):
     """The link graph's node count covers the NULL doc_id row (its ids
@@ -201,14 +208,88 @@ def test_null_doc_id_matches_oracle(spark, tmp_path, name):
         s_cols = [c.lower() for c in sdf.columns]
     finally:
         _REGISTERED_DIRS.clear()  # don't leak the altered views
-    with duckdb.connect() as con:
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-        res = con.execute(spec.oracle)
-        d_cols = [d[0].lower() for d in res.description]
-        d_rows = res.fetchall()
     assert any(r[s_cols.index("doc_id")] is None for r in s_rows)
-    assert _canon(s_cols, s_rows) == _canon(d_cols, d_rows)
+    assert _canon(s_cols, s_rows) == _oracle_on(sf, name)
+
+
+@pytest.mark.parametrize("tables", ["test", "null_doc_id"])
+@pytest.mark.parametrize("route", ["numpy", "rounds"])
+def test_pagerank_routes_match_oracle(spark, tmp_path, monkeypatch, route, tables):
+    """PageRank's one-task numpy route (edges at or below
+    ``_PAGERANK_EDGES_MAX``) and its distributed rounds (forced by a
+    ceiling of 0) both match the oracle, on the test tables and with a
+    NULL doc_id row added."""
+    from bsc_project_spark.queries import graphops
+
+    if route == "rounds":
+        monkeypatch.setattr(graphops, "_PAGERANK_EDGES_MAX", 0)
+    sf = SF_DIR if tables == "test" else _altered_sf(
+        tmp_path, "documents", _with_null_doc_id
+    )
+    try:
+        sdf = QUERIES["q_pagerank"].spark(spark, sf)
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        s_rows = [tuple(r) for r in sdf.collect()]
+        s_cols = [c.lower() for c in sdf.columns]
+    finally:
+        _REGISTERED_DIRS.clear()  # don't leak the altered views
+    assert ("MapInPandas" in plan) == (route == "numpy")
+    assert "BatchEvalPython" not in plan
+    assert _canon(s_cols, s_rows) == _oracle_on(sf, "q_pagerank")
+
+
+def test_warm_pagerank_job_count(spark, spark_jobs):
+    """Below the edge ceiling a warm q_pagerank runs a handful of jobs:
+    the link graph's stats, ids and edges, then the edge packing, the
+    numpy task and the join back.  Its distributed rounds ran 39."""
+
+    def run():
+        return QUERIES["q_pagerank"].spark(spark, SF_DIR).collect()
+
+    run()
+    jobs = spark_jobs(run)
+    assert jobs <= 12, f"warm q_pagerank ran {jobs} Spark jobs"
+
+
+def _spark_written_sf(spark, out):
+    """Every table rewritten by Spark: a directory of part files with a
+    ``_SUCCESS`` marker and hidden checksum files."""
+    for t in TABLES:
+        spark.read.parquet(f"{SF_DIR}/{t}.parquet").coalesce(1).write.parquet(
+            f"{out}/{t}.parquet"
+        )
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "tables", ["sf0.001", "sf0.01", "sf0.1", "spark_written", "pyarrow_rewritten"]
+)
+def test_register_views_reads_the_inferred_schemas(spark, tmp_path, tables):
+    """The schemas ``register_views`` reads from the parquet footers equal
+    the ones ``spark.read.parquet`` infers, for every table: the test
+    tables at three scales, a Spark-written directory, and a file
+    pyarrow rewrote."""
+    if tables == "spark_written":
+        sf = _spark_written_sf(spark, tmp_path)
+    elif tables == "pyarrow_rewritten":
+        sf = _altered_sf(tmp_path, "documents", _with_null_doc_id)
+    else:
+        sf = os.path.join(os.path.dirname(SF_DIR), tables)
+    try:
+        register_views(spark, sf)
+        got = {t: spark.table(t).schema for t in TABLES}
+    finally:
+        _REGISTERED_DIRS.clear()  # don't leak the views of this dir
+    assert got == {t: spark.read.parquet(f"{sf}/{t}.parquet").schema for t in TABLES}
+
+
+def test_fresh_register_views_runs_no_job(spark, spark_jobs):
+    """A registration on a session that does not hold the views reads the
+    schemas on the driver and launches no Spark job."""
+    _REGISTERED_DIRS.clear()
+    jobs = spark_jobs(lambda: register_views(spark, SF_DIR))
+    assert _REGISTERED_DIRS[spark] == SF_DIR
+    assert jobs == 0, f"a fresh register_views ran {jobs} Spark jobs"
 
 
 def test_ragged_embeddings_fail_loudly(spark, tmp_path):

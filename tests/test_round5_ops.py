@@ -287,34 +287,16 @@ def test_register_views_cache_self_heals_after_drop(spark):
     assert spark.table("documents").count() == n
 
 
-def test_register_views_cache_hit_runs_no_job(spark):
+def test_register_views_cache_hit_runs_no_job(spark, spark_jobs):
     """Every registry builder calls register_views, often more than once:
     on a session that already holds the views it must launch no Spark
-    job.  A one-task marker job run last in the same job group shows the
-    status tracker has seen every earlier job of the group."""
-    import time
-
+    job."""
     from bsc_project_spark.queries import register_views
 
     sf = "/root/testdata/sf0.001"
     register_views(spark, sf)
-    sc = spark.sparkContext
-    group = "register_views_cache_hit"
-    sc.setJobGroup(group, "register_views on a registered session")
-    try:
-        register_views(spark, sf)
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 30
-    while True:
-        jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
-        marker = jobs and sc.statusTracker().getJobInfo(jobs[-1])
-        if (marker and marker.status == "SUCCEEDED") or time.monotonic() > deadline:
-            break
-        time.sleep(0.05)
-    assert len(jobs) == 1, f"register_views ran {len(jobs) - 1} Spark jobs on a cache hit"
+    jobs = spark_jobs(lambda: register_views(spark, sf))
+    assert jobs == 0, f"register_views ran {jobs} Spark jobs on a cache hit"
 
 
 # ---------------------------------------------------------------------------

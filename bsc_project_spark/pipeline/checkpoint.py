@@ -36,8 +36,8 @@ On-disk layout under ``out_dir``::
     data/bucket=K, data/update=U            extracted spans
     data/compacted=C                        ``compact``'s fold of the above
     errors/bucket=K, errors/update=U        quarantined unresolved media refs
-    doc_ids/bucket=K                        committed doc ids, flat
-    doc_ids/update=U/dbucket=K              ... partitioned by doc bucket
+    doc_ids/bucket=K/dbucket=K              committed doc ids by doc bucket
+    doc_ids/update=U/dbucket=K              ... of an update
     doc_ids/compacted=C/dbucket=K           ... folded by ``compact``
     doc_lineage/bucket=K, doc_lineage/update=U   doc/span/unresolved counts
                                                  + wall time, bucket K or -U
@@ -76,8 +76,12 @@ dir) and ``expire_snapshots`` are safe while units are being written.
 (its bucket, or its update id and tag) to the newest snapshot instead of
 re-stating the unit lists it read at its start, so a rollback that lands
 while a unit is being written stays in force and the unit commits on top
-of it.  Two concurrent unit writers are NOT supported: both would pick
-the same ``update=U`` / ``bucket=K`` directories before either commits.
+of it.  A second concurrent unit writer is refused: ``run_extraction_job``
+and ``run_incremental_update`` hold an exclusive ``flock`` on ``out_dir``
+for their whole run, and one that finds it held raises ``CommitConflict``
+before writing any file (both would otherwise pick the same ``update=U`` /
+``bucket=K`` directories).  The kernel drops the lock of a process that
+dies, so a crashed writer never blocks its own resume.
 
 The reference's analogue is ``ocr_generate_more_crops`` resuming crop
 numbering from files already on disk (reference
@@ -86,18 +90,22 @@ scripts/ocr_generate_more_crops.py:11-18,69-76).
 
 from __future__ import annotations
 
+import contextlib
 import copy
+import fcntl
 import json
 import os
 import re
 import time
 import uuid
 
+import pyarrow.dataset as pads
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from .extract import (
+    EXTRACT_STAGE_SCHEMA,
     LINEAGE_SCHEMA,
     assemble_spans,
     media_refs,
@@ -105,10 +113,22 @@ from .extract import (
     split_stage_output,
 )
 
-DOC_LINEAGE_SCHEMA = (
-    "bucket int, doc_count long, span_count long, unresolved_count long, "
-    "wall_time_ms long"
-)
+# Each sub-table read back, with its schema as written.  Every read hands
+# it to the reader, so none runs a schema-inference job.  refs_updates/
+# holds refs rows; a doc_ids read names ``dbucket=K`` leaf dirs, so it
+# discovers no partition column.  A doc_lineage row is written under its
+# schema directly.
+_SCHEMAS = {
+    "refs": "media_ref string",
+    "cells": EXTRACT_STAGE_SCHEMA,
+    "lineage": f"{LINEAGE_SCHEMA}, run_id string, bucket int, committed_at_ms long",
+    "data": "doc_id string, `order` int, kind string, text string, media_ref string",
+    "doc_ids": "doc_id string",
+    "doc_lineage": (
+        "bucket int, doc_count long, span_count long, unresolved_count long, "
+        "wall_time_ms long, run_id string, committed_at_ms long"
+    ),
+}
 
 # idempotency-ledger cap: far beyond any realistic replay horizon (the
 # stream engine replays at most its last unacknowledged batches)
@@ -270,6 +290,36 @@ def _unit_paths(
     ]
 
 
+def _read(spark: SparkSession, sub: str, paths: list[str]) -> DataFrame:
+    """The parquet dirs ``paths`` of sub-table ``sub``, read under its
+    written schema: the one reader of the table's files."""
+    if not paths:
+        raise ValueError(f"no committed {sub} units to read")
+    return spark.read.schema(_SCHEMAS[sub]).parquet(*paths)
+
+
+def _footer_rows(path: str) -> int:
+    """Row count of a written parquet dir, from its footers (no job)."""
+    return pads.dataset(path, format="parquet").count_rows()
+
+
+@contextlib.contextmanager
+def _sole_unit_writer(out_dir: str):
+    """Hold an exclusive lock on ``out_dir`` itself for a unit writer's
+    run; a second writer raises ``CommitConflict`` instead of waiting.
+    Closing the fd (or the process dying) releases it."""
+    os.makedirs(out_dir, exist_ok=True)
+    fd = os.open(out_dir, os.O_RDONLY)
+    try:
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise CommitConflict(f"another unit writer holds {out_dir}") from None
+        yield
+    finally:
+        os.close(fd)
+
+
 def _commit_pages(
     media: DataFrame,
     refs: DataFrame,
@@ -291,35 +341,33 @@ def _commit_pages(
     try:
         cells, lineage = split_stage_output(stage)
         cells.write.mode("overwrite").parquet(os.path.join(out_dir, "cells", part))
-        if lineage.limit(1).count() == 0:
-            # empty unit (no refs hashed here, or Spark skipped empty
-            # partitions): still commit an explicit zero row so the
-            # lineage table covers every committed unit
-            lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
-        (
-            lineage.withColumn("run_id", F.lit(run_id))
-            .withColumn("bucket", F.lit(bucket))
-            .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "lineage", part))
-        )
+        lineage_dir = os.path.join(out_dir, "lineage", part)
+        # an empty unit (no refs hashed here, or Spark skipped empty
+        # partitions) rewrites its lineage as an explicit zero row, so the
+        # lineage table covers every committed unit
+        for rows in (lineage, spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)):
+            (
+                rows.withColumn("run_id", F.lit(run_id))
+                .withColumn("bucket", F.lit(bucket))
+                .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
+                .write.mode("overwrite")
+                .parquet(lineage_dir)
+            )
+            if _footer_rows(lineage_dir):
+                break
     finally:
         stage.unpersist()
 
 
-def _write_doc_ids(frame: DataFrame, path: str, n_dbuckets: int | None) -> None:
+def _write_doc_ids(frame: DataFrame, path: str, n_buckets: int) -> None:
     """Committed-ids ledger: the distinct doc_ids of ``frame`` in one
-    skinny file set, so ingest idempotency anti-joins read O(touched
-    buckets) of doc ids instead of scanning the data table (see
-    committed_doc_ids).  With ``n_dbuckets`` the ledger is partitioned by
-    the base run's doc bucket, so a later batch's anti-join prunes it to
-    its touched ``dbucket=K`` directories."""
-    ids = frame.select("doc_id").distinct()
-    if n_dbuckets is None:
-        ids.write.mode("overwrite").parquet(path)
-        return
+    skinny file set partitioned by the base run's doc bucket, so an
+    ingest idempotency anti-join reads only its touched ``dbucket=K``
+    directories instead of scanning the data table (see
+    committed_doc_ids)."""
     (
-        ids.withColumn("dbucket", _doc_bucket(n_dbuckets))
+        frame.select("doc_id").distinct()
+        .withColumn("dbucket", _doc_bucket(n_buckets))
         .write.mode("overwrite")
         .partitionBy("dbucket")
         .parquet(path)
@@ -334,12 +382,11 @@ def _commit_docs(
     part: str,
     bucket: int,
     run_id: str,
-    n_dbuckets: int | None = None,
+    n_buckets: int,
 ) -> None:
     """Assemble ``documents`` against the committed ``cells`` and write
-    unit ``part``'s ``data/``, ``errors/``, ``doc_ids/`` ledger and
-    ``doc_lineage/`` row.  A base bucket's ledger is flat; an update's is
-    partitioned into ``n_dbuckets`` doc buckets."""
+    unit ``part``'s ``data/``, ``errors/``, ``doc_ids/`` ledger (in
+    ``n_buckets`` doc buckets) and ``doc_lineage/`` row."""
     spark = documents.sparkSession
     t0 = time.monotonic()
     data_dir = os.path.join(out_dir, "data", part)
@@ -347,22 +394,13 @@ def _commit_docs(
     extracted, unresolved = assemble_spans(documents, cells, media)
     extracted.write.mode("overwrite").parquet(data_dir)
     unresolved.write.mode("overwrite").parquet(errors_dir)
-    _write_doc_ids(documents, os.path.join(out_dir, "doc_ids", part), n_dbuckets)
-    stats = spark.read.parquet(data_dir).agg(
-        F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
-    ).collect()[0]
-    n_unresolved = spark.read.parquet(errors_dir).count()
-    doc_lineage = spark.createDataFrame(
-        [(bucket, int(stats.docs), int(stats.spans), int(n_unresolved),
-          int((time.monotonic() - t0) * 1000))],
-        DOC_LINEAGE_SCHEMA,
-    )
-    (
-        doc_lineage.withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "doc_lineage", part))
-    )
+    _write_doc_ids(documents, os.path.join(out_dir, "doc_ids", part), n_buckets)
+    n_docs = _read(spark, "data", [data_dir]).agg(F.countDistinct("doc_id")).first()[0]
+    spark.createDataFrame(
+        [(bucket, n_docs, _footer_rows(data_dir), _footer_rows(errors_dir),
+          int((time.monotonic() - t0) * 1000), run_id, int(time.time() * 1000))],
+        _SCHEMAS["doc_lineage"],
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "doc_lineage", part))
 
 
 def run_extraction_job(
@@ -384,73 +422,74 @@ def run_extraction_job(
     (SURVEY.md §5.5).
     """
     spark = documents.sparkSession
-    os.makedirs(out_dir, exist_ok=True)
-    n_page_buckets = n_page_buckets or n_buckets
-    manifest = read_manifest(out_dir)
-    if manifest["n_buckets"] not in (None, n_buckets):
-        raise ValueError(
-            f"bucket count mismatch: manifest has {manifest['n_buckets']}, got {n_buckets}"
-        )
-    if manifest["n_page_buckets"] not in (None, n_page_buckets):
-        raise ValueError(
-            f"page-bucket count mismatch: manifest has {manifest['n_page_buckets']},"
-            f" got {n_page_buckets}"
-        )
-    run_id = manifest["run_id"] or run_id or uuid.uuid4().hex[:12]
-    committed_pages = set(manifest["committed_page_buckets"])
-    committed = set(manifest["committed_buckets"])
-
-    def commit(key: str, bucket: int) -> dict:
-        # adds the one bucket to the newest snapshot, whose other state
-        # (updates, an active compaction, a rollback landed meanwhile)
-        # this job does not own
-        return _commit_manifest(
-            out_dir,
-            {
-                "run_id": run_id,
-                key: [bucket],
-                "n_buckets": n_buckets,
-                "n_page_buckets": n_page_buckets,
-            },
-        )
-
-    # ---- stage 1: pages (skipped entirely on a doc-stage-only resume) ----
-    refs_dir = os.path.join(out_dir, "refs")
-    if len(committed_pages) < n_page_buckets:
-        if not os.path.exists(os.path.join(refs_dir, "_SUCCESS")):
-            # snapshot the distinct refs once: page buckets of a resumed run
-            # see the same ref set even if `documents` changed underneath
-            media_refs(documents).write.mode("overwrite").parquet(refs_dir)
-        refs_all = spark.read.parquet(refs_dir)
-        pbucket_col = F.pmod(F.xxhash64("media_ref"), F.lit(n_page_buckets))
-        for pb in range(n_page_buckets):
-            if pb in committed_pages:
-                continue
-            _commit_pages(
-                media, refs_all.filter(pbucket_col == pb), cfg, out_dir,
-                f"pbucket={pb}", pb, run_id,
+    with _sole_unit_writer(out_dir):
+        n_page_buckets = n_page_buckets or n_buckets
+        manifest = read_manifest(out_dir)
+        if manifest["n_buckets"] not in (None, n_buckets):
+            raise ValueError(
+                f"bucket count mismatch: manifest has {manifest['n_buckets']},"
+                f" got {n_buckets}"
             )
-            committed_pages.add(pb)
-            manifest = commit("committed_page_buckets", pb)
-            if fail_after_page_bucket is not None and pb >= fail_after_page_bucket:
-                raise RuntimeError(f"injected failure after page bucket {pb}")
+        if manifest["n_page_buckets"] not in (None, n_page_buckets):
+            raise ValueError(
+                f"page-bucket count mismatch: manifest has {manifest['n_page_buckets']},"
+                f" got {n_page_buckets}"
+            )
+        run_id = manifest["run_id"] or run_id or uuid.uuid4().hex[:12]
+        committed_pages = set(manifest["committed_page_buckets"])
+        committed = set(manifest["committed_buckets"])
 
-    # ---- stage 2: documents (joins committed cells; no kernel ever reruns) ----
-    cells_all = spark.read.parquet(
-        *_unit_paths(out_dir, "cells", "pbucket", sorted(committed_pages), [])
-    )
-    bucket_col = _doc_bucket(n_buckets)
-    for bucket in range(n_buckets):
-        if bucket in committed:
-            continue
-        _commit_docs(
-            documents.filter(bucket_col == bucket), cells_all, media, out_dir,
-            f"bucket={bucket}", bucket, run_id,
-        )
-        manifest = commit("committed_buckets", bucket)
-        if fail_after_bucket is not None and bucket >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {bucket}")
-    return manifest
+        def commit(key: str, bucket: int) -> dict:
+            # adds the one bucket to the newest snapshot, whose other state
+            # (updates, an active compaction, a rollback landed meanwhile)
+            # this job does not own
+            return _commit_manifest(
+                out_dir,
+                {
+                    "run_id": run_id,
+                    key: [bucket],
+                    "n_buckets": n_buckets,
+                    "n_page_buckets": n_page_buckets,
+                },
+            )
+
+        # ---- stage 1: pages (skipped entirely on a doc-stage-only resume) ----
+        refs_dir = os.path.join(out_dir, "refs")
+        if len(committed_pages) < n_page_buckets:
+            if not os.path.exists(os.path.join(refs_dir, "_SUCCESS")):
+                # snapshot the distinct refs once: page buckets of a resumed run
+                # see the same ref set even if `documents` changed underneath
+                media_refs(documents).write.mode("overwrite").parquet(refs_dir)
+            refs_all = _read(spark, "refs", [refs_dir])
+            pbucket_col = F.pmod(F.xxhash64("media_ref"), F.lit(n_page_buckets))
+            for pb in range(n_page_buckets):
+                if pb in committed_pages:
+                    continue
+                _commit_pages(
+                    media, refs_all.filter(pbucket_col == pb), cfg, out_dir,
+                    f"pbucket={pb}", pb, run_id,
+                )
+                committed_pages.add(pb)
+                manifest = commit("committed_page_buckets", pb)
+                if fail_after_page_bucket is not None and pb >= fail_after_page_bucket:
+                    raise RuntimeError(f"injected failure after page bucket {pb}")
+
+        # ---- stage 2: documents (joins committed cells; no kernel ever reruns) ----
+        cells_all = _read(spark, "cells", _unit_paths(
+            out_dir, "cells", "pbucket", sorted(committed_pages), []
+        ))
+        bucket_col = _doc_bucket(n_buckets)
+        for bucket in range(n_buckets):
+            if bucket in committed:
+                continue
+            _commit_docs(
+                documents.filter(bucket_col == bucket), cells_all, media, out_dir,
+                f"bucket={bucket}", bucket, run_id, n_buckets,
+            )
+            manifest = commit("committed_buckets", bucket)
+            if fail_after_bucket is not None and bucket >= fail_after_bucket:
+                raise RuntimeError(f"injected failure after bucket {bucket}")
+        return manifest
 
 
 def run_incremental_update(
@@ -489,59 +528,61 @@ def run_incremental_update(
     its key in the ledger and skips.
     """
     spark = new_documents.sparkSession
-    manifest = read_manifest(out_dir)
-    if idempotency_key is not None and idempotency_key in manifest["update_tags"]:
-        return manifest
-    if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
-        manifest["n_buckets"] or 0
-    ):
-        raise ValueError(
-            f"{out_dir} has no fully-committed base run; run run_extraction_job first"
+    with _sole_unit_writer(out_dir):
+        manifest = read_manifest(out_dir)
+        if idempotency_key is not None and idempotency_key in manifest["update_tags"]:
+            return manifest
+        if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
+            manifest["n_buckets"] or 0
+        ):
+            raise ValueError(
+                f"{out_dir} has no fully-committed base run; run run_extraction_job first"
+            )
+        committed_updates: list[int] = list(manifest["committed_updates"])
+        # past the highest id ANY snapshot names, not just the current one: a
+        # rollback un-commits updates whose files the abandoned snapshots
+        # still read through ``as_of``, so their ids are never reused
+        uid = 1 + max(
+            (u for m in list_snapshots(out_dir) for u in m.get("committed_updates", [])),
+            default=0,
         )
-    committed_updates: list[int] = list(manifest["committed_updates"])
-    # past the highest id ANY snapshot names, not just the current one: a
-    # rollback un-commits updates whose files the abandoned snapshots
-    # still read through ``as_of``, so their ids are never reused
-    uid = 1 + max(
-        (u for m in list_snapshots(out_dir) for u in m.get("committed_updates", [])),
-        default=0,
-    )
-    part = f"update={uid}"
+        part = f"update={uid}"
 
-    # refs already extracted: base snapshot + prior update deltas
-    known_refs = spark.read.parquet(
-        os.path.join(out_dir, "refs"),
-        *[os.path.join(out_dir, f"refs_updates/update={u}") for u in committed_updates],
-    )
-    delta_dir = os.path.join(out_dir, "refs_updates", part)
-    media_refs(new_documents).join(
-        known_refs, on="media_ref", how="left_anti"
-    ).write.mode("overwrite").parquet(delta_dir)
+        # refs already extracted: base snapshot + prior update deltas
+        known_refs = _read(spark, "refs", [
+            os.path.join(out_dir, "refs"),
+            *[os.path.join(out_dir, f"refs_updates/update={u}")
+              for u in committed_updates],
+        ])
+        delta_dir = os.path.join(out_dir, "refs_updates", part)
+        media_refs(new_documents).join(
+            known_refs, on="media_ref", how="left_anti"
+        ).write.mode("overwrite").parquet(delta_dir)
 
-    # page stage over ONLY the genuinely-new pages; the negative lineage
-    # bucket id marks update deltas
-    _commit_pages(
-        media, spark.read.parquet(delta_dir), cfg, out_dir, part, -uid,
-        manifest["run_id"],
-    )
+        # page stage over ONLY the genuinely-new pages; the negative lineage
+        # bucket id marks update deltas
+        _commit_pages(
+            media, _read(spark, "refs", [delta_dir]), cfg, out_dir, part, -uid,
+            manifest["run_id"],
+        )
 
-    # doc stage: join ALL committed cells (base + every update incl. this
-    # one) so shared pages resolve without recompute
-    cells_all = spark.read.parquet(*_unit_paths(
-        out_dir, "cells", "pbucket", manifest["committed_page_buckets"],
-        [*committed_updates, uid],
-    ))
-    _commit_docs(
-        new_documents, cells_all, media, out_dir, part, -uid, manifest["run_id"],
-        n_dbuckets=manifest["n_buckets"],
-    )
+        # doc stage: join ALL committed cells (base + every update incl. this
+        # one) so shared pages resolve without recompute
+        cells_all = _read(spark, "cells", _unit_paths(
+            out_dir, "cells", "pbucket", manifest["committed_page_buckets"],
+            [*committed_updates, uid],
+        ))
+        _commit_docs(
+            new_documents, cells_all, media, out_dir, part, -uid, manifest["run_id"],
+            manifest["n_buckets"],
+        )
 
-    # single atomic commit makes the whole update visible; it adds U and
-    # its tag to the newest snapshot, so a rollback landed meanwhile holds
-    tags = {} if idempotency_key is None else {idempotency_key: uid}
-    return _commit_manifest(
-        out_dir, {"committed_updates": [uid], "update_tags": tags}
-    )
+        # single atomic commit makes the whole update visible; it adds U and
+        # its tag to the newest snapshot, so a rollback landed meanwhile holds
+        tags = {} if idempotency_key is None else {idempotency_key: uid}
+        return _commit_manifest(
+            out_dir, {"committed_updates": [uid], "update_tags": tags}
+        )
 
 
 def _uncovered_units(manifest: dict) -> tuple[list[int], list[int]]:
@@ -557,12 +598,12 @@ def _uncovered_units(manifest: dict) -> tuple[list[int], list[int]]:
     )
 
 
-def _data_paths(out_dir: str, manifest: dict) -> list[str]:
-    """Doc-output dirs a manifest's state reads: the compacted dir (if the
-    state has one) plus every bucket/update NOT covered by it."""
+def _data_paths(out_dir: str, manifest: dict, sub: str = "data") -> list[str]:
+    """Dirs of doc output ``sub`` a manifest's state reads: the compacted
+    dir (if the state has one) plus every bucket/update NOT covered by it."""
     comp = manifest.get("compaction")
-    paths = [os.path.join(out_dir, f"data/compacted={comp['id']}")] if comp else []
-    return paths + _unit_paths(out_dir, "data", "bucket", *_uncovered_units(manifest))
+    paths = [os.path.join(out_dir, sub, f"compacted={comp['id']}")] if comp else []
+    return paths + _unit_paths(out_dir, sub, "bucket", *_uncovered_units(manifest))
 
 
 def committed_doc_ids(
@@ -572,60 +613,21 @@ def committed_doc_ids(
     ``doc_ids/`` ledger instead of the data files.
 
     ``buckets`` prunes the scan to those doc-id buckets
-    (``pmod(xxhash64(doc_id), n_buckets)``): base ledger dirs are
-    selected by path, update-delta ledgers by their ``dbucket=K``
-    partition directories — so an ingest batch's idempotency anti-join
-    costs O(batch + touched buckets) however many snapshots the table
-    has accumulated, instead of rescanning the whole committed data set
-    every micro-batch.  Falls back to the data files for tables written
-    before the ledger existed."""
+    (``pmod(xxhash64(doc_id), n_buckets)``): every ledger unit (base
+    bucket, uncovered update, the compaction) is partitioned by doc
+    bucket, and only the wanted ``dbucket=K`` leaf dirs are listed and
+    read — so an ingest batch's idempotency anti-join costs O(batch +
+    touched buckets) however many snapshots the table has accumulated,
+    instead of rescanning the whole committed data set every micro-batch."""
     manifest = read_manifest(out_dir)
-    comp = manifest["compaction"]
-    base, updates = _uncovered_units(manifest)
-    comp_path = (
-        os.path.join(out_dir, f"doc_ids/compacted={comp['id']}") if comp else None
-    )
-    if comp_path is not None and not os.path.exists(comp_path):
-        # compaction predates the ledger fold: its covered dirs still
-        # exist, read them directly
-        base, updates = manifest["committed_buckets"], manifest["committed_updates"]
-        comp_path = None
-    if buckets is not None:
-        wanted = set(buckets)
-        base = [b for b in base if b in wanted]
-    base_paths = _unit_paths(out_dir, "doc_ids", "bucket", base, [])
-    upd_paths = _unit_paths(out_dir, "doc_ids", "bucket", [], updates)
-    if any(not os.path.exists(p) for p in base_paths + upd_paths):
-        # pre-ledger table: the old (full-scan) behavior
-        return read_extracted(spark, out_dir).select("doc_id").distinct()
-    # basePath anchors partition discovery at the ledger root (the
-    # explicit path lists still gate visibility to committed dirs only);
-    # without it Spark treats each bucket=K / update=U path as its own
-    # root and raises CONFLICTING_DIRECTORY_STRUCTURES
-    root = os.path.join(out_dir, "doc_ids")
-    frames = []
-    if comp_path is not None:
-        cdf = spark.read.option("basePath", root).parquet(comp_path)
-        if buckets is not None:
-            cdf = cdf.where(F.col("dbucket").isin([int(b) for b in buckets]))
-        frames.append(cdf.select("doc_id"))
-    if base_paths:
-        frames.append(
-            spark.read.option("basePath", root).parquet(*base_paths).select("doc_id")
-        )
-    if upd_paths:
-        upd = spark.read.option("basePath", root).parquet(*upd_paths)
-        if buckets is not None:
-            # dbucket is a partition-directory column: this filter prunes
-            # directories at file-listing time, no data files are opened
-            upd = upd.where(F.col("dbucket").isin([int(b) for b in buckets]))
-        frames.append(upd.select("doc_id"))
-    if not frames:
-        return spark.createDataFrame([], "doc_id string")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
+    wanted = range(manifest["n_buckets"] or 0) if buckets is None else buckets
+    paths = [
+        leaf for unit in _data_paths(out_dir, manifest, "doc_ids") for b in wanted
+        if os.path.isdir(leaf := os.path.join(unit, f"dbucket={b}"))
+    ]
+    if not paths:
+        return spark.createDataFrame([], _SCHEMAS["doc_ids"])
+    return _read(spark, "doc_ids", paths).distinct()
 
 
 def read_extracted(
@@ -635,10 +637,7 @@ def read_extracted(
     invisible, like reading an Iceberg snapshot).  ``as_of`` reads the
     table as it stood at that snapshot id (time travel)."""
     manifest = read_manifest(out_dir, as_of=as_of)
-    paths = _data_paths(out_dir, manifest)
-    if not paths:
-        raise ValueError(f"no committed buckets under {out_dir}")
-    return spark.read.parquet(*paths)
+    return _read(spark, "data", _data_paths(out_dir, manifest))
 
 
 def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> dict:
@@ -656,14 +655,13 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
     df = read_extracted(spark, out_dir)
     dest = os.path.join(out_dir, f"data/compacted={cid}")
     df.repartition(target_partitions).write.mode("overwrite").parquet(dest)
-    if manifest["n_buckets"]:
-        # fold the committed-ids ledger too: without this a long-lived
-        # continuous-ingest table accretes one doc_ids/update=U dir per
-        # batch forever, and the ingest anti-join's touched-bucket scan
-        # grows with update count instead of staying one dir per bucket
-        _write_doc_ids(
-            df, os.path.join(out_dir, f"doc_ids/compacted={cid}"), manifest["n_buckets"]
-        )
+    # fold the committed-ids ledger too: without this a long-lived
+    # continuous-ingest table accretes one doc_ids/update=U dir per batch
+    # forever, and the ingest anti-join's touched-bucket scan grows with
+    # update count instead of staying one dir per bucket
+    _write_doc_ids(
+        df, os.path.join(out_dir, f"doc_ids/compacted={cid}"), manifest["n_buckets"]
+    )
     # the rest of the table state carries over, the idempotency ledger
     # among it: a stream batch replayed after a compact stays a no-op
     return _commit_manifest(
@@ -714,13 +712,10 @@ def read_lineage(
     """Page-stage lineage rows (per shuffle partition: page/cell/char
     counts + wall time) of committed page buckets and updates."""
     manifest = read_manifest(out_dir, as_of=as_of)
-    paths = _unit_paths(
+    return _read(spark, "lineage", _unit_paths(
         out_dir, "lineage", "pbucket",
         manifest["committed_page_buckets"], manifest["committed_updates"],
-    )
-    if not paths:
-        raise ValueError(f"no committed lineage under {out_dir}")
-    return spark.read.parquet(*paths)
+    ))
 
 
 def read_doc_lineage(
@@ -730,10 +725,7 @@ def read_doc_lineage(
     wall time) of committed doc buckets; incremental updates appear with
     negative bucket ids (-update_id)."""
     manifest = read_manifest(out_dir, as_of=as_of)
-    paths = _unit_paths(
+    return _read(spark, "doc_lineage", _unit_paths(
         out_dir, "doc_lineage", "bucket",
         manifest["committed_buckets"], manifest["committed_updates"],
-    )
-    if not paths:
-        raise ValueError(f"no committed doc lineage under {out_dir}")
-    return spark.read.parquet(*paths)
+    ))

@@ -78,19 +78,22 @@ def ingest_sink(
                 .collect()
             )
         committed = committed_doc_ids(batch_df.sparkSession, out_dir, touched)
-        # checkpoint: run_incremental_update evaluates its input several
+        # persisted: run_incremental_update evaluates its input several
         # times (refs delta, doc stage) and each lazy evaluation would
         # re-scan the ever-growing committed table through this anti-join
-        fresh = batch_df.join(committed, "doc_id", "left_anti").localCheckpoint()
-        if fresh.isEmpty():
-            return
-        run_incremental_update(
-            fresh,
-            media,
-            cfg,
-            out_dir,
-            idempotency_key=f"{query_name}:batch={batch_id}:{content}",
-        )
+        fresh = batch_df.join(committed, "doc_id", "left_anti").persist()
+        try:
+            if fresh.count() == 0:
+                return
+            run_incremental_update(
+                fresh,
+                media,
+                cfg,
+                out_dir,
+                idempotency_key=f"{query_name}:batch={batch_id}:{content}",
+            )
+        finally:
+            fresh.unpersist()
 
     return sink
 

@@ -361,6 +361,12 @@ def test_table_layout_is_pinned(spark, corpus, tmp_path):
     ]:
         expected |= {sub} | {f"{sub}/{p}" for p in subparts}
     expected.add("doc_ids/update=1/dbucket=*")
+    # every ledger unit is partitioned by doc bucket; a base bucket that
+    # holds no document writes no dbucket dir
+    held = docs.filter(F.col("doc_id").isin(base_ids)).select(
+        F.pmod(F.xxhash64("doc_id"), F.lit(2)).alias("b")
+    ).distinct().collect()
+    expected |= {f"doc_ids/bucket={r.b}/dbucket=*" for r in held}
     assert dirs == expected
     assert top == set()
     # 2 page-bucket + 2 doc-bucket + 1 update commits
@@ -738,3 +744,176 @@ def test_idempotency_ledger_keeps_the_newest_tags(tmp_path, monkeypatch):
         )
     assert m["committed_updates"] == [1, 2, 3]
     assert m["update_tags"] == {"k2": 2, "k3": 3}
+
+
+def test_a_second_unit_writer_is_refused(tmp_path, monkeypatch):
+    """Spark-free replay of two concurrent updates with stubbed unit
+    writers: writer A holds the table and, in the middle of its page
+    write, lets writer B start.  B raises the conflict before writing any
+    file, ``update=1`` holds A's rows, A commits, and a later update
+    still commits."""
+    import threading
+    from unittest import mock
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "two_writers")
+    os.makedirs(out_dir)
+    checkpoint._commit_manifest(
+        out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
+    )
+    a_writing = threading.Barrier(2)
+    b_done = threading.Event()
+
+    def write_pages(writer, refs, cfg, out, part, *a):
+        unit = os.path.join(out, "cells", part)
+        os.makedirs(unit, exist_ok=True)
+        with open(os.path.join(unit, "rows"), "w") as f:
+            f.write(writer)
+        if writer == "A":
+            a_writing.wait(timeout=30)
+            b_done.wait(timeout=30)
+
+    monkeypatch.setattr(checkpoint, "media_refs", mock.MagicMock())
+    monkeypatch.setattr(checkpoint, "_commit_pages", write_pages)
+    monkeypatch.setattr(checkpoint, "_commit_docs", lambda *a, **k: None)
+    result, files_around_b = {}, []
+
+    def update(writer):
+        try:
+            result[writer] = checkpoint.run_incremental_update(
+                mock.MagicMock(), writer, FIXTURE_CONFIG, out_dir
+            )
+        except Exception as e:  # noqa: BLE001 - asserted below
+            result[writer] = e
+
+    def second_writer():
+        files_around_b.append(_mtimes(out_dir))
+        try:
+            update("B")
+        finally:
+            files_around_b.append(_mtimes(out_dir))
+            b_done.set()
+
+    a = threading.Thread(target=update, args=("A",))
+    a.start()
+    a_writing.wait(timeout=30)
+    b = threading.Thread(target=second_writer)
+    b.start()
+    for t in (a, b):
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in (a, b))
+
+    assert isinstance(result["B"], checkpoint.CommitConflict), result
+    assert files_around_b[0] == files_around_b[1]
+    with open(os.path.join(out_dir, "cells", "update=1", "rows")) as f:
+        assert f.read() == "A"
+    assert result["A"]["committed_updates"] == [1]
+    assert [s["snapshot_id"] for s in checkpoint.list_snapshots(out_dir)] == [1, 2]
+
+    m = checkpoint.run_incremental_update(mock.MagicMock(), "C", FIXTURE_CONFIG, out_dir)
+    assert m["committed_updates"] == [1, 2]
+
+
+def test_pinned_schemas_equal_the_written_ones(spark, corpus, tmp_path):
+    """Every sub-table the table reads back is read under a pinned
+    schema.  Each pinned schema equals the one Spark infers from every
+    dir of that sub-table a base run, an update and a compaction wrote
+    (the ledger's ``dbucket=K`` leaf dirs are what its reader names), so
+    no reader sees NULLs for a column a writer renamed or retyped."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    base_ids = set(ids[: len(ids) // 2])
+    out_dir = str(tmp_path / "schemas")
+    run_extraction_job(
+        docs.filter(F.col("doc_id").isin(base_ids)), media, FIXTURE_CONFIG,
+        out_dir, n_buckets=2,
+    )
+    checkpoint.run_incremental_update(
+        docs.filter(~F.col("doc_id").isin(base_ids)), media, FIXTURE_CONFIG, out_dir
+    )
+    checkpoint.compact(spark, out_dir)
+
+    unit_dirs = {
+        "refs": [os.path.join(out_dir, "refs"), *glob.glob(f"{out_dir}/refs_updates/*")],
+        "doc_ids": glob.glob(f"{out_dir}/doc_ids/*/dbucket=*"),
+        **{
+            sub: glob.glob(f"{out_dir}/{sub}/*")
+            for sub in ("cells", "lineage", "data", "doc_lineage")
+        },
+    }
+    assert set(unit_dirs) == set(checkpoint._SCHEMAS)
+    assert any("compacted=1" in d for d in unit_dirs["data"] + unit_dirs["doc_ids"])
+    for sub, dirs in unit_dirs.items():
+        assert dirs, sub
+        for d in dirs:
+            assert checkpoint._read(spark, sub, [d]).schema == spark.read.parquet(d).schema, d
+
+
+def test_doc_lineage_counts_match_the_written_units(spark, corpus, tmp_path):
+    """A base bucket's and an update's doc lineage row (documents, spans,
+    unresolved media refs) equals what ``read_extracted`` and the unit's
+    ``errors/`` dir hold; each unit carries a document citing a page with
+    no media row, so its unresolved count is at least 1."""
+    from pyspark.sql import functions as F
+
+    from bsc_project_spark.pipeline.checkpoint import (
+        read_doc_lineage,
+        run_incremental_update,
+    )
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    half = len(ids) // 2
+    units = {
+        0: ids[:half] + ["doc-lost-base"],
+        -1: ids[half:] + ["doc-lost-update"],
+    }
+
+    def batch(unit):
+        lost = _doc_citing(spark, units[unit][-1], f"no-such-page{unit}")
+        return docs.filter(F.col("doc_id").isin(units[unit])).unionByName(lost)
+
+    out_dir = str(tmp_path / "doc_lineage")
+    run_extraction_job(batch(0), media, FIXTURE_CONFIG, out_dir, n_buckets=1)
+    run_incremental_update(batch(-1), media, FIXTURE_CONFIG, out_dir)
+
+    rows = {r.bucket: r for r in read_doc_lineage(spark, out_dir).collect()}
+    assert set(rows) == set(units)
+    spans = read_extracted(spark, out_dir)
+    for unit, part in [(0, "bucket=0"), (-1, "update=1")]:
+        mine = spans.filter(F.col("doc_id").isin(units[unit]))
+        unresolved = spark.read.parquet(os.path.join(out_dir, "errors", part)).count()
+        assert rows[unit].doc_count == mine.select("doc_id").distinct().count()
+        assert rows[unit].span_count == mine.count()
+        assert rows[unit].unresolved_count == unresolved >= 1
+
+
+def test_update_job_count(spark, corpus, tmp_path, spark_jobs):
+    """One incremental update of the fixture corpus runs at most 23 Spark
+    jobs: no read infers a schema, and the unit row counts come from the
+    parquet footers.  It ran 23 in each of 3 fresh sessions."""
+    from pyspark.sql import functions as F
+
+    from bsc_project_spark.pipeline.checkpoint import run_incremental_update
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    base_ids = set(ids[: len(ids) // 2])
+    out_dir = str(tmp_path / "update_jobs")
+    run_extraction_job(
+        docs.filter(F.col("doc_id").isin(base_ids)), media, FIXTURE_CONFIG,
+        out_dir, n_buckets=2,
+    )
+    delta = docs.filter(~F.col("doc_id").isin(base_ids))
+    jobs = spark_jobs(lambda: run_incremental_update(delta, media, FIXTURE_CONFIG, out_dir))
+    assert jobs <= 23, jobs

@@ -2,7 +2,8 @@
 only code under ``bsc_project_spark/`` that creates files under
 ``snapshots/``, no current-state pointer file or DSv2 sink writes table
 state beside it, and the removed second connected-components operator and
-bucketing module may not come back."""
+bucketing module may not come back.  It has one reader too: only
+``_read`` reads the table's parquet files, under their pinned schema."""
 
 import ast
 from pathlib import Path
@@ -79,3 +80,28 @@ def test_removed_protocols_and_operators_stay_removed():
     assert not hits, "\n".join(hits)
     assert not (PKG_DIR / "sources" / "manifest_sink.py").exists()
     assert not (PKG_DIR / "pipeline" / "bucketing.py").exists()
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """``<...>.read<...>.parquet(...)``: a parquet read through a
+    session's ``read`` (writes go through ``.write``)."""
+    f = call.func
+    if not (isinstance(f, ast.Attribute) and f.attr == "parquet"):
+        return False
+    node = f.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr == "read":
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def test_checkpoint_reads_parquet_only_through_read():
+    tree = ast.parse((PKG_DIR / "pipeline" / "checkpoint.py").read_text())
+    readers = {
+        fn.name
+        for fn in _functions(tree)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call) and _reads_parquet(call)
+    }
+    assert readers == {"_read"}, sorted(readers)

@@ -188,9 +188,9 @@ def test_fresh_checkpoint_rerun_is_fully_idempotent(spark, corpus, tmp_path):
 def test_ingest_anti_join_prunes_to_touched_buckets(spark, corpus, tmp_path):
     """Per-batch idempotency work stays O(batch + touched buckets) as
     snapshots accumulate: the committed-ids frame for a batch touching
-    one doc-id bucket lists ONLY that bucket's ledger files (base
-    bucket=K dir + update dbucket=K partition dirs), never the data
-    table or the other buckets' ledgers."""
+    one doc-id bucket lists ONLY that bucket's ledger files (the
+    ``dbucket=K`` leaf dirs of the base bucket and of each update),
+    never the data table or the other buckets' ledgers."""
     from bsc_project_spark.pipeline.checkpoint import committed_doc_ids
 
     docs, media, delta_ids, out_dir = _setup_base(spark, corpus, tmp_path)
@@ -212,22 +212,11 @@ def test_ingest_anti_join_prunes_to_touched_buckets(spark, corpus, tmp_path):
     files = pruned.inputFiles()
     assert files, "ledger scan should list at least the base bucket file"
     # every listed file is a skinny ledger file — the data table is never
-    # scanned — and the base side lists only the touched bucket's dir
+    # scanned — and lies under the touched bucket's dbucket dir: the
+    # listing itself is pruned, base buckets and updates alike
     assert all("/doc_ids/" in f for f in files), files
-    base_leak = [
-        f
-        for f in files
-        if "/doc_ids/bucket=" in f and f"/doc_ids/bucket={probe.b}/" not in f
-    ]
-    assert base_leak == [], f"base ledger leaked beyond bucket {probe.b}: {base_leak}"
-    # the update-delta side prunes by the dbucket partition directory at
-    # file-listing time (inputFiles() reports the pre-pruning listing, so
-    # the evidence is the pushed PartitionFilters in the physical plan)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "dbucket" in plan, plan[:2000]
-    import re
-
-    assert re.search(r"PartitionFilters: \[[^]]*dbucket[^]]*\]", plan), plan[:2000]
+    leak = [f for f in files if f"/dbucket={probe.b}/" not in f]
+    assert leak == [], f"ledger listing leaked beyond bucket {probe.b}: {leak}"
 
     # pruned result == exactly the committed docs of that bucket
     expect = {
@@ -281,3 +270,19 @@ def test_compaction_folds_the_ledger(spark, corpus, tmp_path):
     }
     assert all_ids2 == expect2
     assert delta_ids[1] in all_ids2
+
+
+def test_sink_leaves_no_persisted_rdd(spark, corpus, tmp_path):
+    """The sink releases the anti-joined batch it persists, whether the
+    batch commits or (a replay of committed docs) turns out empty: after
+    several calls the session's persisted RDDs have not grown."""
+    docs, media, delta_ids, out_dir = _setup_base(spark, corpus, tmp_path)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    sink = ingest_sink(media, FIXTURE_CONFIG, out_dir)
+    for i, did in enumerate(delta_ids[:2]):
+        sink(docs.filter(F.col("doc_id") == did), i)
+    # a new batch id carrying only committed docs: anti-joined to nothing
+    sink(docs.filter(F.col("doc_id") == delta_ids[0]), 7)
+    assert len(read_manifest(out_dir)["committed_updates"]) == 2
+    assert set(jsc.getPersistentRDDs()) - before == set()

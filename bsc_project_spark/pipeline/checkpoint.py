@@ -73,7 +73,7 @@ two commits built on the same snapshot, one lands and the other raises.
 ``compact`` (one at a time: two would write the same ``compacted=C``
 dir) and ``expire_snapshots`` are safe while units are being written.
 ``rollback`` is safe at any time: a unit writer's commit ADDS its unit
-(its bucket, or its update id and tag) to the newest snapshot instead of
+(its bucket or its update id) to the newest snapshot instead of
 re-stating the unit lists it read at its start, so a rollback that lands
 while a unit is being written stays in force and the unit commits on top
 of it.  A second concurrent unit writer is refused: ``run_extraction_job``
@@ -130,10 +130,6 @@ _SCHEMAS = {
     ),
 }
 
-# idempotency-ledger cap: far beyond any realistic replay horizon (the
-# stream engine replays at most its last unacknowledged batches)
-_MAX_UPDATE_TAGS = 1024
-
 # The table state every snapshot records, each key with its empty-table
 # value.  A commit copies all of it from a source manifest and applies only
 # its own changes, so no commit can drop state it does not own.  The unit
@@ -146,28 +142,16 @@ _TABLE_STATE = {
     "n_buckets": None,
     "n_page_buckets": None,
     "committed_updates": [],
-    "update_tags": {},
     "compaction": None,
 }
 
 
-_UNIT_KEYS = (
-    "committed_buckets", "committed_page_buckets", "committed_updates", "update_tags",
-)
+_UNIT_KEYS = ("committed_buckets", "committed_page_buckets", "committed_updates")
 
 
 def _add_units(key: str, have, new):
     """``have`` with the units ``new`` added: bucket sets are unioned,
-    update ids appended, tags merged (the ledger capped at
-    ``_MAX_UPDATE_TAGS`` — the stream engine only ever replays its most
-    recent unacknowledged batches, so a long-lived continuous ingest must
-    not grow and rewrite one tag per batch forever)."""
-    if key == "update_tags":
-        tags = {**have, **new}
-        if len(tags) > _MAX_UPDATE_TAGS:
-            floor = sorted(tags.values())[-_MAX_UPDATE_TAGS]
-            tags = {k: v for k, v in tags.items() if v >= floor}
-        return tags
+    update ids appended."""
     if key == "committed_updates":
         return [*have, *(u for u in new if u not in have)]
     return sorted(set(have) | set(new))
@@ -361,8 +345,8 @@ def _commit_pages(
 
 def _write_doc_ids(frame: DataFrame, path: str, n_buckets: int) -> None:
     """Committed-ids ledger: the distinct doc_ids of ``frame`` in one
-    skinny file set partitioned by the base run's doc bucket, so an
-    ingest idempotency anti-join reads only its touched ``dbucket=K``
+    skinny file set partitioned by the base run's doc bucket, so the
+    ingest replay anti-join reads only its touched ``dbucket=K``
     directories instead of scanning the data table (see
     committed_doc_ids)."""
     (
@@ -497,7 +481,6 @@ def run_incremental_update(
     media: DataFrame,
     cfg: ExtractConfig,
     out_dir: str,
-    idempotency_key: str | None = None,
 ) -> dict:
     """Extract a batch of NEWLY-ARRIVED documents into an already-committed
     table (the continuous-ingest path; the reference's analogue is
@@ -519,19 +502,14 @@ def run_incremental_update(
 
     Callers own doc-id disjointness (append-only ingest): re-submitting an
     already-committed document duplicates it, exactly like appending the
-    same rows to any table twice.  EXCEPTION: pass ``idempotency_key`` (a
-    caller-chosen tag, e.g. a streaming batch id) and a re-delivery of an
-    already-committed key is a NO-OP — the tag rides the same atomic
-    manifest commit as the data, so "committed" and "tag recorded" cannot
-    diverge.  This is what makes ``foreachBatch`` ingest exactly-once:
-    Structured Streaming replays a batch after a crash, the replay finds
-    its key in the ledger and skips.
+    same rows to any table twice.  The update's doc-id ledger
+    (``doc_ids/update=U``) rides the same atomic commit as its data, so a
+    caller that anti-joins its batch against ``committed_doc_ids`` — as
+    the stream sink does — makes any replay a no-op.
     """
     spark = new_documents.sparkSession
     with _sole_unit_writer(out_dir):
         manifest = read_manifest(out_dir)
-        if idempotency_key is not None and idempotency_key in manifest["update_tags"]:
-            return manifest
         if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
             manifest["n_buckets"] or 0
         ):
@@ -577,12 +555,9 @@ def run_incremental_update(
             manifest["n_buckets"],
         )
 
-        # single atomic commit makes the whole update visible; it adds U and
-        # its tag to the newest snapshot, so a rollback landed meanwhile holds
-        tags = {} if idempotency_key is None else {idempotency_key: uid}
-        return _commit_manifest(
-            out_dir, {"committed_updates": [uid], "update_tags": tags}
-        )
+        # single atomic commit makes the whole update visible; it adds U to
+        # the newest snapshot, so a rollback landed meanwhile holds
+        return _commit_manifest(out_dir, {"committed_updates": [uid]})
 
 
 def _uncovered_units(manifest: dict) -> tuple[list[int], list[int]]:
@@ -616,10 +591,17 @@ def committed_doc_ids(
     (``pmod(xxhash64(doc_id), n_buckets)``): every ledger unit (base
     bucket, uncovered update, the compaction) is partitioned by doc
     bucket, and only the wanted ``dbucket=K`` leaf dirs are listed and
-    read — so an ingest batch's idempotency anti-join costs O(batch +
+    read — so an ingest batch's replay anti-join costs O(batch +
     touched buckets) however many snapshots the table has accumulated,
     instead of rescanning the whole committed data set every micro-batch."""
-    manifest = read_manifest(out_dir)
+    return _ledger(spark, out_dir, read_manifest(out_dir), buckets)
+
+
+def _ledger(
+    spark: SparkSession, out_dir: str, manifest: dict, buckets: list[int] | None = None
+) -> DataFrame:
+    """The distinct doc_ids ``manifest``'s ledger units hold in ``buckets``
+    (default: every doc bucket)."""
     wanted = range(manifest["n_buckets"] or 0) if buckets is None else buckets
     paths = [
         leaf for unit in _data_paths(out_dir, manifest, "doc_ids") for b in wanted
@@ -652,18 +634,21 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
     ``expire_snapshots``."""
     manifest = read_manifest(out_dir)
     cid = int((manifest["compaction"] or {}).get("id", 0)) + 1
-    df = read_extracted(spark, out_dir)
-    dest = os.path.join(out_dir, f"data/compacted={cid}")
-    df.repartition(target_partitions).write.mode("overwrite").parquet(dest)
+    # both folds read the units of this one manifest: the ones the
+    # compaction records as covered
+    _read(spark, "data", _data_paths(out_dir, manifest)).repartition(
+        target_partitions
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, f"data/compacted={cid}"))
     # fold the committed-ids ledger too: without this a long-lived
     # continuous-ingest table accretes one doc_ids/update=U dir per batch
-    # forever, and the ingest anti-join's touched-bucket scan grows with
-    # update count instead of staying one dir per bucket
+    # forever.  It folds the covered ledgers, not the data: a document
+    # with no written span is committed all the same, and a stream replay
+    # of it must stay a no-op
     _write_doc_ids(
-        df, os.path.join(out_dir, f"doc_ids/compacted={cid}"), manifest["n_buckets"]
+        _ledger(spark, out_dir, manifest),
+        os.path.join(out_dir, f"doc_ids/compacted={cid}"),
+        manifest["n_buckets"],
     )
-    # the rest of the table state carries over, the idempotency ledger
-    # among it: a stream batch replayed after a compact stays a no-op
     return _commit_manifest(
         out_dir,
         {

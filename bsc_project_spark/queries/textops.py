@@ -452,17 +452,13 @@ def _cc_driver(spark, pairs_pdf):
         return spark.createDataFrame(out, "node bigint, label bigint")
 
 
-def connected_components(
-    pairs,
-    max_rounds: int = _CC_MAX_ROUNDS,
-    driver_edge_budget: int = _CC_DRIVER_EDGE_BUDGET,
-):
+def connected_components(pairs):
     """Connected components of an undirected (a_id, b_id) edge frame.
 
     Returns (node, label) where label = min node id of the component.
     Size-adaptive, the same way AQE picks physical strategies at runtime:
 
-    - edge count <= ``driver_edge_budget``: one-pass union-find on the
+    - edge count <= ``_CC_DRIVER_EDGE_BUDGET``: one-pass union-find on the
       driver (``_cc_driver``).  After LSH banding the candidate graph is
       orders of magnitude smaller than the corpus; when it fits the
       budget, a bounded toPandas + O(E α(E)) scan beats any multi-round
@@ -475,7 +471,7 @@ def connected_components(
       convergence is O(log diameter) rounds instead of O(diameter): the
       sf0.1 near-dup graph has diameter-16 chains that took 16 rounds
       with step (1) alone and take 5 with both.  Exhausting
-      ``max_rounds`` before a round changes no label raises.
+      ``_CC_MAX_ROUNDS`` before a round changes no label raises.
 
     Each round's frames are materialized, so round k plans against a
     leaf instead of nesting all k-1 predecessors — Catalyst re-optimizing
@@ -489,7 +485,7 @@ def connected_components(
     # upstream band self-join three times
     pairs = materialize(pairs)
     n_pairs = pairs.count()
-    if n_pairs <= driver_edge_budget:
+    if n_pairs <= _CC_DRIVER_EDGE_BUDGET:
         spark = pairs.sparkSession
         with _arrow_enabled(spark):
             pdf = pairs.toPandas()
@@ -508,7 +504,7 @@ def connected_components(
         .repartition(n_parts, "u")
     )
     labels = edges.selectExpr("u AS node").distinct().selectExpr("node", "node AS label")
-    for _ in range(max_rounds):
+    for _ in range(_CC_MAX_ROUNDS):
         incoming = (
             edges.join(labels.withColumnRenamed("node", "u"), "u")
             .groupBy("v")
@@ -546,8 +542,8 @@ def connected_components(
     # labels that still changed in the last round are not component
     # minima: returning them would be wrong labels with no signal
     raise RuntimeError(
-        f"connected_components: labels still changing after {max_rounds} "
-        "rounds; raise max_rounds (O(log diameter) rounds suffice)"
+        f"connected_components: labels still changing after {_CC_MAX_ROUNDS} "
+        "rounds; raise _CC_MAX_ROUNDS (O(log diameter) rounds suffice)"
     )
 
 

@@ -4,16 +4,16 @@ snapshot table.
 A file-source stream of newly-arrived ``documents`` rows feeds
 ``foreachBatch``; each micro-batch runs the SAME ``run_incremental_update``
 the batch path uses (page-level delta dedup, one atomic snapshot per
-batch).  Exactly-once across failures comes from two ledgers meeting:
-
-- Structured Streaming's checkpoint replays an unacknowledged batch with
-  the SAME batch id after a crash;
-- the table manifest records each committed batch's idempotency key in
-  the same atomic commit as its data, so the replayed batch finds its key
-  and no-ops.
+batch).  Exactly-once across failures comes from one store: each commit
+writes its documents' ids to the table's doc-id ledger in the same atomic
+snapshot as their data, and the sink anti-joins every batch against that
+ledger before it commits.  A replayed batch — the same batch after a
+crash, or the same documents re-batched after the stream checkpoint is
+lost — finds its documents committed and no-ops.
 
 This is the standard idempotent-``foreachBatch`` pattern, pointed at the
-repo's Iceberg-style manifest instead of an external transactional sink.
+repo's Iceberg-style snapshot table instead of an external transactional
+sink.
 At fleet scale the identical topology runs continuously (no availableNow)
 with the stream source being a queue or table changelog; nothing in the
 sink depends on the trigger mode.
@@ -27,34 +27,20 @@ from ..config import ExtractConfig
 from ..pipeline.checkpoint import run_incremental_update
 
 
-def ingest_sink(
-    media,
-    cfg: ExtractConfig,
-    out_dir: str,
-    query_name: str = "doc_ingest",
-):
+def ingest_sink(media, cfg: ExtractConfig, out_dir: str):
     """Build the ``foreachBatch`` callback: batch -> one idempotent
     incremental-update commit.
 
-    Two replay guards, layered:
-
-    - fast path: the idempotency key is the batch id PLUS a content hash
-      (md5 over the sorted doc ids), so a bit-identical redelivery — the
-      Structured Streaming replay contract — short-circuits without
-      touching the table.  Keying on the ordinal alone would be wrong
-      both ways: after a checkpoint loss the engine renumbers batches, so
-      a new batch could collide with a committed ordinal (silent data
-      loss) while a re-bucketed old batch gets a fresh ordinal (double
-      commit).
-    - truth: docs already in the committed table are anti-joined out of
-      the batch before ingesting.  This makes ANY re-batching safe —
-      losing the stream checkpoint and re-reading the whole source
-      ingests only the genuinely-new documents, whatever batch shapes
-      the second run produces.  The committed side comes from the skinny
-      ``doc_ids/`` ledger pruned to the batch's doc-id buckets
-      (``committed_doc_ids``), so per-batch cost stays O(batch + touched
-      buckets) no matter how many snapshots the table accumulates — a
-      full-table scan here would grow with table history.
+    The replay guard: docs already in the committed table are anti-joined
+    out of the batch before ingesting, and a batch left empty commits
+    nothing.  It keys on the documents, not the batch id, so ANY
+    re-batching is safe — losing the stream checkpoint and re-reading the
+    whole source ingests only the genuinely-new documents, whatever batch
+    ids and shapes the second run produces.  The committed side comes from
+    the skinny ``doc_ids/`` ledger pruned to the batch's doc-id buckets
+    (``committed_doc_ids``), so per-batch cost stays O(batch + touched
+    buckets) no matter how many snapshots the table accumulates — a
+    full-table scan here would grow with table history.
     """
     from pyspark.sql import functions as F
 
@@ -63,9 +49,6 @@ def ingest_sink(
     def sink(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        content = batch_df.agg(
-            F.md5(F.concat_ws(",", F.sort_array(F.collect_list("doc_id")))).alias("h")
-        ).collect()[0].h
         n_buckets = read_manifest(out_dir).get("n_buckets")
         touched = None
         if n_buckets:
@@ -85,13 +68,7 @@ def ingest_sink(
         try:
             if fresh.count() == 0:
                 return
-            run_incremental_update(
-                fresh,
-                media,
-                cfg,
-                out_dir,
-                idempotency_key=f"{query_name}:batch={batch_id}:{content}",
-            )
+            run_incremental_update(fresh, media, cfg, out_dir)
         finally:
             fresh.unpersist()
 
@@ -119,7 +96,7 @@ def stream_ingest_documents(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(source_dir)
     q = (
-        stream.writeStream.foreachBatch(ingest_sink(media, cfg, out_dir, query_name))
+        stream.writeStream.foreachBatch(ingest_sink(media, cfg, out_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .queryName(query_name)

@@ -242,9 +242,9 @@ connectivity runs, so `connected_components` picks its physical strategy
 from the measured edge count — the same runtime-statistics reflex AQE
 applies to join selection:
 
-- **edges ≤ 2M (driver budget)**: one bounded `toPandas` + path-compressed
-  union-find (union-by-min keeps each root = component min, matching the
-  distributed fixpoint's labels exactly).  O(E α(E)) and free of per-round
+- **edges ≤ `_CC_DRIVER_EDGE_BUDGET` (2M)**: one bounded `toPandas` +
+  path-compressed union-find (union-by-min keeps each root = component
+  min, matching the distributed fixpoint's labels exactly).  O(E α(E)) and free of per-round
   scheduler overhead — at bench scale this is ~10× faster than any
   multi-round shuffle plan.  The collect is provably bounded: the gating
   count is computed first from a materialized frame, and the result
@@ -258,8 +258,8 @@ applies to join selection:
   every round then shuffles only the skinny labels side.  At 10^9 docs a
   post-LSH candidate graph of 10^8-10^9 edges stays fully distributed.
   The fixpoint stops at the first round that changes no label; exhausting
-  `max_rounds` before that raises instead of returning labels that are
-  not component minima.
+  `_CC_MAX_ROUNDS` (20) before that raises instead of returning labels
+  that are not component minima.
 
 Both strategies (driver union-find, pointer-jump fixpoint) are pinned
 equal against a union-find oracle on random graphs by

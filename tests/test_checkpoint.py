@@ -374,8 +374,7 @@ def test_table_layout_is_pinned(spark, corpus, tmp_path):
 
     assert set(m) == {
         "run_id", "committed_buckets", "committed_page_buckets", "n_buckets",
-        "n_page_buckets", "committed_updates", "update_tags", "snapshot_id",
-        "committed_at_ms",
+        "n_page_buckets", "committed_updates", "snapshot_id", "committed_at_ms",
     }
     assert m["committed_updates"] == [1]
     assert {r.bucket for r in read_lineage(spark, out_dir).collect()} == {0, 1, -1}
@@ -392,36 +391,37 @@ def _doc_citing(spark, doc_id, media_ref):
 
 
 def test_rollback_keeps_idempotency_ledger(spark, corpus, tmp_path):
-    """Rolling back to the snapshot after update k1 restores that
-    snapshot's idempotency ledger: a re-delivered k1 stays a no-op, while
-    k2 (rolled back) commits again, under a fresh update id: the abandoned
-    snapshot still reads update 2."""
-    from bsc_project_spark.pipeline.checkpoint import rollback, run_incremental_update
+    """Rolling back to the snapshot after stream batch k1 restores that
+    snapshot's doc-id ledger: through the ingest sink, a re-delivered k1
+    stays a no-op, while k2 (rolled back) commits again, under a fresh
+    update id: the abandoned snapshot still reads update 2."""
+    from bsc_project_spark.pipeline.checkpoint import rollback
+    from bsc_project_spark.streaming.ingest import ingest_sink
 
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)
-    out_dir = str(tmp_path / "rollback_tags")
+    out_dir = str(tmp_path / "rollback_ledger")
     run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
     old_ref = corpus.media.media_ref.iloc[0]
     k1 = _doc_citing(spark, "doc-k1", old_ref)
     k2 = _doc_citing(spark, "doc-k2", old_ref)
+    sink = ingest_sink(media, FIXTURE_CONFIG, out_dir)
 
-    m1 = run_incremental_update(k1, media, FIXTURE_CONFIG, out_dir, idempotency_key="k1")
-    run_incremental_update(k2, media, FIXTURE_CONFIG, out_dir, idempotency_key="k2")
+    sink(k1, 0)
+    m1 = read_manifest(out_dir)
+    sink(k2, 1)
     rb = rollback(out_dir, m1["snapshot_id"])
     assert rb["committed_updates"] == [1]
     rows = sorted(map(tuple, read_extracted(spark, out_dir).collect()))
 
-    again = run_incremental_update(
-        k1, media, FIXTURE_CONFIG, out_dir, idempotency_key="k1"
-    )
-    assert again["snapshot_id"] == rb["snapshot_id"]
+    sink(k1, 0)
+    assert read_manifest(out_dir)["snapshot_id"] == rb["snapshot_id"]
     assert sorted(map(tuple, read_extracted(spark, out_dir).collect())) == rows
 
-    m3 = run_incremental_update(k2, media, FIXTURE_CONFIG, out_dir, idempotency_key="k2")
+    sink(k2, 1)
+    m3 = read_manifest(out_dir)
     assert m3["snapshot_id"] == rb["snapshot_id"] + 1
     assert m3["committed_updates"] == [1, 3]
-    assert m3["update_tags"] == {"k1": 1, "k2": 3}
     assert read_extracted(spark, out_dir).filter("doc_id = 'doc-k2'").count() > 0
 
 
@@ -484,7 +484,7 @@ def test_racing_commits_on_one_base_land_exactly_one(tmp_path, monkeypatch, firs
     base_files = _file_texts(snaps_dir)
 
     changes = {
-        "update": {"committed_updates": [1], "update_tags": {"batch-1": 1}},
+        "update": {"committed_updates": [1]},
         "compact": {"compaction": {"id": 1, "buckets": [0, 1], "updates": []}},
     }
     real_read = checkpoint.read_manifest
@@ -567,7 +567,9 @@ def test_concurrent_committers_lose_no_commit(tmp_path):
         for k in range(attempts):
             try:
                 landed.append(
-                    checkpoint._commit_manifest(out_dir, {"update_tags": {f"t{i}": k}})
+                    checkpoint._commit_manifest(
+                        out_dir, {"committed_updates": [i * attempts + k + 1]}
+                    )
                 )
             except checkpoint.CommitConflict:
                 pass
@@ -658,11 +660,10 @@ def test_expiry_leaves_a_unit_being_written_alone(tmp_path):
 
 def test_rollback_during_an_update_write_stays_in_force(tmp_path, monkeypatch):
     """Spark-free replay of a rollback landing while an update is being
-    written: update 2 reads the table (updates [1], tag k1), the unit
-    writes are stubbed and roll the table back to v1 in the middle, then
-    the update commits.  The commit adds update 2 to the rolled-back state
-    instead of re-stating what it read at its start, so update 1 and its
-    tag stay rolled back."""
+    written: update 2 reads the table (updates [1]), the unit writes are
+    stubbed and roll the table back to v1 in the middle, then the update
+    commits.  The commit adds update 2 to the rolled-back state instead of
+    re-stating what it read at its start, so update 1 stays rolled back."""
     from unittest import mock
 
     from bsc_project_spark.pipeline import checkpoint
@@ -672,19 +673,14 @@ def test_rollback_during_an_update_write_stays_in_force(tmp_path, monkeypatch):
     checkpoint._commit_manifest(
         out_dir, {"run_id": "r", "committed_buckets": [0, 1], "n_buckets": 2}
     )
-    checkpoint._commit_manifest(
-        out_dir, {"committed_updates": [1], "update_tags": {"k1": 1}}
-    )
+    checkpoint._commit_manifest(out_dir, {"committed_updates": [1]})
     monkeypatch.setattr(checkpoint, "media_refs", mock.MagicMock())
     monkeypatch.setattr(checkpoint, "_commit_pages", lambda *a, **k: None)
     monkeypatch.setattr(
         checkpoint, "_commit_docs", lambda *a, **k: checkpoint.rollback(out_dir, 1)
     )
-    m = checkpoint.run_incremental_update(
-        mock.MagicMock(), None, FIXTURE_CONFIG, out_dir, idempotency_key="k2"
-    )
+    m = checkpoint.run_incremental_update(mock.MagicMock(), None, FIXTURE_CONFIG, out_dir)
     assert m["committed_updates"] == [2]
-    assert m["update_tags"] == {"k2": 2}
     assert read_manifest(out_dir)["snapshot_id"] == m["snapshot_id"] == 4
     assert [s["committed_updates"] for s in checkpoint.list_snapshots(out_dir)] == [
         [], [1], [], [2],
@@ -730,20 +726,37 @@ def test_update_after_rollback_takes_a_fresh_id(tmp_path, monkeypatch):
     assert read_manifest(out_dir, as_of=3)["committed_updates"] == [1, 2]
 
 
-def test_idempotency_ledger_keeps_the_newest_tags(tmp_path, monkeypatch):
-    """A commit adding a tag past the ledger cap drops the oldest tags,
-    keeping the cap's newest update ids."""
-    from bsc_project_spark.pipeline import checkpoint
+def test_compact_keeps_every_committed_doc_id(spark, corpus, tmp_path):
+    """``compact`` folds the covered units' doc-id ledgers, so the
+    committed id set is the same before and after it.  The update holds
+    two documents that write no span — one with no spans at all, one
+    whose only media span cites a missing page — and both stay
+    committed."""
+    from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA
+    from bsc_project_spark.pipeline.checkpoint import (
+        committed_doc_ids,
+        compact,
+        run_incremental_update,
+    )
 
-    out_dir = str(tmp_path / "ledger_cap")
-    os.makedirs(out_dir)
-    monkeypatch.setattr(checkpoint, "_MAX_UPDATE_TAGS", 2)
-    for uid in (1, 2, 3):
-        m = checkpoint._commit_manifest(
-            out_dir, {"committed_updates": [uid], "update_tags": {f"k{uid}": uid}}
-        )
-    assert m["committed_updates"] == [1, 2, 3]
-    assert m["update_tags"] == {"k2": 2, "k3": 3}
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    out_dir = str(tmp_path / "compact_ledger")
+    run_extraction_job(docs, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
+    spanless = spark.createDataFrame(
+        [("doc-no-spans", []), ("doc-missing-page", [("media", None, "no-such-page", 0)])],
+        DOCUMENTS_SCHEMA,
+    )
+    run_incremental_update(spanless, media, FIXTURE_CONFIG, out_dir)
+
+    def ids():
+        return {r.doc_id for r in committed_doc_ids(spark, out_dir).collect()}
+
+    before = ids()
+    written = {r.doc_id for r in read_extracted(spark, out_dir).select("doc_id").collect()}
+    assert before - written == {"doc-no-spans", "doc-missing-page"}
+    assert compact(spark, out_dir)["compaction"]["updates"] == [1]
+    assert ids() == before
 
 
 def test_a_second_unit_writer_is_refused(tmp_path, monkeypatch):

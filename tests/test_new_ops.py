@@ -7,6 +7,7 @@ not exercise.)"""
 import pandas as pd
 import pytest
 
+from bsc_project_spark.queries import textops
 from bsc_project_spark.queries.eventops import _ASOF_SPARK
 from bsc_project_spark.queries.textops import connected_components
 
@@ -63,24 +64,26 @@ def test_connected_components_transitive_chain(spark):
     assert labels == _CC_EXPECTED
 
 
-def test_connected_components_distributed_path_agrees(spark):
-    # budget 0 forces the distributed pointer-jump fixpoint; both
-    # strategies must label identically
-    out = connected_components(_cc_pairs(spark), driver_edge_budget=0).toPandas()
+def _distributed_cc(monkeypatch, pairs):
+    # budget 0 forces the distributed pointer-jump fixpoint
+    with monkeypatch.context() as m:
+        m.setattr(textops, "_CC_DRIVER_EDGE_BUDGET", 0)
+        return connected_components(pairs).toPandas()
+
+
+def test_connected_components_distributed_path_agrees(spark, monkeypatch):
+    # both strategies must label identically
+    out = _distributed_cc(monkeypatch, _cc_pairs(spark))
     labels = dict(zip(out["node"], out["label"]))
     assert labels == _CC_EXPECTED
 
 
-def test_connected_components_self_loop_only_node_kept(spark):
+def test_connected_components_self_loop_only_node_kept(spark, monkeypatch):
     """A node whose only edge is a self-loop is a singleton component and
     must appear in every strategy's output."""
     pairs = spark.createDataFrame([(5, 5), (1, 2)], "a_id long, b_id long")
     expected = {5: 5, 1: 1, 2: 1}
-    for got_df in (
-        connected_components(pairs),
-        connected_components(pairs, driver_edge_budget=0),
-    ):
-        out = got_df.toPandas()
+    for out in (connected_components(pairs).toPandas(), _distributed_cc(monkeypatch, pairs)):
         assert dict(zip(out["node"].astype(int), out["label"].astype(int))) == expected
 
 
@@ -104,7 +107,7 @@ def _uf_oracle(edge_list):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_all_cc_strategies_match_union_find_on_random_graphs(spark, seed):
+def test_all_cc_strategies_match_union_find_on_random_graphs(spark, seed, monkeypatch):
     """Random graphs (chains, hubs, isolated pairs arise naturally):
     driver union-find and the pointer-jump fixpoint must produce the
     union-find oracle's (node -> component-min) labelings."""
@@ -120,11 +123,7 @@ def test_all_cc_strategies_match_union_find_on_random_graphs(spark, seed):
     )
     expected = _uf_oracle(edge_list)
     pairs = spark.createDataFrame(edge_list, "a_id long, b_id long")
-    for got_df in (
-        connected_components(pairs),
-        connected_components(pairs, driver_edge_budget=0),
-    ):
-        out = got_df.toPandas()
+    for out in (connected_components(pairs).toPandas(), _distributed_cc(monkeypatch, pairs)):
         got = dict(zip(out["node"].astype(int), out["label"].astype(int)))
         assert got == expected
 
@@ -153,8 +152,8 @@ def test_two_phase_rank_is_dense_and_ordered(spark, tmp_path):
     assert got == {2: 1, 3: 2, 4: 3, 0: 4, 1: 5, 5: 6}
 
 
-def test_connected_components_star_raises_on_round_exhaustion(spark):
-    """Exhausting max_rounds before a round that changes no label must
+def test_connected_components_star_raises_on_round_exhaustion(spark, monkeypatch):
+    """Exhausting _CC_MAX_ROUNDS before a round that changes no label must
     raise on the distributed fixpoint, not silently return labels that
     are not component minima."""
     import pytest
@@ -164,8 +163,9 @@ def test_connected_components_star_raises_on_round_exhaustion(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "a_id long, b_id long"
     )
-    with pytest.raises(RuntimeError, match="still changing"):
-        connected_components(pairs, max_rounds=1, driver_edge_budget=0).collect()
+    monkeypatch.setattr(textops, "_CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="after 1 rounds; raise _CC_MAX_ROUNDS"):
+        _distributed_cc(monkeypatch, pairs)
 
 
 def test_cms_estimate_never_undercounts(spark):

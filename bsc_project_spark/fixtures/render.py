@@ -33,7 +33,6 @@ ROW_Y0 = 80
 ROW_PITCH = 72
 TEXT_X_PAD = 15  # text starts this far right of a band's left line
 GLYPH_SCALE = 5
-MAX_ROWS = 19
 
 
 @dataclass

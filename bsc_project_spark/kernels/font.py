@@ -53,11 +53,6 @@ def trimmed_atlas() -> dict[str, np.ndarray]:
     return out
 
 
-def glyph_advance(ch: str) -> int:
-    """Horizontal advance in font pixels (glyph cell + 1 spacing)."""
-    return GLYPH_W + 1
-
-
 def render_text(text: str, scale: int) -> np.ndarray:
     """Render a string as a 2-D uint8 image (ink=0, background=255) at an
     integer scale; each font pixel becomes a scale x scale block."""

@@ -6,7 +6,7 @@ scripts/evaluate_ocr.py / scripts/evaluate_post_process.py:
 - M1 confusion counts (metrics.py:13-28)
 - M2 IoU per class + valid-class mean (metrics.py:38-54, epsilon=1e-7)
 - M3 Dice (metrics.py:56-67)
-- M4 pixel accuracy / precision / recall (metrics.py:69-106)
+- M4 pixel accuracy (metrics.py:69-106)
 - M5 boundary F1: Sobel edge magnitude, mean+std threshold, per-valid-class
   average (metrics.py:108-149)
 - M6 instance separation: connected-component count agreement
@@ -61,14 +61,6 @@ def dice_per_class(counts: dict) -> np.ndarray:
 def pixel_accuracy(counts: dict) -> float:
     total = counts["TP"].sum() + counts["FP"].sum()
     return float(counts["TP"].sum() / (total + EPS))
-
-
-def precision_per_class(counts: dict) -> np.ndarray:
-    return counts["TP"] / (counts["TP"] + counts["FP"] + EPS)
-
-
-def recall_per_class(counts: dict) -> np.ndarray:
-    return counts["TP"] / (counts["TP"] + counts["FN"] + EPS)
 
 
 def _sobel_magnitude(mask: np.ndarray) -> np.ndarray:

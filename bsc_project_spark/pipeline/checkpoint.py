@@ -76,8 +76,10 @@ dir) and ``expire_snapshots`` are safe while units are being written.
 (its bucket or its update id) to the newest snapshot instead of
 re-stating the unit lists it read at its start, so a rollback that lands
 while a unit is being written stays in force and the unit commits on top
-of it.  A second concurrent unit writer is refused: ``run_extraction_job``
-and ``run_incremental_update`` hold an exclusive ``flock`` on ``out_dir``
+of it; a ``compact`` whose fold holds a unit that a rollback un-committed
+meanwhile raises ``CommitConflict`` instead of committing it again.  A
+second concurrent unit writer is refused: ``run_extraction_job`` and
+``run_incremental_update`` hold an exclusive ``flock`` on ``out_dir``
 for their whole run, and one that finds it held raises ``CommitConflict``
 before writing any file (both would otherwise pick the same ``update=U`` /
 ``bucket=K`` directories).  The kernel drops the lock of a process that
@@ -209,8 +211,17 @@ def _commit_manifest(out_dir: str, changes: dict, source: dict | None = None) ->
     unique to this committer, outside ``snapshots/``, then hard-linked to
     ``snapshots/vN.json`` with N = newest + 1.  The link is an exclusive
     create: if another committer claimed vN first, this commit raises
-    ``CommitConflict`` and no file under ``snapshots/`` changes."""
+    ``CommitConflict`` and no file under ``snapshots/`` changes.  So does
+    a ``compaction`` covering a unit that the newest snapshot, the one it
+    builds on, no longer commits (a rollback removed it)."""
     prev = read_manifest(out_dir)
+    comp = changes.get("compaction") or {}
+    gone = {
+        key: sorted(set(comp.get(part, [])) - set(prev[key]))
+        for part, key in (("buckets", "committed_buckets"), ("updates", "committed_updates"))
+    }
+    if any(gone.values()):
+        raise CommitConflict(f"v{prev.get('snapshot_id')} of {out_dir} no longer commits {gone}")
     source = prev if source is None else source
     state = {k: source[k] for k in _TABLE_STATE}
     for key, value in changes.items():
@@ -249,7 +260,9 @@ def rollback(out_dir: str, snapshot_id: int) -> dict:
     ``as_of``).  A subsequent ``run_extraction_job`` recomputes exactly the
     buckets the rollback un-committed — their stale data files are
     invisible until then (readers go through the manifest) and are
-    overwritten when recommitted."""
+    overwritten when recommitted.  It is safe at any time: a unit write
+    or a ``compact`` in flight commits on top of it or raises
+    ``CommitConflict``; neither undoes it."""
     return _commit_manifest(
         out_dir,
         {
@@ -631,7 +644,8 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
     buckets/updates the compacted dir COVERS.  Later commits (resumed
     buckets, new updates) simply append alongside it.  Old files are NOT
     deleted — older snapshots still reference them; reclaim space with
-    ``expire_snapshots``."""
+    ``expire_snapshots``.  A ``rollback`` that un-commits a covered unit
+    while the fold is written makes it raise ``CommitConflict`` instead."""
     manifest = read_manifest(out_dir)
     cid = int((manifest["compaction"] or {}).get("id", 0)) + 1
     # both folds read the units of this one manifest: the ones the

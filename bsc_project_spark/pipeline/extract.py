@@ -67,8 +67,6 @@ LINEAGE_SCHEMA = (
     "ocr_char_count long, wall_time_ms long"
 )
 
-EXTRACTED_COLUMNS = ["doc_id", "order", "kind", "text", "media_ref"]
-
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) -> one row per span (Generate, no shuffle)."""
@@ -339,7 +337,7 @@ def run_page_stage(
             )
         )
         if giants:
-            giant_refs = F.broadcast(_bins_local_df(spark, giants).select("media_ref"))
+            giant_refs = _bins_local_df(spark, giants).select("media_ref")
     else:
         pages = scoped.select("media_ref", "content")
         bins = assign_size_bins(sizes.filter(F.col("sz") < thr) if tiling else sizes, n_parts)

@@ -206,7 +206,7 @@ def _segment_revenue_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         " * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE)"
     )
     return (
-        li.join(F.broadcast(orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        li.join(F.broadcast(orders.join(cust, orders.o_custkey == cust.c_custkey)
                             .select("o_orderkey", "o_orderdate")),
                 li.l_orderkey == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
@@ -340,15 +340,15 @@ def _regional_revenue_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     ord_cust = F.broadcast(
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
         .select("o_orderkey", "c_nationkey")
     )
     return (
         li.join(ord_cust, li.l_orderkey == F.col("o_orderkey"))
-        .join(F.broadcast(supp), (li.l_suppkey == supp.s_suppkey)
+        .join(supp, (li.l_suppkey == supp.s_suppkey)
               & (F.col("c_nationkey") == supp.s_nationkey))
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(F.expr(_REV_EXPR).alias("revenue"),
              F.count(F.lit(1)).cast("bigint").alias("n_items"))
@@ -1379,7 +1379,7 @@ def _pareto_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("cents").cast("bigint").alias("total"),
     )
-    joined = cum.crossJoin(F.broadcast(totals))
+    joined = cum.crossJoin(totals)
     return joined.agg(
         F.max("k").alias("n_users"),
         (

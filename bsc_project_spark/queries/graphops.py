@@ -11,8 +11,8 @@ plain power iteration applies: r_{t+1}(v) = (1-d)/N + d * sum_{u->v}
 r_t(u) / deg(u), d = 0.85, 5 iterations from the uniform vector.
 
 PageRank runs one of two routes, picked by the edge count ``n * _FANOUT``
-that ``_link_graph`` knows without a job.  At or below
-``_PAGERANK_EDGES_MAX`` (4M edges) one aggregate packs the edges into one
+that ``_link_graph`` knows without a job.  While the packed int64 edges
+fit ``config.DRIVER_STATE_BYTES`` (4M edges) one aggregate packs them into one
 row and ONE mapInPandas task runs the 5 rounds with ``np.bincount``: each
 distributed round pays a persist, an eager count and AQE stage jobs whose
 cost does not depend on the data, so below the ceiling that fixed cost
@@ -32,7 +32,8 @@ contribution) pairs — map-side combinable — plus a dim-sized rank join;
 at 100 TB of edges the rank frame partitions by vertex id and rounds are
 embarrassingly parallel.  Each round plans against the cached previous
 round, so a round's jobs read one (v, rank) frame, not the rounds before
-it.  The one-task route holds at most ~32 MB of packed edges.
+it.  The one-task route holds at most ``config.DRIVER_STATE_BYTES`` of
+packed edges.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import config
 from . import QuerySpec, materialize, query_scope, register_views
 from .textops import _hex8_of
 
@@ -108,15 +110,6 @@ def _link_graph(spark: SparkSession, sf_dir: str):
         .distinct()
     )
     return ids, n, edges
-
-
-_PAGERANK_EDGES_MAX = 4_000_000
-"""Ceiling on the link graph's edges, counted as ``n * _FANOUT`` (known
-without a job), for PageRank's one-task route (~32 MB of packed int64
-edges).  At or below it ``_pagerank_np`` runs every round in one numpy
-task; above it ``_pagerank_rounds`` runs the distributed rounds and
-nothing edge-proportional meets one task.  Same pattern as
-``lloyd_assign``'s ``_LLOYD_DRIVER_STATE_MAX``."""
 
 
 def _pagerank_np_fn(n: int):
@@ -197,7 +190,8 @@ def _pagerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, n, edges = _link_graph(spark, sf_dir)
     if n == 0:
         return spark.createDataFrame([], "doc_id long, in_degree long, pagerank double")
-    if n * _FANOUT <= _PAGERANK_EDGES_MAX:
+    # packed int64 edges, n * _FANOUT of them known without a job
+    if n * _FANOUT * 8 <= config.DRIVER_STATE_BYTES:
         ranks = _pagerank_np(edges, n)
     else:
         ranks = _pagerank_rounds(ids, n, edges)
@@ -295,9 +289,7 @@ def _anchor_text_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = _hex8_of("md5(concat(CAST(src AS STRING), ':', CAST(k AS STRING)))")
     edges = (
         ids.select(F.col("idx").alias("src"))
-        .crossJoin(
-            F.broadcast(spark.range(1, _FANOUT + 1).select(F.col("id").alias("k")))
-        )
+        .crossJoin(spark.range(1, _FANOUT + 1).select(F.col("id").alias("k")))
         .select("src", F.expr(f"({hashed}) % {n}").alias("dst"))
         .distinct()
     )

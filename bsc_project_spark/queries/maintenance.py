@@ -225,7 +225,7 @@ def _vocab_growth_spark(spark, sf_dir: str):
     # two-phase global rank — the distributed order statistic; a plain
     # row_number() window here would funnel every doc through one task
     ranked = global_row_number(docs, ["doc_id"], "rnk")
-    n_df = F.broadcast(docs.agg(F.count(F.lit(1)).cast("long").alias("n")))
+    n_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
     first = (
         spark.sql(_VG_TOKENS_SPARK)
         .filter(F.col("token") != "")

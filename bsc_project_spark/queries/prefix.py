@@ -114,7 +114,7 @@ def global_cumsum(
         df.withColumn(_PID, pid)
         .repartitionByRange(len(ranges), _PID)
         .withColumn(_LOCAL, local)
-        .join(F.broadcast(off_df), _PID)
+        .join(off_df, _PID)
         .withColumn(out_col, (F.col(_OFF) + F.col(_LOCAL)).cast("long"))
         .drop(_PID, _LOCAL, _OFF)
     )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .. import config
 from ..pipeline.banding import banded_pairs
 from . import QuerySpec, materialize, query_scope, register_views
 
@@ -55,7 +56,7 @@ def _cosine_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
               FROM embeddings),
         p AS (
-          SELECT /*+ BROADCAST(q) */ q_id, c_id,
+          SELECT q_id, c_id,
                  aggregate(zip_with(qv, cv, (x, y) -> x * y), CAST(0 AS DOUBLE), (a, b) -> a + b) AS dot,
                  sqrt(aggregate(transform(qv, x -> x * x), CAST(0 AS DOUBLE), (a, b) -> a + b)) AS nq,
                  sqrt(aggregate(transform(cv, x -> x * x), CAST(0 AS DOUBLE), (a, b) -> a + b)) AS nc
@@ -336,7 +337,7 @@ def _ivf_assign_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         v AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
               FROM embeddings),
         s AS (
-          SELECT /*+ BROADCAST(c) */ vec_id, centroid_id,
+          SELECT vec_id, centroid_id,
                  round({_SPARK_DOT.format(a='vv', b='cv')}
                        / (sqrt({_SPARK_DOT.format(a='vv', b='vv')})
                           * sqrt({_SPARK_DOT.format(a='cv', b='cv')})), 5) AS cosine
@@ -442,7 +443,7 @@ def _ivf_search_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
               WHERE vec_id < {_N_QUERIES}),
         assign AS (
           SELECT vec_id, centroid_id FROM (
-            SELECT /*+ BROADCAST(c) */ v.vec_id, c.centroid_id,
+            SELECT v.vec_id, c.centroid_id,
                    row_number() OVER (PARTITION BY v.vec_id
                      ORDER BY {dot.format(a='vv', b='cv')} / (vn * cn) DESC,
                               c.centroid_id) AS rn
@@ -629,19 +630,6 @@ def lloyd_duck_ctes(
     )
     return ",\n".join(parts)
 
-
-_LLOYD_DRIVER_STATE_MAX = 4_000_000
-"""Ceiling on DRIVER-HELD centroid state, in k*d array cells (~32 MB of
-doubles at the default).  Below it, ``lloyd_assign`` keeps the centroids
-on the driver (collect partial sums, rebuild, broadcast via closure) —
-the right shape for every fixed-K user.  At or above it (the derived-K
-SemDeDup shape at 10^9+ vectors: K = N/64 -> k*d grows linearly with the
-corpus) the centroid state stays a DataFrame end to end
-(``_lloyd_assign_frames``): seeds come from a two-phase global rank,
-updates are the same groupBy(cid, pos) aggregate written back to a
-centroid frame, and NOTHING corpus-proportional is ever collected or
-broadcast.  Same precedent as the bins planner's driver_plan_max
-(config.py)."""
 
 _LLOYD_Q5 = decimal.Decimal("0.00001")
 
@@ -838,10 +826,11 @@ def lloyd_assign(
     embeddings parquet is a single sub-split-size file, so without it
     every pass ran on 1-2 cores).  Two routes, picked by k*d:
 
-      - k*d <= _LLOYD_DRIVER_STATE_MAX: centroids driver-held, assignment
-        is ONE numpy matmul per partition inside mapInPandas emitting
-        per-partition partial sums (``_lloyd_np_fn`` — exact integer
-        arithmetic, rounded-argmax tie rule preserved);
+      - k*d doubles within ``config.DRIVER_STATE_BYTES`` (4M cells):
+        centroids driver-held, assignment is ONE numpy matmul per
+        partition inside mapInPandas emitting per-partition partial sums
+        (``_lloyd_np_fn`` — exact integer arithmetic, rounded-argmax tie
+        rule preserved);
       - above: the fully distributed ``_lloyd_assign_frames`` — centroid
         state never touches the driver (the 100-TB contract for
         corpus-derived K).
@@ -869,7 +858,7 @@ def lloyd_assign(
     if hi is None:
         return spark.createDataFrame([], out_schema)
     d = int(hi)
-    if k * d > _LLOYD_DRIVER_STATE_MAX:
+    if k * d * 8 > config.DRIVER_STATE_BYTES:
         return _lloyd_assign_frames(spark, vq, iters, k, d)
     # ONE job for the seeds: each bucket ships its k smallest vec_ids
     # WITH their (q, vn) payloads (k structs x 64 buckets, driver-tiny),

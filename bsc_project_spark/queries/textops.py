@@ -11,6 +11,7 @@ the value-hash comparison).
 
 from __future__ import annotations
 
+from .. import config
 from ..pipeline.banding import banded_pairs
 from . import QuerySpec, materialize, query_scope, register_views, sql_query
 
@@ -388,8 +389,6 @@ QUERIES["q_minhash_est"] = QuerySpec(
 
 _CC_MAX_ROUNDS = 20
 
-_CC_DRIVER_EDGE_BUDGET = 2_000_000
-
 
 from contextlib import contextmanager  # noqa: E402
 
@@ -458,12 +457,13 @@ def connected_components(pairs):
     Returns (node, label) where label = min node id of the component.
     Size-adaptive, the same way AQE picks physical strategies at runtime:
 
-    - edge count <= ``_CC_DRIVER_EDGE_BUDGET``: one-pass union-find on the
-      driver (``_cc_driver``).  After LSH banding the candidate graph is
-      orders of magnitude smaller than the corpus; when it fits the
-      budget, a bounded toPandas + O(E α(E)) scan beats any multi-round
-      shuffle plan by ~10x (the collect is provably bounded — the count
-      that gates it is computed first from a materialized frame).
+    - edges (16 B each) within ``config.DRIVER_STATE_BYTES`` (2M edges):
+      one-pass union-find on the driver (``_cc_driver``).  After LSH
+      banding the candidate graph is orders of magnitude smaller than the
+      corpus; when it fits the budget, a bounded toPandas + O(E α(E))
+      scan beats any multi-round shuffle plan by ~10x (the collect is
+      provably bounded — the count that gates it is computed first from
+      a materialized frame).
     - larger graphs: distributed min-label propagation PLUS pointer
       jumping to a fixpoint.  Each round: (1) neighbor min (edges ⋈
       labels, groupBy(min)) and (2) label ← label(label) (labels
@@ -485,7 +485,7 @@ def connected_components(pairs):
     # upstream band self-join three times
     pairs = materialize(pairs)
     n_pairs = pairs.count()
-    if n_pairs <= _CC_DRIVER_EDGE_BUDGET:
+    if n_pairs * 16 <= config.DRIVER_STATE_BYTES:
         spark = pairs.sparkSession
         with _arrow_enabled(spark):
             pdf = pairs.toPandas()
@@ -1272,7 +1272,7 @@ def _length_quantiles_spark(spark, sf_dir: str):
         f"({p / 100}D, {max(1, (p * n + 99) // 100)}L)" for p in _QUANTILE_PCTS
     )
     tgt = spark.sql(f"SELECT * FROM VALUES {targets} AS t(quantile, rn)")
-    return ranked.join(F.broadcast(tgt), "rn").select("quantile", "n_chars")
+    return ranked.join(tgt, "rn").select("quantile", "n_chars")
 
 
 QUERIES["q_length_quantiles"] = QuerySpec(
@@ -4333,7 +4333,6 @@ _INC_FINAL = """
 
 
 def _incremental_dedup_spark(spark, sf_dir: str):
-    from pyspark.sql import functions as F
 
     register_views(spark, sf_dir)
     frames = {"batch": spark.sql(_INC_BATCH), "corpus": spark.sql(_INC_CORPUS)}
@@ -4342,15 +4341,9 @@ def _incremental_dedup_spark(spark, sf_dir: str):
             _p_sub(spark, _INC_WIDE.format(shingles=_SHINGLES_SPARK.format(src="{src}"))),
             src=frames[side],
         )
-        bands = wide.selectExpr(
+        frames[f"{side}_bands"] = wide.selectExpr(
             "doc_id", f"stack({_N_BANDS}, {_BANDS_STACK_SPARK}) AS (band, bsig)"
         )
-        # the batch side is the small one per the ingest contract —
-        # broadcast it into the band probe so the corpus signature scan
-        # never shuffles (checked by tests/test_round5_ops.py plan pin)
-        if side == "batch":
-            bands = F.broadcast(bands)
-        frames[f"{side}_bands"] = bands
     # _INC_FINAL reads the four relations by name: bind each to its frame
     named = ", ".join(f"{n} AS (SELECT * FROM {{{n}}})" for n in frames)
     return spark.sql(f"WITH {named}, {_INC_FINAL}", **frames)

@@ -132,7 +132,7 @@ def _phash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel cost O(unique pages), the engine's own principle (same
     # distinct-refs shape as run_page_stage): render + pHash each
     # DISTINCT (pattern, variant) page once through the real kernel,
-    # then broadcast the skinny hash frame back onto the doc table.
+    # then join the skinny hash frame back onto the doc table.
     distinct_pages = docs.select("pattern_id", "variant").distinct().withColumn(
         "doc_id", F.concat_ws(":", "pattern_id", "variant")
     )
@@ -141,9 +141,9 @@ def _phash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split("media_ref", ":")[1].cast("int").alias("variant"),
         "phash",
     )
-    phashes = docs.join(
-        F.broadcast(page_hashes), ["pattern_id", "variant"]
-    ).select(F.col("doc_id").cast("string").alias("media_ref"), "phash")
+    phashes = docs.join(page_hashes, ["pattern_id", "variant"]).select(
+        F.col("doc_id").cast("string").alias("media_ref"), "phash"
+    )
     return phash_near_dup_pairs(phashes, max_hamming=_MAX_HAMMING)
 
 

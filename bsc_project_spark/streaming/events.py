@@ -174,9 +174,10 @@ def enrich_with_dim(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """Stream-static enrichment: join the event stream against a SLOWLY
-    CHANGING static dimension (broadcast per micro-batch — the static side
-    is re-planned each trigger, so a refreshed dim table is picked up
-    without restarting the query), then roll up per (window, dim attribute).
+    CHANGING static dimension (re-planned each trigger, so a refreshed dim
+    table is picked up without restarting the query; Spark's broadcast
+    threshold broadcasts a small one), then roll up per (window, dim
+    attribute).
 
     This is the continuous form of q_segment_revenue's broadcast-dim shape:
     the stream side never shuffles for the join; only the windowed groupBy
@@ -187,7 +188,7 @@ def enrich_with_dim(
     src = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if src.isStreaming:
         src = src.withWatermark("ts", watermark)
-    joined = src.join(F.broadcast(dim), on=on, how="left")
+    joined = src.join(dim, on=on, how="left")
     dim_cols = [c for c in dim.columns if c != on]
     return (
         joined.groupBy(F.window("ts", window).alias("w"), *dim_cols)

@@ -198,7 +198,7 @@ Measured at sf0.1 (2,020 vectors, local[32]): q_embed_near_dup 27.2 s →
 
 Per Lloyd iteration (`lloyd_assign`, exact integer-quantized arithmetic so
 DuckDB can replay it), on one of two routes picked by k × d against
-`_LLOYD_DRIVER_STATE_MAX` (4M cells):
+`DRIVER_STATE_BYTES` (config.py; 32 MB, 4M cells of 8 B):
 
 - **k × d at or below the ceiling** (every fixed-K user): the k × d
   integer centroids are driver-held and ride the task closure.  ONE
@@ -242,7 +242,7 @@ connectivity runs, so `connected_components` picks its physical strategy
 from the measured edge count — the same runtime-statistics reflex AQE
 applies to join selection:
 
-- **edges ≤ `_CC_DRIVER_EDGE_BUDGET` (2M)**: one bounded `toPandas` +
+- **edges × 16 B ≤ `DRIVER_STATE_BYTES` (2M edges)**: one bounded `toPandas` +
   path-compressed union-find (union-by-min keeps each root = component
   min, matching the distributed fixpoint's labels exactly).  O(E α(E)) and free of per-round
   scheduler overhead — at bench scale this is ~10× faster than any

@@ -687,6 +687,34 @@ def test_rollback_during_an_update_write_stays_in_force(tmp_path, monkeypatch):
     ]
 
 
+def test_rollback_during_compact_stays_in_force(tmp_path, monkeypatch):
+    """Spark-free replay of a rollback landing while ``compact`` writes:
+    the table holds updates [1, 2], the folds are stubbed and the ledger
+    fold rolls the table back to v2 (update 1 only).  The compaction
+    covers update 2, which is no longer committed, so it raises
+    ``CommitConflict`` and the rolled-back state stays the newest."""
+    from unittest import mock
+
+    from bsc_project_spark.pipeline import checkpoint
+
+    out_dir = str(tmp_path / "rollback_mid_compact")
+    os.makedirs(out_dir)
+    checkpoint._commit_manifest(out_dir, {"run_id": "r", "n_buckets": 2})
+    checkpoint._commit_manifest(out_dir, {"committed_updates": [1]})
+    checkpoint._commit_manifest(out_dir, {"committed_updates": [2]})
+    monkeypatch.setattr(checkpoint, "_read", mock.MagicMock())
+    monkeypatch.setattr(checkpoint, "_ledger", mock.MagicMock())
+    monkeypatch.setattr(
+        checkpoint, "_write_doc_ids", lambda *a, **k: checkpoint.rollback(out_dir, 2)
+    )
+    with pytest.raises(checkpoint.CommitConflict, match="committed_updates"):
+        checkpoint.compact(mock.MagicMock(), out_dir)
+    m = read_manifest(out_dir)
+    assert m["snapshot_id"] == 4
+    assert m["committed_updates"] == [1]
+    assert m["compaction"] is None
+
+
 def test_update_after_rollback_takes_a_fresh_id(tmp_path, monkeypatch):
     """Spark-free replay with stubbed unit writers: v1 base, v2 update 1,
     v3 update 2, rollback to v2, then one more update.  That update takes

@@ -1,5 +1,6 @@
 """Equivalence + driver-contract pins for the two lloyd_assign routes
-(queries/similarity.py), picked by k*d against ``_LLOYD_DRIVER_STATE_MAX``.
+(queries/similarity.py), picked by k*d*8 bytes against
+``config.DRIVER_STATE_BYTES``.
 
 q_semantic_dedup derives K from corpus size, so a driver-held k x d
 centroid state would grow linearly with the corpus at 10^9+ vectors.
@@ -27,6 +28,7 @@ import numpy as np
 import pytest
 
 import bsc_project_spark.queries.similarity as sim
+from bsc_project_spark import config
 
 D = 16
 N = 400
@@ -57,7 +59,7 @@ def _rows(df):
 
 
 def _frames_route(monkeypatch):
-    monkeypatch.setattr(sim, "_LLOYD_DRIVER_STATE_MAX", 1)
+    monkeypatch.setattr(config, "DRIVER_STATE_BYTES", 0)
 
 
 def test_numpy_and_frames_routes_agree(spark, corpus, monkeypatch):

@@ -7,6 +7,7 @@ not exercise.)"""
 import pandas as pd
 import pytest
 
+from bsc_project_spark import config
 from bsc_project_spark.queries import textops
 from bsc_project_spark.queries.eventops import _ASOF_SPARK
 from bsc_project_spark.queries.textops import connected_components
@@ -65,9 +66,9 @@ def test_connected_components_transitive_chain(spark):
 
 
 def _distributed_cc(monkeypatch, pairs):
-    # budget 0 forces the distributed pointer-jump fixpoint
+    # a driver budget of 0 forces the distributed pointer-jump fixpoint
     with monkeypatch.context() as m:
-        m.setattr(textops, "_CC_DRIVER_EDGE_BUDGET", 0)
+        m.setattr(config, "DRIVER_STATE_BYTES", 0)
         return connected_components(pairs).toPandas()
 
 

@@ -173,6 +173,23 @@ def test_shingle_set_join_is_sized_by_aqe(spark, duck, name):
     assert got_off == got == _oracle_canon(duck, name)
 
 
+def test_materialize_without_aqe_matches_oracle(spark, duck):
+    """With AQE off, q_prefix_join's materialized sort-merge join output
+    carries an ordering on the dropped side's key; its leaf must not
+    claim it, or caching the leaf fails with ``key not found``."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        sdf = QUERIES["q_prefix_join"].spark(spark, SF_DIR)
+        rows = [tuple(r) for r in sdf.collect()]
+        cols = [c.lower() for c in sdf.columns]
+        del sdf
+    finally:
+        spark.conf.set(key, prev)
+    assert _canon(cols, rows) == _oracle_canon(duck, "q_prefix_join")
+
+
 def _altered_sf(tmp_path, table, alter):
     for t in TABLES:
         src = f"{SF_DIR}/{t}.parquet"
@@ -215,14 +232,14 @@ def test_null_doc_id_matches_oracle(spark, tmp_path, name):
 @pytest.mark.parametrize("tables", ["test", "null_doc_id"])
 @pytest.mark.parametrize("route", ["numpy", "rounds"])
 def test_pagerank_routes_match_oracle(spark, tmp_path, monkeypatch, route, tables):
-    """PageRank's one-task numpy route (edges at or below
-    ``_PAGERANK_EDGES_MAX``) and its distributed rounds (forced by a
-    ceiling of 0) both match the oracle, on the test tables and with a
+    """PageRank's one-task numpy route (packed edges within
+    ``config.DRIVER_STATE_BYTES``) and its distributed rounds (forced by a
+    budget of 0) both match the oracle, on the test tables and with a
     NULL doc_id row added."""
-    from bsc_project_spark.queries import graphops
+    from bsc_project_spark import config
 
     if route == "rounds":
-        monkeypatch.setattr(graphops, "_PAGERANK_EDGES_MAX", 0)
+        monkeypatch.setattr(config, "DRIVER_STATE_BYTES", 0)
     sf = SF_DIR if tables == "test" else _altered_sf(
         tmp_path, "documents", _with_null_doc_id
     )

@@ -53,22 +53,6 @@ def _shift_row_bits(p: np.ndarray, s: int, fill: bool) -> np.ndarray:
         return ((win << t) | (nxt >> (8 - t))).astype(np.uint8)
 
 
-def _shift_rows(p: np.ndarray, s: int, fill: bool) -> np.ndarray:
-    """Shift pixels vertically by s (positive = pixels move down)."""
-    if s == 0:
-        return p
-    h = p.shape[0]
-    fill_byte = np.uint8(0xFF if fill else 0x00)
-    out = np.full_like(p, fill_byte)
-    if abs(s) >= h:
-        return out
-    if s > 0:
-        out[s:] = p[: h - s]
-    else:
-        out[: h + s] = p[-s:]
-    return out
-
-
 def _window_reduce(p: np.ndarray, size: int, axis: int, fill: bool, is_and: bool) -> np.ndarray:
     """AND/OR over the window [i - r_lo, i + r_hi] along ``axis``, with
     r_lo = (size-1)//2: the anchor of a cv2 rect kernel, so an even size
@@ -78,14 +62,38 @@ def _window_reduce(p: np.ndarray, size: int, axis: int, fill: bool, is_and: bool
     r_lo = (size - 1) // 2
     r_hi = size - 1 - r_lo
     op = np.bitwise_and if is_and else np.bitwise_or
-    shift = _shift_rows if axis == 0 else _shift_row_bits
+    if axis == 0:
+        return _row_window_reduce(p, size, r_lo, fill, op)
     # out[i] = op over in[i + d] for d in [-r_lo, r_hi]; with
     # shifted_s[i] = in[i - s], that is the op of shifts s in [-r_hi, r_lo]
     acc = None
     for s in range(-r_hi, r_lo + 1):
-        q = shift(p, s, fill)
+        q = _shift_row_bits(p, s, fill)
         acc = q if acc is None else op(acc, q)
     return acc
+
+
+def _row_window_reduce(p: np.ndarray, size: int, r_lo: int, fill: bool, op) -> np.ndarray:
+    """The row axis of _window_reduce in O(log size) ops: on the rows
+    padded with ``fill`` (ext[j] = in[j - r_lo]), out[i] is the op over
+    ext[i : i + size].  ``cur`` holds the ops over runs of 2**b rows,
+    doubled each step; every set bit of ``size`` appends one such run to
+    ``acc``.  AND and OR are associative and idempotent, so the result
+    equals the row-by-row op."""
+    h = p.shape[0]
+    ext = np.full((h + size - 1,) + p.shape[1:], np.uint8(0xFF if fill else 0x00))
+    ext[r_lo : r_lo + h] = p
+    acc, acc_w = None, 0  # acc[i] = op over ext[i : i + acc_w]
+    cur, run = ext, 1     # cur[i] = op over ext[i : i + run]
+    while True:
+        if size & run:
+            n = len(ext) - acc_w - run + 1
+            acc = cur[:n] if acc is None else op(acc[:n], cur[acc_w : acc_w + n])
+            acc_w += run
+        if run * 2 > size:
+            return acc[:h]
+        cur = op(cur[:-run], cur[run:])
+        run *= 2
 
 
 def open_u8(img: np.ndarray, kh: int, kw: int) -> np.ndarray:

@@ -14,6 +14,8 @@ the two (the north-rule invariant), which verifies the distributed plumbing
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 
 from ..config import ExtractConfig
@@ -24,21 +26,38 @@ from .segment import segment_page
 
 
 def extract_page(
-    gray: np.ndarray, cfg: ExtractConfig, glyph_scale: int
+    gray: np.ndarray, cfg: ExtractConfig, glyph_scale: int,
+    phase_ms: dict[str, float] | None = None,
 ) -> list[tuple[int, int, str]]:
-    """Extract ordered (row, col, text) cells from one grayscale page."""
+    """Extract ordered (row, col, text) cells from one grayscale page.
+
+    ``phase_ms``, when given, accumulates each phase's wall in ms under
+    ``preprocess`` (deskew included), ``segment``, ``postprocess``,
+    ``bbox`` and ``ocr`` (crop, pad, decode and sort)."""
     # Model-backend seam (config.py): a real DeepLabV3/TrOCR wrapper drops
     # in via cfg.segmenter / cfg.ocr_decoder; defaults are the built-ins.
     segment = cfg.segmenter or segment_page
     decode = cfg.ocr_decoder or decode_cell
+    t = time.perf_counter()
+
+    def lap(phase: str) -> None:
+        nonlocal t
+        now = time.perf_counter()
+        if phase_ms is not None:
+            phase_ms[phase] = phase_ms.get(phase, 0.0) + (now - t) * 1000.0
+        t = now
 
     gray = deskew_gray(gray, cfg)  # no-op unless cfg.deskew_enabled
     h_orig, w_orig = gray.shape
     binary = preprocess(gray, cfg)
     h_res, w_res = binary.shape
+    lap("preprocess")
     class_mask = segment(binary, cfg)
+    lap("segment")
     final_mask = post_process_mask(class_mask, cfg)
+    lap("postprocess")
     bboxes = extract_row_col_bboxes(final_mask, cfg)
+    lap("bbox")
 
     outputs: list[tuple[int, int, str]] = []
     for bbox in bboxes:
@@ -52,4 +71,5 @@ def extract_page(
         text = decode(padded, cfg, glyph_scale)
         outputs.append((row, col, text))
     outputs.sort()  # reference scripts/imgs2csv.py:186
+    lap("ocr")
     return outputs

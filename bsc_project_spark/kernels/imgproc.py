@@ -26,6 +26,7 @@ Semantics notes (our engine's pinned definitions; deterministic):
 from __future__ import annotations
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
 from ..config import ExtractConfig
 
@@ -249,114 +250,114 @@ def deskew(img: np.ndarray, angle_deg: float, fill: int = 255) -> np.ndarray:
 
 
 def binarize_fused(img: np.ndarray, block_size: int = 13, c: float = 12.0) -> np.ndarray:
-    """blur3 + adaptive Gaussian threshold in ONE strip pass — byte-identical
-    to adaptive_threshold_gaussian(gaussian_blur3(img)), but the blurred
-    image never materializes (memory-bandwidth is the scaling limiter with
-    32 concurrent executor workers).
+    """blur3 + adaptive Gaussian threshold — byte-identical to
+    adaptive_threshold_gaussian(gaussian_blur3(img)), with the Gaussian
+    mean skipped wherever it cannot change a pixel.
+
+    Every row is blurred once per page, in row blocks whose uint16
+    temporaries stay cache-sized, into one uint8 page (1 byte/px) that
+    already carries the block_size // 2 replicate halo of the mean
+    (blurring a replicate-extended image does NOT equal replicating the
+    blurred one, so the halo is replicated after the blur).  The strips of
+    the mean, their halos and the tile test all read that page, so no
+    strip re-blurs its 2 * (block_size // 2) halo rows.
 
     Blank tiles skip the Gaussian mean.  rint(mean) is a weighted average
     of the block_size x block_size window (float32 weights sum to 1 far
     inside the 0.5 rounding margin), so it is at most the window max, and
-    a pixel with blur > max - C is 255 whatever the mean.  Each strip is
-    cut into 512-column tiles; a tile is all 255 when the largest blurred
-    value in or within block_size // 2 columns of it exceeds its smallest
-    blurred pixel by less than floor(C).  The other tiles run the float32
-    mean through the same _sep_gauss_vertical/_sep_gauss_horizontal
-    helpers as the two-step path, so in the same summation order.  On the
-    fixture pages 44 % of tiles run the mean; on a textured or noisy scan,
-    or with C < 1, every tile does, and the tile test is all the extra
-    work (preprocess then measured 3-6 % slower than without it)."""
+    a pixel with blur > max - C is 255 whatever the mean.  Each strip (32
+    rows at page width) is cut into 512-column tiles; a tile is all 255
+    when the largest blurred value in or within block_size // 2 rows and
+    columns of it exceeds its smallest blurred pixel by less than
+    floor(C).  One pass over the page tests every tile.  The other tiles
+    run the float32 mean through the same _sep_gauss_vertical/
+    _sep_gauss_horizontal helpers as the two-step path, so in the same
+    summation order.  On the fixture pages 44 % of tiles run the mean; on
+    a textured or noisy scan, or with C < 1, every tile does, and the tile
+    test is all the extra work (preprocess then measured 3-6 % slower
+    than without it)."""
     sigma = 0.3 * ((block_size - 1) * 0.5 - 1) + 0.8
     k = _gaussian_kernel_1d(block_size, sigma).astype(np.float32)
     r = block_size // 2
     h, w = img.shape
-    # keep the padded source uint8: each strip upcasts its own slice in
-    # L2, so DRAM reads the page once at 1 byte/px instead of 2
+    W = w + 2 * r
+    strip = max(32, (1 << 17) // (4 * W))  # 128 KB: see adaptive_threshold_gaussian
+
+    n_strips = -(-h // strip)
+    # blur3 (reflect-101 border via `raw`) into the core of the padded
+    # page; its rows run on to a whole number of strips plus the halo
     raw = _pad(img, 1, 1, "reflect101")
-    out = np.empty((h, w), dtype=np.uint8)
-    strip = max(32, (1 << 17) // (4 * (w + 2 * r)))  # 128 KB: see adaptive_threshold_gaussian
-    thr_c = np.float32(c)
-    # Decided iff max - blur < floor(C): then max - C <= blur - 1 exactly,
-    # so even the float32 rint(mean) - C cannot round up to blur.
-    undecided_from = max(int(np.floor(thr_c)), 0)
+    padded = np.empty((n_strips * strip + 2 * r, W), np.uint8)
+    ta = np.empty((strip, w + 2), np.uint16)
+    tb = np.empty((strip, w), np.uint16)
+    for y0 in range(0, h, strip):
+        m = min(strip, h - y0)
+        p, a, b = raw[y0 : y0 + m + 2], ta[:m], tb[:m]
+        np.add(p[0:m], p[2 : m + 2], out=a, dtype=np.uint16)
+        np.add(a, p[1 : m + 1], out=a, dtype=np.uint16)
+        np.add(a, p[1 : m + 1], out=a, dtype=np.uint16)
+        np.add(a[:, 0:w], a[:, 2 : w + 2], out=b)
+        np.add(b, a[:, 1 : w + 1], out=b)
+        np.add(b, a[:, 1 : w + 1], out=b)
+        b += 8
+        np.right_shift(b, 4, out=padded[r + y0 : r + y0 + m, r : r + w], casting="unsafe")
+    # replicate halo of the blurred page
+    padded[r : r + h, :r] = padded[r : r + h, r : r + 1]
+    padded[r : r + h, r + w :] = padded[r : r + h, r + w - 1 : r + w]
+    padded[:r] = padded[r]
+    padded[r + h :] = padded[r + h - 1]
+    blur = padded[r : r + h, r : r + w]
+
     tile_w = 512
     tile_starts = np.arange(0, w, tile_w)
-    # undecided flag per tile, with a False sentinel at each end; C < 1
-    # decides no pixel, so there every tile stays undecided
-    und = np.zeros(tile_starts.size + 2, bool)
-    und[1:-1] = not undecided_from
-    # np.maximum.reduceat over these bounds of the padded row: its even
-    # outputs are the tiles' columns with their halos, [c0, c1 + 2r)
-    halo_bounds = np.stack([tile_starts, tile_starts + tile_w + 2 * r], axis=1).ravel()[:-1]
-    W = w + 2 * r
-    # Preallocated per-image buffers, reused by every strip (all L2-scale).
-    sub = np.empty((strip + 2 * r, W), np.float32)   # blurred rows + halos
-    t16a = np.empty((strip + 2 * r, w + 2), np.uint16)
-    t16b = np.empty((strip + 2 * r, w), np.uint16)
-    # flat scratch of the Gaussian mean: each span views the front of it
+    # Decided iff max - blur < floor(C): then max - C <= blur - 1 exactly,
+    # so even the float32 rint(mean) - C cannot round up to blur.  C < 1
+    # decides no pixel, so there every tile stays undecided.
+    undecided_from = max(int(np.floor(np.float32(c))), 0)
+    if undecided_from:
+        # the largest value within r rows and columns of each tile (the
+        # replicated rows past h add no new values) against its smallest
+        # pixel, for every strip at once
+        rows_max = sliding_window_view(padded, strip + 2 * r, axis=0)[::strip].max(axis=-1)
+        # np.maximum.reduceat over these bounds: its even outputs are the
+        # tiles' columns with their halos, [c0, c1 + 2r)
+        halo_bounds = np.stack([tile_starts, tile_starts + tile_w + 2 * r], axis=1).ravel()[:-1]
+        tile_max = np.maximum.reduceat(rows_max, halo_bounds, axis=1)[:, ::2]
+        core = padded[r : r + n_strips * strip, r : r + w].reshape(n_strips, strip, w)
+        tile_min = np.minimum.reduceat(core.min(axis=1), tile_starts, axis=1)
+        und = tile_max - tile_min.astype(np.int16) >= undecided_from
+    else:
+        und = np.ones((n_strips, tile_starts.size), bool)
+
+    out = np.full((h, w), 255, np.uint8)
+    thr_c = np.float32(c)
+    # flat float32 scratch of the Gaussian mean: each span views the front;
+    # a span upcasts its own uint8 rows in L2
+    vsrc = np.empty((strip + 2 * r) * W, np.float32)
     vtmp, vbuf = np.empty(strip * W, np.float32), np.empty(strip * W, np.float32)
     hacc, hbuf = np.empty(strip * w, np.float32), np.empty(strip * w, np.float32)
-    col_max = np.empty(W, np.uint16)  # per-column max, edge-replicated
-
-    for y0 in range(0, h, strip):
-        y1 = min(h, y0 + strip)
-        n = y1 - y0
-        # blur3 of rows [y0-r, y1+r), edge-replicated into sub
-        # (reflect-101 halo for the blur itself via `raw`; replicate halo
-        # for the mean conv — blurring a replicate-extended image does NOT
-        # equal replicating the blurred image at edges, so the blurred
-        # halo is built explicitly)
-        ya = y0 - r
-        y0c, y1c = max(0, ya), min(h, y1 + r)
-        m = y1c - y0c
-        p = raw[y0c : y1c + 2]
-        ta = t16a[:m]
-        np.add(p[0:m], p[2 : m + 2], out=ta, dtype=np.uint16)
-        np.add(ta, p[1 : m + 1], out=ta, dtype=np.uint16)
-        np.add(ta, p[1 : m + 1], out=ta, dtype=np.uint16)
-        tb = t16b[:m]
-        np.add(ta[:, 0:w], ta[:, 2 : w + 2], out=tb)
-        np.add(tb, ta[:, 1 : w + 1], out=tb)
-        np.add(tb, ta[:, 1 : w + 1], out=tb)
-        tb += 8
-        tb >>= 4
-        off = y0c - ya
-        np.copyto(sub[off : off + m, r : r + w], tb)
-        sub[off : off + m, :r] = sub[off : off + m, r : r + 1]
-        sub[off : off + m, r + w :] = sub[off : off + m, r + w - 1 : r + w]
-        if off:
-            sub[:off] = sub[off]
-        tail = n + 2 * r - (off + m)
-        if tail:
-            sub[off + m : n + 2 * r] = sub[off + m - 1]
-        if undecided_from:
-            # tile test on the uint16 blur (replicated halo rows add no
-            # new values): largest value within r columns of the tile,
-            # a bound on every window max in it, against its smallest pixel
-            np.max(tb, axis=0, out=col_max[r : r + w])
-            col_max[:r], col_max[r + w :] = col_max[r], col_max[r + w - 1]
-            tile_max = np.maximum.reduceat(col_max, halo_bounds)[::2]
-            tile_min = np.minimum.reduceat(tb[y0 - y0c : y1 - y0c].min(axis=0), tile_starts)
-            np.greater_equal(tile_max - tile_min, undecided_from, out=und[1:-1])
+    edges = np.zeros(tile_starts.size + 2, bool)  # False sentinel at each end
+    for i in np.flatnonzero(und.any(axis=1)).tolist():
+        y0 = i * strip
+        n = min(strip, h - y0)
         # consecutive undecided tiles run as one span [c0, c1)
-        bounds = (np.flatnonzero(und[1:] != und[:-1]) * tile_w).clip(max=w).tolist()
-        o = out[y0:y1]
-        if bounds != [0, w]:
-            o.fill(255)
-        s = sub[: n + 2 * r]
-        blur = s[r : r + n, r : r + w]
+        edges[1:-1] = und[i]
+        bounds = (np.flatnonzero(edges[1:] != edges[:-1]) * tile_w).clip(max=w).tolist()
+        s = padded[y0 : y0 + n + 2 * r]
         for c0, c1 in zip(bounds[::2], bounds[1::2]):
             cw = c1 - c0
+            vs = vsrc[: (n + 2 * r) * (cw + 2 * r)].reshape(n + 2 * r, cw + 2 * r)
+            np.copyto(vs, s[:, c0 : c1 + 2 * r])
             vt, vb = (b[: n * (cw + 2 * r)].reshape(n, cw + 2 * r) for b in (vtmp, vbuf))
             ha, hb = (b[: n * cw].reshape(n, cw) for b in (hacc, hbuf))
-            acc = _sep_gauss_horizontal(
-                _sep_gauss_vertical(s[:, c0 : c1 + 2 * r], k, n, vt, vb), k, cw, ha, hb
-            )
+            acc = _sep_gauss_horizontal(_sep_gauss_vertical(vs, k, n, vt, vb), k, cw, ha, hb)
             np.rint(acc, out=acc)  # mean of uint8: already in [0,255]
             acc -= thr_c
             # compare against the BLURRED pixel (reference thresholds the
             # blurred image, scripts/dataset.py:35-43)
-            o[:, c0:c1] = np.where(blur[:, c0:c1] > acc, np.uint8(255), np.uint8(0))
+            out[y0 : y0 + n, c0:c1] = np.where(
+                blur[y0 : y0 + n, c0:c1] > acc, np.uint8(255), np.uint8(0)
+            )
     return out
 
 

@@ -9,14 +9,23 @@ against golden transcripts.
 
 Decode algorithm (pure numpy, exact on fixture renders, tolerant of the
 1-2 px bbox clipping the erode step introduces):
-1. binarize the crop (< ocr_ink_threshold)
-2. split ink columns into glyph segments at gaps >= ~half the glyph scale
-3. align a (GLYPH_W x GLYPH_H) sampling grid over each segment by searching
-   the sub-scale offset that best explains the ink; majority-vote each
-   scale x scale block into a font-pixel bitmap
-4. match the column-trimmed bitmap against the column-trimmed atlas —
-   exact match preferred, else minimum Hamming distance (ties broken by
-   codepoint order; fully deterministic).
+1. binarize the crop (< ocr_ink_threshold) and take its integral image
+2. try the nominal glyph scale, then clip-compensated estimates from the
+   ink height; keep the first scale with the strictly lowest total
+   distance, and stop at an exact (distance 0) decode
+3. at one scale, split the ink columns into glyph segments at gaps >=
+   ~half the scale, then sample every segment at every one of the
+   scale x scale sub-pixel offsets in one gather from the integral image,
+   majority-voting each scale x scale block into a GLYPH_H x GLYPH_W
+   font-pixel bitmap
+4. trim each bitmap by shifting its first ink column (and, for
+   partial-height content, its first ink row) to the frame origin, and
+   take the Hamming distance of every bitmap to every atlas glyph in one
+   matmul
+5. per segment keep the first (offset, char) at the minimum distance:
+   offsets in dy-major order, then chars in sorted order (fully
+   deterministic).  _decode_at_scale_ref is the same decode as a
+   sequential loop, kept as the parity oracle.
 """
 
 from __future__ import annotations
@@ -40,6 +49,9 @@ for _i, _ch in enumerate(_CHARS):
     _rows = np.where(_bm.any(axis=1))[0]
     _t = _bm[_rows[0] : _rows[-1] + 1]
     _ATLAS_PART[_i, : _t.shape[0], : _t.shape[1]] = _t
+# the same stacks as (GLYPH_H * GLYPH_W, n_chars) float32 matmul operands
+_FLAT_FULL, _FLAT_PART = (a.reshape(len(_CHARS), -1).T.astype(np.float32)
+                          for a in (_ATLAS_FULL, _ATLAS_PART))
 
 
 def crop_cell(gray: np.ndarray, x1: int, y1: int, x2: int, y2: int) -> np.ndarray:
@@ -150,7 +162,8 @@ def _decode_at_scale_ref(
     integral: np.ndarray | None = None,
 ) -> tuple[str, int]:
     """Reference (sequential) decode — kept as the parity oracle for the
-    vectorized _decode_at_scale; same result, offset loop in Python."""
+    batched _decode_at_scale; same result, segment and offset loops in
+    Python."""
     if integral is None:
         integral = _integral(ink)
     full_height = ink_height >= 0.75 * GLYPH_H * scale
@@ -185,54 +198,14 @@ def _decode_at_scale_ref(
     return "".join(chars), total
 
 
-def _sample_bitmaps_batch(
-    integral: np.ndarray, anchor: int, x0: int, scale: int, n_rows: int, n_cols: int
-) -> np.ndarray:
-    """All scale x scale sub-pixel offsets at once: (scale*scale, n_rows,
-    n_cols) bool bitmaps, offset index = dy * scale + dx (dy-major — the
-    same order the sequential reference scans, so first-argmin tie-breaks
-    agree)."""
-    h, w = integral.shape[0] - 1, integral.shape[1] - 1
-    dy = np.arange(scale)
-    dx = np.arange(scale)
-    ys = np.clip(anchor - dy[:, None] + np.arange(n_rows + 1) * scale, 0, h)  # (s, R+1)
-    xs = np.clip(x0 - dx[:, None] + np.arange(n_cols + 1) * scale, 0, w)      # (s, C+1)
-    s4 = integral[ys[:, None, :, None], xs[None, :, None, :]]  # (s, s, R+1, C+1)
-    block = s4[:, :, 1:, 1:] - s4[:, :, :-1, 1:] - s4[:, :, 1:, :-1] + s4[:, :, :-1, :-1]
-    area_y = np.diff(ys, axis=1)  # (s, R)
-    area_x = np.diff(xs, axis=1)  # (s, C)
-    area = area_y[:, None, :, None] * area_x[None, :, None, :]
-    bm = block * 2 >= np.maximum(area, 1)
-    return bm.reshape(scale * scale, n_rows, n_cols)
-
-
-def _match_batch(bitmaps: np.ndarray, atlas: np.ndarray, trim_rows: bool) -> tuple[str, int]:
-    """Best (char, dist) over a batch of offset bitmaps vs an atlas stack.
-    Per offset the bitmap is trimmed (columns always, rows for the partial
-    matcher) by SHIFTING into a zero frame — identical to pad(trim(bm)) —
-    then all offsets match against all atlas glyphs in one xor."""
-    n, R, C = bitmaps.shape
-    frames = np.zeros((n, GLYPH_H, GLYPH_W), dtype=bool)
-    col_any = bitmaps.any(axis=1)  # (n, C)
-    row_any = bitmaps.any(axis=2)  # (n, R)
-    for i in range(n):
-        cols = np.nonzero(col_any[i])[0]
-        if cols.size == 0:
-            continue  # empty bitmap -> empty frame (matches trim-to-empty)
-        c0, c1 = cols[0], cols[-1] + 1
-        if trim_rows:
-            rows = np.nonzero(row_any[i])[0]
-            r0, r1 = rows[0], rows[-1] + 1
-        else:
-            r0, r1 = 0, min(R, GLYPH_H)
-        frames[i, : r1 - r0, : c1 - c0] = bitmaps[i, r0:r1, c0 : c0 + min(c1 - c0, GLYPH_W)][
-            :GLYPH_H, :GLYPH_W
-        ]
-    dists = np.count_nonzero(frames[:, None, :, :] ^ atlas[None, :, :, :], axis=(2, 3))
-    ci = np.argmin(dists, axis=1)  # first-min per offset = sorted-char tie-break
-    dmin = dists[np.arange(n), ci]
-    oi = int(np.argmin(dmin))  # first offset achieving the global min =
-    return _CHARS[int(ci[oi])], int(dmin[oi])  # the sequential scan's pick
+def _segment_bounds(ink: np.ndarray, gap_min: int) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the [x_start, x_end) glyph segments — the same
+    split as _segments_from_columns, without its Python loop."""
+    cols = np.flatnonzero(ink.any(axis=0))
+    if cols.size == 0:
+        return cols, cols
+    cut = np.flatnonzero(np.diff(cols) >= gap_min) + 1
+    return cols[np.r_[0, cut]], cols[np.r_[cut - 1, cols.size - 1]] + 1
 
 
 def _decode_at_scale(
@@ -240,31 +213,65 @@ def _decode_at_scale(
     integral: np.ndarray | None = None,
 ) -> tuple[str, int]:
     """Decode all glyph segments at a fixed scale; returns (text, total_dist).
-    Vectorized over the scale^2 sub-pixel offsets (parity with
-    _decode_at_scale_ref pinned by a fuzz test)."""
+    Every segment and every sub-pixel offset is sampled and matched in one
+    batch (parity with _decode_at_scale_ref pinned by a fuzz test)."""
     if integral is None:
         integral = _integral(ink)
     full_height = ink_height >= 0.75 * GLYPH_H * scale
-    gap_min = max(2, scale // 2 + 1)
-    chars = []
-    total = 0
-    for xs, xe in _segments_from_columns(ink, gap_min):
-        seg_width = xe - xs
-        n_cols = min(GLYPH_W, max(1, int(np.ceil(seg_width / scale))))
-        if full_height:
-            anchor = ink_top
-            n_rows = GLYPH_H
-            atlas, trim_rows = _ATLAS_FULL, False
-        else:
-            seg_rows = np.where(ink[:, xs:xe].any(axis=1))[0]
-            anchor = int(seg_rows[0])
-            n_rows = min(GLYPH_H, max(1, int(np.ceil((seg_rows[-1] - seg_rows[0] + 1) / scale))))
-            atlas, trim_rows = _ATLAS_PART, True
-        bms = _sample_bitmaps_batch(integral, anchor, xs, scale, n_rows, n_cols)
-        best_char, best_dist = _match_batch(bms, atlas, trim_rows)
-        chars.append(best_char)
-        total += best_dist
-    return "".join(chars), total
+    starts, ends = _segment_bounds(ink, max(2, scale // 2 + 1))
+    if starts.size == 0:
+        return "", 0
+    h, w = ink.shape
+    n_cols = np.clip(-(-(ends - starts) // scale), 1, GLYPH_W)
+    if full_height:
+        anchor = np.full_like(starts, ink_top)
+        n_rows = np.full_like(starts, GLYPH_H)
+        atlas = _FLAT_FULL
+    else:
+        # rows of each segment's ink; the columns between segments are
+        # blank, so reducing from one start to the next is exact
+        seg_ink = np.logical_or.reduceat(ink, starts, axis=1)  # (h, S)
+        anchor = seg_ink.argmax(axis=0)
+        last = h - 1 - seg_ink[::-1].argmax(axis=0)
+        n_rows = np.clip(-(-(last - anchor + 1) // scale), 1, GLYPH_H)
+        atlas = _FLAT_PART
+    # sampling grids of every (segment, dy) and (segment, dx) on the full
+    # GLYPH_H x GLYPH_W frame; offset index dy * scale + dx is dy-major,
+    # the order the sequential reference scans
+    off = np.arange(scale)
+    ys = np.clip(anchor[:, None, None] - off[:, None] + np.arange(GLYPH_H + 1) * scale, 0, h)
+    xs = np.clip(starts[:, None, None] - off[:, None] + np.arange(GLYPH_W + 1) * scale, 0, w)
+    s = integral[ys[:, :, None, :, None], xs[:, None, :, None, :]]  # (S, s, s, H+1, W+1)
+    block = s[..., 1:, 1:] - s[..., :-1, 1:] - s[..., 1:, :-1] + s[..., :-1, :-1]
+    area = np.diff(ys)[:, :, None, :, None] * np.diff(xs)[:, None, :, None, :]
+    bm = block * 2 >= np.maximum(area, 1)
+    # cells past a segment's own n_rows x n_cols bitmap are not sampled
+    bm &= (np.arange(GLYPH_H) < n_rows[:, None])[:, None, None, :, None]
+    bm &= (np.arange(GLYPH_W) < n_cols[:, None])[:, None, None, None, :]
+    bm = bm.reshape(-1, GLYPH_H, GLYPH_W)
+    # trim by shifting the first ink column (and, for partial-height
+    # content, row) to the frame origin: everything right of or below the
+    # ink box is already False, so the shift equals pad(trim(bm)); an
+    # empty bitmap stays empty
+    r0 = np.zeros(len(bm), np.intp) if full_height else bm.any(axis=2).argmax(axis=1)
+    c0 = bm.any(axis=1).argmax(axis=1)
+    padded = np.zeros((len(bm), 2 * GLYPH_H, 2 * GLYPH_W), dtype=bool)
+    padded[:, :GLYPH_H, :GLYPH_W] = bm
+    frames = padded[
+        np.arange(len(bm))[:, None, None],
+        r0[:, None, None] + np.arange(GLYPH_H)[:, None],
+        c0[:, None, None] + np.arange(GLYPH_W),
+    ]
+    # Hamming distance |f| + |a| - 2|f & a| as one matmul; small integers,
+    # so exact in float32
+    f = frames.reshape(len(bm), -1).astype(np.float32)
+    dists = f.sum(axis=1, keepdims=True) + atlas.sum(axis=0) - 2 * (f @ atlas)
+    # per segment, the first (offset, char) pair at the minimum: the first
+    # offset reaching it, then the first char in sorted order
+    dists = dists.reshape(starts.size, -1)
+    best = dists.argmin(axis=1)
+    text = "".join(_CHARS[i] for i in best % len(_CHARS))
+    return text, int(dists[np.arange(starts.size), best].sum())
 
 
 def decode_cell(crop: np.ndarray, cfg: ExtractConfig, scale: int | None = None) -> str:

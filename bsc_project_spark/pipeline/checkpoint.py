@@ -109,6 +109,7 @@ from ..config import ExtractConfig
 from .extract import (
     EXTRACT_STAGE_SCHEMA,
     LINEAGE_SCHEMA,
+    PHASES,
     assemble_spans,
     media_refs,
     run_page_stage,
@@ -342,7 +343,8 @@ def _commit_pages(
         # an empty unit (no refs hashed here, or Spark skipped empty
         # partitions) rewrites its lineage as an explicit zero row, so the
         # lineage table covers every committed unit
-        for rows in (lineage, spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)):
+        zero = spark.createDataFrame([(-1,) + (0,) * (4 + len(PHASES))], LINEAGE_SCHEMA)
+        for rows in (lineage, zero):
             (
                 rows.withColumn("run_id", F.lit(run_id))
                 .withColumn("bucket", F.lit(bucket))

@@ -62,9 +62,13 @@ from ..queries.prefix import global_row_number
 # one pass over the data, no accumulators.
 EXTRACT_STAGE_SCHEMA = "media_ref string, row int, col int, text string, kind string"
 
+# The *_ms columns split the kernel work of wall_time_ms by phase; the
+# tiled route's rows leave them NULL.
+PHASES = ("decode", "preprocess", "segment", "postprocess", "bbox", "ocr")
 LINEAGE_SCHEMA = (
     "partition_id int, page_count long, cell_count long, "
-    "ocr_char_count long, wall_time_ms long"
+    "ocr_char_count long, wall_time_ms long, "
+    + ", ".join(f"{p}_ms long" for p in PHASES)
 )
 
 
@@ -107,12 +111,15 @@ def _make_extract_udf(
         page_count = 0
         cell_count = 0
         char_count = 0
+        phase_ms = dict.fromkeys(PHASES, 0.0)
 
         for pdf in batches:
             out_rows: list[tuple] = []
             for media_ref, content in zip(pdf["media_ref"], pdf["content"]):
+                t = time.perf_counter()
                 gray = decode_gray(bytes(content))
-                cells = extract_page(gray, cfg, cfg.ocr_glyph_scale)
+                phase_ms["decode"] += (time.perf_counter() - t) * 1000.0
+                cells = extract_page(gray, cfg, cfg.ocr_glyph_scale, phase_ms)
                 page_count += 1
                 for row, col, text in cells:
                     out_rows.append((media_ref, row, col, text, "ocr"))
@@ -129,6 +136,7 @@ def _make_extract_udf(
             "cell_count": cell_count,
             "ocr_char_count": char_count,
             "wall_time_ms": int((time.monotonic() - t_start) * 1000),
+            **{f"{p}_ms": round(ms) for p, ms in phase_ms.items()},
         }
         yield pd.DataFrame(
             [(None, None, None, json.dumps(lineage), "_lineage")],

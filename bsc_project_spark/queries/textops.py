@@ -2350,6 +2350,15 @@ _ENTROPY_VERIFY_SPARK = """
 def _char_entropy_spark(spark, sf_dir: str):
     register_views(spark, sf_dir)
     p = max(spark.sparkContext.defaultParallelism, 1)
+    # The first lower() (or upper()) in a JVM costs about 1 s; a warm call
+    # costs 0.04 s (local[4], 4 vCPUs).  The static initializer of Spark
+    # 4.1.2's CollationAwareUTF8String runs ICU UCharacter.toTitleCase on
+    # all 1,114,112 code points, whichever query runs first, so it is most
+    # of this query's cold action (1.2 s vs 0.23 s warm).  Setting
+    # spark.sql.icu.caseMappings.enabled=false skips it (0.07 s) but is no
+    # fix: it swaps ICU's per-code-point lowercase, which matches the
+    # DuckDB oracle, for the JVM's locale-dependent String.toLowerCase()
+    # on non-ASCII text.
     cnt = (
         spark.sql(
             "SELECT doc_id, lower(trim(text)) AS s FROM documents "

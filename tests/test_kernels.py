@@ -71,11 +71,22 @@ def test_binarize_fused_equals_two_step():
 
 def test_binarize_fused_tiles_equal_two_step():
     # page-wide images: blank 512-column tiles skip the Gaussian mean,
-    # inked ones run it; both must equal the two-step path for any C
+    # inked ones run it; both must equal the two-step path for any C.
+    # The heights sit at the edges of the blurred page's halo
+    # (block_size // 2 = 6 rows) and strips: shorter than the halo, one
+    # and two halos, one strip and one row past it, two strips; the
+    # widths give 32-row strips of many tiles, or one tall strip.
     from bsc_project_spark.kernels.imgproc import binarize_fused
 
+    def strip_rows(w):  # binarize_fused's strip height at width w
+        return max(32, (1 << 17) // (4 * (w + 12)))
+
     rng = np.random.default_rng(29)
-    for h, w in [(97, 1300), (40, 1024), (70, 513)]:
+    shapes = [(97, 1300), (40, 1024), (70, 513)]
+    for w in (1300, 70):
+        shapes += [(h, w) for h in (1, 6, 12, 13, 31, 33, strip_rows(w) + 1, 2 * strip_rows(w))]
+    for h, w in shapes:
+        strip = strip_rows(w)
         img = np.full((h, w), 250, dtype=np.uint8)
         img += rng.integers(0, 6, (h, w), dtype=np.uint8)
         ink = rng.random((h, w)) < 0.01
@@ -93,12 +104,38 @@ def test_binarize_fused_tiles_equal_two_step():
         left, right = np.zeros((2, h, w), dtype=np.uint8)
         left[:, :511] = 255
         right[:, 513:] = 255
-        for page in (img, paper, left, right):
+        # the same one row clear of the first strip boundary: a strip
+        # sees the other band only through its halo rows
+        below, above = np.zeros((2, h, w), dtype=np.uint8)
+        below[strip + 1 :] = 255
+        above[: strip - 1] = 255
+        for page in (img, paper, left, right, below, above):
             for c in (12.0, 4.0, 3.0, 2.0, 1.0, 0.0, -5.0, 7.5):
                 assert np.array_equal(
                     binarize_fused(page, 13, c),
                     adaptive_threshold_gaussian(gaussian_blur3(page), 13, c),
                 ), (h, w, c)
+
+
+def test_row_window_reduce_matches_row_by_row_op():
+    # the log-step row window of the bit-packed morphology against the op
+    # taken row by row over the fill-padded rows, for every window size
+    # up to past the 50-row vertical-line kernel
+    from bsc_project_spark.kernels.bitmorph import _window_reduce
+
+    rng = np.random.default_rng(37)
+    for h in (1, 2, 7, 50, 123):
+        p = rng.integers(0, 256, (h, 5), dtype=np.uint8)
+        for size in range(1, 66):
+            r_lo = (size - 1) // 2
+            for fill in (False, True):
+                ext = np.full((h + size - 1, 5), 0xFF if fill else 0, dtype=np.uint8)
+                ext[r_lo : r_lo + h] = p
+                rows = np.stack([ext[d : d + h] for d in range(size)])
+                for is_and, op in ((True, np.bitwise_and), (False, np.bitwise_or)):
+                    assert np.array_equal(
+                        _window_reduce(p, size, 0, fill, is_and), op.reduce(rows, axis=0)
+                    ), (h, size, fill, is_and)
 
 
 def test_morph_open_white_foreground_semantics():
@@ -516,8 +553,11 @@ def test_multiclass_regions_fuzz_vs_per_class_label():
 
 
 def test_decode_vectorized_matches_sequential_reference():
-    """_decode_at_scale (offset-batched) == _decode_at_scale_ref (loop) on
-    fixture crops, clipped crops, and random-noise crops."""
+    """_decode_at_scale (segment- and offset-batched) == _decode_at_scale_ref
+    (loops) on fixture crops at scales 1-6, clipped crops, crops cut
+    through a glyph at every edge, '.'-only and other partial-height
+    cells, mixed full/partial-height segments, empty crops and
+    random-noise crops."""
     import numpy as np
 
     from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG as fcfg
@@ -526,30 +566,49 @@ def test_decode_vectorized_matches_sequential_reference():
 
     def both(crop, scale):
         ink = crop < fcfg.ocr_ink_threshold
-        if not ink.any():
-            return ("", 0), ("", 0)
         rows = np.where(ink.any(axis=1))[0]
-        top, height = int(rows[0]), int(rows[-1]) - int(rows[0]) + 1
+        top = int(rows[0]) if rows.size else 0
+        height = int(rows[-1]) - top + 1 if rows.size else 0
         integ = ocr._integral(ink)
         return (
             ocr._decode_at_scale(ink, scale, top, height, integ),
             ocr._decode_at_scale_ref(ink, scale, top, height, integ),
         )
 
-    for text in ["1907", "28.12", "50.4N", "-3.5", ".", "1", "NSEW", "0123456789"]:
-        for scale in (4, 5, 7):
-            img = render_text(text, scale)
-            got, want = both(img, scale)
-            assert got == want, (text, scale)
-            got2, want2 = both(img[2:, 1:], scale)  # erode-style clipping
-            assert got2 == want2, (text, scale, "clipped")
+    texts = ["1907", "28.12", "50.4N", "-3.5", ".", "..", "-", "-.", ". -", "1",
+             "NSEW", "0123456789"]
+    for text in texts:
+        for render_scale in range(1, 7):
+            img = render_text(text, render_scale)
+            h, w = img.shape
+            k = max(1, render_scale // 2)
+            crops = {
+                "whole": img,
+                "clipped": img[2:, 1:],  # erode-style clipping
+                # cut through the first / last glyph and the ink rows
+                "left": img[:, k:], "right": img[:, : w - k],
+                "top": img[k:], "bottom": img[: h - k],
+                # the partial-height rows alone ('.' and '-' bands)
+                "low": img[h - 2 * render_scale :],
+                "mid": img[3 * render_scale : 4 * render_scale],
+            }
+            for name, crop in crops.items():
+                for scale in {render_scale, max(1, render_scale - 1), render_scale + 1}:
+                    got, want = both(crop, scale)
+                    assert got == want, (text, render_scale, name, scale)
+
+    for shape in [(1, 1), (7, 5), (32, 40)]:
+        empty = np.full(shape, 255, dtype=np.uint8)
+        for scale in range(1, 7):
+            assert both(empty, scale) == (("", 0), ("", 0))
 
     rng = np.random.default_rng(23)
     for _ in range(20):
         h, w = rng.integers(10, 60, 2)
         noise = rng.integers(0, 256, (h, w)).astype(np.uint8)
-        got, want = both(noise, 5)
-        assert got == want
+        for scale in (1, 3, 5):
+            got, want = both(noise, scale)
+            assert got == want
 
 
 def test_resize_area_general_path_matches_bruteforce():

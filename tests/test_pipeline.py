@@ -7,10 +7,14 @@ from pyspark.sql import functions as F
 from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
 from bsc_project_spark.pipeline.extract import (
+    PHASES,
     explode_spans,
     extract_spans,
+    media_refs,
     reassemble,
     run_extract_stage,
+    run_page_stage,
+    split_stage_output,
 )
 
 
@@ -85,6 +89,54 @@ def test_lineage_totals(spark, corpus):
     assert lin.c == exp_chars
     # fan-out consistency: extracted OCR spans >= unique-page cells
     assert extracted.filter("kind = 'ocr'").count() >= exp_cells
+
+
+def test_lineage_phases_sum_to_the_wall(spark, corpus):
+    """Each partition of the per-page route splits its wall by phase:
+    decode through OCR sum to within 10 % of its wall_time_ms.  Two
+    partitions give each several pages, so the Arrow boundary's few ms
+    per task (the first input batch, the output frames) stay a small
+    share of the wall."""
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    stage = run_page_stage(media, media_refs(docs), FIXTURE_CONFIG, 2)
+    rows = [r for r in split_stage_output(stage)[1].collect() if r.page_count]
+    assert len(rows) == 2
+    for r in rows:
+        phases = sum(r[f"{p}_ms"] for p in PHASES)
+        assert abs(phases - r.wall_time_ms) <= 0.1 * r.wall_time_ms, r
+
+
+def test_extract_pass_job_count(spark, corpus, tmp_path, spark_jobs):
+    """A warm extraction pass over the fixture corpus, read from parquet as
+    the benchmark reads its corpus, runs 10 jobs.
+
+    Build (3): the documents explode with a partial distinct; the final
+    distinct and the refs broadcast; the ``media ⋉ refs`` scan and collect
+    (the driver route's sizes).
+
+    ``extracted`` (6): the media scan joined to the bins, then the route
+    shuffle; two one-task documents explodes (media spans and text spans);
+    the UDF stage; the cells ⋈ media-spans join, then the doc_id shuffle;
+    the window and the result.
+
+    ``lineage`` (1): one job over the persisted stage."""
+    spark_io.write_corpus_parquet(corpus, str(tmp_path))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    media = spark.read.parquet(str(tmp_path / "media.parquet"))
+
+    def one_pass():
+        res = []
+        build = spark_jobs(
+            lambda: res.append(run_extract_stage(docs, media, FIXTURE_CONFIG, persist=True))
+        )
+        try:
+            return build, spark_jobs(res[0].extracted.collect), spark_jobs(res[0].lineage.collect)
+        finally:
+            res[0].stage.unpersist()
+
+    one_pass()  # warms the session
+    assert one_pass() == (3, 6, 1)
 
 
 def test_reassemble_round_trip(spark, corpus):

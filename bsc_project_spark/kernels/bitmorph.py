@@ -4,7 +4,8 @@ Erosion/dilation of binary images as AND/OR over shifted bit-planes on
 np.packbits rows — 8x less memory traffic than uint8 min/max filtering.
 Memory bandwidth (not cores) is the contended resource when 32 executor
 workers run the kernels concurrently, so the hot morphology ops
-(preprocess OPEN, vertical-line CLOSE, per-class region erode) run packed.
+(preprocess OPEN, vertical-line CLOSE and its column profile, per-class
+region erode) run packed.
 
 Semantics are those of uint8 {0,255} min/max filters with cv2 rect
 kernels: window anchoring r_lo=(k-1)//2, and the border policy set by the
@@ -121,6 +122,40 @@ def open_u8(img: np.ndarray, kh: int, kw: int) -> np.ndarray:
     out = np.unpackbits(p, axis=1, count=w)
     out *= np.uint8(255)
     return out
+
+
+def vertical_close_packed(mask: np.ndarray, kh: int) -> np.ndarray:
+    """Packed rows (1 = foreground) of the kh x 1 CLOSE of a 2-D mask
+    (nonzero = foreground): dilate with a background border, then erode
+    with a foreground border.  Bit-identical to packing
+    ``binary_filter(binary_filter(mask, kh, 1, False, False), kh, 1, True,
+    True)`` but never unpacks between the two passes; with a one-column
+    kernel no bit moves sideways, so the trailing byte's padding bits
+    stay 0 and mean nothing."""
+    p = np.packbits(mask, axis=1)
+    p = _window_reduce(p, kh, 0, False, False)
+    return _window_reduce(p, kh, 0, True, True)
+
+
+def column_popcount(p: np.ndarray, w: int) -> np.ndarray:
+    """Per-column count of set bits over the rows of packed ``p``, for its
+    first ``w`` columns (int64), without unpacking: viewed as uint64
+    words, ``(word >> k) & 0x0101..01`` puts bit k of every byte in its
+    own byte lane, and lanes summed over at most 255 rows cannot carry
+    into each other."""
+    h, nb = p.shape
+    n = -(-h // 255)          # row blocks of at most 255 rows
+    rows = -(-h // max(n, 1))
+    nw = -(-nb // 8)
+    words = np.zeros((n * rows, nw * 8), np.uint8)
+    words[:h, :nb] = p
+    words = words.view(np.uint64).reshape(n, rows, nw)
+    lanes = np.uint64(0x0101010101010101)
+    ones = np.empty((8, nw * 8), np.int64)
+    for k in range(8):
+        per_block = ((words >> np.uint64(k)) & lanes).sum(axis=1, dtype=np.uint64)
+        ones[7 - k] = per_block.view(np.uint8).sum(axis=0, dtype=np.int64)
+    return ones.T.reshape(-1)[:w]
 
 
 def binary_filter(

@@ -397,21 +397,19 @@ def find_vertical_line_bounds(img: np.ndarray, cfg: ExtractConfig) -> tuple[int,
        blank pages (no lines) fall back to (0, half_width).
     """
     half_w = img.shape[1] // 2
-    black = vline_black_mask(img, cfg)
-    return vline_bounds_from_profile(black.sum(axis=0, dtype=np.int64), half_w, cfg)
+    return vline_bounds_from_profile(vline_black_profile(img, cfg), half_w, cfg)
 
 
-def vline_black_mask(img: np.ndarray, cfg: ExtractConfig) -> np.ndarray:
-    """Per-pixel black mask of the vertically-CLOSEd LEFT HALF — the
+def vline_white_bits(img: np.ndarray, cfg: ExtractConfig) -> np.ndarray:
+    """Packed rows (1 = white) of the vertically-CLOSEd LEFT HALF — the
     distributive core of find_vertical_line_bounds: the column profile is
-    the row-sum of this mask, so horizontal BANDS of the page can each
-    contribute their core rows' partial sums and the combined profile is
-    EXACT (the tile-split path, pipeline/tiling.py, relies on this;
-    band callers must pass a halo >= 2*vline_kernel_h and slice it off)."""
-    from .bitmorph import binary_filter
+    a per-column count over these rows, so horizontal BANDS of the page
+    can each contribute their core rows' partial counts and the combined
+    profile is EXACT (the tile-split path, pipeline/tiling.py, relies on
+    this; band callers must pass a halo >= 2*vline_kernel_h and slice it
+    off)."""
+    from .bitmorph import vertical_close_packed
 
-    half_w = img.shape[1] // 2
-    left = img[:, :half_w]
     # vertical CLOSE bit-packed: dilate, then erode, with a kernel_h x 1 rect.
     # NOTE: for the even 50-tall kernel both passes use the same window
     # anchor, whereas cv2.morphologyEx(MORPH_CLOSE) mirrors the anchor
@@ -419,9 +417,18 @@ def vline_black_mask(img: np.ndarray, cfg: ExtractConfig) -> np.ndarray:
     # vertically by one row.  Deliberate 1-px deviation: per-column black
     # COUNTS feed a 15%-of-max threshold, which a one-row shift at the
     # image top/bottom cannot flip.
-    white = binary_filter(left > 0, cfg.vline_kernel_h, 1, erode=False, border=False)
-    white = binary_filter(white, cfg.vline_kernel_h, 1, erode=True, border=True)
-    return ~white
+    return vertical_close_packed(img[:, : img.shape[1] // 2], cfg.vline_kernel_h)
+
+
+def vline_black_profile(
+    img: np.ndarray, cfg: ExtractConfig, rows: slice = slice(None)
+) -> np.ndarray:
+    """Per-column black-pixel count (int64) over ``rows`` of the
+    vertically-CLOSEd left half, counted from the packed rows."""
+    from .bitmorph import column_popcount
+
+    white = vline_white_bits(img, cfg)[rows]
+    return white.shape[0] - column_popcount(white, img.shape[1] // 2)
 
 
 def vline_bounds_from_profile(

@@ -2,9 +2,11 @@
 
 Spark lifecycle of the reference computation (SURVEY.md §3.1):
 
-    documents --explode--> spans
-    spans[kind=media].media_ref --distinct--> unique refs
-      --sizes collect (driver, build time)--> bins(media_ref, bin)
+    documents --inline--> spans
+    documents --array_distinct(media spans' refs) per doc, explode--> refs
+      (one row per (document, page) citation; no global distinct)
+    media --semi join broadcast refs--> (media_ref, sz) of the unique pages
+      --collect (driver, build time)--> bins(media_ref, bin)
     media --join broadcast bins--> unique pages
       --size-aware bin-packing repartition-->                  # skew defuse
       --ONE mapInPandas stage (K1..K21 numpy kernels)-->       # zero per-row Python
@@ -20,13 +22,14 @@ host->GPU tensor boundary (scripts/imgs2csv.py:140) becomes the JVM->Python
 Arrow channel.
 
 Scale design: the unit of expensive work is one UNIQUE page — a document
-with 100x the median spans (heavy-doc skew) contributes only distinct
+with 100x the median spans (heavy-doc skew) contributes only its distinct
 media_refs to the image stage, and its fan-back-out happens in the cheap
-cells-to-spans join (AQE skew-join splits hot media_refs there).  The
-distinct + hash(media_ref) repartition also dedups shared pages across
-documents, so the kernel cost is O(unique pages), not O(spans).  The final
-window restores global span order — the north rule's "explode/salted
-repartition + window over (doc_id, offset)" design.
+cells-to-spans join (AQE skew-join splits hot media_refs there).  Pages
+shared across documents dedup where media meets the refs (a semi-join
+only tests membership) and in the bins join, so the kernel cost is
+O(unique pages), not O(spans), without a global distinct and its
+shuffle.  The final window restores global span order — the north rule's
+"explode/salted repartition + window over (doc_id, offset)" design.
 
 One planner (run_page_stage) sizes the refs' pages once and deals them
 into bins, on the driver (one build-time collect, broadcast bins) unless
@@ -49,7 +52,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
@@ -73,28 +76,25 @@ LINEAGE_SCHEMA = (
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans[]) -> one row per span (Generate, no shuffle)."""
-    return documents.select(
-        "doc_id",
-        F.explode("spans").alias("span"),
-    ).select(
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    """documents(doc_id, spans[]) -> one row per span, (doc_id, kind,
+    text, media_ref, offset): one ``inline`` (Generate, no shuffle)."""
+    return documents.selectExpr("doc_id", "inline(spans)")
+
+
+def doc_media_refs(documents: DataFrame) -> DataFrame:
+    """documents -> one ``media_ref`` row per (document, cited page),
+    deduplicated within each document but not across documents: enough
+    for a membership test (run_page_stage's semi-join and sizes), without
+    the shuffle a global distinct costs."""
+    return documents.selectExpr(
+        "explode(array_distinct(filter(spans, s -> s.kind = 'media').media_ref)) AS media_ref"
     )
 
 
 def media_refs(documents: DataFrame) -> DataFrame:
     """documents -> the distinct media_refs their media spans cite (one
-    ``media_ref`` column): the page set the image stage extracts."""
-    return (
-        explode_spans(documents)
-        .filter(F.col("kind") == "media")
-        .select("media_ref")
-        .distinct()
-    )
+    ``media_ref`` column): the page set a checkpoint's ref ledger holds."""
+    return doc_media_refs(documents).distinct()
 
 
 def _make_extract_udf(
@@ -107,13 +107,17 @@ def _make_extract_udf(
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
-        t_start = time.monotonic()
+        # the wall starts at the first batch: the JVM's time to send it is
+        # not UDF work
+        t_start = None
         page_count = 0
         cell_count = 0
         char_count = 0
         phase_ms = dict.fromkeys(PHASES, 0.0)
 
         for pdf in batches:
+            if t_start is None:
+                t_start = time.monotonic()
             out_rows: list[tuple] = []
             for media_ref, content in zip(pdf["media_ref"], pdf["content"]):
                 t = time.perf_counter()
@@ -135,7 +139,7 @@ def _make_extract_udf(
             "page_count": page_count,
             "cell_count": cell_count,
             "ocr_char_count": char_count,
-            "wall_time_ms": int((time.monotonic() - t_start) * 1000),
+            "wall_time_ms": 0 if t_start is None else int((time.monotonic() - t_start) * 1000),
             **{f"{p}_ms": round(ms) for p, ms in phase_ms.items()},
         }
         yield pd.DataFrame(
@@ -201,11 +205,13 @@ def serpentine_bins(
 
 def _bins_local_df(spark: SparkSession, data: list[tuple[str, int]]) -> DataFrame:
     """(media_ref, bin) rows as a LOCAL relation.  Small lists go through
-    an inline VALUES literal — a LocalRelation Catalyst folds straight
-    into the bins broadcast with ZERO tasks and no Python workers; a
+    an inline VALUES literal, a LocalRelation with no Python workers; a
     Python-list createDataFrame would plan as a pickled-RDD scan
-    (defaultParallelism tasks + pickle-worker cold start inside the
-    broadcast build).  Big lists fall back to createDataFrame (the VALUES
+    (pickle-worker cold start inside the broadcast build).  It is not
+    free: broadcasting it runs one LocalTableScan job of
+    min(rows, defaultParallelism) tasks on every pass, and a pandas
+    createDataFrame local relation measured the same 2 jobs for a
+    broadcast join.  Big lists fall back to createDataFrame (the VALUES
     SQL text would outgrow the parser)."""
     if not data:
         return spark.createDataFrame([], "media_ref string, bin int")
@@ -263,12 +269,9 @@ def repartition_by_size(pages: DataFrame, bins: DataFrame, n_parts: int) -> Data
     _partition_tokens).  Balanced bins give byte-balanced partitions, so
     one giant page no longer drags a full round-robin share of other
     pages with it (SURVEY.md §7)."""
-    tokens = _partition_tokens(pages.sparkSession, n_parts)
-    token_arr = F.array(*[F.lit(t) for t in tokens])
-    routed = pages.join(bins, on="media_ref", how="inner").select(
-        "media_ref",
-        "content",
-        F.element_at(token_arr, F.col("bin") + 1).alias("_route"),
+    tokens = ", ".join(map(str, _partition_tokens(pages.sparkSession, n_parts)))
+    routed = pages.join(bins, on="media_ref", how="inner").selectExpr(
+        "media_ref", "content", f"element_at(array({tokens}), bin + 1) AS _route"
     )
     return routed.repartition(n_parts, "_route").drop("_route")
 
@@ -284,9 +287,10 @@ def run_page_stage(
     media: DataFrame, refs: DataFrame, cfg: ExtractConfig, n_parts: int
 ) -> DataFrame:
     """The expensive image stage over the UNIQUE pages named by ``refs``
-    (a (media_ref) frame): size the pages, deal them into ``n_parts``
-    byte-balanced bins, ONE mapInPandas running K1-K21 over the
-    repartitioned pages.  Returns the raw stage output (cells + in-band
+    (a (media_ref) frame, which may repeat a ref: it is only tested for
+    membership, so each page runs once): size the pages, deal them into
+    ``n_parts`` byte-balanced bins, ONE mapInPandas running K1-K21 over
+    the repartitioned pages.  Returns the raw stage output (cells + in-band
     lineage rows; split with ``split_stage_output``).
 
     One planner.  ``sizes`` is (media_ref, sz) for the refs' pages: sz is
@@ -296,11 +300,11 @@ def run_page_stage(
     only in where the bins are dealt:
 
     - driver route (None, or at most that many refs): ONE build-time
-      collect of the sizes, serpentine_bins on the driver, a zero-task
-      VALUES bins relation broadcast into the page join.  The bins hold
+      collect of the sizes, serpentine_bins on the driver, a VALUES bins
+      relation broadcast into the page join.  The bins hold
       exactly the refs' non-giant pages, so the plan the action runs
-      never re-derives the refs (for run_extract_stage, an explode +
-      distinct of the documents).
+      never re-derives the refs (for run_extract_stage, an explode of
+      the documents).
     - distributed route (above the ceiling): media is semi-joined to the
       broadcast refs, the bins are ranked two-phase and shuffle-joined
       (no broadcast hint), giants come from a filter on ``sizes``; no ref
@@ -326,8 +330,8 @@ def run_page_stage(
     thr = cfg.tile_threshold_px
     tiling = metadata and thr is not None and not cfg.deskew_enabled
     scoped = media.join(F.broadcast(refs), on="media_ref", how="left_semi")
-    sz = F.col("width").cast("long") * F.col("height") if metadata else F.length("content")
-    sizes = scoped.select("media_ref", F.coalesce(sz.cast("long"), F.lit(0)).alias("sz"))
+    sz = "CAST(width AS BIGINT) * height" if metadata else "length(content)"
+    sizes = scoped.selectExpr("media_ref", f"coalesce(CAST({sz} AS BIGINT), 0) AS sz")
     giant_refs = None
     # The driver contract gate: None trusts it (no job); a ceiling costs
     # one parallel count() — not limit(n).collect(), which scans
@@ -348,9 +352,9 @@ def run_page_stage(
             giant_refs = _bins_local_df(spark, giants).select("media_ref")
     else:
         pages = scoped.select("media_ref", "content")
-        bins = assign_size_bins(sizes.filter(F.col("sz") < thr) if tiling else sizes, n_parts)
+        bins = assign_size_bins(sizes.where(f"sz < {thr}") if tiling else sizes, n_parts)
         if tiling:
-            giant_refs = sizes.filter(F.col("sz") >= thr).select("media_ref")
+            giant_refs = sizes.where(f"sz >= {thr}").select("media_ref")
     out = repartition_by_size(pages, bins, n_parts).mapInPandas(
         _make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA
     )
@@ -364,15 +368,10 @@ def run_page_stage(
 
 def split_stage_output(stage_out: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Raw page-stage output -> (cells, lineage)."""
-    lineage = (
-        stage_out.filter(F.col("kind") == "_lineage")
-        .select(F.from_json(F.col("text"), LINEAGE_SCHEMA).alias("l"))
-        .select("l.*")
-    )
-    cells = stage_out.filter(F.col("kind") == "ocr").select(
-        "media_ref", "row", "col", "text", "kind"
-    )
-    return cells, lineage
+    lineage = stage_out.where("kind = '_lineage'").selectExpr(
+        f"from_json(text, '{LINEAGE_SCHEMA}') AS l"
+    ).selectExpr("l.*")
+    return stage_out.where("kind = 'ocr'"), lineage
 
 
 def assemble_spans(
@@ -383,26 +382,18 @@ def assemble_spans(
     Returns (extracted, unresolved).  Pure skinny-row relational work: the
     cells join is where AQE skew-join splits hot media_refs; the window is
     per-doc state only.  ``media`` is used (media_ref column alone, pruned
-    scan) for the quarantine anti-join.
+    scan) for the quarantine anti-join.  Built from SQL-expression
+    operators: each Column object costs the driver tens of py4j calls.
     """
     spans = explode_spans(documents)
-    text_spans = spans.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "offset",
-        F.lit(-1).alias("row"),
-        F.lit(-1).alias("col"),
-        "text",
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit("text").alias("kind"),
+    text_spans = spans.where("kind = 'text'").selectExpr(
+        "doc_id", "offset", "-1 AS row", "-1 AS col", "text",
+        "CAST(NULL AS STRING) AS media_ref", "kind",
     )
-    media_spans = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
-    )
-    ocr_spans = media_spans.join(
-        cells.select("media_ref", "row", "col", "text", "kind"),
-        on="media_ref",
-        how="inner",
-    ).select("doc_id", "offset", "row", "col", "text", "media_ref", "kind")
+    media_spans = spans.where("kind = 'media'").selectExpr("doc_id", "offset", "media_ref")
+    # cells carry (media_ref, row, col, text, kind): the inner join adds
+    # (doc_id, offset), and unionByName lines the columns up
+    ocr_spans = media_spans.join(cells, on="media_ref", how="inner")
 
     # Quarantine channel: media spans whose ref has no media row are NOT
     # silently dropped — they surface here (and in the checkpoint job's
@@ -411,11 +402,9 @@ def assemble_spans(
         media.select("media_ref"), on="media_ref", how="left_anti"
     ).select("doc_id", "offset", "media_ref")
 
-    all_spans = text_spans.unionByName(ocr_spans)
-    w = Window.partitionBy("doc_id").orderBy("offset", "row", "col")
-    extracted = all_spans.select(
+    extracted = text_spans.unionByName(ocr_spans).selectExpr(
         "doc_id",
-        (F.row_number().over(w) - F.lit(1)).alias("order"),
+        "row_number() OVER (PARTITION BY doc_id ORDER BY offset, row, col) - 1 AS `order`",
         "kind",
         "text",
         "media_ref",
@@ -443,16 +432,16 @@ def run_extract_stage(
     per core, because every Python task pays a fixed worker set-up cost
     (see pipeline/session.py).
 
-    The expensive image work runs once per UNIQUE page: distinct refs
-    restrict media (through the bins join, see run_page_stage), and the
-    pages are byte-balanced over partitions.  Heavy
-    documents (many spans) and popular pages (many docs) both collapse to
-    one kernel invocation per page.
+    The expensive image work runs once per UNIQUE page: each document's
+    distinct refs restrict media (through the bins join, see
+    run_page_stage), and the pages are byte-balanced over partitions.
+    Heavy documents (many spans) and popular pages (many docs) both
+    collapse to one kernel invocation per page.
     """
     spark = documents.sparkSession
     n_parts = salt_partitions or spark.sparkContext.defaultParallelism
 
-    stage_out = run_page_stage(media, media_refs(documents), cfg, n_parts)
+    stage_out = run_page_stage(media, doc_media_refs(documents), cfg, n_parts)
     if persist:
         stage_out = stage_out.persist(StorageLevel.MEMORY_AND_DISK)
     cells, lineage = split_stage_output(stage_out)

@@ -67,7 +67,7 @@ from ..kernels.bitmorph import open_u8
 from ..kernels.imgproc import (
     binarize_fused,
     resize_area,
-    vline_black_mask,
+    vline_black_profile,
     vline_bounds_from_profile,
     whiteout_margins,
 )
@@ -155,8 +155,7 @@ def _analyze_band_udf(cfg: ExtractConfig) -> Callable:
                 # partial column profile of the vertically-CLOSEd left
                 # half, core rows only — summed across bands at stitch
                 # time this is EXACTLY the whole-page profile
-                black = vline_black_mask(binary, cfg)[lo:hi]
-                colsum = black.sum(axis=0, dtype=np.int64).tobytes()
+                colsum = vline_black_profile(binary, cfg, slice(lo, hi)).tobytes()
                 core = np.packbits(binary[lo:hi] > 0, axis=1).tobytes()
                 rows.append(
                     (r.media_ref, r.band, r.n_bands, r.y0, r.y1, r.h, r.w,

@@ -24,8 +24,9 @@ BCAST, SQL_BCAST, COLLECT, TO_PANDAS = "F.broadcast(", "/*+ BROADCAST", ".collec
 SITES = [
     ("pipeline/extract.py", "run_page_stage", BCAST,
      "the refs semi-joined to media, so page bytes never shuffle: one "
-     "media_ref per unique page, unbounded on the route above "
-     "driver_plan_max"),
+     "media_ref row per (document, page) citation, deduplicated within "
+     "each document but not across documents; unbounded on the route "
+     "above driver_plan_max"),
     ("pipeline/extract.py", "run_page_stage", COLLECT,
      "one (media_ref, sz) row per unique page, gated by "
      "ExtractConfig.driver_plan_max: its exact count costs a build-time "

@@ -13,7 +13,7 @@ from bsc_project_spark.kernels.imgproc import (
     find_vertical_line_bounds,
     gaussian_blur3,
     resize_area,
-    vline_black_mask,
+    vline_white_bits,
 )
 from bsc_project_spark.kernels.ocr import decode_cell, pad_for_ocr
 from bsc_project_spark.kernels.postprocess import (
@@ -154,11 +154,12 @@ def test_morph_open_white_foreground_semantics():
 
 
 def test_morph_close_vertical_keeps_tall_lines_only():
-    # vline_black_mask: the 1x50 vertical CLOSE of the left half
+    # vline_white_bits: the 1x50 vertical CLOSE of the left half
     img = np.full((200, 80), 255, dtype=np.uint8)
     img[10:190, 5:8] = 0   # tall line: survives 1x50 vertical close
     img[90:110, 30:33] = 0  # short blob (20 tall): wiped
-    black = vline_black_mask(img, ExtractConfig(vline_kernel_h=50))
+    white = vline_white_bits(img, ExtractConfig(vline_kernel_h=50))
+    black = ~np.unpackbits(white, axis=1, count=40).astype(bool)
     assert black.shape == (200, 40)
     assert black[50:150, 5:8].all()
     assert not black[90:110, 30:33].any()
@@ -473,6 +474,29 @@ def test_open_u8_matches_binary_filter_composition():
         white = binary_filter(white, 5, 5, erode=False, border=False)
         expected = np.where(white, np.uint8(255), np.uint8(0))
         assert np.array_equal(open_u8(img, 5, 5), expected), (h, w)
+
+
+def test_vline_profile_packed_matches_bool_page():
+    """The vertical-line profile counted from packed rows equals the
+    per-column sum of the two-pass bool CLOSE, over every row block
+    boundary (255 rows), trailing-byte width and band row slice."""
+    from bsc_project_spark.kernels.bitmorph import binary_filter, column_popcount
+    from bsc_project_spark.kernels.imgproc import vline_black_profile
+
+    cfg = ExtractConfig(vline_kernel_h=50)
+    rng = np.random.default_rng(23)
+    for h in (0, 1, 49, 51, 254, 255, 256, 511, 766):
+        for w in (1, 2, 17, 34, 130):
+            img = np.where(rng.random((h, w)) < rng.random(), np.uint8(255), np.uint8(0))
+            img[:, rng.integers(0, w)] = 0  # a full-height line
+            white = binary_filter(img[:, : w // 2] > 0, 50, 1, erode=False, border=False)
+            black = ~binary_filter(white, 50, 1, erode=True, border=True)
+            for rows in (slice(None), slice(h // 3, 2 * h // 3), slice(0, 0)):
+                expected = black[rows].sum(axis=0, dtype=np.int64)
+                got = vline_black_profile(img, cfg, rows)
+                assert got.dtype == np.int64 and np.array_equal(got, expected), (h, w, rows)
+            bits = np.packbits(img, axis=1)
+            assert np.array_equal(column_popcount(bits, w), (img > 0).sum(axis=0)), (h, w)
 
 
 def test_remove_small_fuzz_vs_per_class_reference():

@@ -107,18 +107,43 @@ def test_lineage_phases_sum_to_the_wall(spark, corpus):
         assert abs(phases - r.wall_time_ms) <= 0.1 * r.wall_time_ms, r
 
 
+def test_lineage_wall_starts_at_the_first_batch(corpus):
+    """The UDF's wall counts its own work, not the JVM's time to send the
+    first input batch: with a 500 ms wait before a one-page batch, the
+    wall stays within 100 ms of the phase sum."""
+    import json
+    import time
+
+    import pandas as pd
+
+    from bsc_project_spark.pipeline.extract import _make_extract_udf
+
+    page = corpus.media.iloc[0]
+
+    def slow_batches():
+        time.sleep(0.5)
+        yield pd.DataFrame({"media_ref": [page.media_ref], "content": [page.content]})
+
+    out = list(_make_extract_udf(FIXTURE_CONFIG)(slow_batches()))
+    lineage = json.loads(out[-1].text.iloc[0])
+    phases = sum(lineage[f"{p}_ms"] for p in PHASES)
+    assert lineage["page_count"] == 1
+    assert 0 <= lineage["wall_time_ms"] - phases <= 100, lineage
+
+
 def test_extract_pass_job_count(spark, corpus, tmp_path, spark_jobs):
     """A warm extraction pass over the fixture corpus, read from parquet as
-    the benchmark reads its corpus, runs 10 jobs.
+    the benchmark reads its corpus, runs 9 jobs, named as the event log
+    shows them.
 
-    Build (3): the documents explode with a partial distinct; the final
-    distinct and the refs broadcast; the ``media ⋉ refs`` scan and collect
-    (the driver route's sizes).
+    Build (2): the per-document refs broadcast (the documents scan and
+    its explode); the ``media ⋉ refs`` scan and collect (the driver
+    route's sizes).
 
-    ``extracted`` (6): the media scan joined to the bins, then the route
-    shuffle; two one-task documents explodes (media spans and text spans);
-    the UDF stage; the cells ⋈ media-spans join, then the doc_id shuffle;
-    the window and the result.
+    ``extracted`` (6): the bins broadcast (a LocalTableScan job); the
+    media-spans broadcast; the media scan joined to the bins, then the
+    route shuffle; the UDF stage; the doc_id shuffle map (text spans plus
+    cells ⋈ media spans); the window and the result.
 
     ``lineage`` (1): one job over the persisted stage."""
     spark_io.write_corpus_parquet(corpus, str(tmp_path))
@@ -136,7 +161,7 @@ def test_extract_pass_job_count(spark, corpus, tmp_path, spark_jobs):
             res[0].stage.unpersist()
 
     one_pass()  # warms the session
-    assert one_pass() == (3, 6, 1)
+    assert one_pass() == (2, 6, 1)
 
 
 def test_reassemble_round_trip(spark, corpus):

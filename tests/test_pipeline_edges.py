@@ -27,17 +27,27 @@ def one_page(corpus):
     return (r.media_ref, r.content, int(r.width), int(r.height), int(r.layout_id))
 
 
+# the driver route (the default) and the fully distributed one
+_ROUTES = [FIXTURE_CONFIG, dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)]
+
+
 def test_text_only_documents(spark, one_page):
+    """No document cites a page: on both planner routes the page stage
+    runs no page and the text spans come through in order."""
     docs = _docs(spark, [
-        ("d0", [("text", "alpha", None, 0), ("text", "beta", None, 1)]),
+        ("d0", [("text", "beta", None, 1), ("text", "alpha", None, 0)]),
     ])
     media = _media(spark, [one_page])
-    result = run_extract_stage(docs, media, FIXTURE_CONFIG)
-    rows = sorted(result.extracted.collect(), key=lambda r: r["order"])
-    assert [(r["order"], r["kind"], r["text"]) for r in rows] == [
-        (0, "text", "alpha"),
-        (1, "text", "beta"),
-    ]
+    for cfg in _ROUTES:
+        result = run_extract_stage(docs, media, cfg, persist=True)
+        rows = sorted(result.extracted.collect(), key=lambda r: r["order"])
+        n_pages = result.lineage.groupBy().sum("page_count").collect()[0][0]
+        result.stage.unpersist()
+        assert [(r["order"], r["kind"], r["text"]) for r in rows] == [
+            (0, "text", "alpha"),
+            (1, "text", "beta"),
+        ], cfg.driver_plan_max
+        assert not n_pages, cfg.driver_plan_max
     assert result.unresolved.count() == 0
 
 
@@ -113,3 +123,59 @@ def test_unbounded_route_leaves_no_cached_frames(spark, corpus):
     assert result.lineage.count() > 0
     result.stage.unpersist()
     assert cached().size() == before
+
+
+def _golden_spans(doc_rows, cells):
+    """(doc_id, order, kind, text, media_ref) rows the single-process
+    golden gives for ``doc_rows``; ``cells`` maps a ref to its page's
+    sorted (row, col, text) cells, and refs without a page contribute
+    nothing."""
+    out = []
+    for doc_id, spans in doc_rows:
+        rows = []
+        for kind, text, ref, _offset in sorted(spans, key=lambda s: s[3]):
+            if kind == "text":
+                rows.append(("text", text, None))
+            else:
+                rows += [("ocr", t, ref) for _row, _col, t in cells.get(ref, [])]
+        out += [(doc_id, order, *r) for order, r in enumerate(rows)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("cfg", _ROUTES, ids=["driver_route", "distributed_route"])
+def test_per_document_refs_edge_cases(spark, corpus, cfg):
+    """The page stage takes each document's distinct refs, not a global
+    distinct.  On both planner routes, against the golden: one page cited
+    by many documents and several times within one document runs once; a
+    media span with a NULL media_ref extracts nothing and is quarantined;
+    a document with an empty ``spans`` array yields no row."""
+    from bsc_project_spark.io.png import decode_gray
+    from bsc_project_spark.kernels.golden import extract_page
+
+    pages = [corpus.media.iloc[i] for i in (0, 1)]
+    p0, p1 = (p.media_ref for p in pages)
+    cells = {
+        p.media_ref: extract_page(
+            decode_gray(p.content), FIXTURE_CONFIG, FIXTURE_CONFIG.ocr_glyph_scale
+        )
+        for p in pages
+    }
+    doc_rows = [
+        ("a", [("text", "t0", None, 0), ("media", None, p0, 1), ("media", None, p0, 2),
+               ("text", "t1", None, 3), ("media", None, p1, 4), ("media", None, p0, 5)]),
+        ("c", [("media", None, p0, 0), ("media", None, None, 1), ("text", "x", None, 2)]),
+        ("d", []),
+        *[(f"many_{i}", [("media", None, p0, 0)]) for i in range(6)],
+    ]
+    media = _media(spark, [
+        (p.media_ref, p.content, int(p.width), int(p.height), int(p.layout_id)) for p in pages
+    ])
+    result = run_extract_stage(_docs(spark, doc_rows), media, cfg, persist=True)
+    got = sorted(tuple(r) for r in result.extracted.collect())
+    n_pages = result.lineage.groupBy().sum("page_count").collect()[0][0]
+    unresolved = [tuple(r) for r in result.unresolved.collect()]
+    result.stage.unpersist()
+    assert got == _golden_spans(doc_rows, cells)
+    assert n_pages == 2
+    assert unresolved == [("c", 1, None)]
+

@@ -33,7 +33,7 @@ from bsc_project_spark.fixtures.render import render_page
 from bsc_project_spark.io.png import encode_gray
 from bsc_project_spark.kernels.bitmorph import open_u8
 from bsc_project_spark.kernels.golden import extract_page
-from bsc_project_spark.kernels.imgproc import binarize_fused, vline_black_mask
+from bsc_project_spark.kernels.imgproc import binarize_fused, vline_black_profile
 from bsc_project_spark.pipeline.extract import run_extract_stage
 from bsc_project_spark.pipeline.tiling import (
     analysis_halo,
@@ -48,7 +48,7 @@ def test_banded_binarize_and_profile_match_whole_page():
     # dense content so every band and both borders carry ink
     gray = (rng.rand(1024, 512) * 255).astype(np.uint8)
     whole = open_u8(binarize_fused(gray, cfg.adaptive_block_size, cfg.adaptive_c), 5, 5)
-    whole_profile = vline_black_mask(whole, cfg).sum(axis=0, dtype=np.int64)
+    whole_profile = vline_black_profile(whole, cfg)
 
     halo = analysis_halo(cfg)
     core = 300  # deliberately unaligned with the page height
@@ -62,9 +62,7 @@ def test_banded_binarize_and_profile_match_whole_page():
             5, 5,
         )
         parts.append(band[y0 - hy0 : y1 - hy0])
-        profile += vline_black_mask(band, cfg)[y0 - hy0 : y1 - hy0].sum(
-            axis=0, dtype=np.int64
-        )
+        profile += vline_black_profile(band, cfg, slice(y0 - hy0, y1 - hy0))
     assert np.array_equal(np.concatenate(parts), whole)
     assert np.array_equal(profile, whole_profile)
 

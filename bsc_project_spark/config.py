@@ -103,19 +103,6 @@ class ExtractConfig:
     tile_threshold_px: Optional[int] = 12_000_000
     tile_band_px: int = 8_000_000
 
-    # Bins-planner driver contract (pipeline/extract.py run_page_stage).
-    # The planner collects one skinny (media_ref, sz) row per UNIQUE page
-    # to deal the bins on the driver — ≈40-100 B each pickled, so ~2M
-    # refs cost ≤~200 MB driver heap, no more than the bins broadcast the
-    # page join ships anyway.  None (default) trusts that contract and
-    # spends no job on it: true by construction when extraction runs per
-    # checkpoint bucket (pipeline/checkpoint.py bounds bucket size).  An
-    # int N spends one skinny count() job per stage build; ref sets above
-    # N plan fully distributed (two-phase rank, shuffle-joined bins,
-    # giants filtered by a distributed semi-join) with no driver-side
-    # collect.  2_000_000 is the ceiling matching the heap figure above.
-    driver_plan_max: Optional[int] = None
-
 
 # Reference-faithful defaults (full-resolution logbook pages).
 REFERENCE_CONFIG = ExtractConfig()

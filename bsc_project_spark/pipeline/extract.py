@@ -32,13 +32,11 @@ shuffle.  The final window restores global span order — the north rule's
 "explode/salted repartition + window over (doc_id, offset)" design.
 
 One planner (run_page_stage) sizes the refs' pages once and deals them
-into bins, on the driver (one build-time collect, broadcast bins) unless
-``ExtractConfig.driver_plan_max`` sends a larger ref set to the fully
-distributed route (two-phase rank, shuffle-joined bins).  On the driver
-route the action joins media to the bins alone and never re-derives the
-refs; only the distributed route semi-joins media to the broadcast refs
-in the action's plan, to keep unreferenced page bytes out of its
-non-broadcast bins join.
+into bins on the driver (one build-time collect, broadcast bins).  The
+action joins media to the bins alone and never re-derives the refs.  A
+corpus too large for one driver-side plan is extracted per page bucket
+(pipeline/checkpoint.py run_extraction_job), each bucket planned on its
+own.
 """
 
 from __future__ import annotations
@@ -58,7 +56,6 @@ from pyspark.sql import functions as F
 from ..config import ExtractConfig
 from ..io.png import decode_gray
 from ..kernels.golden import extract_page
-from ..queries.prefix import global_row_number
 
 # Output schema of the extraction UDF stage.  Lineage rows ride along with
 # kind='_lineage' (text = JSON payload) and are split off afterwards —
@@ -191,9 +188,15 @@ def _partition_tokens(spark: SparkSession, n: int) -> list[int]:
 def serpentine_bins(
     pairs: list[tuple[str, int]], n_bins: int
 ) -> list[tuple[str, int]]:
-    """Driver-side serpentine: (media_ref, sz) pairs -> (media_ref, bin),
-    size-descending boustrophedon deal — the same assignment
-    assign_size_bins computes distributed."""
+    """Driver-side serpentine: (media_ref, sz) pairs -> (media_ref, bin).
+
+    Serpentine striping over the size-descending order (ties by
+    media_ref): pass 0 deals bins 0..P-1, pass 1 deals P-1..0, ... — each
+    bin gets one page per pass and the boustrophedon order cancels the
+    within-pass size drift, so max(bin_bytes)/mean(bin_bytes) stays within
+    a few percent of the LPT greedy optimum for realistic size
+    distributions (and degenerates to exact round-robin when sizes are
+    uniform)."""
     order = sorted(pairs, key=lambda p: (-p[1], p[0]))
     out = []
     for rn0, (ref, _sz) in enumerate(order):
@@ -231,36 +234,6 @@ def _bins_local_df(spark: SparkSession, data: list[tuple[str, int]]) -> DataFram
     return spark.createDataFrame(data, "media_ref string, bin int")
 
 
-def assign_size_bins(sizes: DataFrame, n_bins: int) -> DataFrame:
-    """(media_ref, sz) -> (media_ref, bin), fully distributed: the
-    serpentine_bins assignment without a driver-side collect.
-
-    Serpentine striping over the size-descending order: pass 0 deals bins
-    0..P-1, pass 1 deals P-1..0, ... — each bin gets one page per pass and
-    the boustrophedon order cancels the within-pass size drift, so
-    max(bin_bytes)/mean(bin_bytes) stays within a few percent of the LPT
-    greedy optimum for realistic size distributions (and degenerates to
-    exact round-robin when sizes are uniform).
-
-    The rank is two-phase (queries/prefix.py), never a single-task global
-    window: range-partition on (-sz, media_ref), rank within ranges in
-    parallel, broadcast per-partition offsets back.  ``sz`` must be
-    non-NULL (run_page_stage coalesces it).
-    """
-    ranked = global_row_number(
-        sizes.select("media_ref", (-F.col("sz").cast("long")).alias("_neg_sz")),
-        ["_neg_sz", "media_ref"],
-        "_rn",
-    )
-    rn = F.col("_rn") - F.lit(1)
-    pos = rn % F.lit(n_bins)
-    fwd = (rn / F.lit(n_bins)).cast("long") % 2 == 0
-    return ranked.select(
-        "media_ref",
-        F.when(fwd, pos).otherwise(F.lit(n_bins - 1) - pos).cast("int").alias("bin"),
-    )
-
-
 def repartition_by_size(pages: DataFrame, bins: DataFrame, n_parts: int) -> DataFrame:
     """Route (media_ref, content) rows to the shuffle partition their
     (media_ref, bin) row names: an inner join with ``bins`` (pages without
@@ -296,22 +269,14 @@ def run_page_stage(
     One planner.  ``sizes`` is (media_ref, sz) for the refs' pages: sz is
     width*height when media carries that metadata — so the planning scan
     never re-reads image bytes — else length(content); NULL sizes count
-    as 0.  ``cfg.driver_plan_max`` picks one of two routes that differ
-    only in where the bins are dealt:
+    as 0.  The bins are dealt on the driver: ONE build-time collect of
+    the sizes, serpentine_bins, a VALUES bins relation broadcast into the
+    page join.  The bins hold exactly the refs' non-giant pages, so the
+    plan the action runs never re-derives the refs (for
+    run_extract_stage, an explode of the documents).
 
-    - driver route (None, or at most that many refs): ONE build-time
-      collect of the sizes, serpentine_bins on the driver, a VALUES bins
-      relation broadcast into the page join.  The bins hold
-      exactly the refs' non-giant pages, so the plan the action runs
-      never re-derives the refs (for run_extract_stage, an explode of
-      the documents).
-    - distributed route (above the ceiling): media is semi-joined to the
-      broadcast refs, the bins are ranked two-phase and shuffle-joined
-      (no broadcast hint), giants come from a filter on ``sizes``; no ref
-      list is materialized on the driver.
-
-    Both then repartition by bin (repartition_by_size) — unconditionally:
-    it pins the task count of the CPU-bound stage (AQE would otherwise
+    Then repartition by bin (repartition_by_size) — unconditionally: it
+    pins the task count of the CPU-bound stage (AQE would otherwise
     coalesce byte-sized partitions) and balances bytes per task — and run
     the one UDF stage.  With metadata and deskew off, pages of at least
     ``cfg.tile_threshold_px`` native pixels leave the per-page path for
@@ -319,49 +284,38 @@ def run_page_stage(
     task for 100x the median task time; deskew is a global-rotation op
     that cannot band.
 
-    Byte economics: the refs/bins side (strings) is broadcast on the
-    driver route, so the big image bytes are shuffled at most ONCE.  At
-    10^12-doc scale the same shape holds per checkpoint bucket: the refs
-    of one bucket are bounded, and media would be a bucketed table
-    co-partitioned by media_ref.
+    Byte economics: the refs/bins side (strings) is broadcast, so the big
+    image bytes are shuffled at most ONCE.  The driver holds one row per
+    (document, page) citation of the call (the refs broadcast) and one
+    per unique page (the sizes collect); run_extraction_job bounds both
+    per page bucket, and at 10^12-doc scale media would be a bucketed
+    table co-partitioned by media_ref.
     """
     spark = media.sparkSession
     metadata = {"width", "height"} <= set(media.columns)
     thr = cfg.tile_threshold_px
     tiling = metadata and thr is not None and not cfg.deskew_enabled
-    scoped = media.join(F.broadcast(refs), on="media_ref", how="left_semi")
     sz = "CAST(width AS BIGINT) * height" if metadata else "length(content)"
-    sizes = scoped.selectExpr("media_ref", f"coalesce(CAST({sz} AS BIGINT), 0) AS sz")
-    giant_refs = None
-    # The driver contract gate: None trusts it (no job); a ceiling costs
-    # one parallel count() — not limit(n).collect(), which scans
-    # partitions serially — left uncached, since a persist would outlive
-    # the lazily returned plan.
-    cap = cfg.driver_plan_max
-    if cap is None or sizes.count() <= cap:
-        pages = media.select("media_ref", "content")
-        pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
-        giants = [(ref, 0) for ref, s in pairs if tiling and s >= thr]
-        bins = F.broadcast(
-            _bins_local_df(
-                spark,
-                serpentine_bins([p for p in pairs if not (tiling and p[1] >= thr)], n_parts),
-            )
+    sizes = media.join(F.broadcast(refs), on="media_ref", how="left_semi").selectExpr(
+        "media_ref", f"coalesce(CAST({sz} AS BIGINT), 0) AS sz"
+    )
+    pages = media.select("media_ref", "content")
+    pairs = [(r["media_ref"], r["sz"]) for r in sizes.collect()]
+    giants = [(ref, 0) for ref, s in pairs if tiling and s >= thr]
+    bins = F.broadcast(
+        _bins_local_df(
+            spark,
+            serpentine_bins([p for p in pairs if not (tiling and p[1] >= thr)], n_parts),
         )
-        if giants:
-            giant_refs = _bins_local_df(spark, giants).select("media_ref")
-    else:
-        pages = scoped.select("media_ref", "content")
-        bins = assign_size_bins(sizes.where(f"sz < {thr}") if tiling else sizes, n_parts)
-        if tiling:
-            giant_refs = sizes.where(f"sz >= {thr}").select("media_ref")
+    )
     out = repartition_by_size(pages, bins, n_parts).mapInPandas(
         _make_extract_udf(cfg), schema=EXTRACT_STAGE_SCHEMA
     )
-    if giant_refs is None:
+    if not giants:
         return out
     from .tiling import run_tiled_page_stage
 
+    giant_refs = _bins_local_df(spark, giants).select("media_ref")
     giant_pages = pages.join(giant_refs, on="media_ref", how="left_semi")
     return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
 
@@ -416,7 +370,6 @@ def run_extract_stage(
     documents: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig,
-    salt_partitions: int | None = None,
     persist: bool = False,
 ) -> ExtractResult:
     """Run the full extraction (page stage + assembly) in one plan.
@@ -426,21 +379,18 @@ def run_extract_stage(
     lineage: per-shuffle-partition metric rows from inside the UDF stage.
     ``persist=True`` caches the raw stage output (MEMORY_AND_DISK) so that
     consuming BOTH extracted and lineage runs the expensive image stage
-    exactly once; the caller unpersists ``stage`` afterwards.
-    ``salt_partitions`` sets the page stage's width, i.e. its Python task
-    count; the default is the session's ``defaultParallelism``, one task
+    exactly once; the caller unpersists ``stage`` afterwards.  The page
+    stage is the session's ``defaultParallelism`` wide, one Python task
     per core, because every Python task pays a fixed worker set-up cost
     (see pipeline/session.py).
 
     The expensive image work runs once per UNIQUE page: each document's
-    distinct refs restrict media (through the bins join, see
-    run_page_stage), and the pages are byte-balanced over partitions.
+    distinct refs restrict media (through the driver-dealt bins join,
+    see run_page_stage), and the pages are byte-balanced over partitions.
     Heavy documents (many spans) and popular pages (many docs) both
     collapse to one kernel invocation per page.
     """
-    spark = documents.sparkSession
-    n_parts = salt_partitions or spark.sparkContext.defaultParallelism
-
+    n_parts = documents.sparkSession.sparkContext.defaultParallelism
     stage_out = run_page_stage(media, doc_media_refs(documents), cfg, n_parts)
     if persist:
         stage_out = stage_out.persist(StorageLevel.MEMORY_AND_DISK)
@@ -453,10 +403,9 @@ def extract_spans(
     documents: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig,
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Convenience wrapper returning only the extracted spans."""
-    return run_extract_stage(documents, media, cfg, salt_partitions).extracted
+    return run_extract_stage(documents, media, cfg).extracted
 
 
 def reassemble(extracted: DataFrame) -> DataFrame:

@@ -139,9 +139,13 @@ def _analyze_band_udf(cfg: ExtractConfig) -> Callable:
     def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
-        t0 = time.monotonic()
+        # the wall starts at the first batch: the JVM's time to send it is
+        # not UDF work
+        t_start = None
         n_bands_done = 0
         for pdf in batches:
+            if t_start is None:
+                t_start = time.monotonic()
             rows = []
             for r in pdf.itertuples(index=False):
                 g = np.frombuffer(bytes(r.data), dtype=np.uint8).reshape(
@@ -172,7 +176,7 @@ def _analyze_band_udf(cfg: ExtractConfig) -> Callable:
             "page_count": 0,
             "cell_count": 0,
             "ocr_char_count": 0,
-            "wall_time_ms": int((time.monotonic() - t0) * 1000),
+            "wall_time_ms": 0 if t_start is None else int((time.monotonic() - t_start) * 1000),
             "band_count": n_bands_done,
         }
         row = {c: None for c in _ANALYSIS_COLS}

@@ -24,15 +24,12 @@ BCAST, SQL_BCAST, COLLECT, TO_PANDAS = "F.broadcast(", "/*+ BROADCAST", ".collec
 SITES = [
     ("pipeline/extract.py", "run_page_stage", BCAST,
      "the refs semi-joined to media, so page bytes never shuffle: one "
-     "media_ref row per (document, page) citation, deduplicated within "
-     "each document but not across documents; unbounded on the route "
-     "above driver_plan_max"),
+     "media_ref row per (document, page) citation of the call, "
+     "deduplicated within each document but not across documents; "
+     "run_extraction_job bounds it per page bucket"),
     ("pipeline/extract.py", "run_page_stage", COLLECT,
-     "one (media_ref, sz) row per unique page, gated by "
-     "ExtractConfig.driver_plan_max: its exact count costs a build-time "
-     "job (None, the default, spends none) and plan statistics read "
-     "Long.MaxValue for createDataFrame media, so DRIVER_STATE_BYTES "
-     "cannot stand in"),
+     "one (media_ref, sz) row per unique page of the call: no larger "
+     "than the refs broadcast the driver already holds"),
     ("pipeline/extract.py", "run_page_stage", BCAST,
      "the driver-dealt bins: the pages of the collect above"),
     ("pipeline/tiling.py", "run_tiled_page_stage", BCAST,

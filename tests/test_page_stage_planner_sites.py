@@ -1,14 +1,17 @@
-"""The page stage is planned one way: ``run_page_stage`` sizes the pages,
-deals the bins (driver serpentine or two-phase rank) and routes the pages.
-No other code under ``bsc_project_spark/`` may call the bin planners, and
-the old per-call ``assume_bounded`` switch may not come back."""
+"""The page stage is planned one way: ``run_page_stage`` sizes the pages
+and routes them into bins dealt on the driver.  No other code under
+``bsc_project_spark/`` may call the bin planners, and no second planner
+route or its switch may come back: not the per-call ``assume_bounded``,
+the ``driver_plan_max`` ceiling, the ``salt_partitions`` width nor the
+distributed ``assign_size_bins``."""
 
 import ast
 from pathlib import Path
 
 PKG_DIR = Path(__file__).resolve().parent.parent / "bsc_project_spark"
-PLANNERS = {"serpentine_bins", "assign_size_bins", "repartition_by_size", "_bins_local_df"}
+PLANNERS = {"serpentine_bins", "repartition_by_size", "_bins_local_df"}
 OWNER = "run_page_stage"
+REMOVED_NAMES = ("assume_bounded", "driver_plan_max", "salt_partitions", "assign_size_bins")
 
 
 def _called_name(call: ast.Call) -> str | None:
@@ -47,6 +50,6 @@ def test_no_assume_bounded_switch():
         f"{path.relative_to(PKG_DIR)}:{i}"
         for path in sorted(PKG_DIR.rglob("*.py"))
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "assume_bounded" in line
+        if any(name in line for name in REMOVED_NAMES)
     ]
     assert not hits, "\n".join(hits)

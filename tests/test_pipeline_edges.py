@@ -2,12 +2,9 @@
 
 from __future__ import annotations
 
-import dataclasses
-
 import pytest
 from pyspark.sql import functions as F
 
-from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
 from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA, MEDIA_SCHEMA
 from bsc_project_spark.pipeline.extract import run_extract_stage
@@ -27,47 +24,46 @@ def one_page(corpus):
     return (r.media_ref, r.content, int(r.width), int(r.height), int(r.layout_id))
 
 
-# the driver route (the default) and the fully distributed one
-_ROUTES = [FIXTURE_CONFIG, dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)]
-
-
 def test_text_only_documents(spark, one_page):
-    """No document cites a page: on both planner routes the page stage
-    runs no page and the text spans come through in order."""
+    """No document cites a page: the page stage runs no page and the text
+    spans come through in order."""
     docs = _docs(spark, [
         ("d0", [("text", "beta", None, 1), ("text", "alpha", None, 0)]),
     ])
     media = _media(spark, [one_page])
-    for cfg in _ROUTES:
-        result = run_extract_stage(docs, media, cfg, persist=True)
-        rows = sorted(result.extracted.collect(), key=lambda r: r["order"])
-        n_pages = result.lineage.groupBy().sum("page_count").collect()[0][0]
-        result.stage.unpersist()
-        assert [(r["order"], r["kind"], r["text"]) for r in rows] == [
-            (0, "text", "alpha"),
-            (1, "text", "beta"),
-        ], cfg.driver_plan_max
-        assert not n_pages, cfg.driver_plan_max
+    result = run_extract_stage(docs, media, FIXTURE_CONFIG, persist=True)
+    rows = sorted(result.extracted.collect(), key=lambda r: r["order"])
+    n_pages = result.lineage.groupBy().sum("page_count").collect()[0][0]
+    result.stage.unpersist()
+    assert [(r["order"], r["kind"], r["text"]) for r in rows] == [
+        (0, "text", "alpha"),
+        (1, "text", "beta"),
+    ]
+    assert not n_pages
     assert result.unresolved.count() == 0
 
 
 def test_unreferenced_media_not_processed(spark, corpus, one_page):
     """Pages in the media table that no document references must never hit
     the kernel stage — at warehouse scale the media table is far larger
-    than any one run's reference set.  With width/height metadata the
-    bounded route joins media to the broadcast bins, which hold only
-    referenced pages, so that join prunes them."""
+    than any one run's reference set.  The page join meets media with the
+    broadcast bins, which hold only referenced pages, so that join prunes
+    them.  Once the caller releases ``stage``, nothing the planner built
+    stays cached."""
     ref, content, w, h, lid = one_page
     docs = _docs(spark, [
         ("d0", [("media", None, ref, 0)]),
     ])
     extra = [(f"unused_{i}", content, w, h, lid) for i in range(5)]
     media = _media(spark, [one_page] + extra)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = cached().size()
     result = run_extract_stage(docs, media, FIXTURE_CONFIG, persist=True)
     result.extracted.count()
     pages = result.lineage.groupBy().sum("page_count").collect()[0][0]
     result.stage.unpersist()
     assert pages == 1, f"kernel ran on {pages} pages; only 1 is referenced"
+    assert cached().size() == before
 
 
 def test_empty_documents_table(spark, one_page):
@@ -109,22 +105,6 @@ def test_duplicate_refs_in_one_doc_fan_out(spark, one_page):
     assert len(per_offset) == 1 and per_offset[0]["count"] % 2 == 0
 
 
-def test_unbounded_route_leaves_no_cached_frames(spark, corpus):
-    """The fully-distributed planning route (count gate over the ceiling,
-    two-phase bins, giant semi-join) returns a lazy plan: once the
-    caller releases ``stage``, nothing the route built may stay cached."""
-    cfg = dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)
-    docs = spark_io.documents_df(spark, corpus)
-    media = spark_io.media_df(spark, corpus)
-    cached = spark.sparkContext._jsc.getPersistentRDDs
-    before = cached().size()
-    result = run_extract_stage(docs, media, cfg, persist=True)
-    assert result.extracted.count() > 0
-    assert result.lineage.count() > 0
-    result.stage.unpersist()
-    assert cached().size() == before
-
-
 def _golden_spans(doc_rows, cells):
     """(doc_id, order, kind, text, media_ref) rows the single-process
     golden gives for ``doc_rows``; ``cells`` maps a ref to its page's
@@ -142,13 +122,13 @@ def _golden_spans(doc_rows, cells):
     return sorted(out)
 
 
-@pytest.mark.parametrize("cfg", _ROUTES, ids=["driver_route", "distributed_route"])
+@pytest.mark.parametrize("cfg", [FIXTURE_CONFIG], ids=["driver_route"])
 def test_per_document_refs_edge_cases(spark, corpus, cfg):
     """The page stage takes each document's distinct refs, not a global
-    distinct.  On both planner routes, against the golden: one page cited
-    by many documents and several times within one document runs once; a
-    media span with a NULL media_ref extracts nothing and is quarantined;
-    a document with an empty ``spans`` array yields no row."""
+    distinct.  Against the golden: one page cited by many documents and
+    several times within one document runs once; a media span with a
+    NULL media_ref extracts nothing and is quarantined; a document with
+    an empty ``spans`` array yields no row."""
     from bsc_project_spark.io.png import decode_gray
     from bsc_project_spark.kernels.golden import extract_page
 

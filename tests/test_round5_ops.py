@@ -14,10 +14,9 @@
    unescaped they corrupt the ref and silently drop pages from the
    inner/semi bins joins).
 4. NULL page sizes (missing width/height metadata) count as 0 where
-   run_page_stage builds its sizes, so both planner routes still match
-   the golden spans.
-5. The driver_plan_max gate is a numeric switch for media with and
-   without width/height metadata alike.
+   run_page_stage builds its sizes, so the driver serpentine still has a
+   total order and the spans match the golden, for pages sized by
+   width*height metadata and by byte length alike.
 """
 
 from __future__ import annotations
@@ -203,11 +202,10 @@ def test_bins_local_df_roundtrips_backslash_refs(spark):
 
 
 def test_null_page_size_matches_golden_on_both_routes(spark, corpus):
-    """A page with NULL width counts as size 0 on both planner routes (the
-    driver serpentine and the two-phase rank both need a total order) and
-    is still extracted: spans equal the golden on each route."""
-    import dataclasses
-
+    """Both sizing routes match the golden: a page with NULL width counts
+    as size 0 (the driver serpentine needs a total order) and is still
+    extracted, and media without width/height metadata is sized by byte
+    length."""
     from pyspark.sql import functions as F
 
     from bsc_project_spark.fixtures import spark_io
@@ -226,49 +224,10 @@ def test_null_page_size_matches_golden_on_both_routes(spark, corpus):
         F.when(F.col("media_ref") == ref, F.lit(None)).otherwise(F.col("width")),
     )
     golden = sorted(map(tuple, spark_io.golden_df(spark, corpus).collect()))
-    for cfg in (FIXTURE_CONFIG, dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)):
-        out = ex.run_extract_stage(docs, media, cfg).extracted
-        assert sorted(map(tuple, out.collect())) == golden, cfg.driver_plan_max
-
-
-def test_unbounded_refs_route_plans_fully_distributed(spark, monkeypatch):
-    """Verdict-r4 item 6: the bins-planner driver contract must be a
-    numeric SWITCH, not just a comment.  With the ceiling
-    driver_plan_max=0, run_extract_stage must take the fully-distributed
-    planning route — two-phase bins (shuffle-joined), giants filtered by
-    semi-join — and produce span-for-span the same output as the default
-    driver-serpentine route, for media with width/height metadata and for
-    media sized by byte length alike.  The driver-side planners
-    (serpentine_bins / _bins_local_df) are monkeypatched into bombs to
-    PROVE no ref list is materialized on the driver."""
-    import dataclasses
-
-    from bsc_project_spark.fixtures import spark_io
-    from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG, build_corpus
-    from bsc_project_spark.pipeline import extract as ex
-
-    corpus = build_corpus(n_docs=3)
-    docs = spark_io.documents_df(spark, corpus)
-    media = spark_io.media_df(spark, corpus)
-    frames = {"metadata": media, "no metadata": media.drop("width", "height")}
-
-    def spans(m, cfg):
-        return sorted(map(tuple, ex.run_extract_stage(docs, m, cfg).extracted.collect()))
-
-    base = {k: spans(m, FIXTURE_CONFIG) for k, m in frames.items()}
-    assert all(base.values()), "fixture corpus extracted nothing"
-
-    cfg = dataclasses.replace(FIXTURE_CONFIG, driver_plan_max=0)
-    # tiling stays enabled (tile_threshold_px is the default 12M px) so
-    # the distributed giant semi-join branch runs too (empty giants)
-
-    def bomb(*a, **k):  # pragma: no cover - firing IS the failure
-        raise AssertionError("driver-side planner ran on the distributed route")
-
-    monkeypatch.setattr(ex, "serpentine_bins", bomb)
-    monkeypatch.setattr(ex, "_bins_local_df", bomb)
-    for k, m in frames.items():
-        assert spans(m, cfg) == base[k], k
+    frames = {"null width": media, "no metadata": media.drop("width", "height")}
+    for name, m in frames.items():
+        out = ex.run_extract_stage(docs, m, FIXTURE_CONFIG).extracted
+        assert sorted(map(tuple, out.collect())) == golden, name
 
 
 def test_register_views_cache_self_heals_after_drop(spark):

@@ -15,7 +15,8 @@ Pins, cheapest first:
      same corpus with tiling DISABLED (the already-golden-pinned path);
   4. the structural skew bound: the giant page becomes >1 band, each
      band's pixel load <= (core + 2*halo) * width — no task carries the
-     page's full native-resolution work.
+     page's full native-resolution work;
+  5. the band stage's lineage wall starts at its first input batch.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from bsc_project_spark.kernels.golden import extract_page
 from bsc_project_spark.kernels.imgproc import binarize_fused, vline_black_profile
 from bsc_project_spark.pipeline.extract import run_extract_stage
 from bsc_project_spark.pipeline.tiling import (
+    _analyze_band_udf,
     analysis_halo,
     band_core_rows,
     run_tiled_page_stage,
@@ -146,3 +148,33 @@ def test_mixed_corpus_span_equality_tile_on_vs_off(spark, giant_gray):
     # the giant doc's spans actually flowed through the tile path
     giant_spans = tiled.filter(F.col("doc_id") == "doc_giant")
     assert giant_spans.filter(F.col("kind") == "ocr").count() > 0
+
+
+def test_band_lineage_wall_starts_at_the_first_batch():
+    """The band stage's wall counts its own work, not the JVM's time to
+    send the first input batch: one band fed after a 500 ms wait reports
+    a wall well under that wait, and a partition that gets no batch
+    reports 0."""
+    import json
+    import time
+
+    import pandas as pd
+
+    band = render_page(page_spec(0))[:400]
+    h, w = band.shape
+
+    def slow_batches():
+        time.sleep(0.5)
+        yield pd.DataFrame([{
+            "media_ref": "p0", "band": 0, "n_bands": 1, "y0": 0, "y1": h,
+            "hy0": 0, "hy1": h, "h": h, "w": w, "data": band.tobytes(),
+        }])
+
+    def lineage(batches):
+        out = list(_analyze_band_udf(FIXTURE_CONFIG)(batches))
+        return json.loads(out[-1].text.iloc[0])
+
+    lin = lineage(slow_batches())
+    assert lin["band_count"] == 1
+    assert lin["wall_time_ms"] < 250, lin
+    assert lineage(iter(()))["wall_time_ms"] == 0

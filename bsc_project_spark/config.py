@@ -23,7 +23,7 @@ from typing import Callable, Optional
 DRIVER_STATE_BYTES = 32_000_000
 """Ceiling on the state a size-selected route holds on the driver or in one
 task (PageRank's packed edges, connected components' pairs, Lloyd's
-centroids).  Each site compares a count it already holds against it, read
+centroids, the tiled page stage's broadcast cell lists).  Each site compares a count it already holds against it, read
 at call time, so 0 forces every distributed route.  Every other collect
 and broadcast is listed with its bound in tests/test_driver_budget_sites.py."""
 

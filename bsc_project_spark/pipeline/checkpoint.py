@@ -102,7 +102,7 @@ import time
 import uuid
 
 import pyarrow.dataset as pads
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
@@ -391,12 +391,15 @@ def _commit_docs(
     data_dir = os.path.join(out_dir, "data", part)
     errors_dir = os.path.join(out_dir, "errors", part)
     extracted, unresolved = assemble_spans(documents, cells, media)
-    extracted.write.mode("overwrite").parquet(data_dir)
+    # the doc count rides on the data write: each document with a span
+    # has exactly one order-0 row
+    written = Observation()
+    observed = extracted.observe(written, F.count_if(F.col("order") == 0).alias("docs"))
+    observed.write.mode("overwrite").parquet(data_dir)
     unresolved.write.mode("overwrite").parquet(errors_dir)
     _write_doc_ids(documents, os.path.join(out_dir, "doc_ids", part), n_buckets)
-    n_docs = _read(spark, "data", [data_dir]).agg(F.countDistinct("doc_id")).first()[0]
     spark.createDataFrame(
-        [(bucket, n_docs, _footer_rows(data_dir), _footer_rows(errors_dir),
+        [(bucket, written.get["docs"], _footer_rows(data_dir), _footer_rows(errors_dir),
           int((time.monotonic() - t0) * 1000), run_id, int(time.time() * 1000))],
         _SCHEMAS["doc_lineage"],
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "doc_lineage", part))

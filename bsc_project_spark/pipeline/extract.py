@@ -8,7 +8,7 @@ Spark lifecycle of the reference computation (SURVEY.md §3.1):
     media --semi join broadcast refs--> (media_ref, sz) of the unique pages
       --collect (driver, build time)--> bins(media_ref, bin)
     media --join broadcast bins--> unique pages
-      --size-aware bin-packing repartition-->                  # skew defuse
+      --repartitionById(bin): bin b -> shuffle partition b-->  # skew defuse
       --ONE mapInPandas stage (K1..K21 numpy kernels)-->       # zero per-row Python
         cells(media_ref, row, col, text) + per-partition lineage rows
     cells --join back to media spans (doc_id, offset)-->
@@ -147,44 +147,6 @@ def _make_extract_udf(
     return extract_batches
 
 
-def _murmur3_int32(x: int, seed: int = 42) -> int:
-    """Spark's ``F.hash`` on an INT column: Murmur3_x86_32 of the 4-byte
-    value with seed 42 (bit-for-bit; pinned against the engine by
-    tests/test_partitioning.py)."""
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-    k = (x & 0xFFFFFFFF) * c1 & 0xFFFFFFFF
-    k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-    k = (k * c2) & 0xFFFFFFFF
-    h = seed ^ k
-    h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-    h = (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-    h ^= 4  # input length in bytes
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h - 0x100000000 if h >= 0x80000000 else h
-
-
-def _partition_tokens(spark: SparkSession, n: int) -> list[int]:
-    """token[b] is an int that repartition(n, col) routes to shuffle
-    partition b.  Spark's HashPartitioning places a row at
-    pmod(murmur3(col), n); we invert it DRIVER-SIDE with the same
-    Murmur3 (``_murmur3_int32`` == ``F.hash`` on int, test-pinned), so a
-    computed bin id routes to EXACTLY that partition — plain
-    hash-partitioning on the bin id would collide bins (balls-into-bins)
-    and undo the balancing.  Zero Spark jobs: this used to be a probe
-    collect per stage build, a fixed serial cost that bit hardest at
-    high parallelism where the kernel wall is short."""
-    tokens: dict[int, int] = {}
-    v, limit = 0, max(n, 1) * 1024
-    while len(tokens) < n and v < limit:
-        tokens.setdefault(_murmur3_int32(v) % n, v)
-        v += 1
-    return [tokens.get(b, b) for b in range(n)]
-
-
 def serpentine_bins(
     pairs: list[tuple[str, int]], n_bins: int
 ) -> list[tuple[str, int]]:
@@ -238,15 +200,14 @@ def repartition_by_size(pages: DataFrame, bins: DataFrame, n_parts: int) -> Data
     """Route (media_ref, content) rows to the shuffle partition their
     (media_ref, bin) row names: an inner join with ``bins`` (pages without
     a bin drop out; the caller decides whether ``bins`` is broadcast),
-    then one byte-shuffle that sends bin b to EXACTLY partition b (see
-    _partition_tokens).  Balanced bins give byte-balanced partitions, so
-    one giant page no longer drags a full round-robin share of other
-    pages with it (SURVEY.md §7)."""
-    tokens = ", ".join(map(str, _partition_tokens(pages.sparkSession, n_parts)))
-    routed = pages.join(bins, on="media_ref", how="inner").selectExpr(
-        "media_ref", "content", f"element_at(array({tokens}), bin + 1) AS _route"
-    )
-    return routed.repartition(n_parts, "_route").drop("_route")
+    then one byte-shuffle that sends bin b to EXACTLY partition b
+    (``repartitionById``: partition pmod(bin, n_parts), which AQE does
+    not coalesce).  Hash-partitioning on the bin id would collide bins
+    (balls-into-bins) and undo the balancing.  Balanced bins give
+    byte-balanced partitions, so one giant page no longer drags a full
+    round-robin share of other pages with it (SURVEY.md §7)."""
+    routed = pages.join(bins, on="media_ref", how="inner")
+    return routed.repartitionById(n_parts, "bin").drop("bin")
 
 
 class ExtractResult(NamedTuple):
@@ -275,14 +236,16 @@ def run_page_stage(
     plan the action runs never re-derives the refs (for
     run_extract_stage, an explode of the documents).
 
-    Then repartition by bin (repartition_by_size) — unconditionally: it
-    pins the task count of the CPU-bound stage (AQE would otherwise
-    coalesce byte-sized partitions) and balances bytes per task — and run
-    the one UDF stage.  With metadata and deskew off, pages of at least
-    ``cfg.tile_threshold_px`` native pixels leave the per-page path for
-    the banded one (pipeline/tiling.py), so one 100x page cannot pin a
-    task for 100x the median task time; deskew is a global-rotation op
-    that cannot band.
+    Then route bin b to shuffle partition b (repartition_by_size, Spark's
+    ``repartitionById``) — unconditionally: it pins the task count of the
+    CPU-bound stage (AQE would otherwise coalesce byte-sized partitions)
+    and balances bytes per task — and run the one UDF stage.  With
+    metadata and deskew off, pages of at least ``cfg.tile_threshold_px``
+    native pixels leave the per-page path for the banded one
+    (pipeline/tiling.py), so one 100x page cannot pin a task for 100x the
+    median task time; deskew is a global-rotation op that cannot band.
+    The giant count, known from the sizes collect, decides whether the
+    tiled route may broadcast its cell lists.
 
     Byte economics: the refs/bins side (strings) is broadcast, so the big
     image bytes are shuffled at most ONCE.  The driver holds one row per
@@ -317,7 +280,7 @@ def run_page_stage(
 
     giant_refs = _bins_local_df(spark, giants).select("media_ref")
     giant_pages = pages.join(giant_refs, on="media_ref", how="left_semi")
-    return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
+    return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts, len(giants)))
 
 
 def split_stage_output(stage_out: DataFrame) -> tuple[DataFrame, DataFrame]:

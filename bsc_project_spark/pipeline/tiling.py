@@ -61,6 +61,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import config
 from ..config import ExtractConfig
 from ..io.png import decode_gray
 from ..kernels.bitmorph import open_u8
@@ -74,6 +75,7 @@ from ..kernels.imgproc import (
 from ..kernels.ocr import decode_cell, pad_for_ocr
 from ..kernels.postprocess import extract_row_col_bboxes, post_process_mask, scale_bbox
 from ..kernels.segment import segment_page
+from .extract import EXTRACT_STAGE_SCHEMA
 
 BAND_SCHEMA = (
     "media_ref string, band int, n_bands int, y0 int, y1 int, "
@@ -88,8 +90,6 @@ SPEC_SCHEMA = (
     "media_ref string, row int, col int, cx1 int, cy1 int, cx2 int, cy2 int, "
     "kind string, text string"
 )
-# matches pipeline/extract.py EXTRACT_STAGE_SCHEMA
-CELL_SCHEMA = "media_ref string, row int, col int, text string, kind string"
 
 
 def analysis_halo(cfg: ExtractConfig) -> int:
@@ -337,15 +337,29 @@ def _decode_cells(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def cell_list_bytes(cfg: ExtractConfig) -> int:
+    """Size of one giant page's cell list, as run_tiled_page_stage
+    budgets it: one cell per ``cfg.min_region_size`` pixels of the fixed
+    ``cfg.target_*`` segmentation mask (remove_small_regions drops smaller
+    regions of classes 1..4; class 0 is never filtered, so a pathological
+    page can exceed it), 64 bytes per (row, col, 4-int bbox) struct in an
+    UnsafeRow array."""
+    return 64 * (cfg.target_width * cfg.target_height // cfg.min_region_size)
+
+
 def run_tiled_page_stage(
-    giant_pages: DataFrame, cfg: ExtractConfig, n_parts: int
+    giant_pages: DataFrame, cfg: ExtractConfig, n_parts: int, n_giants: int
 ) -> DataFrame:
-    """(media_ref, content) of GIANT pages -> EXTRACT_STAGE_SCHEMA rows
-    (ocr cells + _lineage rows), max task time bounded per the module
-    docstring.  The analysis branch and the cell-crop join both read the
-    bands frame; within the one plan they share its exchange (Spark's
-    exchange reuse), so each giant page is decoded once without a cache
-    that would outlive the lazily returned plan."""
+    """(media_ref, content) of the ``n_giants`` GIANT pages ->
+    EXTRACT_STAGE_SCHEMA rows (ocr cells + _lineage rows), max task time
+    bounded per the module docstring.  The analysis branch and the
+    cell-crop join both read the bands frame; within the one plan they
+    share its exchange (Spark's exchange reuse), so each giant page is
+    decoded once without a cache that would outlive the lazily returned
+    plan.  The pages' cell lists are broadcast onto the bands while
+    ``n_giants * cell_list_bytes(cfg)`` fits ``config.DRIVER_STATE_BYTES``
+    (read at call time); above it they meet in a plain join, which
+    shuffles the bands once more."""
     bands = (
         giant_pages.select("media_ref", "content")
         .mapInPandas(_split_bands_udf(cfg), schema=BAND_SCHEMA)
@@ -364,9 +378,9 @@ def run_tiled_page_stage(
         "media_ref", "row", "col", "text", "kind"
     )
 
-    # one array row per page (bounded: cells/page), broadcast onto the
-    # persisted bands — the gray blobs never shuffle again and are never
-    # duplicated per cell; only small crop pieces leave the band tasks
+    # one array row per page; broadcast onto the persisted bands, the
+    # gray blobs never shuffle again and are never duplicated per cell:
+    # only small crop pieces leave the band tasks
     cell_lists = (
         specs.filter(F.col("kind") == "_spec")
         .groupBy("media_ref")
@@ -376,13 +390,15 @@ def run_tiled_page_stage(
             ).alias("cells")
         )
     )
-    pieces = bands.join(
-        F.broadcast(cell_lists), on="media_ref", how="inner"
-    ).mapInPandas(_slice_pieces_udf(cfg), schema=PIECE_SCHEMA)
+    if n_giants * cell_list_bytes(cfg) <= config.DRIVER_STATE_BYTES:
+        cell_lists = F.broadcast(cell_lists)
+    pieces = bands.join(cell_lists, on="media_ref", how="inner").mapInPandas(
+        _slice_pieces_udf(cfg), schema=PIECE_SCHEMA
+    )
     decoded = pieces.groupBy(
         "media_ref", "row", "col", "cx1", "cy1", "cx2", "cy2"
     ).applyInPandas(
-        lambda key, pdf: _decode_cells(cfg, key, pdf), schema=CELL_SCHEMA
+        lambda key, pdf: _decode_cells(cfg, key, pdf), schema=EXTRACT_STAGE_SCHEMA
     )
 
     lineage = (

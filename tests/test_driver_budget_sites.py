@@ -33,7 +33,8 @@ SITES = [
     ("pipeline/extract.py", "run_page_stage", BCAST,
      "the driver-dealt bins: the pages of the collect above"),
     ("pipeline/tiling.py", "run_tiled_page_stage", BCAST,
-     "one cell list per giant page: unbounded in the giant-page count"),
+     "one cell list per giant page; n_giants * cell_list_bytes(cfg) "
+     "within config.DRIVER_STATE_BYTES, else a plain join"),
     ("queries/__init__.py", "temp_views", COLLECT,
      "SHOW VIEWS: the session's temp views"),
     ("queries/eventops.py", "_segment_revenue_spark", BCAST,
@@ -113,4 +114,7 @@ def test_one_driver_budget_read_at_call_time():
             if isinstance(node, ast.Attribute) and node.attr == "DRIVER_STATE_BYTES":
                 readers.add(rel)
     assert not hits, "\n".join(hits)
-    assert readers == {"queries/graphops.py", "queries/similarity.py", "queries/textops.py"}
+    assert readers == {
+        "pipeline/tiling.py", "queries/graphops.py", "queries/similarity.py",
+        "queries/textops.py",
+    }

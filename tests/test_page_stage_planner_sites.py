@@ -2,8 +2,9 @@
 and routes them into bins dealt on the driver.  No other code under
 ``bsc_project_spark/`` may call the bin planners, and no second planner
 route or its switch may come back: not the per-call ``assume_bounded``,
-the ``driver_plan_max`` ceiling, the ``salt_partitions`` width nor the
-distributed ``assign_size_bins``."""
+the ``driver_plan_max`` ceiling, the ``salt_partitions`` width, the
+distributed ``assign_size_bins`` nor the driver-side Murmur3 copy whose
+tokens routed bins before ``repartitionById``."""
 
 import ast
 from pathlib import Path
@@ -11,7 +12,10 @@ from pathlib import Path
 PKG_DIR = Path(__file__).resolve().parent.parent / "bsc_project_spark"
 PLANNERS = {"serpentine_bins", "repartition_by_size", "_bins_local_df"}
 OWNER = "run_page_stage"
-REMOVED_NAMES = ("assume_bounded", "driver_plan_max", "salt_partitions", "assign_size_bins")
+REMOVED_NAMES = (
+    "assume_bounded", "driver_plan_max", "salt_partitions", "assign_size_bins",
+    "_murmur3_int32", "_partition_tokens",
+)
 
 
 def _called_name(call: ast.Call) -> str | None:

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from bsc_project_spark.pipeline.extract import (
     _bins_local_df,
-    _partition_tokens,
     repartition_by_size,
     serpentine_bins,
 )
@@ -24,19 +23,22 @@ def _length_bins(pages, n):
     return _bins_local_df(pages.sparkSession, serpentine_bins(sizes, n))
 
 
-def test_partition_tokens_route_exactly(spark):
-    """Every token must actually land in its own shuffle partition under
-    repartition(n, token) — the invariant the serpentine bin routing
-    relies on."""
+def test_repartition_by_size_places_each_bin_on_its_partition(spark):
+    """One page per bin through the real shuffle: every row lands on the
+    partition its bin names, over n partitions — the invariant the
+    serpentine bin routing relies on."""
     for n in (2, 3, 8, 13, 32):
-        toks = _partition_tokens(spark, n)
-        assert len(toks) == n and len(set(toks)) == n
-        df = spark.createDataFrame([(t,) for t in toks], "t int")
-        placed = {
-            r.p: r.t
-            for r in df.select("t", F.pmod(F.hash("t"), F.lit(n)).alias("p")).collect()
-        }
-        assert placed == {b: toks[b] for b in range(n)}
+        pages = spark.createDataFrame(
+            [(f"p{b:02d}", bytes([b])) for b in range(n)],
+            "media_ref string, content binary",
+        )
+        bins = _bins_local_df(spark, [(f"p{b:02d}", b) for b in range(n)])
+        routed = repartition_by_size(pages, bins, n)
+        assert routed.rdd.getNumPartitions() == n
+        placed = routed.selectExpr(
+            "CAST(substr(media_ref, 2) AS INT) AS bin", "spark_partition_id() AS pid"
+        ).collect()
+        assert sorted(placed) == [(b, b) for b in range(n)], n
 
 
 def test_serpentine_bins_balances_skewed_sizes():
@@ -95,21 +97,6 @@ def test_repartition_by_size_handles_fewer_pages_than_bins(spark):
     routed = repartition_by_size(pages, _length_bins(pages, 8), 8)
     assert routed.count() == 2
     assert routed.rdd.getNumPartitions() == 8
-
-
-def test_murmur3_int32_matches_spark_hash(spark):
-    """_partition_tokens inverts HashPartitioning driver-side; its
-    Murmur3 must be bit-identical to the engine's F.hash on ints,
-    including negatives and both int32 extremes."""
-    import pyspark.sql.functions as F
-
-    from bsc_project_spark.pipeline.extract import _murmur3_int32
-
-    vals = list(range(0, 512)) + [-1, -123456, 2**31 - 1, -(2**31)]
-    df = spark.createDataFrame([(v,) for v in vals], "v int")
-    got = {r.v: r.h for r in df.select("v", F.hash("v").alias("h")).collect()}
-    for v in vals:
-        assert _murmur3_int32(v & 0xFFFFFFFF) == got[v], v
 
 
 def test_flagship_job_has_no_single_partition_exchange(spark):

@@ -169,22 +169,6 @@ def test_lsh_bits_batch_equals_per_row(vs):
     assert batched == single
 
 
-@settings(max_examples=80, deadline=None)
-@given(st.integers(1, 512))
-def test_partition_tokens_cover_every_bin(n):
-    """Driver-side HashPartitioning inversion: for any partition count the
-    derived tokens must hit every bin exactly once (pure-python murmur3,
-    bit-equality with Spark's F.hash pinned by test_partitioning)."""
-    from bsc_project_spark.pipeline.extract import (
-        _murmur3_int32,
-        _partition_tokens,
-    )
-
-    toks = _partition_tokens(None, n)
-    assert len(toks) == n
-    assert [_murmur3_int32(t) % n for t in toks] == list(range(n))
-
-
 @settings(max_examples=30, deadline=None)
 @given(st.integers(0, 63), st.integers(0, 1))
 def test_phash_lut_matches_fresh_kernel_run(pattern_id, variant):

@@ -12,7 +12,9 @@ Pins, cheapest first:
      routing threshold, non-integer resize factors so the general
      resize path is covered);
   3. full-pipeline span equality on a mixed normal+giant corpus vs the
-     same corpus with tiling DISABLED (the already-golden-pinned path);
+     same corpus with tiling DISABLED (the already-golden-pinned path),
+     with the cell lists broadcast and, under a driver budget of 0,
+     joined;
   4. the structural skew bound: the giant page becomes >1 band, each
      band's pixel load <= (core + 2*halo) * width — no task carries the
      page's full native-resolution work;
@@ -27,6 +29,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from bsc_project_spark import config
 from bsc_project_spark.config import ExtractConfig
 from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG, build_corpus, page_spec
@@ -86,7 +89,7 @@ def test_tiled_stage_equals_single_task_kernel(spark, giant_gray):
         [("giant0", bytearray(encode_gray(giant_gray)))],
         "media_ref string, content binary",
     )
-    out = run_tiled_page_stage(pages, cfg, n_parts=8)
+    out = run_tiled_page_stage(pages, cfg, n_parts=8, n_giants=1)
     cells = sorted(
         (r.row, r.col, r.text)
         for r in out.filter(F.col("kind") == "ocr").collect()
@@ -119,7 +122,12 @@ def test_tiled_stage_equals_single_task_kernel(spark, giant_gray):
     )
 
 
-def test_mixed_corpus_span_equality_tile_on_vs_off(spark, giant_gray):
+@pytest.mark.parametrize("join_cells", [False, True], ids=["broadcast_cells", "join_cells"])
+def test_mixed_corpus_span_equality_tile_on_vs_off(spark, giant_gray, join_cells, monkeypatch):
+    """Both cell-list routes: the broadcast one, and the plain join a
+    driver budget of 0 forces."""
+    if join_cells:
+        monkeypatch.setattr(config, "DRIVER_STATE_BYTES", 0)
     corpus = build_corpus(n_docs=3)
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)

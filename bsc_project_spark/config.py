@@ -17,13 +17,13 @@ kernel semantics are size-independent.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 DRIVER_STATE_BYTES = 32_000_000
 """Ceiling on the state a size-selected route holds on the driver or in one
 task (PageRank's packed edges, connected components' pairs, Lloyd's
-centroids, the tiled page stage's broadcast cell lists).  Each site compares a count it already holds against it, read
+centroids).  Each site compares a count it already holds against it, read
 at call time, so 0 forces every distributed route.  Every other collect
 and broadcast is listed with its bound in tests/test_driver_budget_sites.py."""
 
@@ -68,7 +68,6 @@ class ExtractConfig:
     seg_line_min_frac: float = 0.5   # column is a grid line if ink covers >=50% of height
     seg_line_margin: int = 2         # inset from detected line columns
     seg_close_h: int = 5             # close kernel (merges glyphs into cell blobs)
-    seg_close_w: int = 5
 
     # OCR (reference scripts/imgs2csv.py:204-222 min_size)
     ocr_min_size: int = 32
@@ -76,10 +75,6 @@ class ExtractConfig:
     # Nominal glyph scale (font px -> image px) of the corpus; the decoder
     # auto-estimates per-cell scale from line height when plausible.
     ocr_glyph_scale: int = 5
-
-    # Column names for the wide-matrix form
-    # (reference scripts/imgs2csv.py:238-244)
-    column_names: tuple = ("Year", "Date", "Latitude", "Longitude", "Temperature")
 
     # Model-backend seam: drop in a real segmentation model / OCR decoder
     # (the reference's DeepLabV3 forward pass, imgs2csv.py:139-143, and

@@ -39,7 +39,6 @@ FIXTURE_CONFIG = ExtractConfig(
     expected_row_height=18,
     row_threshold=18,
     seg_close_h=5,
-    seg_close_w=9,
     ocr_glyph_scale=GLYPH_SCALE,
 )
 

@@ -244,8 +244,6 @@ def run_page_stage(
     native pixels leave the per-page path for the banded one
     (pipeline/tiling.py), so one 100x page cannot pin a task for 100x the
     median task time; deskew is a global-rotation op that cannot band.
-    The giant count, known from the sizes collect, decides whether the
-    tiled route may broadcast its cell lists.
 
     Byte economics: the refs/bins side (strings) is broadcast, so the big
     image bytes are shuffled at most ONCE.  The driver holds one row per
@@ -280,7 +278,7 @@ def run_page_stage(
 
     giant_refs = _bins_local_df(spark, giants).select("media_ref")
     giant_pages = pages.join(giant_refs, on="media_ref", how="left_semi")
-    return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts, len(giants)))
+    return out.unionByName(run_tiled_page_stage(giant_pages, cfg, n_parts))
 
 
 def split_stage_output(stage_out: DataFrame) -> tuple[DataFrame, DataFrame]:

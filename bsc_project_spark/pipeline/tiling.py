@@ -31,10 +31,12 @@ single-task kernel chain bit-for-bit:
                         per-cell crop SPECS (and decode the degenerate
                         empty-clamp crops inline, preserving
                         kernels/ocr.crop_cell's 1x1-white contract).
-  stage 4  cell-decode  per-cell OCR, distributed: join specs to the
-                        stage-1 gray bands by y-overlap, stitch each
-                        cell's row pieces, pad + decode.  Exact: the
-                        stitched pieces ARE gray[y1:y2, x1:x2].
+                        One spec per band a cell's rows overlap.
+  stage 4  cell-decode  per-cell OCR, distributed: join the specs,
+                        grouped by (page, band), to the stage-1 gray
+                        bands on those keys, stitch each cell's row
+                        pieces, pad + decode.  Exact: the stitched
+                        pieces ARE gray[y1:y2, x1:x2].
 
 Max task time is therefore bounded by max(decode+split of one page,
 one band's binarize, stitch's constant-size segmentation, one cell
@@ -61,7 +63,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import config
 from ..config import ExtractConfig
 from ..io.png import decode_gray
 from ..kernels.bitmorph import open_u8
@@ -87,8 +88,8 @@ ANALYSIS_SCHEMA = (
     "kind string, text string"
 )
 SPEC_SCHEMA = (
-    "media_ref string, row int, col int, cx1 int, cy1 int, cx2 int, cy2 int, "
-    "kind string, text string"
+    "media_ref string, band int, row int, col int, "
+    "cx1 int, cy1 int, cx2 int, cy2 int, kind string, text string"
 )
 
 
@@ -187,8 +188,19 @@ def _analyze_band_udf(cfg: ExtractConfig) -> Callable:
     return analyze
 
 
+_SPEC_COLS = ["media_ref", "band", "row", "col", "cx1", "cy1", "cx2", "cy2",
+              "kind", "text"]
+
+
 def _stitch_page(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas per media_ref: bands -> bboxes -> cell specs."""
+    """applyInPandas per media_ref: bands -> bboxes -> cell specs, one
+    per (cell, band whose core rows it overlaps).  The band tasks'
+    _lineage rows (NULL media_ref) pass through, so the band analysis
+    has this one reader and runs once."""
+    if key[0] is None:
+        return pd.DataFrame(
+            [(None,) * 8 + ("_lineage", t) for t in pdf["text"]], columns=_SPEC_COLS
+        )
     t_start = time.monotonic()
     segment = cfg.segmenter or segment_page
     decode = cfg.ocr_decoder or decode_cell
@@ -221,15 +233,16 @@ def _stitch_page(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
     out = []
     inline_chars = 0
     media_ref = pdf["media_ref"].iloc[0]
+    core = band_core_rows(cfg, w)
     for bbox in bboxes:
         row, col, x1, y1, x2, y2 = scale_bbox(
             (bbox[0], bbox[1], bbox[2], bbox[3], bbox[4], bbox[5]),
             (w, h), (w_res, h_res),
         )
-        # crop_cell clamp semantics, applied HERE so stage 4's overlap
+        # crop_cell clamp semantics, applied HERE so stage 4's band
         # join never loses a cell: degenerate clamps decode the 1x1
         # white crop inline (crop_cell's contract), everything else
-        # ships clamped coords
+        # ships clamped coords to each band holding some of its rows
         x1c, x2c = max(0, x1), min(w, x2)
         y1c, y2c = max(0, y1), min(h, y2)
         if x2c <= x1c or y2c <= y1c:
@@ -238,12 +251,15 @@ def _stitch_page(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
                             cfg.ocr_min_size),
                 cfg, cfg.ocr_glyph_scale,
             )
-            out.append((media_ref, row, col, -1, -1, -1, -1, "ocr", text))
+            out.append((media_ref, None, row, col, -1, -1, -1, -1, "ocr", text))
             inline_chars += len(text)
         else:
-            out.append((media_ref, row, col, x1c, y1c, x2c, y2c, "_spec", None))
+            out.extend(
+                (media_ref, b, row, col, x1c, y1c, x2c, y2c, "_spec", None)
+                for b in range(y1c // core, (y2c - 1) // core + 1)
+            )
     out.append(
-        (media_ref, None, None, None, None, None, None, "_lineage",
+        (media_ref, None, None, None, None, None, None, None, "_lineage",
          json.dumps({
              "partition_id": -1,  # per-page row, not per-partition
              "page_count": 1,
@@ -255,9 +271,7 @@ def _stitch_page(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
              "wall_time_ms": int((time.monotonic() - t_start) * 1000),
          }))
     )
-    cols = ["media_ref", "row", "col", "cx1", "cy1", "cx2", "cy2",
-            "kind", "text"]
-    return pd.DataFrame(out, columns=cols)
+    return pd.DataFrame(out, columns=_SPEC_COLS)
 
 
 PIECE_SCHEMA = (
@@ -267,12 +281,12 @@ PIECE_SCHEMA = (
 
 
 def _slice_pieces_udf(cfg: ExtractConfig) -> Callable:
-    """mapInPandas over bands x their page's broadcast cell list: slice
-    each overlapping cell's rows out of the band CORE.  Runs where the
-    persisted bands already live (the cell list arrives via a broadcast
-    join of ONE array row per page), so the big gray blobs are never
-    duplicated per cell and never shuffled again — only the small crop
-    pieces move to the decode stage."""
+    """mapInPandas over bands joined with their band's cell list: slice
+    each cell's rows out of the band CORE.  Runs where the bands already
+    live (the join meets ONE array row per band on the bands' own
+    partitioning), so the big gray blobs are never duplicated per cell
+    and never shuffled again — only the small crop pieces move to the
+    decode stage."""
 
     def slice_pieces(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["media_ref", "row", "col", "cx1", "cy1", "cx2", "cy2",
@@ -284,8 +298,6 @@ def _slice_pieces_udf(cfg: ExtractConfig) -> Callable:
                     r.hy1 - r.hy0, r.w
                 )
                 for cell in r.cells:
-                    if cell["cy1"] >= r.y1 or cell["cy2"] <= r.y0:
-                        continue
                     a = max(r.y0, cell["cy1"]) - r.hy0
                     b = min(r.y1, cell["cy2"]) - r.hy0
                     piece = g[a:b, cell["cx1"]:cell["cx2"]]
@@ -337,62 +349,48 @@ def _decode_cells(cfg: ExtractConfig, key, pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def cell_list_bytes(cfg: ExtractConfig) -> int:
-    """Size of one giant page's cell list, as run_tiled_page_stage
-    budgets it: one cell per ``cfg.min_region_size`` pixels of the fixed
-    ``cfg.target_*`` segmentation mask (remove_small_regions drops smaller
-    regions of classes 1..4; class 0 is never filtered, so a pathological
-    page can exceed it), 64 bytes per (row, col, 4-int bbox) struct in an
-    UnsafeRow array."""
-    return 64 * (cfg.target_width * cfg.target_height // cfg.min_region_size)
-
-
 def run_tiled_page_stage(
-    giant_pages: DataFrame, cfg: ExtractConfig, n_parts: int, n_giants: int
+    giant_pages: DataFrame, cfg: ExtractConfig, n_parts: int
 ) -> DataFrame:
-    """(media_ref, content) of the ``n_giants`` GIANT pages ->
-    EXTRACT_STAGE_SCHEMA rows (ocr cells + _lineage rows), max task time
-    bounded per the module docstring.  The analysis branch and the
-    cell-crop join both read the bands frame; within the one plan they
-    share its exchange (Spark's exchange reuse), so each giant page is
-    decoded once without a cache that would outlive the lazily returned
-    plan.  The pages' cell lists are broadcast onto the bands while
-    ``n_giants * cell_list_bytes(cfg)`` fits ``config.DRIVER_STATE_BYTES``
-    (read at call time); above it they meet in a plain join, which
-    shuffles the bands once more."""
+    """(media_ref, content) of GIANT pages -> EXTRACT_STAGE_SCHEMA rows
+    (ocr cells + _lineage rows), max task time bounded per the module
+    docstring.  The band analysis and the cell-crop join both read the
+    bands frame and share its exchange (Spark's exchange reuse), so each
+    giant page is decoded once per pass without a cache that would
+    outlive the lazily returned plan.  The cell lists, one row per (page,
+    band), meet the bands with no hint: Spark broadcasts them under its
+    own threshold, or sort-merge joins them on the bands' partitioning."""
     bands = (
         giant_pages.select("media_ref", "content")
         .mapInPandas(_split_bands_udf(cfg), schema=BAND_SCHEMA)
+        # stated here, or the crop join infers it below the exchange on its
+        # read alone, and the two reads no longer share the exchange
+        .filter("media_ref IS NOT NULL AND band IS NOT NULL")
         .repartition(n_parts, "media_ref", "band")
     )
     analyzed = bands.mapInPandas(_analyze_band_udf(cfg), schema=ANALYSIS_SCHEMA)
 
-    specs = (
-        analyzed.filter(F.col("kind") == "_band")
-        .groupBy("media_ref")
-        .applyInPandas(
-            lambda key, pdf: _stitch_page(cfg, key, pdf), schema=SPEC_SCHEMA
-        )
+    specs = analyzed.groupBy("media_ref").applyInPandas(
+        lambda key, pdf: _stitch_page(cfg, key, pdf), schema=SPEC_SCHEMA
     )
     inline_cells = specs.filter(F.col("kind") == "ocr").select(
         "media_ref", "row", "col", "text", "kind"
     )
 
-    # one array row per page; broadcast onto the persisted bands, the
-    # gray blobs never shuffle again and are never duplicated per cell:
-    # only small crop pieces leave the band tasks
+    # one array row per (page, band), partitioned like the bands: the gray
+    # blobs never shuffle again and are never duplicated per cell, only
+    # small crop pieces leave the band tasks
     cell_lists = (
         specs.filter(F.col("kind") == "_spec")
-        .groupBy("media_ref")
+        .repartition(n_parts, "media_ref", "band")
+        .groupBy("media_ref", "band")
         .agg(
             F.collect_list(
                 F.struct("row", "col", "cx1", "cy1", "cx2", "cy2")
             ).alias("cells")
         )
     )
-    if n_giants * cell_list_bytes(cfg) <= config.DRIVER_STATE_BYTES:
-        cell_lists = F.broadcast(cell_lists)
-    pieces = bands.join(cell_lists, on="media_ref", how="inner").mapInPandas(
+    pieces = bands.join(cell_lists, on=["media_ref", "band"]).mapInPandas(
         _slice_pieces_udf(cfg), schema=PIECE_SCHEMA
     )
     decoded = pieces.groupBy(
@@ -402,11 +400,7 @@ def run_tiled_page_stage(
     )
 
     lineage = (
-        analyzed.filter(F.col("kind") == "_lineage")
-        .select("media_ref", "text")
-        .unionByName(
-            specs.filter(F.col("kind") == "_lineage").select("media_ref", "text")
-        )
+        specs.filter(F.col("kind") == "_lineage")
         .select(
             F.lit(None).cast("string").alias("media_ref"),
             F.lit(None).cast("int").alias("row"),

@@ -17,7 +17,8 @@ atomic"): with tiling OFF the giant page pins one task for the whole
 native-resolution chain; with tiling ON the max task is bounded by the
 constant-size stitch work.  Appends a summary to stdout as one JSON line.
 
-Usage: python scripts/bench_tile_skew.py   (env: SPARK_GRAFT_TILE_CPUS)
+Usage: python scripts/bench_tile_skew.py
+  (cores: $SPARK_GRAFT_TILE_CPUS, else $SPARK_GRAFT_CPUS, else every core)
 """
 
 from __future__ import annotations
@@ -115,7 +116,11 @@ def run_mode(mode: str, cores: int) -> dict:
 
 
 def main() -> None:
-    cores = int(os.environ.get("SPARK_GRAFT_TILE_CPUS", "16"))
+    cores = int(
+        os.environ.get("SPARK_GRAFT_TILE_CPUS")
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or os.cpu_count()
+    )
     out = {"cores": cores}
     for mode in ("off", "on"):
         out[f"tile_{mode}"] = run_mode(mode, cores)

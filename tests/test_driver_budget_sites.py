@@ -32,9 +32,6 @@ SITES = [
      "than the refs broadcast the driver already holds"),
     ("pipeline/extract.py", "run_page_stage", BCAST,
      "the driver-dealt bins: the pages of the collect above"),
-    ("pipeline/tiling.py", "run_tiled_page_stage", BCAST,
-     "one cell list per giant page; n_giants * cell_list_bytes(cfg) "
-     "within config.DRIVER_STATE_BYTES, else a plain join"),
     ("queries/__init__.py", "temp_views", COLLECT,
      "SHOW VIEWS: the session's temp views"),
     ("queries/eventops.py", "_segment_revenue_spark", BCAST,
@@ -115,6 +112,5 @@ def test_one_driver_budget_read_at_call_time():
                 readers.add(rel)
     assert not hits, "\n".join(hits)
     assert readers == {
-        "pipeline/tiling.py", "queries/graphops.py", "queries/similarity.py",
-        "queries/textops.py",
+        "queries/graphops.py", "queries/similarity.py", "queries/textops.py",
     }

@@ -13,12 +13,14 @@ Pins, cheapest first:
      resize path is covered);
   3. full-pipeline span equality on a mixed normal+giant corpus vs the
      same corpus with tiling DISABLED (the already-golden-pinned path),
-     with the cell lists broadcast and, under a driver budget of 0,
-     joined;
+     with the cell lists broadcast by Spark's own threshold and, with
+     broadcasts off, sort-merge joined;
   4. the structural skew bound: the giant page becomes >1 band, each
      band's pixel load <= (core + 2*halo) * width — no task carries the
      page's full native-resolution work;
-  5. the band stage's lineage wall starts at its first input batch.
+  5. the band stage's lineage wall starts at its first input batch;
+  6. one pass decodes, splits and band-analyzes each giant page once:
+     every reader of the bands shares one exchange.
 """
 
 from __future__ import annotations
@@ -29,8 +31,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bsc_project_spark import config
-from bsc_project_spark.config import ExtractConfig
 from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG, build_corpus, page_spec
 from bsc_project_spark.fixtures.render import render_page
@@ -81,19 +81,23 @@ def giant_gray():
     return np.kron(base, np.ones((3, 3), dtype=np.uint8))
 
 
-def test_tiled_stage_equals_single_task_kernel(spark, giant_gray):
-    cfg = FIXTURE_CONFIG
-    golden = extract_page(giant_gray, cfg, cfg.ocr_glyph_scale)
-
+@pytest.fixture(scope="module")
+def tiled_giant(spark, giant_gray):
+    """The tiled stage over the giant page alone, and its collected rows."""
     pages = spark.createDataFrame(
         [("giant0", bytearray(encode_gray(giant_gray)))],
         "media_ref string, content binary",
     )
-    out = run_tiled_page_stage(pages, cfg, n_parts=8, n_giants=1)
-    cells = sorted(
-        (r.row, r.col, r.text)
-        for r in out.filter(F.col("kind") == "ocr").collect()
-    )
+    out = run_tiled_page_stage(pages, FIXTURE_CONFIG, n_parts=8)
+    return out, out.collect()
+
+
+def test_tiled_stage_equals_single_task_kernel(giant_gray, tiled_giant):
+    cfg = FIXTURE_CONFIG
+    golden = extract_page(giant_gray, cfg, cfg.ocr_glyph_scale)
+
+    _, rows = tiled_giant
+    cells = sorted((r.row, r.col, r.text) for r in rows if r.kind == "ocr")
     assert cells == golden
     assert len(cells) > 0
 
@@ -110,7 +114,7 @@ def test_tiled_stage_equals_single_task_kernel(spark, giant_gray):
     # and cell counts, band rows accounting the distributed wall
     import json
 
-    lin = [json.loads(r.text) for r in out.filter(F.col("kind") == "_lineage").collect()]
+    lin = [json.loads(r.text) for r in rows if r.kind == "_lineage"]
     assert sum(p["page_count"] for p in lin) == 1
     assert sum(p["cell_count"] for p in lin) == len(cells)
     assert sum(p.get("band_count", 0) for p in lin) == n_bands
@@ -122,12 +126,27 @@ def test_tiled_stage_equals_single_task_kernel(spark, giant_gray):
     )
 
 
+def test_one_pass_decodes_and_analyzes_each_giant_page_once(tiled_giant):
+    """The band analysis and the cell-crop join read one bands exchange:
+    the executed plan runs the PNG decode + band split, and the band
+    analysis, once each; every other read of the bands is a reuse."""
+    import re
+
+    out, _ = tiled_giant
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert len(re.findall(r"MapInPandas split\(", final)) == 1, final
+    assert len(re.findall(r"MapInPandas analyze\(", final)) == 1, final
+    assert "ReusedExchange" in final, final
+
+
 @pytest.mark.parametrize("join_cells", [False, True], ids=["broadcast_cells", "join_cells"])
-def test_mixed_corpus_span_equality_tile_on_vs_off(spark, giant_gray, join_cells, monkeypatch):
-    """Both cell-list routes: the broadcast one, and the plain join a
-    driver budget of 0 forces."""
+def test_mixed_corpus_span_equality_tile_on_vs_off(spark, giant_gray, join_cells, request):
+    """Both joins Spark may pick for the cell lists: its own broadcast,
+    and, with broadcasts off, a sort-merge join."""
     if join_cells:
-        monkeypatch.setattr(config, "DRIVER_STATE_BYTES", 0)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        spark.conf.set(key, "-1")
+        request.addfinalizer(lambda: spark.conf.unset(key))
     corpus = build_corpus(n_docs=3)
     docs = spark_io.documents_df(spark, corpus)
     media = spark_io.media_df(spark, corpus)
